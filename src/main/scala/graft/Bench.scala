@@ -169,28 +169,46 @@ object Bench {
     * (-1 sentinels must stay visible) then the most expensive gates
     * that fit the budget, `value` stays the FULL-suite total, and
     * `queries_n`/`queries_full` say how many gates exist and where the
-    * complete map lives. Budget 1700 leaves headroom for an sbt
-    * trailer even though build.sbt now suppresses it. */
+    * complete map lives (`snapshot`: the file this run wrote, null when
+    * it wrote none). The greedy fill skips any entry that no longer
+    * fits and carries on with shorter ones; `queries_dropped` counts
+    * the skipped gates, so a reader can tell a truncated map from a
+    * complete one. Budget 1700 leaves headroom for an sbt trailer even
+    * though build.sbt now suppresses it. */
   private[graft] def compactLine(total: Double,
       queries: Map[String, Double], sfDir: String, cpus: String,
-      budget: Int = 1700): String = {
+      snapshot: Option[String], budget: Int = 1700): String = {
     def fmt(v: Double): String =
       if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val cpusJson = cpus.trim.toIntOption.map(_.toString)
-      .getOrElse("\"" + cpus + "\"")
-    val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec"""" +
-      s""","sf":"$sfDir","cpus":$cpusJson,"queries_n":${queries.size}""" +
-      s""","queries_full":"BENCH_LOCAL.json","queries":{"""
-    val sb = new StringBuilder(head)
-    var first = true
+    val cpusJson = cpus.trim.toIntOption.map(_.toString).getOrElse(jsonStr(cpus))
+    def head(dropped: Int): String =
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec"""" +
+        s""","sf":${jsonStr(sfDir)},"cpus":$cpusJson,"queries_n":${queries.size}""" +
+        s""","queries_full":${snapshot.fold("null")(jsonStr)}""" +
+        s""","queries_dropped":$dropped,"queries":{"""
+    // room left by the widest possible head, so the real one always fits
+    val room = budget - head(queries.size).length - 2
+    val kept = new StringBuilder
+    var dropped = 0
     queries.toSeq
       .sortBy { case (n, v) => (if (v < 0) 0 else 1, -v, n) }
       .foreach { case (k, v) =>
-        val ent = (if (first) "" else ",") + "\"" + k + "\":" + fmt(v)
-        if (sb.length + ent.length + 2 <= budget) { sb.append(ent); first = false }
+        val ent = (if (kept.isEmpty) "" else ",") + jsonStr(k) + ":" + fmt(v)
+        if (kept.length + ent.length <= room) kept.append(ent) else dropped += 1
       }
-    sb.append("}}").toString
+    head(dropped) + kept + "}}"
   }
+
+  /** `s` as a JSON string literal. */
+  private[graft] def jsonStr(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
 
   /** AUTO-PROMOTED movers: gates whose freshly-merged sharded wall
     * exceeds 2× + 2 s of the MIN over a WINDOW of prior committed
@@ -554,13 +572,13 @@ object Bench {
       s""""io":${sys.env.getOrElse("SPARK_GRAFT_BENCH_IO", "1") != "0"}""" +
       isolated + "," +
       s""""session":$session,"sf":"$sfDir"}"""
-    commitSnapshot(json,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json"))
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
+    commitSnapshot(json, outPath)
     println(json)
     // the parsable contract line goes LAST (see compactLine)
     println(compactLine(total, parseNumMap(mapOf(json, "queries")),
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), Some(outPath)))
     outs.foreach(p => try java.nio.file.Files.deleteIfExists(p) catch { case _: Exception => () })
   }
 
@@ -744,7 +762,7 @@ object Bench {
     // readable summary
     println(compactLine(total,
       results.map { case (k, v, _, _, _, _, _, _) => k -> v }.toMap,
-      sfDir, cpus))
+      sfDir, cpus, outPath))
     spark.stop()
   }
 }

@@ -3,7 +3,7 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Cross, Tables}
 import graft.model._
 import graft.sources.ModelIO
 
@@ -117,8 +117,10 @@ object Train {
         ModelIO.saveTable(bizProf, s"$artifactDir/biz_prof")
         ModelIO.saveTable(ContentBased.userProfiles(reviews, bizProf), s"$artifactDir/user_prof")
       case "als" =>
+        // trained and saved once, straight to the artifact: a FitCache
+        // round trip would save, reload and save the same factors again
         ModelIO.saveAls(
-          AlsModel.fit(Recommender.dedupReviews(reviews),
+          AlsModel.train(Recommender.dedupReviews(reviews),
             AlsModel.Params(rank = hpInt("RANK", 8), maxIter = hpInt("MAX_ITER", 5),
               regParam = hpDouble("REG_PARAM", 0.2))),
           s"$artifactDir/als")
@@ -143,7 +145,7 @@ object Predict {
     val Array(model, sfDir, artifactDir, outPath) = args.take(4)
     val spark = Cli.session()
     run(spark, model, sfDir, artifactDir, outPath)
-    println(s"[predict] wrote ${spark.read.json(outPath).count()} predictions to $outPath")
+    println(s"[predict] wrote ${ModelIO.loadPredictionsJson(spark, outPath).count()} predictions to $outPath")
     spark.stop()
   }
 
@@ -204,27 +206,45 @@ object Evaluate {
   /** Overall RMSE + missing count, plus — when the predictions carry a
     * `decision` tag — the per-decision-rule breakdown, mirroring the
     * reference evaluator's two-part report (scripts/evaluate.py:87-121:
-    * overall first, then compute_decision_rmse re-filters per rule). */
+    * overall first, then compute_decision_rmse re-filters per rule).
+    *
+    * One aggregate over `gt FULL JOIN preds` gives all three overall
+    * figures (the ground truth is deduplicated once, not per figure):
+    *   - rmse: [[Recommender.rmse]]'s semantics — every (prediction
+    *     line, ground-truth pair) match with a non-NaN `pred` counts,
+    *     a duplicate line once per match, and a null `pred` counts
+    *     without adding to the sum (`!isnan(null)` is true);
+    *   - missing pairs: ground-truth pairs with no prediction line;
+    *   - tagged: some line, matched or not, carries a `decision`. */
   def run(spark: SparkSession, predPath: String, sfDir: String): String = {
     val preds = ModelIO.loadPredictionsJson(spark, predPath)
     val gt = Recommender.dedupReviews(Tables.reviews(spark, sfDir))
+    val inGt = col("in_gt").isNotNull
+    val predicted = col("predicted").isNotNull
+    val scored = inGt && predicted && !isnan(col("pred"))
+    val se = (col("pred") - col("stars")) * (col("pred") - col("stars"))
+    val row = gt.withColumn("in_gt", lit(true))
+      .join(preds.withColumn("predicted", lit(true)), Seq("user_id", "business_id"), "full")
+      .agg(
+        Cross.r6(sqrt(Cross.dsum(when(scored, se), 6) / count(when(scored, lit(1))))).as("rmse"),
+        count(when(inGt && !predicted, lit(1))).as("missing"),
+        count(col("decision")).as("tagged"))
+      .head()
     // zero matched pairs → "N/A", the reference evaluator's sentinel
     // (scripts/evaluate.py:100-102), not a crash on a null aggregate;
     // a non-finite rmse (corrupt artifact with Infinity stars) is quoted
     // so the report stays parseable JSON
-    val rmseRow = Recommender.rmse(preds, gt).head()
     val rmse =
-      if (rmseRow.isNullAt(0)) "\"N/A\""
+      if (row.isNullAt(0)) "\"N/A\""
       else {
-        val v = rmseRow.getDouble(0)
+        val v = row.getDouble(0)
         if (java.lang.Double.isFinite(v)) v.toString else "\"" + v + "\""
       }
-    val missing = gt.join(preds, Seq("user_id", "business_id"), "left_anti").count()
     val byDecision =
-      if (!preds.columns.contains("decision")) ""
+      if (row.getLong(2) == 0) ""
       else Recommender.rmseByDecision(preds, gt).orderBy("decision").collect()
         .map(r => s""""${r.getString(0)}":{"rmse":${r.getDouble(1)},"n":${r.getLong(2)}}""")
         .mkString(""","by_decision":{""", ",", "}")
-    s"""{"rmse":$rmse,"missing_pairs":$missing$byDecision}"""
+    s"""{"rmse":$rmse,"missing_pairs":${row.getLong(1)}$byDecision}"""
   }
 }

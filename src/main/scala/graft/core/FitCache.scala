@@ -25,18 +25,27 @@ object FitCache {
 
   private val paths = scala.collection.concurrent.TrieMap.empty[String, String]
 
-  /** Cache key: md5(canonicalized analyzed plan + sorted input files)
-    * + params. The canonicalized plan carries the operator structure
-    * (filters, joins, projections) with expression ids normalized —
-    * but its leaf relations print WITHOUT their file location
-    * (`Relation [none#0L,...] parquet` — verified identical across
-    * different source directories), so the plan string alone would
-    * collide across datasets and serve a model fit on the wrong data.
-    * `inputFiles` pins the actual files read; together any difference
-    * in source data, filter, or projection changes the key. */
+  /** Cache key: md5(canonicalized analyzed plan + sorted input files,
+    * each with its length and modification time) + params. The
+    * canonicalized plan carries the operator structure (filters, joins,
+    * projections) with expression ids normalized — but its leaf
+    * relations print WITHOUT their file location (`Relation
+    * [none#0L,...] parquet` — verified identical across different
+    * source directories), so the plan string alone would collide across
+    * datasets and serve a model fit on the wrong data. `inputFiles` pins
+    * the actual files read, and their length and modification time
+    * (stat'ed now, not taken from a listing cached by the relation) pin
+    * their content: a file rewritten in place under the same path
+    * changes the key. */
   def key(input: DataFrame, params: Any): String = {
+    val conf = input.sparkSession.sparkContext.hadoopConfiguration
+    val files = input.inputFiles.sorted.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f)
+      val st = p.getFileSystem(conf).getFileStatus(p)
+      s"$f:${st.getLen}:${st.getModificationTime}"
+    }
     val plan = input.queryExecution.analyzed.canonicalized.toString +
-      "|" + input.inputFiles.sorted.mkString(",")
+      "|" + files.mkString(",")
     val md5 = java.security.MessageDigest.getInstance("MD5")
       .digest(plan.getBytes("UTF-8")).map("%02x".format(_)).mkString
     s"$md5|$params"

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated testdata star schema (TESTDATA.md).
   *
@@ -15,8 +16,35 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Declared layout of the fixed-layout tables: exactly the schema
+    * Spark infers from the testdata files (and from every producer in
+    * this repo — the generator, [[graft.cli.ScaleUp]]). Reading with it
+    * skips the footer-reading inference job a schema-less parquet read
+    * runs on every call. A file whose layout differs fails on read, or
+    * reads a missing declared column as NULL; the layout test
+    * (TablesLayoutSpec) pins the equality. `events` is not declared:
+    * its `ts` has shipped in two encodings, see [[floorEpochSec]]. */
+  val layout: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+      "p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, " +
+      "l_tax DOUBLE, l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    layout.get(name).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "orders")

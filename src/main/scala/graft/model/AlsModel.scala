@@ -20,26 +20,34 @@ object AlsModel {
   final case class Params(
       rank: Int = 8, maxIter: Int = 5, regParam: Double = 0.2, seed: Long = 42L)
 
-  /** Fit on (user_id, business_id, stars). Routed through the
-    * session [[graft.core.FitCache]]: identical (training relation,
-    * params) pairs fit once and every caller loads the same persisted
-    * artifact — semantics unchanged (the seeded fit is deterministic),
-    * duplicate wall-clock gone, and the disk-backed reload survives
-    * the between-gate SessionHygiene reset. */
-  def fit(reviews: DataFrame, p: Params = Params()): ALSModel = {
-    val train = reviews.select(
+  /** (user_id, business_id, stars) as the (user, item, rating) frame
+    * MLlib's ALS reads. */
+  private def ratings(reviews: DataFrame): DataFrame =
+    reviews.select(
       col("user_id").cast("int").as("user"),
       col("business_id").cast("int").as("item"),
       col("stars").cast("float").as("rating"))
-    graft.core.FitCache.getOrFit(train, p, "als") {
-      new ALS()
-        .setRank(p.rank).setMaxIter(p.maxIter).setRegParam(p.regParam)
-        .setSeed(p.seed)
-        .setUserCol("user").setItemCol("item").setRatingCol("rating")
-        .setColdStartStrategy("nan")
-        .fit(train)
-    }((m, path) => m.write.overwrite().save(path))(ALSModel.load)
-  }
+
+  /** Fit on (user_id, business_id, stars), uncached: the live model,
+    * for a caller that persists it itself (the `Train` CLI saves it
+    * once, straight to its artifact path). */
+  def train(reviews: DataFrame, p: Params = Params()): ALSModel =
+    new ALS()
+      .setRank(p.rank).setMaxIter(p.maxIter).setRegParam(p.regParam)
+      .setSeed(p.seed)
+      .setUserCol("user").setItemCol("item").setRatingCol("rating")
+      .setColdStartStrategy("nan")
+      .fit(ratings(reviews))
+
+  /** [[train]] routed through the session [[graft.core.FitCache]]:
+    * identical (training relation, params) pairs fit once and every
+    * caller loads the same persisted artifact — semantics unchanged
+    * (the seeded fit is deterministic), duplicate wall-clock gone, and
+    * the disk-backed reload survives the between-gate SessionHygiene
+    * reset. */
+  def fit(reviews: DataFrame, p: Params = Params()): ALSModel =
+    graft.core.FitCache.getOrFit(ratings(reviews), p, "als")(train(reviews, p))(
+      (m, path) => m.write.overwrite().save(path))(ALSModel.load)
 
   /** [[predict]] plus the raw cold-start flag: is_cold = the model scored
     * NaN/null BEFORE the 2.5 repair. With coldStartStrategy "nan" that is

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Model-artifact and prediction IO (reference SURVEY.md §1.3 formats,
   * re-expressed as atomic parallel writes).
@@ -32,12 +33,18 @@ object ModelIO {
     preds.select(cols: _*).write.mode("overwrite").json(path)
   }
 
-  def loadPredictionsJson(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.json(path)
-    val cols = Seq(col("user_id"), col("business_id"), col("stars").as("pred")) ++
-      (if (df.columns.contains("decision")) Seq(col("decision")) else Nil)
-    df.select(cols: _*)
-  }
+  /** The line layout [[savePredictionsJson]] writes. Spark's JSON writer
+    * drops null fields, so `decision` is simply absent from the lines of
+    * a model that emits no tag. */
+  private val predictionsSchema: StructType = StructType.fromDDL(
+    "user_id BIGINT, business_id BIGINT, stars DOUBLE, decision STRING")
+
+  /** (user_id, business_id, pred, decision), read with the declared
+    * line layout (no inference scan); `decision` is NULL on every row
+    * of an untagged model's file. */
+  def loadPredictionsJson(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(predictionsSchema).json(path)
+      .select(col("user_id"), col("business_id"), col("stars").as("pred"), col("decision"))
 
   /** CSV pair-weights table (S6 — reference models/item_cf_model.py:194
     * writes b1,b2,pears,cos,jacc via pandas). */

@@ -208,7 +208,8 @@ class BenchPromotionSpec extends AnyFunSuite {
 
   test("compactLine fits the driver's 2000-char tail and round-trips") {
     val qs = (1 to 400).map(i => f"q$i%03d_some_longish_gate_name" -> i * 0.123).toMap
-    val line = Bench.compactLine(987.654321, qs, "/root/testdata/sf0.1", "32")
+    val line = Bench.compactLine(987.654321, qs, "/data/sf0.1", "32",
+      Some("BENCH_LOCAL.json"))
     assert(line.length <= 1700, s"line too long: ${line.length}")
     assert(line.startsWith("""{"metric":"total","value":987.654,"unit":"sec""""))
     assert(line.contains(""""cpus":32"""))
@@ -229,14 +230,54 @@ class BenchPromotionSpec extends AnyFunSuite {
   test("compactLine keeps -1 failure sentinels ahead of big walls") {
     val qs = (1 to 300).map(i => f"q$i%03d_gate_with_a_long_name_padding" -> 100.0).toMap +
       ("q999_failed_gate" -> -1.0)
-    val line = Bench.compactLine(1.0, qs, "/sf", "8")
+    val line = Bench.compactLine(1.0, qs, "/sf", "8", Some("BENCH_LOCAL.json"))
     assert(line.contains(""""q999_failed_gate":-1"""))
   }
 
   test("compactLine with few queries includes them all") {
     val qs = Map("q01_a" -> 1.5, "q02_b" -> -1.0)
-    val line = Bench.compactLine(0.5, qs, "/sf", "notanint")
+    val line = Bench.compactLine(0.5, qs, "/sf", "notanint", Some("BENCH_LOCAL.json"))
     assert(line.contains(""""q01_a":1.500""") && line.contains(""""q02_b":-1"""))
     assert(line.contains(""""cpus":"notanint""""))
+  }
+
+  test("compactLine names the snapshot it was given, or null when none was written") {
+    val qs = Map("q01_a" -> 1.5)
+    val line = Bench.compactLine(0.5, qs, "/sf", "8", Some("/out/BENCH_r16.json"))
+    assert(line.contains(""""queries_full":"/out/BENCH_r16.json""""))
+    assert(!line.contains("BENCH_LOCAL.json"))
+    assert(Bench.compactLine(0.5, qs, "/sf", "8", None).contains(""""queries_full":null"""))
+  }
+
+  test("compactLine JSON-escapes sf dir and cpus values") {
+    val line = Bench.compactLine(0.5, Map("q01_a" -> 1.5), "/data/\"odd\\dir\n", "4\"x",
+      Some("BENCH_LOCAL.json"))
+    assert(line.contains(""""sf":"/data/\"odd\\dir\n""""), line)
+    assert(line.contains(""""cpus":"4\"x""""), line)
+    // the whole line is one valid JSON object: a strict parser accepts it
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(line)
+    assert(node.get("sf").asText() == "/data/\"odd\\dir\n")
+    assert(node.get("cpus").asText() == "4\"x")
+  }
+
+  test("compactLine counts the gates the greedy fill skipped") {
+    val few = Map("q01_a" -> 1.5, "q02_b" -> -1.0)
+    assert(Bench.compactLine(0.5, few, "/sf", "8", Some("B.json"))
+      .contains(""""queries_dropped":0,"""))
+    // one expensive long-named gate that cannot fit, then short cheap ones
+    // that do: the fill skips the long one and keeps going
+    val qs = Map(("q_" + "x" * 2000) -> 99.0) ++ (1 to 5).map(i => s"q0$i" -> i.toDouble)
+    val line = Bench.compactLine(0.5, qs, "/sf", "8", Some("B.json"))
+    assert(line.contains(""""queries_dropped":1,"""), line)
+    assert(line.length <= 1700)
+    val body = line.substring(line.indexOf("\"queries\":{") + 11, line.length - 2)
+    assert(Bench.parseNumMap(body).keySet == (1 to 5).map(i => s"q0$i").toSet)
+    // dropped + kept always accounts for every gate
+    val many = (1 to 400).map(i => f"q$i%03d_some_longish_gate_name" -> i * 0.123).toMap
+    val big = Bench.compactLine(1.0, many, "/sf", "8", Some("B.json"))
+    val dropped = """"queries_dropped":(\d+)""".r.findFirstMatchIn(big).get.group(1).toInt
+    val kept = Bench.parseNumMap(big.substring(big.indexOf("\"queries\":{") + 11, big.length - 2))
+    assert(dropped > 0 && dropped + kept.size == many.size)
   }
 }

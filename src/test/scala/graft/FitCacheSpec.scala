@@ -44,4 +44,18 @@ class FitCacheSpec extends SparkSpec {
     assert(once("p2") == "model-payload")
     assert(fits.get() == 2, "different params must refit")
   }
+
+  test("a table rewritten in place under the same path changes the key") {
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val dir = graft.core.TempPaths.registered(Files.createTempDirectory("graft_fitcache"))
+    val f = dir.resolve("lineitem.parquet")
+    Files.copy(Paths.get(s"${sf("sf0.001")}/lineitem.parquet"), f)
+    def keyNow: String = FitCache.key(spark.read.parquet(f.toString), "Params(8,5)")
+    val before = keyNow
+    assert(keyNow == before, "an untouched file must keep its key")
+    // same path, same schema (so the same plan string), other content
+    Files.copy(Paths.get(s"${sf("sf0.01")}/lineitem.parquet"), f,
+      StandardCopyOption.REPLACE_EXISTING)
+    assert(keyNow != before, "a rewritten file MUST not hit the old fit")
+  }
 }
