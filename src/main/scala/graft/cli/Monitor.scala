@@ -60,13 +60,7 @@ object Monitor {
     val family = args.lift(2).getOrElse("mg")
     val k = args.lift(3).map(_.toInt).getOrElse(16)
     val horizon = args.lift(4).map(_.toLong).getOrElse(24L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("graft-monitor")
-      .getOrCreate()
+    val spark = Cli.session()
     try run(spark, sfDir, serveDir, k, horizon, family)
     finally spark.stop()
   }

@@ -1,11 +1,15 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Cross, Tables}
 import graft.functions.HashFns
 import graft.operators.{Skew, TemporalJoins}
+import graft.operators.{SlidingSketches => SS}
+import graft.queries.MonitorGate.{Evict, Horizon, Unbounded}
+import graft.streaming.SlidingMonitor
 
 /** Event-stream operators in their batch form over `events`: tumbling and
   * sliding window aggregation, sessionization, keyed dedup, JSON
@@ -1502,80 +1506,151 @@ object EventQueries {
       .orderBy("section", "k1", "k2", "d1", "v1")
   }
 
-  /** Shared oracle head for the sliding-sketch gates: the window-start
-    * grid is pure integer arithmetic over (min, max) event seconds —
-    * quantum-aligned (·//3600·3600) so "window nonempty ⟺ covered
-    * suffix nonempty" holds exactly and both engines emit the same
-    * row set — and n_window (exact count of the REQUESTED window)
-    * anchors every row to raw data. The flags are guaranteed by
-    * construction (EH staleness invariant + exact-suffix coverage +
-    * the member sketch's own bound over the covered suffix), so the
-    * oracle emits the literals — the q285/q270 discipline extended
-    * with the coverage/staleness split that makes a sliding answer
-    * honest. */
-  private def slidingOracle(grid: Int, nStarts: Int, phis: Seq[Double],
-      keyed: Boolean): String = {
-    val ks = (0 until nStarts).mkString(", ")
-    val keySel = if (keyed) "e.event_type AS key, " else ""
-    val keyCol = if (keyed) "key, " else ""
-    val phiSel =
-      if (phis.isEmpty) ""
-      else s", p AS (SELECT CAST(unnest([${phis.mkString(", ")}]) AS DOUBLE) AS phi)"
-    val phiCols = if (phis.isEmpty) "" else "phi, "
-    val phiJoin = if (phis.isEmpty) "" else " CROSS JOIN p"
+  /** Shared oracle body for the sliding-sketch and monitor gates: `s`
+    * is the window-start CTE, and n_window (the exact count of the
+    * REQUESTED window per key, start and item) anchors every row to raw
+    * data. The start grids are pure integer arithmetic, quantum-aligned
+    * (·//3600·3600) so "window nonempty ⟺ covered suffix nonempty"
+    * holds exactly and both engines emit the same row set. The flags
+    * are guaranteed by construction (EH staleness invariant +
+    * exact-suffix coverage + the member sketch's own bound over the
+    * covered suffix), so the oracle emits the literals — the q285/q270
+    * discipline extended with the coverage/staleness split that makes a
+    * sliding answer honest. The family follows from the shape: `phis`
+    * → GK's flags, an `item` → count-min's, else Misra–Gries'; `evict`
+    * adds the eviction contract's two (see [[MonitorGate]]). */
+  private def windowOracle(startsCte: String, key: String, item: String,
+      phis: Seq[Double], evict: Boolean): String = {
+    val out = Seq(key.nonEmpty -> "key", true -> "start", phis.nonEmpty -> "phi",
+      item.nonEmpty -> "item").collect { case (true, c) => c }.mkString(", ")
+    val sel = Seq(key -> "key", "s.start" -> "", item -> "item")
+      .collect { case (e, a) if e.nonEmpty => if (a.isEmpty) e else s"$e AS $a" }
     val flags =
-      if (phis.isEmpty)
-        "1::BIGINT AS heavy_ok, 1::BIGINT AS bounds_ok, 1::BIGINT AS coverage_ok, 1::BIGINT AS stale_ok"
-      else
-        "1::BIGINT AS rank_ok, 1::BIGINT AS coverage_ok, 1::BIGINT AS stale_ok"
-    val order = keyCol + "start" + (if (phis.isEmpty) "" else ", phi")
-    s"""WITH b AS (SELECT MIN(floor(epoch(ts))::BIGINT) AS smin,
-       |            MAX(floor(epoch(ts))::BIGINT) AS smax FROM events),
-       |s AS (SELECT DISTINCT ((smin + (k*(smax - smin))//$grid)//3600)*3600 AS start
-       |      FROM b CROSS JOIN (SELECT unnest([$ks]) AS k)),
-       |w AS (SELECT $keySel s.start, COUNT(*)::BIGINT AS n_window
+      (if (phis.nonEmpty) Seq("rank_ok")
+       else if (item.nonEmpty) Seq("never_under", "cells_match")
+       else Seq("heavy_ok", "bounds_ok")) ++ Seq("coverage_ok", "stale_ok") ++
+        (if (evict) Seq("state_ok", "evict_ok") else Nil)
+    val (phiCte, phiJoin) =
+      if (phis.isEmpty) ("", "")
+      else (s", p AS (SELECT CAST(unnest([${phis.mkString(", ")}]) AS DOUBLE) AS phi)",
+        " CROSS JOIN p")
+    s"""WITH $startsCte,
+       |w AS (SELECT ${sel.mkString(", ")}, COUNT(*)::BIGINT AS n_window
        |      FROM s JOIN events e ON floor(epoch(e.ts))::BIGINT >= s.start
-       |      GROUP BY ${if (keyed) "1, 2" else "1"})$phiSel
-       |SELECT ${keyCol}start, ${phiCols}n_window, $flags
-       |FROM w$phiJoin ORDER BY $order""".stripMargin
+       |      GROUP BY ${(1 to sel.size).mkString(", ")})$phiCte
+       |SELECT $out, n_window, ${flags.map(f => s"1::BIGINT AS $f").mkString(", ")}
+       |FROM w$phiJoin ORDER BY $out""".stripMargin
   }
 
-  /** Time-ordered replay writer: each slice lands as one parquet part
-    * file whose modification time is PINNED strictly increasing
-    * (epoch-anchored an hour back, 1 s apart), because
-    * FileStreamSource orders same-batch discoveries by mod-time and
-    * sequential writes can share a millisecond — leaving trigger order
-    * unspecified exactly where the horizon gates need slices to arrive
-    * oldest-first. */
-  private[queries] def writeOrderedReplay(slices: Seq[org.apache.spark.sql.DataFrame],
-      dir: String): Unit = {
-    val base = System.currentTimeMillis() - 3600L * 1000L
-    val seen = scala.collection.mutable.Set.empty[String]
-    slices.zipWithIndex.foreach { case (df, i) =>
-      df.coalesce(1).write.mode("append").parquet(dir)
-      Option(new java.io.File(dir).listFiles).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("part-") && !seen.contains(f.getName))
-        .foreach { f =>
-          require(f.setLastModified(base + i.toLong * 1000L),
-            s"cannot pin replay order on ${f.getName}")
-          seen += f.getName
-        }
-    }
-  }
+  /** Oracle over the sliding grid: `n` evenly spaced starts over
+    * [smin, smax] (the twin of [[MonitorGate.slidingStarts]]). */
+  private def slidingOracle(grid: Int, n: Int, phis: Seq[Double] = Nil,
+      key: String = "", item: String = ""): String =
+    windowOracle(
+      s"""b AS (SELECT MIN(floor(epoch(ts))::BIGINT) AS smin,
+         |            MAX(floor(epoch(ts))::BIGINT) AS smax FROM events),
+         |s AS (SELECT DISTINCT ((smin + (k*(smax - smin))//$grid)//3600)*3600 AS start
+         |      FROM b CROSS JOIN (SELECT unnest([${(0 until n).mkString(", ")}]) AS k))"""
+        .stripMargin, key, item, phis, evict = false)
 
-  /** The quantum-aligned window-start grid both engines share: `n`
-    * evenly spaced starts over [smin, smax], floored to the hour. The
-    * one-row min/max collect is bounded loop control (the window grid
-    * is a query PARAMETER, like the curation budgets). */
-  private def slidingStarts(ev: org.apache.spark.sql.DataFrame,
-      grid: Int, nStarts: Int): Seq[Long] = {
-    val mm = ev.agg(min(col("sec")).cast("long").as("a"),
-      max(col("sec")).cast("long").as("b")).head
-    val (smin, smax) = (mm.getLong(0), mm.getLong(1))
-    (0 until nStarts)
-      .map(k => ((smin + k.toLong * (smax - smin) / grid) / 3600L) * 3600L)
-      .distinct
-  }
+  /** Oracle over the horizon grid: starts qMax − k·step, k = 0..3, all
+    * inside the final horizon (the monitor horizon and eviction gates). */
+  private def horizonOracle(step: Int, phis: Seq[Double] = Nil, key: String = "",
+      item: String = "", evict: Boolean = false): String =
+    windowOracle(
+      s"""b AS (SELECT MAX(floor(epoch(ts))::BIGINT) AS smax FROM events),
+         |s AS (SELECT DISTINCT ((smax//3600) - k*$step)*3600 AS start
+         |      FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS k))""".stripMargin,
+      key, item, phis, evict)
+
+  /** Window-gate keys and items as DuckDB expressions over events `e`… */
+  private val TypeKeySql = "e.event_type"
+  private val UserTypeKeySql = "e.user_id::VARCHAR || '_' || e.event_type"
+  private val UserItemSql = "e.user_id::VARCHAR"
+  private val ValueBucketSql = "floor(e.value)::BIGINT::VARCHAR"
+
+  /** …and their Spark twins. user × event type is the high-cardinality
+    * key of the eviction gates. */
+  private def typeKey: Column = col("event_type").cast("string")
+  private def userTypeKey: Column =
+    concat(col("user_id").cast("string"), lit("_"), col("event_type").cast("string"))
+  private def userItem: Column = col("user_id").cast("string")
+  private def valueBucket: Column = floor(col("value")).cast("long").cast("string")
+
+  /** Replayed projections of the quantum monitors: (key, q, v) feeds
+    * GK, (key, q, item) feeds Misra–Gries. */
+  private def gkReplay(key: Column)(ev: DataFrame): DataFrame =
+    ev.select(key.as("key"), expr("sec div 3600").as("q"),
+      col("value").cast("double").as("v"))
+  private def mgReplay(key: Column, item: Column)(ev: DataFrame): DataFrame =
+    ev.select(key.as("key"), expr("sec div 3600").as("q"), item.as("item"))
+  /** (user_id, event_type, sec): count-min hashes items per trigger. */
+  private def cmReplay(ev: DataFrame): DataFrame =
+    ev.select(col("user_id"), col("event_type"), col("sec"))
+  /** The count-min monitor (depth 4, width 32) over a replay's hashed
+    * `item` rows (default user_id), keyed by `key`. */
+  private def cmMonitor(key: Column, item: Column = col("user_id"),
+      horizon: Long = Long.MaxValue, evict: Boolean = false)(s: DataFrame): DataFrame =
+    SlidingMonitor.cmQuantumMonitor(SS.cmKeyRows(s, item, col("sec"), 3600L, key = key),
+      depth = 4, width = 32, horizonQuanta = horizon, evictKeys = evict).toDF()
+
+  /** Live-cube reads of an emission log: the latest version per
+    * (key, quantum). Count-min's is the additive
+    * SlidingMonitor.cmCubeFromDeltas. */
+  private def gkCube(log: DataFrame): DataFrame =
+    log.groupBy("key", "q").agg(max_by(col("sk"), col("ver")).as("sk"))
+  private def mgCube(log: DataFrame): DataFrame =
+    log.groupBy("key", "q")
+      .agg(max_by(struct(col("n"), col("entries")), col("ver")).as("w"))
+      .select(col("key"), col("q"), col("w.n").as("n"),
+        col("w.entries").as("entries"))
+  /** Decayed MG: each key's latest sketch by `order`, exploded to
+    * (key, t_sk, w_sk, item, est) for decayedMgHeavyPerKeyFrame. */
+  private def dmCube(log: DataFrame, order: Column): DataFrame =
+    log.groupBy("key")
+      .agg(max_by(struct(col("t_ref"), col("w"), col("entries")), order).as("s"))
+      .select(col("key"), col("s.t_ref").as("t_sk"), col("s.w").as("w_sk"),
+        explode(col("s.entries")).as("e"))
+      .select(col("key"), col("t_sk"), col("w_sk"),
+        col("e.item").as("item"), col("e.est").as("est"))
+
+  /** Raw (key?, sec, value) rows a sliding check compares against. */
+  private def rawRows(ev: DataFrame, key: Option[Column], value: Column): DataFrame =
+    ev.select(key.map(_.as("key")).toSeq ++
+      Seq(col("sec").cast("long").as("sec"), value): _*)
+
+  /** GK's sliding reduction over an hourly (key, q, sk) cube and its
+    * three-leg check: rank guarantee over the covered suffix, exact
+    * coverage, staleness invariant. */
+  private def gkCheck(ev: DataFrame, key: Option[Column], hourly: DataFrame,
+      m: Int, starts: Seq[Long], phis: Seq[Double]): MonitorGate.Check =
+    MonitorGate.Check(
+      SS.gkSlidingCheck(rawRows(ev, key, col("value").cast("double").as("v")),
+        SS.gkSlidingEstimates(hourly, 3600L, m, starts, phis),
+        keyed = key.isDefined, epsDen = 40),
+      key.map(_ => "key").toSeq ++ Seq("start", "phi"))
+
+  /** Misra–Gries' over an hourly (key, q, n, entries) cube: the covered
+    * suffix's heavy set (presence + bounds), no overestimation, exact
+    * coverage, staleness. */
+  private def mgCheck(ev: DataFrame, key: Option[Column], item: Column,
+      hourly: DataFrame, k: Int, starts: Seq[Long]): MonitorGate.Check =
+    MonitorGate.Check(
+      SS.mgSlidingCheck(rawRows(ev, key, item.as("item")),
+        SS.mgSlidingSummaries(hourly, 3600L, k, starts), keyed = key.isDefined, k = k),
+      key.map(_ => "key").toSeq :+ "start")
+
+  /** Count-min's (depth 4, width 32) over an hourly (key, q, entries)
+    * cube: EH-merged covered cells EQUAL a direct build over the raw
+    * suffix cell-for-cell, estimates never under, exact coverage,
+    * staleness. */
+  private def cmCheck(ev: DataFrame, key: Option[Column], item: Column,
+      hourly: DataFrame, starts: Seq[Long]): MonitorGate.Check =
+    MonitorGate.Check(
+      SS.cmSlidingCheck(rawRows(ev, key, item.as("item")),
+        SS.cmSlidingCells(hourly, 3600L, depth = 4, width = 32, starts),
+        depth = 4, width = 32, keyed = key.isDefined),
+      key.map(_ => "key").toSeq ++ Seq("start", "item"))
 
   /** SLIDING-WINDOW quantiles (plans.SlidingEh + operators.
     * SlidingSketches): the GK family member the sliding KMV state
@@ -1587,18 +1662,11 @@ object EventQueries {
     * the covered suffix, exact coverage, staleness invariant) against
     * exact counts, with n_window anchoring each row. */
   val q299 = QueryDef(
-    "q299_gk_sliding_window",
-    slidingOracle(6, 6, Seq(0.1, 0.5, 0.9), keyed = false)) { (spark, dir) =>
-    import graft.operators.{SlidingSketches => SS}
+    "q299_gk_sliding_window", slidingOracle(6, 6, Seq(0.1, 0.5, 0.9))) { (spark, dir) =>
     val ev = Tables.events(spark, dir)
-    val starts = slidingStarts(ev, 6, 6)
+    val starts = MonitorGate.slidingStarts(ev, 6, 6)
     val hourly = SS.gkHourly(ev, lit(""), col("value"), col("sec"), 3600L, 2048)
-    val est = SS.gkSlidingEstimates(hourly, 3600L, 2048, starts, Seq(0.1, 0.5, 0.9))
-    SS.gkSlidingCheck(
-        ev.select(col("sec").cast("long").as("sec"),
-          col("value").cast("double").as("v")),
-        est, keyed = false, epsDen = 40)
-      .orderBy("start", "phi")
+    gkCheck(ev, None, hourly, 2048, starts, Seq(0.1, 0.5, 0.9)).sorted
   }
 
   /** Per-KEY sliding quantiles: one EH of hourly GK summaries per
@@ -1608,19 +1676,12 @@ object EventQueries {
     * three-leg guarantee reduction as q299, keyed. */
   val q300 = QueryDef(
     "q300_gk_sliding_per_key",
-    slidingOracle(4, 4, Seq(0.25, 0.75), keyed = true)) { (spark, dir) =>
-    import graft.operators.{SlidingSketches => SS}
+    slidingOracle(4, 4, Seq(0.25, 0.75), key = TypeKeySql)) { (spark, dir) =>
     val ev = Tables.events(spark, dir)
-    val starts = slidingStarts(ev, 4, 4)
+    val starts = MonitorGate.slidingStarts(ev, 4, 4)
     val hourly = SS.gkHourly(ev, col("event_type"), col("value"), col("sec"),
       3600L, 2048)
-    val est = SS.gkSlidingEstimates(hourly, 3600L, 2048, starts, Seq(0.25, 0.75))
-    SS.gkSlidingCheck(
-        ev.select(col("event_type").cast("string").as("key"),
-          col("sec").cast("long").as("sec"),
-          col("value").cast("double").as("v")),
-        est, keyed = true, epsDen = 40)
-      .orderBy("key", "start", "phi")
+    gkCheck(ev, Some(typeKey), hourly, 2048, starts, Seq(0.25, 0.75)).sorted
   }
 
   /** SLIDING-WINDOW heavy hitters: Misra–Gries rides the same EH frame
@@ -1629,19 +1690,11 @@ object EventQueries {
     * rule), so EH depth costs nothing; the gate checks the covered
     * suffix's heavy set (presence + bounds), no overestimation, exact
     * coverage, and the staleness invariant per window start. */
-  val q301 = QueryDef(
-    "q301_mg_sliding_window",
-    slidingOracle(6, 6, Nil, keyed = false)) { (spark, dir) =>
-    import graft.operators.{SlidingSketches => SS}
+  val q301 = QueryDef("q301_mg_sliding_window", slidingOracle(6, 6)) { (spark, dir) =>
     val ev = Tables.events(spark, dir)
-    val starts = slidingStarts(ev, 6, 6)
+    val starts = MonitorGate.slidingStarts(ev, 6, 6)
     val hourly = SS.mgHourly(ev, lit(""), col("user_id"), col("sec"), 3600L, 64)
-    val cov = SS.mgSlidingSummaries(hourly, 3600L, 64, starts)
-    SS.mgSlidingCheck(
-        ev.select(col("sec").cast("long").as("sec"),
-          col("user_id").cast("string").as("item")),
-        cov, keyed = false, k = 64)
-      .orderBy("start")
+    mgCheck(ev, None, userItem, hourly, 64, starts).sorted
   }
 
   /** Per-KEY sliding heavy hitters: one EH of hourly Misra–Gries
@@ -1650,20 +1703,12 @@ object EventQueries {
     * guarantee reduction as q301, keyed: heavy set + bounds over each
     * (key, start) covered suffix, exact coverage, staleness. */
   val q304 = QueryDef(
-    "q304_mg_sliding_per_key",
-    slidingOracle(4, 4, Nil, keyed = true)) { (spark, dir) =>
-    import graft.operators.{SlidingSketches => SS}
+    "q304_mg_sliding_per_key", slidingOracle(4, 4, key = TypeKeySql)) { (spark, dir) =>
     val ev = Tables.events(spark, dir)
-    val starts = slidingStarts(ev, 4, 4)
+    val starts = MonitorGate.slidingStarts(ev, 4, 4)
     val hourly = SS.mgHourly(ev, col("event_type"), col("user_id"),
       col("sec"), 3600L, 32)
-    val cov = SS.mgSlidingSummaries(hourly, 3600L, 32, starts)
-    SS.mgSlidingCheck(
-        ev.select(col("event_type").cast("string").as("key"),
-          col("sec").cast("long").as("sec"),
-          col("user_id").cast("string").as("item")),
-        cov, keyed = true, k = 32)
-      .orderBy("key", "start")
+    mgCheck(ev, Some(typeKey), userItem, hourly, 32, starts).sorted
   }
 
   /** STREAMING-fed sliding quantiles: the per-hour GK summaries fold
@@ -1674,10 +1719,9 @@ object EventQueries {
     * stream maintains the per-quantum cube; ANY window query answers
     * from the cube without touching the stream. */
   val q302 = QueryDef("q302_stream_gk_sliding", q299.oracle.get) { (spark, dir) =>
-    import graft.operators.{SlidingSketches => SS}
     import graft.streaming.EventStreams
     val ev = Tables.events(spark, dir)
-    val starts = slidingStarts(ev, 6, 6)
+    val starts = MonitorGate.slidingStarts(ev, 6, 6)
     val hourly = EventStreams.runToCompletion(spark,
       EventStreams.readEvents(spark, dir)
         .select(lit("").as("key"), expr("sec div 3600").as("q"),
@@ -1685,53 +1729,22 @@ object EventQueries {
         .groupBy("key", "q")
         .agg(graft.plans.GkQuantile.sketch(col("v"), 2048).as("sk")),
       "q302_gk_hourly")
-    val est = SS.gkSlidingEstimates(hourly, 3600L, 2048, starts, Seq(0.1, 0.5, 0.9))
-    SS.gkSlidingCheck(
-        ev.select(col("sec").cast("long").as("sec"),
-          col("value").cast("double").as("v")),
-        est, keyed = false, epsDen = 40)
-      .orderBy("start", "phi")
+    gkCheck(ev, None, hourly, 2048, starts, Seq(0.1, 0.5, 0.9)).sorted
   }
 
   /** STREAMING-NATIVE sliding-quantile monitor (streaming.
-    * SlidingMonitor): the per-(key, quantum) GK cube maintained as
-    * flatMapGroupsWithState STATE across a 4-micro-batch replay —
-    * each trigger carries its exact batch summaries into the stored
-    * level structures (merge-and-reduce discipline preserved across
-    * triggers, so the streamed state obeys the batch error budget) and
-    * emits only the touched quanta with a monotone version. The gate
-    * takes the latest version per (key, quantum) — the live cube — and
-    * runs the IDENTICAL EH + three-leg verification as the batch
-    * per-key gate (q300's oracle verbatim): the strongest equivalence
-    * a stateful-streaming operator can claim. */
+    * SlidingMonitor.gkQuantumMonitor): the per-(key, quantum) GK cube
+    * kept as flatMapGroupsWithState STATE across the replay's triggers.
+    * Each trigger carries its exact batch summaries into the stored
+    * level structures (merge-and-reduce preserved across triggers), so
+    * the streamed state obeys the batch error budget; the live cube
+    * passes the batch per-key gate's check under q300's oracle
+    * verbatim. */
   val q305 = QueryDef("q305_stream_gk_monitor", q300.oracle.get) { (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.operators.{SlidingSketches => SS}
-    import graft.streaming.{EventStreams, SlidingMonitor}
-    val ev = Tables.events(spark, dir)
-    val starts = slidingStarts(ev, 4, 4)
-    val replay = java.nio.file.Files.createTempDirectory("graft_monitor_replay")
-    graft.core.TempPaths.register(replay)
-    ev.select(col("event_type").cast("string").as("key"),
-        expr("sec div 3600").as("q"), col("value").cast("double").as("v"))
-      .repartition(4).write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("q", LongType), StructField("v", DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
-    val fin = EventStreams.runToCompletion(spark,
-      SlidingMonitor.gkQuantumMonitor(stream, 2048).toDF(),
-      "q305_monitor", mode = "update")
-    val hourly = fin.groupBy("key", "q")
-      .agg(max_by(col("sk"), col("ver")).as("sk"))
-    val est = SS.gkSlidingEstimates(hourly, 3600L, 2048, starts, Seq(0.25, 0.75))
-    SS.gkSlidingCheck(
-        ev.select(col("event_type").cast("string").as("key"),
-          col("sec").cast("long").as("sec"),
-          col("value").cast("double").as("v")),
-        est, keyed = true, epsDen = 40)
-      .orderBy("key", "start", "phi")
+    MonitorGate(spark, dir, "q305_monitor", Unbounded(4, 4), gkReplay(typeKey),
+        s => SlidingMonitor.gkQuantumMonitor(s, 2048).toDF()) { (ev, log, starts) =>
+      gkCheck(ev, Some(typeKey), gkCube(log), 2048, starts, Seq(0.25, 0.75))
+    }
   }
 
   /** SLIDING-WINDOW count-min (SlidingSketches.cmHourly/
@@ -1747,29 +1760,12 @@ object EventQueries {
     * the distinct-user count forces real collision mass (q110's
     * discipline). */
   val q306 = QueryDef(
-    "q306_cm_sliding_window",
-    s"""WITH b AS (SELECT MIN(floor(epoch(ts))::BIGINT) AS smin,
-       |            MAX(floor(epoch(ts))::BIGINT) AS smax FROM events),
-       |s AS (SELECT DISTINCT ((smin + (k*(smax - smin))//6)//3600)*3600 AS start
-       |      FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3, 4, 5]) AS k)),
-       |w AS (SELECT s.start, e.user_id::VARCHAR AS item, COUNT(*)::BIGINT AS n_window
-       |      FROM s JOIN events e ON floor(epoch(e.ts))::BIGINT >= s.start
-       |      GROUP BY 1, 2)
-       |SELECT start, item, n_window, 1::BIGINT AS never_under,
-       |       1::BIGINT AS cells_match, 1::BIGINT AS coverage_ok,
-       |       1::BIGINT AS stale_ok
-       |FROM w ORDER BY start, item""".stripMargin) { (spark, dir) =>
-    import graft.operators.{SlidingSketches => SS}
+    "q306_cm_sliding_window", slidingOracle(6, 6, item = UserItemSql)) { (spark, dir) =>
     val ev = Tables.events(spark, dir)
-    val starts = slidingStarts(ev, 6, 6)
+    val starts = MonitorGate.slidingStarts(ev, 6, 6)
     val hourly = SS.cmHourly(ev, col("user_id"), col("sec"), 3600L,
       depth = 4, width = 32)
-    val cells = SS.cmSlidingCells(hourly, 3600L, depth = 4, width = 32, starts)
-    SS.cmSlidingCheck(
-        ev.select(col("sec").cast("long").as("sec"),
-          col("user_id").cast("string").as("item")),
-        cells, depth = 4, width = 32)
-      .orderBy("start", "item")
+    cmCheck(ev, None, userItem, hourly, starts).sorted
   }
 
   /** Exponentially-decayed per-key stats (Analytics.decayedStats):
@@ -1814,271 +1810,89 @@ object EventQueries {
     * verification frame. */
   val q310 = QueryDef(
     "q310_cm_sliding_per_key",
-    s"""WITH b AS (SELECT MIN(floor(epoch(ts))::BIGINT) AS smin,
-       |            MAX(floor(epoch(ts))::BIGINT) AS smax FROM events),
-       |s AS (SELECT DISTINCT ((smin + (k*(smax - smin))//4)//3600)*3600 AS start
-       |      FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS k)),
-       |w AS (SELECT e.event_type AS key, s.start, e.user_id::VARCHAR AS item,
-       |             COUNT(*)::BIGINT AS n_window
-       |      FROM s JOIN events e ON floor(epoch(e.ts))::BIGINT >= s.start
-       |      GROUP BY 1, 2, 3)
-       |SELECT key, start, item, n_window, 1::BIGINT AS never_under,
-       |       1::BIGINT AS cells_match, 1::BIGINT AS coverage_ok,
-       |       1::BIGINT AS stale_ok
-       |FROM w ORDER BY key, start, item""".stripMargin) { (spark, dir) =>
-    import graft.operators.{SlidingSketches => SS}
+    slidingOracle(4, 4, key = TypeKeySql, item = UserItemSql)) { (spark, dir) =>
     val ev = Tables.events(spark, dir)
-    val starts = slidingStarts(ev, 4, 4)
+    val starts = MonitorGate.slidingStarts(ev, 4, 4)
     val hourly = SS.cmHourly(ev, col("user_id"), col("sec"), 3600L,
       depth = 4, width = 32, key = col("event_type"))
-    val cells = SS.cmSlidingCells(hourly, 3600L, depth = 4, width = 32, starts)
-    SS.cmSlidingCheck(
-        ev.select(col("event_type").cast("string").as("key"),
-          col("sec").cast("long").as("sec"),
-          col("user_id").cast("string").as("item")),
-        cells, depth = 4, width = 32, keyed = true)
-      .orderBy("key", "start", "item")
+    cmCheck(ev, Some(typeKey), userItem, hourly, starts).sorted
   }
 
   /** STREAMING-NATIVE heavy-hitter monitor (SlidingMonitor
-    * .mgQuantumMonitor): q305's always-on pattern for Misra–Gries —
-    * the per-quantum k-bounded summary cube maintained as
-    * flatMapGroupsWithState state across a 4-micro-batch replay, each
-    * trigger's exact batch counts folded by ONE mergeable reduce (the
+    * .mgQuantumMonitor): q305's pattern for Misra–Gries, each trigger's
+    * exact batch counts folded by ONE mergeable reduce (the
     * merge-tree-free undercount bound makes the level-carry structure
-    * unnecessary — any cadence stays within n/(k+1)). The gate takes
-    * the latest version per (key, quantum) — the live cube — and runs
-    * the IDENTICAL EH + guarantee verification as the batch sliding
-    * gate (q301's oracle verbatim). */
+    * unnecessary: any cadence stays within n/(k+1)); q301's oracle
+    * verbatim. */
   val q312 = QueryDef("q312_stream_mg_monitor", q301.oracle.get) { (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.operators.{SlidingSketches => SS}
-    import graft.streaming.{EventStreams, SlidingMonitor}
-    val ev = Tables.events(spark, dir)
-    val starts = slidingStarts(ev, 6, 6)
-    val replay = java.nio.file.Files.createTempDirectory("graft_mgmon_replay")
-    graft.core.TempPaths.register(replay)
-    ev.select(lit("").as("key"), expr("sec div 3600").as("q"),
-        col("user_id").cast("string").as("item"))
-      .repartition(4).write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("q", LongType), StructField("item", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
-    val fin = EventStreams.runToCompletion(spark,
-      SlidingMonitor.mgQuantumMonitor(stream, 64).toDF(),
-      "q312_mg_monitor", mode = "update")
-    val hourly = fin.groupBy("key", "q")
-      .agg(max_by(struct(col("n"), col("entries")), col("ver")).as("w"))
-      .select(col("key"), col("q"), col("w.n").as("n"),
-        col("w.entries").as("entries"))
-    val cov = SS.mgSlidingSummaries(hourly, 3600L, 64, starts)
-    SS.mgSlidingCheck(
-        ev.select(col("sec").cast("long").as("sec"),
-          col("user_id").cast("string").as("item")),
-        cov, keyed = false, k = 64)
-      .orderBy("start")
+    MonitorGate(spark, dir, "q312_mg_monitor", Unbounded(6, 6),
+        mgReplay(lit(""), userItem),
+        s => SlidingMonitor.mgQuantumMonitor(s, 64).toDF()) { (ev, log, starts) =>
+      mgCheck(ev, None, userItem, mgCube(log), 64, starts)
+    }
   }
 
   /** STREAMING-NATIVE count-min monitor (SlidingMonitor
-    * .cmQuantumMonitor): the fourth family member's always-on leg.
-    * Cells are additive and canonical, so the monitor keeps NO cell
-    * state at all — each trigger emits its per-quantum DELTA cells and
-    * the reader's additive fold (SlidingMonitor.cmCubeFromDeltas)
-    * reconstructs a cube BIT-IDENTICAL to a batch build at any trigger
-    * cadence. Items are pre-hashed on the shared md5 as a pure
-    * streaming projection (SlidingSketches.cmKeyRows, ONE row per
-    * event); the ×depth cell explosion happens in the mapPartitions
-    * PRE-FOLD (executor-side, before the per-key shuffle) with the
-    * pure-Scala coefficient family. Additive cube read → the identical
-    * EH + cell-for-cell verification as the batch sliding gate (q306's
-    * oracle verbatim). */
+    * .cmQuantumMonitor). Cells are additive and canonical, so the
+    * monitor keeps NO cell state: each trigger emits its per-quantum
+    * DELTA cells, and the additive read reconstructs a cube
+    * BIT-IDENTICAL to a batch build at any trigger cadence. Items are
+    * pre-hashed as a pure streaming projection (SlidingSketches
+    * .cmKeyRows, one row per event); the ×depth cell explosion happens
+    * in the executor-side pre-fold. q306's oracle verbatim. */
   val q313 = QueryDef("q313_stream_cm_monitor", q306.oracle.get) { (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.operators.{SlidingSketches => SS}
-    import graft.streaming.{EventStreams, SlidingMonitor}
-    val ev = Tables.events(spark, dir)
-    val starts = slidingStarts(ev, 6, 6)
-    val replay = java.nio.file.Files.createTempDirectory("graft_cmmon_replay")
-    graft.core.TempPaths.register(replay)
-    ev.select(col("user_id"), col("sec")).repartition(4)
-      .write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("sec", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
-    val keyRows = SS.cmKeyRows(stream, col("user_id"), col("sec"), 3600L)
-    val fin = EventStreams.runToCompletion(spark,
-      SlidingMonitor.cmQuantumMonitor(keyRows, depth = 4, width = 32).toDF(),
-      "q313_cm_monitor", mode = "update")
-    val hourly = SlidingMonitor.cmCubeFromDeltas(fin)
-    val cells = SS.cmSlidingCells(hourly, 3600L, depth = 4, width = 32, starts)
-    SS.cmSlidingCheck(
-        ev.select(col("sec").cast("long").as("sec"),
-          col("user_id").cast("string").as("item")),
-        cells, depth = 4, width = 32)
-      .orderBy("start", "item")
+    MonitorGate(spark, dir, "q313_cm_monitor", Unbounded(6, 6),
+        _.select(col("user_id"), col("sec")), cmMonitor(lit(""))) { (ev, log, starts) =>
+      cmCheck(ev, None, userItem, SlidingMonitor.cmCubeFromDeltas(log), starts)
+    }
   }
 
-  /** The GK monitor's RETENTION HORIZON under load — the gate that
-    * makes "always-on" true: a TIME-ORDERED 4-micro-batch replay
-    * (range-partitioned by quantum, appended oldest-first so triggers
-    * arrive in event-time order, each quantum wholly in one trigger)
-    * drives gkQuantumMonitor with a 240-quantum horizon over a
-    * ~720-quantum stream, so roughly two thirds of the cube is EVICTED
-    * from state by completion. Window starts all lie INSIDE the final
-    * horizon; the gate asserts answers there are exactly what the
-    * unbounded monitor gives (same three-leg verification, exact
-    * n_window anchors) — eviction frees state without touching what
-    * the horizon still promises. The state-size bound itself and the
+  /** The GK monitor's RETENTION HORIZON under load: a 240-quantum
+    * horizon over a ~720-quantum time-ordered replay evicts roughly two
+    * thirds of the cube from state by completion, and answers inside
+    * the horizon must be exactly the unbounded monitor's (the horizon
+    * contract of [[MonitorGate]]). The state-size bound and the
     * inside-horizon emission equivalence across cadences are asserted
     * in SlidingEhSpec via the testFold seam. */
   val q314 = QueryDef(
-    "q314_stream_gk_monitor_horizon",
-    s"""WITH b AS (SELECT MAX(floor(epoch(ts))::BIGINT) AS smax FROM events),
-       |s AS (SELECT DISTINCT ((smax//3600) - k*50)*3600 AS start
-       |      FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS k)),
-       |w AS (SELECT s.start, COUNT(*)::BIGINT AS n_window
-       |      FROM s JOIN events e ON floor(epoch(e.ts))::BIGINT >= s.start
-       |      GROUP BY 1),
-       |p AS (SELECT CAST(unnest([0.25, 0.75]) AS DOUBLE) AS phi)
-       |SELECT start, phi, n_window, 1::BIGINT AS rank_ok,
-       |       1::BIGINT AS coverage_ok, 1::BIGINT AS stale_ok
-       |FROM w CROSS JOIN p ORDER BY start, phi""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.operators.{SlidingSketches => SS}
-    import graft.streaming.{EventStreams, SlidingMonitor}
-    val ev = Tables.events(spark, dir)
-    // one scan for both loop-control scalars (guide §2.4)
-    val mmSec = ev.agg(min(col("sec")).cast("long"),
-      max(col("sec")).cast("long")).head
-    val smax = mmSec.getLong(1)
-    val qMax = smax / 3600L
-    val horizon = 240L
-    // starts inside the final horizon (newest 240 quanta)
-    val starts = (0 until 4).map(k => (qMax - k.toLong * 50L) * 3600L).distinct
-    val replay = java.nio.file.Files.createTempDirectory("graft_horizon_replay")
-    graft.core.TempPaths.register(replay)
-    val typed = ev.select(lit("").as("key"), expr("sec div 3600").as("q"),
-      col("value").cast("double").as("v"))
-    // time-ordered replay: 4 disjoint quantum ranges appended
-    // oldest-first with PINNED strictly increasing file mod-times
-    // (sequential writes can share a millisecond, which would leave
-    // FileStreamSource trigger order unspecified), so eviction's
-    // monotone cutoff never sees in-horizon data late
-    val qMin = mmSec.getLong(0) / 3600L
-    writeOrderedReplay((0 until 4).map { i =>
-      val lo = qMin + i.toLong * (qMax - qMin + 1) / 4
-      val hi = qMin + (i.toLong + 1) * (qMax - qMin + 1) / 4
-      typed.filter(col("q") >= lo && col("q") < (if (i == 3) qMax + 1 else hi))
-    }, replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("q", LongType), StructField("v", DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
-    val fin = EventStreams.runToCompletion(spark,
-      SlidingMonitor.gkQuantumMonitor(stream, 2048, horizonQuanta = horizon).toDF(),
-      "q314_monitor", mode = "update")
-    // the live cube inside the final horizon (older quanta were evicted
-    // from STATE; their earlier emissions are out of the contract)
-    val hourly = fin.filter(col("q") > qMax - horizon)
-      .groupBy("key", "q")
-      .agg(max_by(col("sk"), col("ver")).as("sk"))
-    val est = SS.gkSlidingEstimates(hourly, 3600L, 2048, starts, Seq(0.25, 0.75))
-    SS.gkSlidingCheck(
-        ev.select(col("sec").cast("long").as("sec"),
-          col("value").cast("double").as("v")),
-        est, keyed = false, epsDen = 40)
-      .orderBy("start", "phi")
+    "q314_stream_gk_monitor_horizon", horizonOracle(50, Seq(0.25, 0.75))) { (spark, dir) =>
+    MonitorGate(spark, dir, "q314_monitor", Horizon(240L, 50L, None), gkReplay(lit("")),
+        s => SlidingMonitor.gkQuantumMonitor(s, 2048, horizonQuanta = 240L).toDF()) {
+      (ev, log, starts) =>
+      gkCheck(ev, None, gkCube(log), 2048, starts, Seq(0.25, 0.75))
+    }
   }
 
-  /** Per-KEY streaming MG monitor: one always-on per-quantum
-    * heavy-hitter cube per event type — q312's topology keyed,
-    * completing the monitor family's global/per-key symmetry the
-    * sliding gates already have. Same oracle as the batch per-key
-    * sliding gate (q304): the cube feeds the identical EH + guarantee
-    * verification. */
+  /** Per-KEY streaming MG monitor: q312 per event type, completing the
+    * monitor family's global/per-key symmetry; q304's oracle. */
   val q316 = QueryDef("q316_stream_mg_monitor_per_key", q304.oracle.get) {
     (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.operators.{SlidingSketches => SS}
-    import graft.streaming.{EventStreams, SlidingMonitor}
-    val ev = Tables.events(spark, dir)
-    val starts = slidingStarts(ev, 4, 4)
-    val replay = java.nio.file.Files.createTempDirectory("graft_mgmonk_replay")
-    graft.core.TempPaths.register(replay)
-    ev.select(col("event_type").cast("string").as("key"),
-        expr("sec div 3600").as("q"), col("user_id").cast("string").as("item"))
-      .repartition(4).write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("q", LongType), StructField("item", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
-    val fin = EventStreams.runToCompletion(spark,
-      SlidingMonitor.mgQuantumMonitor(stream, 32).toDF(),
-      "q316_mg_monitor_k", mode = "update")
-    val hourly = fin.groupBy("key", "q")
-      .agg(max_by(struct(col("n"), col("entries")), col("ver")).as("w"))
-      .select(col("key"), col("q"), col("w.n").as("n"),
-        col("w.entries").as("entries"))
-    val cov = SS.mgSlidingSummaries(hourly, 3600L, 32, starts)
-    SS.mgSlidingCheck(
-        ev.select(col("event_type").cast("string").as("key"),
-          col("sec").cast("long").as("sec"),
-          col("user_id").cast("string").as("item")),
-        cov, keyed = true, k = 32)
-      .orderBy("key", "start")
+    MonitorGate(spark, dir, "q316_mg_monitor_k", Unbounded(4, 4),
+        mgReplay(typeKey, userItem),
+        s => SlidingMonitor.mgQuantumMonitor(s, 32).toDF()) { (ev, log, starts) =>
+      mgCheck(ev, Some(typeKey), userItem, mgCube(log), 32, starts)
+    }
   }
 
-  /** Per-KEY streaming count-min monitor: one always-on per-quantum
-    * cell cube per event type — q313's topology keyed (hashed-item
-    * rows carry the key; one flatMapGroupsWithState group per type),
-    * verified cell-for-cell with the batch per-key sliding gate's
-    * oracle (q310). */
+  /** Per-KEY streaming count-min monitor: q313 per event type (hashed
+    * item rows carry the key; one state group per type); q310's
+    * oracle. */
   val q317 = QueryDef("q317_stream_cm_monitor_per_key", q310.oracle.get) {
     (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.operators.{SlidingSketches => SS}
-    import graft.streaming.{EventStreams, SlidingMonitor}
-    val ev = Tables.events(spark, dir)
-    val starts = slidingStarts(ev, 4, 4)
-    val replay = java.nio.file.Files.createTempDirectory("graft_cmmonk_replay")
-    graft.core.TempPaths.register(replay)
-    ev.select(col("user_id"), col("event_type"), col("sec")).repartition(4)
-      .write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("sec", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
-    val keyRows = SS.cmKeyRows(stream, col("user_id"), col("sec"), 3600L,
-      key = col("event_type"))
-    val fin = EventStreams.runToCompletion(spark,
-      SlidingMonitor.cmQuantumMonitor(keyRows, depth = 4, width = 32).toDF(),
-      "q317_cm_monitor_k", mode = "update")
-    val hourly = SlidingMonitor.cmCubeFromDeltas(fin)
-    val cells = SS.cmSlidingCells(hourly, 3600L, depth = 4, width = 32, starts)
-    SS.cmSlidingCheck(
-        ev.select(col("event_type").cast("string").as("key"),
-          col("sec").cast("long").as("sec"),
-          col("user_id").cast("string").as("item")),
-        cells, depth = 4, width = 32, keyed = true)
-      .orderBy("key", "start", "item")
+    MonitorGate(spark, dir, "q317_cm_monitor_k", Unbounded(4, 4), cmReplay,
+        cmMonitor(col("event_type"))) { (ev, log, starts) =>
+      cmCheck(ev, Some(typeKey), userItem, SlidingMonitor.cmCubeFromDeltas(log), starts)
+    }
   }
 
-  /** Per-KEY decayed Misra–Gries: one recency-weighted top-talker
-    * sketch per event type, each rebasing against its own max(t)
-    * watermark (the aggregate's group semantics) — q315's guarantee
-    * reduction run per key against each key's own exact decayed
-    * masses. The skewed item column makes each key 3/4 its own name
-    * (the dominant heavy) + 1/4 per-user noise, so per-key eviction
-    * runs while every key has a guaranteed-present heavy set. */
-  val q318 = QueryDef(
-    "q318_decayed_mg_per_key",
+  /** q318's oracle, repeated per trigger `cadences` when non-empty
+    * (q321). */
+  private def decayedMgPerKeyOracle(cadences: Seq[String]): String = {
+    val (c, cte, join) =
+      if (cadences.isEmpty) ("", "", "")
+      else ("cadence, ",
+        s", c AS (SELECT unnest([${cadences.map(x => s"'$x'").mkString(", ")}]) AS cadence)",
+        " CROSS JOIN c")
     s"""WITH tr AS (SELECT event_type AS key,
        |            MAX(floor(epoch(ts))::BIGINT) AS t_ref
        |      FROM events GROUP BY 1),
@@ -2092,11 +1906,22 @@ object EventQueries {
        |      FROM b),
        |g AS (SELECT key, item, COUNT(*)::BIGINT AS n, ${Cross.dsumSql("w")} AS m
        |      FROM w GROUP BY 1, 2),
-       |tot AS (SELECT key, ${Cross.dsumSql("w")} AS wt FROM w GROUP BY 1)
-       |SELECT g.key, item, n, ${Cross.r6Sql("m")} AS m, 1::BIGINT AS present,
+       |tot AS (SELECT key, ${Cross.dsumSql("w")} AS wt FROM w GROUP BY 1)$cte
+       |SELECT ${c}g.key, item, n, ${Cross.r6Sql("m")} AS m, 1::BIGINT AS present,
        |       1::BIGINT AS bounds_ok, 1::BIGINT AS w_ok
-       |FROM g JOIN tot ON g.key = tot.key
-       |WHERE m * 9 > wt ORDER BY g.key, item""".stripMargin) { (spark, dir) =>
+       |FROM g JOIN tot ON g.key = tot.key$join
+       |WHERE m * 9 > wt ORDER BY ${c}g.key, item""".stripMargin
+  }
+
+  /** Per-KEY decayed Misra–Gries: one recency-weighted top-talker
+    * sketch per event type, each rebasing against its own max(t)
+    * watermark (the aggregate's group semantics) — q315's guarantee
+    * reduction run per key against each key's own exact decayed
+    * masses. The skewed item column makes each key 3/4 its own name
+    * (the dominant heavy) + 1/4 per-user noise, so per-key eviction
+    * runs while every key has a guaranteed-present heavy set. */
+  val q318 = QueryDef(
+    "q318_decayed_mg_per_key", decayedMgPerKeyOracle(Nil)) { (spark, dir) =>
     val ev = Tables.events(spark, dir)
     val item = when(pmod(col("event_id"), lit(4)) === 0,
       concat(lit("u"), col("user_id"))).otherwise(col("event_type"))
@@ -2301,206 +2126,55 @@ object EventQueries {
       .orderBy("key")
   }
 
-  /** The MG monitor's RETENTION HORIZON under load — q314's contract
-    * for the heavy-hitter member, KEYED: a time-ordered 4-micro-batch
-    * replay (pinned file mod-times) drives the per-event-type
-    * mgQuantumMonitor with a 240-quantum horizon over a ~720-quantum
-    * stream, evicting roughly two thirds of each key's cube from
-    * state. Window starts all lie inside every key's final horizon
-    * (per-key cutoffs are never newer than the global one); the gate
-    * reads the live cube (latest version per (key, quantum), filtered
-    * to each key's own horizon) and runs the identical EH + guarantee
-    * verification as the batch per-key sliding gate. */
+  /** The MG monitor's retention horizon, KEYED per event type: each
+    * key's cube is cut at its own high-water quantum (per-key cutoffs
+    * are never newer than the global one, so every window start lies
+    * inside every key's horizon); q314's contract, checked with the
+    * per-key sliding MG reduction. */
   val q319 = QueryDef(
-    "q319_stream_mg_monitor_horizon",
-    s"""WITH b AS (SELECT MAX(floor(epoch(ts))::BIGINT) AS smax FROM events),
-       |s AS (SELECT DISTINCT ((smax//3600) - k*50)*3600 AS start
-       |      FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS k)),
-       |w AS (SELECT e.event_type AS key, s.start, COUNT(*)::BIGINT AS n_window
-       |      FROM s JOIN events e ON floor(epoch(e.ts))::BIGINT >= s.start
-       |      GROUP BY 1, 2)
-       |SELECT key, start, n_window, 1::BIGINT AS heavy_ok,
-       |       1::BIGINT AS bounds_ok, 1::BIGINT AS coverage_ok,
-       |       1::BIGINT AS stale_ok
-       |FROM w ORDER BY key, start""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.operators.{SlidingSketches => SS}
-    import graft.streaming.{EventStreams, SlidingMonitor}
-    val ev = Tables.events(spark, dir)
-    // one scan for both loop-control scalars (guide §2.4: two driver
-    // actions over the same relation for min and max were two jobs)
-    val mmSec = ev.agg(min(col("sec")).cast("long"),
-      max(col("sec")).cast("long")).head
-    val smax = mmSec.getLong(1)
-    val qMin = mmSec.getLong(0) / 3600L
-    val qMax = smax / 3600L
-    val horizon = 240L
-    val starts = (0 until 4).map(k => (qMax - k.toLong * 50L) * 3600L).distinct
-    val replay = java.nio.file.Files.createTempDirectory("graft_mghor_replay")
-    graft.core.TempPaths.register(replay)
-    val typed = ev.select(col("event_type").cast("string").as("key"),
-      expr("sec div 3600").as("q"), col("user_id").cast("string").as("item"))
-    writeOrderedReplay((0 until 4).map { i =>
-      val lo = qMin + i.toLong * (qMax - qMin + 1) / 4
-      val hi = qMin + (i.toLong + 1) * (qMax - qMin + 1) / 4
-      typed.filter(col("q") >= lo && col("q") < (if (i == 3) qMax + 1 else hi))
-    }, replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("q", LongType), StructField("item", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
-    val fin = EventStreams.runToCompletion(spark,
-      SlidingMonitor.mgQuantumMonitor(stream, 32, horizonQuanta = horizon).toDF(),
-      "q319_mg_horizon", mode = "update")
-    // the live cube: per-key horizon (eviction keys on each key's own
-    // high-water quantum; stale emissions for evicted quanta are out of
-    // the contract)
-    val keyQMax = ev.groupBy(col("event_type").cast("string").as("key"))
-      .agg(expr("cast(max(sec) as long) div 3600").as("q_max_k"))
-    val hourly = fin.join(broadcast(keyQMax), "key")
-      .filter(col("q") > col("q_max_k") - horizon)
-      .groupBy("key", "q")
-      .agg(max_by(struct(col("n"), col("entries")), col("ver")).as("w"))
-      .select(col("key"), col("q"), col("w.n").as("n"),
-        col("w.entries").as("entries"))
-    val cov = SS.mgSlidingSummaries(hourly, 3600L, 32, starts)
-    SS.mgSlidingCheck(
-        ev.select(col("event_type").cast("string").as("key"),
-          col("sec").cast("long").as("sec"),
-          col("user_id").cast("string").as("item")),
-        cov, keyed = true, k = 32)
-      .orderBy("key", "start")
+    "q319_stream_mg_monitor_horizon", horizonOracle(50, key = TypeKeySql)) { (spark, dir) =>
+    MonitorGate(spark, dir, "q319_mg_horizon", Horizon(240L, 50L, Some(typeKey)),
+        mgReplay(typeKey, userItem),
+        s => SlidingMonitor.mgQuantumMonitor(s, 32, horizonQuanta = 240L).toDF()) {
+      (ev, log, starts) =>
+      mgCheck(ev, Some(typeKey), userItem, mgCube(log), 32, starts)
+    }
   }
 
-  /** The COUNT-MIN monitor's retention horizon — the last member's
-    * q314 contract, keyed, with the family's strongest verification:
-    * the live cube's EH-merged covered cells must EQUAL a direct build
-    * over the raw covered suffix cell-for-cell (cells are canonical,
-    * so horizon eviction must be invisible inside the horizon, not
-    * merely within a bound). */
+  /** The count-min monitor's retention horizon, keyed per event type:
+    * cells are canonical, so eviction must be invisible inside the
+    * horizon cell-for-cell, not merely within a bound. */
   val q320 = QueryDef(
     "q320_stream_cm_monitor_horizon",
-    s"""WITH b AS (SELECT MAX(floor(epoch(ts))::BIGINT) AS smax FROM events),
-       |s AS (SELECT DISTINCT ((smax//3600) - k*50)*3600 AS start
-       |      FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS k)),
-       |w AS (SELECT e.event_type AS key, s.start, e.user_id::VARCHAR AS item,
-       |             COUNT(*)::BIGINT AS n_window
-       |      FROM s JOIN events e ON floor(epoch(e.ts))::BIGINT >= s.start
-       |      GROUP BY 1, 2, 3)
-       |SELECT key, start, item, n_window, 1::BIGINT AS never_under,
-       |       1::BIGINT AS cells_match, 1::BIGINT AS coverage_ok,
-       |       1::BIGINT AS stale_ok
-       |FROM w ORDER BY key, start, item""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.operators.{SlidingSketches => SS}
-    import graft.streaming.{EventStreams, SlidingMonitor}
-    val ev = Tables.events(spark, dir)
-    // one scan for both loop-control scalars (guide §2.4: two driver
-    // actions over the same relation for min and max were two jobs)
-    val mmSec = ev.agg(min(col("sec")).cast("long"),
-      max(col("sec")).cast("long")).head
-    val smax = mmSec.getLong(1)
-    val qMin = mmSec.getLong(0) / 3600L
-    val qMax = smax / 3600L
-    val horizon = 240L
-    val starts = (0 until 4).map(k => (qMax - k.toLong * 50L) * 3600L).distinct
-    val replay = java.nio.file.Files.createTempDirectory("graft_cmhor_replay")
-    graft.core.TempPaths.register(replay)
-    val typed = ev.select(col("user_id"), col("event_type"),
-      col("sec").cast("long").as("sec"))
-    writeOrderedReplay((0 until 4).map { i =>
-      val lo = (qMin + i.toLong * (qMax - qMin + 1) / 4) * 3600L
-      val hi = (qMin + (i.toLong + 1) * (qMax - qMin + 1) / 4) * 3600L
-      typed.filter(col("sec") >= lo &&
-        col("sec") < (if (i == 3) smax + 1 else hi))
-    }, replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("sec", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
-    val keyRows = SS.cmKeyRows(stream, col("user_id"), col("sec"), 3600L,
-      key = col("event_type"))
-    val fin = EventStreams.runToCompletion(spark,
-      SlidingMonitor.cmQuantumMonitor(keyRows, depth = 4, width = 32,
-        horizonQuanta = horizon).toDF(),
-      "q320_cm_horizon", mode = "update")
-    val keyQMax = ev.groupBy(col("event_type").cast("string").as("key"))
-      .agg(expr("cast(max(sec) as long) div 3600").as("q_max_k"))
-    val hourly = SlidingMonitor.cmCubeFromDeltas(
-      fin.join(broadcast(keyQMax), "key")
-        .filter(col("q") > col("q_max_k") - horizon))
-    val cells = SS.cmSlidingCells(hourly, 3600L, depth = 4, width = 32, starts)
-    SS.cmSlidingCheck(
-        ev.select(col("event_type").cast("string").as("key"),
-          col("sec").cast("long").as("sec"),
-          col("user_id").cast("string").as("item")),
-        cells, depth = 4, width = 32, keyed = true)
-      .orderBy("key", "start", "item")
+    horizonOracle(50, key = TypeKeySql, item = UserItemSql)) { (spark, dir) =>
+    MonitorGate(spark, dir, "q320_cm_horizon", Horizon(240L, 50L, Some(typeKey)),
+        cmReplay, cmMonitor(col("event_type"), horizon = 240L)) { (ev, log, starts) =>
+      cmCheck(ev, Some(typeKey), userItem, SlidingMonitor.cmCubeFromDeltas(log), starts)
+    }
   }
 
   /** The DECAYED-MG monitor (SlidingMonitor.decayedMgMonitor): "top
-    * talkers, recency-weighted, RIGHT NOW" as always-on state — the
-    * production panel shape q315/q318 only answered post-hoc. Per
+    * talkers, recency-weighted, RIGHT NOW" as always-on state. Per
     * trigger each key's state rebases to its new watermark and folds
-    * the batch's weighted counts (O(k) per advance — the DecayedMgAgg
-    * rebasing identity, one shared implementation); the gate replays
-    * the same stream at TWO trigger cadences and runs q315's guarantee
-    * reduction (presence + weighted-MG bounds against two-pass exact
-    * decayed masses, total-mass/watermark agreement) on each cadence's
-    * latest-version state — the weighted bounds are merge-tree-free,
-    * so both cadences must pass identically. */
+    * the batch's weighted counts (the DecayedMgAgg rebasing identity).
+    * The same replay runs at TWO trigger cadences, and each cadence's
+    * latest-version state must pass q315's guarantee reduction per key
+    * (presence + weighted-MG bounds against two-pass exact decayed
+    * masses, total-mass/watermark agreement): the weighted bounds are
+    * merge-tree-free, so both cadences pass identically. */
   val q321 = QueryDef(
-    "q321_stream_decayed_mg_monitor",
-    s"""WITH tr AS (SELECT event_type AS key,
-       |            MAX(floor(epoch(ts))::BIGINT) AS t_ref
-       |      FROM events GROUP BY 1),
-       |b AS (SELECT e.event_type AS key,
-       |             CASE WHEN e.event_id % 4 = 0 THEN 'u' || e.user_id
-       |                  ELSE e.event_type END AS item,
-       |             floor(epoch(e.ts))::BIGINT AS t, tr.t_ref
-       |      FROM events e JOIN tr ON e.event_type = tr.key),
-       |w AS (SELECT key, item,
-       |             ${Cross.r6Sql("pow(2.0, (t - t_ref)::DOUBLE / 86400.0)")} AS w
-       |      FROM b),
-       |g AS (SELECT key, item, COUNT(*)::BIGINT AS n, ${Cross.dsumSql("w")} AS m
-       |      FROM w GROUP BY 1, 2),
-       |tot AS (SELECT key, ${Cross.dsumSql("w")} AS wt FROM w GROUP BY 1),
-       |c AS (SELECT unnest(['c1', 'c4']) AS cadence)
-       |SELECT cadence, g.key, item, n, ${Cross.r6Sql("m")} AS m,
-       |       1::BIGINT AS present, 1::BIGINT AS bounds_ok, 1::BIGINT AS w_ok
-       |FROM g JOIN tot ON g.key = tot.key CROSS JOIN c
-       |WHERE m * 9 > wt ORDER BY cadence, g.key, item""".stripMargin) {
+    "q321_stream_decayed_mg_monitor", decayedMgPerKeyOracle(Seq("c1", "c4"))) {
     (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.streaming.{EventStreams, SlidingMonitor}
     val ev = Tables.events(spark, dir)
     val item = when(pmod(col("event_id"), lit(4)) === 0,
       concat(lit("u"), col("user_id"))).otherwise(col("event_type"))
-    val replay = java.nio.file.Files.createTempDirectory("graft_dmmon_replay")
-    graft.core.TempPaths.register(replay)
-    ev.select(col("event_type").cast("string").as("key"),
-        col("sec").cast("long").as("t"), item.cast("string").as("item"))
-      .repartition(4).write.mode("overwrite").parquet(replay.toString)
-    def cadence(maxFiles: Int, tag: String): org.apache.spark.sql.DataFrame = {
-      val stream = spark.readStream
-        .schema(StructType(Seq(StructField("key", StringType),
-          StructField("t", LongType), StructField("item", StringType))))
-        .option("maxFilesPerTrigger", maxFiles)
-        .parquet(replay.toString)
-      val fin = EventStreams.runToCompletion(spark,
-        SlidingMonitor.decayedMgMonitor(stream, 86400L, 8).toDF(),
-        s"q321_dm_monitor_$tag", mode = "update")
-      val sk = fin.groupBy("key")
-        .agg(max_by(struct(col("t_ref"), col("w"), col("entries")),
-          col("ver")).as("s"))
-        .select(col("key"), col("s.t_ref").as("t_sk"), col("s.w").as("w_sk"),
-          explode(col("s.entries")).as("e"))
-        .select(col("key"), col("t_sk"), col("w_sk"),
-          col("e.item").as("item"), col("e.est").as("est"))
-      graft.operators.Analytics.decayedMgHeavyPerKeyFrame(ev,
-          col("event_type"), item, col("sec"), halfLifeSec = 86400L, k = 8, sk)
+    val replay = MonitorGate.replay(ev.select(typeKey.as("key"),
+      col("sec").cast("long").as("t"), item.cast("string").as("item")), "q321", 4)
+    def cadence(maxFiles: Int, tag: String): DataFrame = {
+      val (log, _) = MonitorGate.run(SlidingMonitor.decayedMgMonitor(
+        replay.stream(maxFiles), 86400L, 8).toDF(), s"q321_dm_monitor_$tag")
+      graft.operators.Analytics.decayedMgHeavyPerKeyFrame(ev, col("event_type"),
+          item, col("sec"), halfLifeSec = 86400L, k = 8, dmCube(log, col("ver")))
         .withColumn("cadence", lit(tag))
     }
     cadence(1, "c1").unionByName(cadence(4, "c4"))
@@ -2509,284 +2183,62 @@ object EventQueries {
       .orderBy("cadence", "key", "item")
   }
 
-  /** KEY EVICTION for the always-on monitors — the gate that bounds
-    * total state when the monitor is keyed by a HIGH-CARDINALITY
-    * column (user_id × event_type — the per-source telemetry shape):
-    * gkQuantumMonitor with `evictKeys = true` drops a key (with a
-    * tombstone emission and a watermark admission floor that forbids
-    * partial-quantum resurrection) once the global event-time
-    * watermark passes a full horizon beyond the key's own high-water
-    * quantum. The gate asserts the full contract on a time-ordered
-    * replay: (a) live keys' in-horizon answers carry the identical
-    * three-leg GK verification as the un-evicting monitor (any key
-    * with window data is necessarily live, so the oracle needs no
-    * liveness filter); (b) STATE_OK — the final stateful-operator row
-    * count equals the exactly-predicted live-key count (total state is
-    * bounded by live keys, not keys-ever-seen); (c) EVICT_OK — every
-    * key whose last activity fell a full horizon behind the final
-    * watermark was tombstoned. */
+  /** KEY EVICTION for the GK monitor, keyed by the high-cardinality
+    * user × event type (the per-source telemetry shape, whose state is
+    * O(keys ever seen) without eviction): `evictKeys = true` drops a
+    * key, with a tombstone and a watermark admission floor that forbids
+    * partial-quantum resurrection, once the watermark passes a full
+    * 48-quantum horizon beyond the key's own high-water quantum. The
+    * gate asserts the eviction contract (a)–(c) of [[MonitorGate]]; any
+    * key with window data is live, so the oracle needs no liveness
+    * filter. */
   val q322 = QueryDef(
     "q322_stream_gk_monitor_key_evict",
-    s"""WITH b AS (SELECT MAX(floor(epoch(ts))::BIGINT) AS smax FROM events),
-       |s AS (SELECT DISTINCT ((smax//3600) - k*12)*3600 AS start
-       |      FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS k)),
-       |w AS (SELECT e.user_id::VARCHAR || '_' || e.event_type AS key, s.start,
-       |             COUNT(*)::BIGINT AS n_window
-       |      FROM s JOIN events e ON floor(epoch(e.ts))::BIGINT >= s.start
-       |      GROUP BY 1, 2),
-       |p AS (SELECT CAST(unnest([0.25, 0.75]) AS DOUBLE) AS phi)
-       |SELECT key, start, phi, n_window, 1::BIGINT AS rank_ok,
-       |       1::BIGINT AS coverage_ok, 1::BIGINT AS stale_ok,
-       |       1::BIGINT AS state_ok, 1::BIGINT AS evict_ok
-       |FROM w CROSS JOIN p ORDER BY key, start, phi""".stripMargin) {
+    horizonOracle(12, Seq(0.25, 0.75), key = UserTypeKeySql, evict = true)) {
     (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.operators.{SlidingSketches => SS}
-    import graft.streaming.{EventStreams, SlidingMonitor}
-    val ev = Tables.events(spark, dir)
-    val keyCol = concat(col("user_id").cast("string"), lit("_"),
-      col("event_type").cast("string"))
-    // one scan for both loop-control scalars (guide §2.4: two driver
-    // actions over the same relation for min and max were two jobs)
-    val mmSec = ev.agg(min(col("sec")).cast("long"),
-      max(col("sec")).cast("long")).head
-    val smax = mmSec.getLong(1)
-    val qMin = mmSec.getLong(0) / 3600L
-    val qMax = smax / 3600L
-    val horizon = 48L
-    val starts = (0 until 4).map(k => (qMax - k.toLong * 12L) * 3600L).distinct
-    val replay = java.nio.file.Files.createTempDirectory("graft_evict_replay")
-    graft.core.TempPaths.register(replay)
-    val typed = ev.select(keyCol.as("key"),
-      expr("sec div 3600").as("q"), col("value").cast("double").as("v"))
-    writeOrderedReplay((0 until 4).map { i =>
-      val lo = qMin + i.toLong * (qMax - qMin + 1) / 4
-      val hi = qMin + (i.toLong + 1) * (qMax - qMin + 1) / 4
-      typed.filter(col("q") >= lo && col("q") < (if (i == 3) qMax + 1 else hi))
-    }, replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("q", LongType), StructField("v", DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
-    val (fin0, stateRows) = EventStreams.runToCompletionStateRows(spark,
-      SlidingMonitor.gkQuantumMonitor(stream, 512, horizonQuanta = horizon,
-        evictKeys = true, quantumSec = 3600L).toDF(),
-      "q322_evict_monitor", mode = "update")
-    val fin = fin0.localCheckpoint(true)
-    // eviction contract, exactly predicted from raw data: the monitor's
-    // self-derived watermark is the global high-water QUANTUM's start
-    // (zero delay), so a key is evicted iff qMax > q_max_k + horizon
-    val perKey = ev.select(keyCol.as("key"), col("sec").cast("long").as("sec"))
-      .groupBy("key")
-      .agg(expr("cast(max(sec) as long) div 3600").as("q_max_k"))
-      .localCheckpoint(true)
-    val expectedLive = perKey
-      .filter(lit(qMax) <= col("q_max_k") + horizon)
-    val stateOk = stateRows == expectedLive.count()
-    val tombstoned = fin.filter(col("q") === -1L).select("key").distinct()
-    val expectedEvicted = perKey
-      .filter(lit(qMax) > col("q_max_k") + horizon).select("key")
-    // every finally-evicted key must have been tombstoned (a live key
-    // MAY also carry a mid-stream tombstone from an activity gap — it
-    // was correctly evicted during the gap and re-admitted)
-    val evictOk = expectedEvicted.except(tombstoned).count() == 0L
-    // live cube: per-key horizon; a re-admitted key's pre-gap emissions
-    // are all at least a full horizon older than its final high-water
-    // quantum, so the filter also screens out stale-version collisions
-    val hourly = fin.filter(col("q") >= 0L)
-      .join(broadcast(perKey), "key")
-      .filter(col("q") > col("q_max_k") - horizon)
-      .groupBy("key", "q")
-      .agg(max_by(col("sk"), col("ver")).as("sk"))
-    val est = SS.gkSlidingEstimates(hourly, 3600L, 512, starts, Seq(0.25, 0.75))
-    SS.gkSlidingCheck(
-        ev.select(keyCol.as("key"), col("sec").cast("long").as("sec"),
-          col("value").cast("double").as("v")),
-        est, keyed = true, epsDen = 40)
-      .withColumn("state_ok", lit(if (stateOk) 1L else 0L))
-      .withColumn("evict_ok", lit(if (evictOk) 1L else 0L))
-      .orderBy("key", "start", "phi")
+    MonitorGate(spark, dir, "q322_evict_monitor", Evict(48L, 12L, userTypeKey),
+        gkReplay(userTypeKey), s => SlidingMonitor.gkQuantumMonitor(s, 512,
+          horizonQuanta = 48L, evictKeys = true, quantumSec = 3600L).toDF()) {
+      (ev, log, starts) =>
+      gkCheck(ev, Some(userTypeKey), gkCube(log), 512, starts, Seq(0.25, 0.75))
+    }
   }
 
-  /** MG key eviction — q322's contract for the heavy-hitter monitor
+  /** MG key eviction: q322's contract for the heavy-hitter monitor
     * (one shared eviction implementation across the family, each
-    * member gated): per-(user × type) top value-buckets, live keys'
-    * answers verified with the keyed MG sliding reduction, final state
-    * row count == predicted live keys, every predictably-evicted key
-    * tombstoned. */
+    * member gated), over per-(user × type) top value buckets. */
   val q324 = QueryDef(
     "q324_stream_mg_monitor_key_evict",
-    s"""WITH b AS (SELECT MAX(floor(epoch(ts))::BIGINT) AS smax FROM events),
-       |s AS (SELECT DISTINCT ((smax//3600) - k*12)*3600 AS start
-       |      FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS k)),
-       |w AS (SELECT e.user_id::VARCHAR || '_' || e.event_type AS key, s.start,
-       |             COUNT(*)::BIGINT AS n_window
-       |      FROM s JOIN events e ON floor(epoch(e.ts))::BIGINT >= s.start
-       |      GROUP BY 1, 2)
-       |SELECT key, start, n_window, 1::BIGINT AS heavy_ok,
-       |       1::BIGINT AS bounds_ok, 1::BIGINT AS coverage_ok,
-       |       1::BIGINT AS stale_ok, 1::BIGINT AS state_ok,
-       |       1::BIGINT AS evict_ok
-       |FROM w ORDER BY key, start""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.operators.{SlidingSketches => SS}
-    import graft.streaming.{EventStreams, SlidingMonitor}
-    val ev = Tables.events(spark, dir)
-    val keyCol = concat(col("user_id").cast("string"), lit("_"),
-      col("event_type").cast("string"))
-    val itemCol = floor(col("value")).cast("long").cast("string")
-    // one scan for both loop-control scalars (guide §2.4)
-    val mmSec = ev.agg(min(col("sec")).cast("long"),
-      max(col("sec")).cast("long")).head
-    val qMin = mmSec.getLong(0) / 3600L
-    val qMax = mmSec.getLong(1) / 3600L
-    val horizon = 48L
-    val starts = (0 until 4).map(k => (qMax - k.toLong * 12L) * 3600L).distinct
-    val replay = java.nio.file.Files.createTempDirectory("graft_mgevict_replay")
-    graft.core.TempPaths.register(replay)
-    val typed = ev.select(keyCol.as("key"), expr("sec div 3600").as("q"),
-      itemCol.as("item"))
-    writeOrderedReplay((0 until 4).map { i =>
-      val lo = qMin + i.toLong * (qMax - qMin + 1) / 4
-      val hi = qMin + (i.toLong + 1) * (qMax - qMin + 1) / 4
-      typed.filter(col("q") >= lo && col("q") < (if (i == 3) qMax + 1 else hi))
-    }, replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("q", LongType), StructField("item", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
-    val (fin0, stateRows) = EventStreams.runToCompletionStateRows(spark,
-      SlidingMonitor.mgQuantumMonitor(stream, 8, horizonQuanta = horizon,
-        evictKeys = true, quantumSec = 3600L).toDF(),
-      "q324_mg_evict", mode = "update")
-    val fin = fin0.localCheckpoint(true)
-    val perKey = ev.select(keyCol.as("key"), col("sec").cast("long").as("sec"))
-      .groupBy("key")
-      .agg(expr("cast(max(sec) as long) div 3600").as("q_max_k"))
-      .localCheckpoint(true)
-    val stateOk = stateRows ==
-      perKey.filter(lit(qMax) <= col("q_max_k") + horizon).count()
-    val tombstoned = fin.filter(col("q") === -1L).select("key").distinct()
-    val evictOk = perKey.filter(lit(qMax) > col("q_max_k") + horizon)
-      .select("key").except(tombstoned).count() == 0L
-    val hourly = fin.filter(col("q") >= 0L)
-      .join(broadcast(perKey), "key")
-      .filter(col("q") > col("q_max_k") - horizon)
-      .groupBy("key", "q")
-      .agg(max_by(struct(col("n"), col("entries")), col("ver")).as("w"))
-      .select(col("key"), col("q"), col("w.n").as("n"),
-        col("w.entries").as("entries"))
-    val cov = SS.mgSlidingSummaries(hourly, 3600L, 8, starts)
-    SS.mgSlidingCheck(
-        ev.select(keyCol.as("key"), col("sec").cast("long").as("sec"),
-          itemCol.as("item")),
-        cov, keyed = true, k = 8)
-      .withColumn("state_ok", lit(if (stateOk) 1L else 0L))
-      .withColumn("evict_ok", lit(if (evictOk) 1L else 0L))
-      .orderBy("key", "start")
+    horizonOracle(12, key = UserTypeKeySql, evict = true)) { (spark, dir) =>
+    MonitorGate(spark, dir, "q324_mg_evict", Evict(48L, 12L, userTypeKey),
+        mgReplay(userTypeKey, valueBucket), s => SlidingMonitor.mgQuantumMonitor(s, 8,
+          horizonQuanta = 48L, evictKeys = true, quantumSec = 3600L).toDF()) {
+      (ev, log, starts) =>
+      mgCheck(ev, Some(userTypeKey), valueBucket, mgCube(log), 8, starts)
+    }
   }
 
-  /** Count-min key eviction — the family's last leg, with the
-    * strongest live-cube verification (EH-merged covered cells EQUAL a
-    * direct covered-suffix build cell-for-cell for every live key),
-    * plus q322's state/tombstone contract. */
+  /** Count-min key eviction: q322's contract with the family's
+    * strongest live-cube check (covered cells equal a direct build
+    * cell-for-cell for every live key). */
   val q325 = QueryDef(
     "q325_stream_cm_monitor_key_evict",
-    s"""WITH b AS (SELECT MAX(floor(epoch(ts))::BIGINT) AS smax FROM events),
-       |s AS (SELECT DISTINCT ((smax//3600) - k*12)*3600 AS start
-       |      FROM b CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS k)),
-       |w AS (SELECT e.user_id::VARCHAR || '_' || e.event_type AS key, s.start,
-       |             floor(e.value)::BIGINT::VARCHAR AS item,
-       |             COUNT(*)::BIGINT AS n_window
-       |      FROM s JOIN events e ON floor(epoch(e.ts))::BIGINT >= s.start
-       |      GROUP BY 1, 2, 3)
-       |SELECT key, start, item, n_window, 1::BIGINT AS never_under,
-       |       1::BIGINT AS cells_match, 1::BIGINT AS coverage_ok,
-       |       1::BIGINT AS stale_ok, 1::BIGINT AS state_ok,
-       |       1::BIGINT AS evict_ok
-       |FROM w ORDER BY key, start, item""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.operators.{SlidingSketches => SS}
-    import graft.streaming.{EventStreams, SlidingMonitor}
-    val ev = Tables.events(spark, dir)
-    val keyCol = concat(col("user_id").cast("string"), lit("_"),
-      col("event_type").cast("string"))
-    val itemCol = floor(col("value")).cast("long").cast("string")
-    // one scan for both loop-control scalars (guide §2.4)
-    val mmSec = ev.agg(min(col("sec")).cast("long"),
-      max(col("sec")).cast("long")).head
-    val qMin = mmSec.getLong(0) / 3600L
-    val qMax = mmSec.getLong(1) / 3600L
-    val horizon = 48L
-    val starts = (0 until 4).map(k => (qMax - k.toLong * 12L) * 3600L).distinct
-    val replay = java.nio.file.Files.createTempDirectory("graft_cmevict_replay")
-    graft.core.TempPaths.register(replay)
-    val typed = ev.select(keyCol.as("key2"), col("value"),
-      col("sec").cast("long").as("sec"))
-    writeOrderedReplay((0 until 4).map { i =>
-      val lo = (qMin + i.toLong * (qMax - qMin + 1) / 4) * 3600L
-      val hi = (qMin + (i.toLong + 1) * (qMax - qMin + 1) / 4) * 3600L
-      typed.filter(col("sec") >= lo &&
-        col("sec") < (if (i == 3) (qMax + 1) * 3600L else hi))
-    }, replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key2", StringType),
-        StructField("value", DoubleType), StructField("sec", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
-    val keyRows = SS.cmKeyRows(stream,
-      floor(col("value")).cast("long").cast("string"), col("sec"), 3600L,
-      key = col("key2"))
-    val (fin0, stateRows) = EventStreams.runToCompletionStateRows(spark,
-      SlidingMonitor.cmQuantumMonitor(keyRows, depth = 4, width = 32,
-        horizonQuanta = horizon, evictKeys = true, quantumSec = 3600L).toDF(),
-      "q325_cm_evict", mode = "update")
-    val fin = fin0.localCheckpoint(true)
-    val perKey = ev.select(keyCol.as("key"), col("sec").cast("long").as("sec"))
-      .groupBy("key")
-      .agg(expr("cast(max(sec) as long) div 3600").as("q_max_k"))
-      .localCheckpoint(true)
-    val stateOk = stateRows ==
-      perKey.filter(lit(qMax) <= col("q_max_k") + horizon).count()
-    val tombstoned = fin.filter(col("q") === -1L).select("key").distinct()
-    val evictOk = perKey.filter(lit(qMax) > col("q_max_k") + horizon)
-      .select("key").except(tombstoned).count() == 0L
-    val hourly = SlidingMonitor.cmCubeFromDeltas(
-      fin.join(broadcast(perKey), "key")
-        .filter(col("q") > col("q_max_k") - horizon))
-    val cells = SS.cmSlidingCells(hourly, 3600L, depth = 4, width = 32, starts)
-    SS.cmSlidingCheck(
-        ev.select(keyCol.as("key"), col("sec").cast("long").as("sec"),
-          itemCol.as("item")),
-        cells, depth = 4, width = 32, keyed = true)
-      .withColumn("state_ok", lit(if (stateOk) 1L else 0L))
-      .withColumn("evict_ok", lit(if (evictOk) 1L else 0L))
-      .orderBy("key", "start", "item")
+    horizonOracle(12, key = UserTypeKeySql, item = ValueBucketSql, evict = true)) {
+    (spark, dir) =>
+    MonitorGate(spark, dir, "q325_cm_evict", Evict(48L, 12L, userTypeKey),
+        _.select(userTypeKey.as("key2"), col("value"), col("sec").cast("long").as("sec")),
+        cmMonitor(col("key2"), valueBucket, horizon = 48L, evict = true)) {
+      (ev, log, starts) =>
+      cmCheck(ev, Some(userTypeKey), valueBucket, SlidingMonitor.cmCubeFromDeltas(log),
+        starts)
+    }
   }
 
-  /** Key eviction for the DECAYED-MG monitor — the family's fourth
-    * member gets the q322 contract, adapted to continuous time: keyed
-    * by user × event type (per-source top talkers, the shape whose
-    * total state is O(#keys ever seen) without eviction), the monitor
-    * drops a key once its own max event time falls a full retention
-    * (64 half-lives) behind the self-derived watermark, tombstoning it
-    * (w = 0 at the lifetime's own t_ref — the encoding that makes
-    * (t_ref, ver) totally order the log). Where the quantum monitors'
-    * admission floor makes
-    * resurrection IMPOSSIBLE, the decayed analog is a MASS BOUND: with
-    * the time-ordered replay, a re-admitted key's lost pre-gap mass
-    * decayed by ≥ 2^−64 — below one double ulp, so live keys' answers
-    * (q315's guarantee reduction against full-history exact masses,
-    * r6/1e-6 tolerances) are numerically indistinguishable from the
-    * unbounded monitor's. Versions restart on re-admission, so the
-    * live-cube read orders by (t_ref, ver) — event time first — and
-    * scopes to live keys. STATE_OK: final stateful row count equals
-    * the exactly-predicted live-key count. EVICT_OK: every
-    * predictably-evicted key was tombstoned. */
-  val q330 = QueryDef(
-    "q330_stream_decayed_mg_monitor_key_evict",
+  /** Oracle of the decayed-MG eviction gates (q330, q335): q315's
+    * guarantee reduction per user × event type over the predicted live
+    * keys (64 one-hour half-lives of retention), plus the gate's
+    * contract `flags`. */
+  private[queries] def decayedMgEvictOracle(flags: Seq[String]): String =
     s"""WITH g0 AS (SELECT user_id::VARCHAR || '_' || event_type AS key,
        |            floor(value)::BIGINT::VARCHAR AS item,
        |            floor(epoch(ts))::BIGINT AS t FROM events),
@@ -2802,66 +2254,44 @@ object EventQueries {
        |tot AS (SELECT key, ${Cross.dsumSql("w")} AS wt FROM w GROUP BY 1)
        |SELECT g.key, item, n, ${Cross.r6Sql("m")} AS m, 1::BIGINT AS present,
        |       1::BIGINT AS bounds_ok, 1::BIGINT AS w_ok,
-       |       1::BIGINT AS state_ok, 1::BIGINT AS evict_ok
+       |       ${flags.map(f => s"1::BIGINT AS $f").mkString(", ")}
        |FROM g JOIN tot ON g.key = tot.key
-       |WHERE m * 9 > wt ORDER BY g.key, item""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.types._
-    import graft.streaming.{EventStreams, SlidingMonitor}
+       |WHERE m * 9 > wt ORDER BY g.key, item""".stripMargin
+
+  /** Key eviction for the DECAYED-MG monitor: q322's contract in
+    * continuous time, keyed by user × event type. A key is dropped once
+    * its own max event time falls a full retention (64 half-lives)
+    * behind the watermark, tombstoned as w = 0 at its lifetime's own
+    * t_ref, so (t_ref, ver) totally orders the log. Where the quantum
+    * monitors' admission floor makes resurrection IMPOSSIBLE, the
+    * decayed analog is a MASS BOUND: over the time-ordered replay, a
+    * re-admitted key's lost pre-gap mass decayed by ≥ 2^−64, below one
+    * double ulp, so live keys' answers (q315's guarantee reduction
+    * against full-history exact masses) match the unbounded monitor's.
+    * Versions restart on re-admission, so the live-cube read orders by
+    * (t_ref, ver) and scopes to live keys. */
+  val q330 = QueryDef(
+    "q330_stream_decayed_mg_monitor_key_evict",
+    decayedMgEvictOracle(Seq("state_ok", "evict_ok"))) { (spark, dir) =>
     val ev = Tables.events(spark, dir)
-    val keyCol = concat(col("user_id").cast("string"), lit("_"),
-      col("event_type").cast("string"))
-    val itemCol = floor(col("value")).cast("long").cast("string")
-    val halfLife = 3600L
-    val retention = 64L * halfLife
-    val mm = ev.agg(min(col("sec")).cast("long").as("a"),
-      max(col("sec")).cast("long").as("b")).head
-    val (smin, smax) = (mm.getLong(0), mm.getLong(1))
-    val replay = java.nio.file.Files.createTempDirectory("graft_dmevict_replay")
-    graft.core.TempPaths.register(replay)
-    val typed = ev.select(keyCol.as("key"), col("sec").cast("long").as("t"),
-      itemCol.as("item"))
-    writeOrderedReplay((0 until 4).map { i =>
-      val lo = smin + i.toLong * (smax - smin + 1) / 4
-      val hi = smin + (i.toLong + 1) * (smax - smin + 1) / 4
-      typed.filter(col("t") >= lo && col("t") < (if (i == 3) smax + 1 else hi))
-    }, replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("t", LongType), StructField("item", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
-    val (fin0, stateRows) = EventStreams.runToCompletionStateRows(spark,
-      SlidingMonitor.decayedMgMonitor(stream, halfLife, 8, evictKeys = true,
-        retentionHalfLives = 64L).toDF(),
-      "q330_dm_evict", mode = "update")
-    val fin = fin0.localCheckpoint(true)
-    val perKey = ev.select(keyCol.as("key"), col("sec").cast("long").as("sec"))
-      .groupBy("key").agg(max("sec").as("t_max_k"))
-      .localCheckpoint(true)
-    val expectedLive = perKey.filter(lit(smax) <= col("t_max_k") + retention)
-    val stateOk = stateRows == expectedLive.count()
-    val tombstoned = fin.filter(col("w") <= 0.0).select("key").distinct()
-    val evictOk = perKey.filter(lit(smax) > col("t_max_k") + retention)
-      .select("key").except(tombstoned).count() == 0L
-    // live cube: predicted-live keys only (a finally-evicted key's
-    // pre-tombstone emissions remain in the log); versions restart on
-    // re-admission, so order by (t_ref, ver) — event time first
-    val sk = fin.filter(col("w") > 0.0)
-      .join(broadcast(expectedLive.select("key")), Seq("key"), "left_semi")
-      .groupBy("key")
-      .agg(max_by(struct(col("t_ref"), col("w"), col("entries")),
-        struct(col("t_ref"), col("ver"))).as("s"))
-      .select(col("key"), col("s.t_ref").as("t_sk"), col("s.w").as("w_sk"),
-        explode(col("s.entries")).as("e"))
-      .select(col("key"), col("t_sk"), col("w_sk"),
-        col("e.item").as("item"), col("e.est").as("est"))
-    val evLive = ev.select(keyCol.as("key"), col("sec").cast("long").as("sec"),
-        itemCol.as("item"))
-      .join(broadcast(expectedLive.select("key")), Seq("key"), "left_semi")
-    graft.operators.Analytics.decayedMgHeavyPerKeyFrame(evLive,
-        col("key"), col("item"), col("sec"), halfLifeSec = halfLife, k = 8, sk)
-      .withColumn("state_ok", lit(if (stateOk) 1L else 0L))
-      .withColumn("evict_ok", lit(if (evictOk) 1L else 0L))
+    val b = MonitorGate.bounds(ev)
+    val retention = 64L * 3600L
+    val (log, perKey, flags) = MonitorGate.evicting(ev, b, "q330_dm_evict",
+      MonitorGate.Seconds, userTypeKey, retention,
+      _.select(userTypeKey.as("key"), col("sec").cast("long").as("t"),
+        valueBucket.as("item")),
+      s => SlidingMonitor.decayedMgMonitor(s, 3600L, 8, evictKeys = true,
+        retentionHalfLives = 64L).toDF())
+    // a finally-evicted key's pre-tombstone emissions remain in the log
+    val live = broadcast(
+      perKey.filter(MonitorGate.Seconds.live(b, retention)).select("key"))
+    val sk = dmCube(log.filter(col("w") > 0.0).join(live, Seq("key"), "left_semi"),
+      struct(col("t_ref"), col("ver")))
+    val evLive = ev.select(userTypeKey.as("key"), col("sec").cast("long").as("sec"),
+        valueBucket.as("item"))
+      .join(live, Seq("key"), "left_semi")
+    flags(graft.operators.Analytics.decayedMgHeavyPerKeyFrame(evLive,
+        col("key"), col("item"), col("sec"), halfLifeSec = 3600L, k = 8, sk))
       .orderBy("key", "item")
   }
 

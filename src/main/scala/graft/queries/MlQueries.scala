@@ -606,21 +606,11 @@ object MlQueries {
       |  FROM events) t
       |WHERE rn = 1
       |ORDER BY user_id""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.types._
     val base = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"), col("sec"),
         graft.operators.Cdc.packedVersion(col("sec"), col("event_id"), "q277")
           .as("ver"))
-    val replay = java.nio.file.Files.createTempDirectory("graft_upsert_replay")
-    graft.core.TempPaths.register(replay)
-    base.repartition(4).write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("event_type", StringType), StructField("sec", LongType),
-        StructField("ver", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
+    val stream = MonitorGate.replay(base, "q277", 4).stream()
     val table = graft.core.TempPaths.gatePath("upsert_table")
     // fresh state per run: the pid-keyed path is stable WITHIN a run
     // (recursive — the fold table holds bucket subdirs)
@@ -642,21 +632,11 @@ object MlQueries {
     * the extreme-churn answer the bucketed fold's scaladoc deferred to
     * "a format with native MERGE". */
   val q303 = QueryDef("q303_stream_upsert_log", q277.oracle.get) { (spark, dir) =>
-    import org.apache.spark.sql.types._
     val base = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"), col("sec"),
         graft.operators.Cdc.packedVersion(col("sec"), col("event_id"), "q303")
           .as("ver"))
-    val replay = java.nio.file.Files.createTempDirectory("graft_upsertlog_replay")
-    graft.core.TempPaths.register(replay)
-    base.repartition(4).write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("event_type", StringType), StructField("sec", LongType),
-        StructField("ver", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
+    val stream = MonitorGate.replay(base, "q303", 4).stream()
     val table = graft.core.TempPaths.gatePath("upsert_log_table")
     graft.core.TempPaths.clearDir(table)
     EventStreams.runUpsertLogToCompletion(spark, stream, table,
@@ -721,12 +701,7 @@ object MlQueries {
     val ev = Tables.events(spark, dir)
       .select("event_id", "user_id", "event_type", "sec", "value")
     val doubled = ev.unionByName(ev) // at-least-once: everything twice
-    val replay = java.nio.file.Files.createTempDirectory("graft_ingest_replay")
-    graft.core.TempPaths.register(replay)
-    doubled.repartition(6).write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream.schema(doubled.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
+    val stream = MonitorGate.replay(doubled, "q290", 6).stream()
       .withColumn("etime", col("sec").cast("timestamp"))
     val deduped = EventStreams.exactlyOnceByEventId(stream, extraCols = Seq("value"))
     val (upsert, ksCounts, kmvHourly) =

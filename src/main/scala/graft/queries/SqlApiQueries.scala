@@ -311,20 +311,12 @@ object SqlApiQueries {
        |       COUNT(*)::BIGINT AS n, 1::BIGINT AS k_ok, 1::BIGINT AS mass_ok
        |FROM events GROUP BY 1, 2 ORDER BY key, q""".stripMargin) {
     (spark, dir) =>
-    import org.apache.spark.sql.types._
     import org.apache.spark.sql.functions.{col, expr}
     import graft.streaming.{EventStreams, SlidingMonitor}
     val ev = Tables.events(spark, dir)
-    val replay = java.nio.file.Files.createTempDirectory("graft_sqlmon_replay")
-    graft.core.TempPaths.register(replay)
-    ev.select(col("event_type").cast("string").as("key"),
-        expr("sec div 3600").as("q"), col("user_id").cast("string").as("item"))
-      .repartition(4).write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("q", LongType), StructField("item", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
+    val stream = MonitorGate.replay(ev.select(col("event_type").cast("string").as("key"),
+      expr("sec div 3600").as("q"), col("user_id").cast("string").as("item")),
+      "q323", 4).stream()
     EventStreams.runToCompletion(spark,
         SlidingMonitor.mgQuantumMonitor(stream, 32).toDF(),
         "q323_mg_emissions", mode = "update")
@@ -352,20 +344,12 @@ object SqlApiQueries {
     * set is k-bounded, and the MG mass invariant holds. */
   val q326 = QueryDef("q326_monitor_log_serving", q323.oracle.get) {
     (spark, dir) =>
-    import org.apache.spark.sql.types._
     import org.apache.spark.sql.functions._
     import graft.streaming.{EventStreams, SlidingMonitor}
     val ev = Tables.events(spark, dir)
-    val replay = java.nio.file.Files.createTempDirectory("graft_monserve_replay")
-    graft.core.TempPaths.register(replay)
-    ev.select(col("event_type").cast("string").as("key"),
-        expr("sec div 3600").as("q"), col("user_id").cast("string").as("item"))
-      .repartition(4).write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("q", LongType), StructField("item", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
+    val stream = MonitorGate.replay(ev.select(col("event_type").cast("string").as("key"),
+      expr("sec div 3600").as("q"), col("user_id").cast("string").as("item")),
+      "q326", 4).stream()
     val emissions = SlidingMonitor.mgQuantumMonitor(stream, 32).toDF()
       .withColumn("kq", concat_ws("#", col("key"), col("q")))
     val path = graft.core.TempPaths.gatePath("q326_serving")
@@ -402,20 +386,12 @@ object SqlApiQueries {
       |       COUNT(*)::BIGINT AS n, 1::BIGINT AS cells_match
       |FROM events GROUP BY 1, 2 ORDER BY key, q""".stripMargin) {
     (spark, dir) =>
-    import org.apache.spark.sql.types._
     import org.apache.spark.sql.functions._
     import graft.operators.{SlidingSketches => SS}
     import graft.streaming.{EventStreams, SlidingMonitor}
     val ev = Tables.events(spark, dir)
-    val replay = java.nio.file.Files.createTempDirectory("graft_redeliver_replay")
-    graft.core.TempPaths.register(replay)
-    ev.select(col("user_id"), col("event_type"), col("sec")).repartition(4)
-      .write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("sec", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
+    val stream = MonitorGate.replay(
+      ev.select(col("user_id"), col("event_type"), col("sec")), "q331", 4).stream()
     val keyRows = SS.cmKeyRows(stream, col("user_id"), col("sec"), 3600L,
       key = col("event_type"))
     val emissions = SlidingMonitor.cmQuantumMonitor(keyRows,
@@ -498,20 +474,12 @@ object SqlApiQueries {
       |       COUNT(*)::BIGINT AS n, 1::BIGINT AS cells_match
       |FROM events GROUP BY 1, 2 ORDER BY key, q""".stripMargin) {
     (spark, dir) =>
-    import org.apache.spark.sql.types._
     import org.apache.spark.sql.functions.col
     import graft.operators.{SlidingSketches => SS}
     import graft.streaming.{EventStreams, SlidingMonitor}
     val ev = Tables.events(spark, dir)
-    val replay = java.nio.file.Files.createTempDirectory("graft_sqlcm_replay")
-    graft.core.TempPaths.register(replay)
-    ev.select(col("user_id"), col("event_type"), col("sec")).repartition(4)
-      .write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("sec", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
+    val stream = MonitorGate.replay(
+      ev.select(col("user_id"), col("event_type"), col("sec")), "q333", 4).stream()
     val keyRows = SS.cmKeyRows(stream, col("user_id"), col("sec"), 3600L,
       key = col("event_type"))
     EventStreams.runToCompletion(spark,
@@ -544,20 +512,12 @@ object SqlApiQueries {
       |       1::BIGINT AS race_ok
       |FROM events GROUP BY 1, 2 ORDER BY key, q""".stripMargin) {
     (spark, dir) =>
-    import org.apache.spark.sql.types._
     import org.apache.spark.sql.functions.col
     import graft.operators.{SlidingSketches => SS}
     import graft.streaming.{EventStreams, SlidingMonitor}
     val ev = Tables.events(spark, dir)
-    val replay = java.nio.file.Files.createTempDirectory("graft_pinned_cm_replay")
-    graft.core.TempPaths.register(replay)
-    ev.select(col("user_id"), col("event_type"), col("sec")).repartition(4)
-      .write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("sec", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
+    val stream = MonitorGate.replay(
+      ev.select(col("user_id"), col("event_type"), col("sec")), "q345", 4).stream()
     val keyRows = SS.cmKeyRows(stream, col("user_id"), col("sec"), 3600L,
       key = col("event_type"))
     val emissions = SlidingMonitor.cmQuantumMonitor(keyRows,
@@ -617,25 +577,7 @@ object SqlApiQueries {
     * reduction against exact decayed masses on those keys. */
   val q335 = QueryDef(
     "q335_sql_dm_monitor_cube",
-    s"""WITH g0 AS (SELECT user_id::VARCHAR || '_' || event_type AS key,
-       |            floor(value)::BIGINT::VARCHAR AS item,
-       |            floor(epoch(ts))::BIGINT AS t FROM events),
-       |tm AS (SELECT MAX(t) AS tg FROM g0),
-       |tr AS (SELECT key, MAX(t) AS t_ref FROM g0 GROUP BY 1),
-       |live AS (SELECT key, t_ref FROM tr CROSS JOIN tm
-       |         WHERE tg <= t_ref + ${64L * 3600L}),
-       |w AS (SELECT g0.key, item,
-       |             ${Cross.r6Sql("pow(2.0, (t - t_ref)::DOUBLE / 3600.0)")} AS w
-       |      FROM g0 JOIN live ON g0.key = live.key),
-       |g AS (SELECT key, item, COUNT(*)::BIGINT AS n, ${Cross.dsumSql("w")} AS m
-       |      FROM w GROUP BY 1, 2),
-       |tot AS (SELECT key, ${Cross.dsumSql("w")} AS wt FROM w GROUP BY 1)
-       |SELECT g.key, item, n, ${Cross.r6Sql("m")} AS m, 1::BIGINT AS present,
-       |       1::BIGINT AS bounds_ok, 1::BIGINT AS w_ok,
-       |       1::BIGINT AS keys_ok
-       |FROM g JOIN tot ON g.key = tot.key
-       |WHERE m * 9 > wt ORDER BY g.key, item""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.types._
+    EventQueries.decayedMgEvictOracle(Seq("keys_ok"))) { (spark, dir) =>
     import org.apache.spark.sql.functions._
     import graft.streaming.{EventStreams, SlidingMonitor}
     val ev = Tables.events(spark, dir)
@@ -644,23 +586,9 @@ object SqlApiQueries {
     val itemCol = floor(col("value")).cast("long").cast("string")
     val halfLife = 3600L
     val retention = 64L * halfLife
-    val mm = ev.agg(min(col("sec")).cast("long").as("a"),
-      max(col("sec")).cast("long").as("b")).head
-    val (smin, smax) = (mm.getLong(0), mm.getLong(1))
-    val replay = java.nio.file.Files.createTempDirectory("graft_sqldm_replay")
-    graft.core.TempPaths.register(replay)
-    val typed = ev.select(keyCol.as("key"), col("sec").cast("long").as("t"),
-      itemCol.as("item"))
-    EventQueries.writeOrderedReplay((0 until 4).map { i =>
-      val lo = smin + i.toLong * (smax - smin + 1) / 4
-      val hi = smin + (i.toLong + 1) * (smax - smin + 1) / 4
-      typed.filter(col("t") >= lo && col("t") < (if (i == 3) smax + 1 else hi))
-    }, replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("t", LongType), StructField("item", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
+    val b = MonitorGate.bounds(ev)
+    val stream = MonitorGate.orderedReplay(ev, _.select(keyCol.as("key"),
+      col("sec").cast("long").as("t"), itemCol.as("item")), "q335", b, 1L).stream()
     EventStreams.runToCompletion(spark,
         SlidingMonitor.decayedMgMonitor(stream, halfLife, 8, evictKeys = true,
           retentionHalfLives = 64L).toDF(),
@@ -671,7 +599,7 @@ object SqlApiQueries {
     val expectedLive = ev
       .select(keyCol.as("key"), col("sec").cast("long").as("sec"))
       .groupBy("key").agg(max("sec").as("t_max_k"))
-      .filter(lit(smax) <= col("t_max_k") + retention)
+      .filter(MonitorGate.Seconds.live(b, retention))
       .select("key")
       .localCheckpoint(true)
     // the SQL view must serve EXACTLY the predicted live keys
@@ -710,21 +638,13 @@ object SqlApiQueries {
       |SELECT key, q, phi, n, 1 + CAST(round(phi*(n-1)) AS BIGINT) AS r,
       |       1::BIGINT AS rank_ok
       |FROM g CROSS JOIN p ORDER BY key, q, phi""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.types._
     import org.apache.spark.sql.functions.{col, expr}
     import graft.streaming.{EventStreams, SlidingMonitor}
     GraftFunctions.register(spark)
     val ev = Tables.events(spark, dir)
-    val replay = java.nio.file.Files.createTempDirectory("graft_sqlgk_replay")
-    graft.core.TempPaths.register(replay)
-    ev.select(col("event_type").cast("string").as("key"),
-        expr("sec div 3600").as("q"), col("value").cast("double").as("v"))
-      .repartition(4).write.mode("overwrite").parquet(replay.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("q", LongType), StructField("v", DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
+    val stream = MonitorGate.replay(ev.select(col("event_type").cast("string").as("key"),
+      expr("sec div 3600").as("q"), col("value").cast("double").as("v")),
+      "q336", 4).stream()
     EventStreams.runToCompletion(spark,
         SlidingMonitor.gkQuantumMonitor(stream, 2048).toDF(),
         "q336_gk_emissions", mode = "update")
