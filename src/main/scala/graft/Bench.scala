@@ -1,15 +1,25 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.json4s._
+
+import graft.core.Json
 
 /** Benchmark main (driver contract): runs every gate query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
-  *
-  * Session knobs mirror what a production cluster profile would set:
-  * AQE on (runtime coalescing + skew-join splitting), shuffle partitions
-  * sized to the local core count rather than the 200 default.
+  * Gates run on [[SessionHygiene.session]]; snapshots are written and
+  * read back through [[graft.core.Json]].
   */
 object Bench {
+  /** SPARK_GRAFT_SF_DIR: the scale-factor directory the gates read
+    * (Probe's too). */
+  private[graft] val SfDir: String =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
   def main(args: Array[String]): Unit = {
     // Sharded mode (the default for FULL runs): split the gate suite
     // across SPARK_GRAFT_BENCH_SHARDS sequential child JVMs and merge
@@ -90,7 +100,7 @@ object Bench {
     (CanaryGate,
       IsolatedGates.filterNot(_ == CanaryGate).filter(available))
 
-  private def childJvm(args: Seq[String], out: java.nio.file.Path,
+  private def childJvm(args: Seq[String], out: Path,
       env: Map[String, String], heapOverride: Option[String] = None,
       timeoutS: Option[Long] = None): Unit = {
     val javaBin = System.getProperty("java.home") + "/bin/java"
@@ -134,29 +144,6 @@ object Bench {
     require(rc == 0, s"bench child exited $rc (${args.mkString(" ")})")
   }
 
-  /** Body of a top-level flat object field: `"field":{...}` → the
-    * `...` (no nesting inside — the per-gate maps this file owns). */
-  private def mapOf(json: String, field: String): String = {
-    val i = json.indexOf("\"" + field + "\":{")
-    require(i >= 0, s"bench shard json missing object field $field")
-    val start = i + field.length + 4
-    val end = json.indexOf("}", start)
-    require(end >= 0, s"bench shard json unterminated object field $field")
-    json.substring(start, end)
-  }
-
-  /** Parse one flat {"name":number,...} map body (no nesting) — the
-    * shard-merge format this file already owns. */
-  private[graft] def parseNumMap(body: String): Map[String, Double] =
-    if (body.trim.isEmpty) Map.empty
-    else body.split(",").iterator.flatMap { kv =>
-      val i = kv.lastIndexOf(':')
-      if (i < 0) None
-      else scala.util.Try(
-        kv.substring(0, i).trim.stripPrefix("\"").stripSuffix("\"") ->
-          kv.substring(i + 1).trim.toDouble).toOption
-    }.toMap
-
   /** Compact driver-contract stdout line. The bench driver captures
     * only the last ~2000 characters of stdout (every
     * BENCH_r01..r14.json stores a 2000-char `tail` and `parsed:null` —
@@ -180,11 +167,11 @@ object Bench {
       snapshot: Option[String], budget: Int = 1700): String = {
     def fmt(v: Double): String =
       if (v < 0) "-1" else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val cpusJson = cpus.trim.toIntOption.map(_.toString).getOrElse(jsonStr(cpus))
+    val cpusJson = cpus.trim.toIntOption.map(_.toString).getOrElse(Json.str(cpus))
     def head(dropped: Int): String =
       s"""{"metric":"total","value":${fmt(total)},"unit":"sec"""" +
-        s""","sf":${jsonStr(sfDir)},"cpus":$cpusJson,"queries_n":${queries.size}""" +
-        s""","queries_full":${snapshot.fold("null")(jsonStr)}""" +
+        s""","sf":${Json.str(sfDir)},"cpus":$cpusJson,"queries_n":${queries.size}""" +
+        s""","queries_full":${snapshot.fold("null")(Json.str)}""" +
         s""","queries_dropped":$dropped,"queries":{"""
     // room left by the widest possible head, so the real one always fits
     val room = budget - head(queries.size).length - 2
@@ -193,22 +180,11 @@ object Bench {
     queries.toSeq
       .sortBy { case (n, v) => (if (v < 0) 0 else 1, -v, n) }
       .foreach { case (k, v) =>
-        val ent = (if (kept.isEmpty) "" else ",") + jsonStr(k) + ":" + fmt(v)
+        val ent = (if (kept.isEmpty) "" else ",") + Json.str(k) + ":" + fmt(v)
         if (kept.length + ent.length <= room) kept.append(ent) else dropped += 1
       }
     head(dropped) + kept + "}}"
   }
-
-  /** `s` as a JSON string literal. */
-  private[graft] def jsonStr(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }.mkString("\"", "", "\"")
 
   /** AUTO-PROMOTED movers: gates whose freshly-merged sharded wall
     * exceeds 2× + 2 s of the MIN over a WINDOW of prior committed
@@ -252,10 +228,10 @@ object Bench {
       // the run — skip it loudly and keep the rest of the window
       priorPaths.foreach { p =>
         try {
-          val f = java.nio.file.Paths.get(p)
-          if (java.nio.file.Files.exists(f)) {
-            val json = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
-            val mode = snapshotMode(json)
+          val f = Paths.get(p)
+          if (Files.exists(f)) {
+            val json = readJson(f)
+            val mode = modeOf(json)
             // always log the parsed mode: a field that silently parsed
             // to its default is visible here, not discovered later as a
             // wrong promotion baseline
@@ -263,7 +239,7 @@ object Bench {
             if (mode != ((repeat, sfBase, ioOn)))
               System.err.println(s"[bench] mover baseline $p skipped: mode " +
                 s"$mode != current ($repeat, $sfBase, $ioOn)")
-            else parseNumMap(mapOf(json, "queries")).foreach { case (g, w) =>
+            else Json.numbers(json \ "queries").foreach { case (g, w) =>
               if (w > 0 && priorMins.get(g).forall(w < _)) priorMins(g) = w
             }
           }
@@ -281,26 +257,17 @@ object Bench {
   /** (repeat, sf basename, io listener on) of a snapshot JSON — the
     * fields that decide whether its walls are comparable to this
     * run's. Missing fields default to the historical mode (repeat 1,
-    * io on, sf ""). Scanners tolerate whitespace around the colon —
-    * exact-substring matching made a reformatted baseline silently
-    * fall back to the default mode, which is precisely the
-    * wrong-comparison the mode check exists to prevent (round-13
-    * ADVICE); [[promotedMovers]] also logs each baseline's parsed mode
-    * so a defaulted parse is visible in the run log. */
-  private[graft] def snapshotMode(json: String): (Int, String, Boolean) = {
-    def numOpt(field: String): Option[Double] =
-      ("\"" + field + "\"\\s*:\\s*(-?[0-9.]+)").r
-        .findFirstMatchIn(json).flatMap(_.group(1).toDoubleOption)
-    def strOpt(field: String): Option[String] =
-      ("\"" + field + "\"\\s*:\\s*\"([^\"]*)\"").r
-        .findFirstMatchIn(json).map(_.group(1))
-    def boolOpt(field: String): Option[Boolean] =
-      ("\"" + field + "\"\\s*:\\s*(true|false)").r
-        .findFirstMatchIn(json).map(_.group(1) == "true")
-    (numOpt("repeat").map(_.toInt).getOrElse(1),
-      strOpt("sf").map(sfBasename).getOrElse(""),
-      boolOpt("io").getOrElse(true))
-  }
+    * io on, sf ""). The snapshot is parsed as JSON, so a reformatted
+    * baseline reads the same as its compact form; [[promotedMovers]]
+    * also logs each baseline's parsed mode so a defaulted field is
+    * visible in the run log. */
+  private[graft] def snapshotMode(json: String): (Int, String, Boolean) =
+    modeOf(Json.parse(json))
+
+  private def modeOf(j: JValue): (Int, String, Boolean) =
+    (Json.double(j \ "repeat").map(_.toInt).getOrElse(1),
+      j \ "sf" match { case JString(sf) => sfBasename(sf); case _ => "" },
+      j \ "io" match { case JBool(io) => io; case _ => true })
 
   private[graft] def sfBasename(sfDir: String): String =
     sfDir.stripSuffix("/").split('/').last
@@ -326,21 +293,18 @@ object Bench {
     * rotating at run START (the round-13 shape) let a crashed run
     * consume a window slot with a duplicate, and left prior_1 ==
     * BENCH_LOCAL until commit (effective distinct window K−1). */
-  private[graft] def rotatePriors(
-      dir: java.nio.file.Path = java.nio.file.Paths.get(".")): Unit =
+  private[graft] def rotatePriors(dir: Path = Paths.get(".")): Unit =
     try {
       (3 to 2 by -1).foreach { i =>
         val from = dir.resolve(s"bench_prior_${i - 1}.json")
-        if (java.nio.file.Files.exists(from)) {
-          java.nio.file.Files.move(from, dir.resolve(s"bench_prior_$i.json"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        if (Files.exists(from)) {
+          Files.move(from, dir.resolve(s"bench_prior_$i.json"), StandardCopyOption.REPLACE_EXISTING)
           ()
         }
       }
       val local = dir.resolve("BENCH_LOCAL.json")
-      if (java.nio.file.Files.exists(local)) {
-        java.nio.file.Files.copy(local, dir.resolve("bench_prior_1.json"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      if (Files.exists(local)) {
+        Files.copy(local, dir.resolve("bench_prior_1.json"), StandardCopyOption.REPLACE_EXISTING)
         ()
       }
     } catch { case e: Exception =>
@@ -357,280 +321,259 @@ object Bench {
     * elsewhere leaves BENCH_LOCAL.json — and therefore the window —
     * untouched. */
   private[graft] def commitSnapshot(json: String, outPath: String,
-      dir: java.nio.file.Path = java.nio.file.Paths.get(".")): Unit = {
+      dir: Path = Paths.get(".")): Unit = {
     if (outPath == "BENCH_LOCAL.json") rotatePriors(dir)
     try {
-      java.nio.file.Files.write(dir.resolve(outPath),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      Files.write(dir.resolve(outPath), (json + "\n").getBytes(StandardCharsets.UTF_8))
       ()
     } catch { case e: Exception =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
   }
 
+  /** One gate's kept attempt: its wall (-1 = failed) and the
+    * telemetry measured with it. */
+  private[graft] final case class GateRun(name: String, sec: Double,
+      gcS: Double, peakMb: Long, cpuS: Double, jitS: Double,
+      shuffleMb: Double, inputMb: Double) {
+    /** This gate's entry in each of [[GateMaps]], in that order. */
+    def values: Seq[JValue] = Seq(JDouble(sec), JDouble(gcS), JLong(peakMb),
+      JDouble(cpuS), JDouble(jitS), JDouble(shuffleMb), JDouble(inputMb))
+  }
+
+  /** The snapshot's per-gate maps, in file order. */
+  private val GateMaps = Seq("queries", "gc_s", "peak_mb", "cpu_s", "jit_s", "shuffle_mb", "input_mb")
+
+  /** The snapshot's suite totals: `value` sums the walls of the gates
+    * that did not fail, the others sum every gate's telemetry (peak_mb
+    * has no total). */
+  private val Totals = Seq("value", "total_gc_s", "total_cpu_s",
+    "total_jit_s", "total_shuffle_mb", "total_input_mb")
+
+  /** A snapshot: header, per-gate maps, totals, then `rest` (the run's
+    * mode fields, the isolated section, session and sf). */
+  private def snapshot(maps: Seq[JObject], totals: Seq[Double],
+      rest: List[JField]): JObject =
+    JObject(List[JField]("metric" -> JString("total"),
+        "value" -> JDouble(totals.head), "unit" -> JString("sec")) ++
+      GateMaps.zip(maps) ++
+      Totals.zip(totals).tail.map { case (k, v) => k -> JDouble(v) } ++ rest)
+
+  /** A single-JVM run's snapshot (a shard's, an isolated child's or a
+    * filtered dev run's) from its per-gate records. */
+  private[graft] def suiteSnapshot(runs: Seq[GateRun], repeat: Int, ioOn: Boolean,
+      session: JValue, sfDir: String): JObject =
+    snapshot(
+      GateMaps.indices.map(i => JObject(runs.map(r => r.name -> r.values(i)).toList)),
+      runs.map(_.sec).filter(_ >= 0).sum +:
+        Seq[GateRun => Double](_.gcS, _.cpuS, _.jitS, _.shuffleMb, _.inputMb)
+          .map(f => runs.map(f).sum),
+      List("warmed" -> JBool(repeat > 1), "repeat" -> JInt(repeat), "io" -> JBool(ioOn),
+        "session" -> session, "sf" -> JString(sfDir)))
+
+  /** The sharded snapshot from its shards' snapshots: per-gate maps
+    * concatenate (the shards' gates are disjoint), totals sum, and
+    * repeat, io, session and sf come from the last shard. `isolated`
+    * (the isolated pass's fields) goes between the mode and the
+    * session. */
+  private[graft] def mergeShards(shards: Seq[JValue],
+      isolated: List[JField] = Nil): JObject = {
+    def need(s: JValue, f: String): JValue = s \ f match {
+      case JNothing => sys.error(s"bench shard json missing field $f")
+      case v => v
+    }
+    val last = shards.last
+    snapshot(
+      GateMaps.map(f => JObject(shards.flatMap(s => Json.fields(need(s, f))).toList)),
+      Totals.map(t => shards.map(s => Json.double(need(s, t)).get).sum),
+      List[JField]("warmed" -> need(last, "warmed"), "repeat" -> need(last, "repeat"),
+        "shards" -> JInt(shards.size), "io" -> need(last, "io")) ++ isolated ++
+        List("session" -> need(last, "session"), "sf" -> need(last, "sf")))
+  }
+
+  private def readJson(p: Path): JValue =
+    Json.parse(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+
   private def runSharded(shards: Int): Unit = {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val chunks = names.grouped(math.ceil(names.size.toDouble / shards).toInt).toSeq
     val outs = chunks.zipWithIndex.map { case (chunk, i) =>
-      val out = java.nio.file.Files.createTempFile(s"graft_bench_shard$i", ".json")
+      val out = Files.createTempFile(s"graft_bench_shard$i", ".json")
       childJvm(chunk, out, Map.empty)
       out
     }
-    // merge: per-gate maps concatenate (chunks are disjoint), totals
-    // recompute, session telemetry from the last shard + shard count
-    val shardJsons = outs.map(p => new String(
-      java.nio.file.Files.readAllBytes(p), "UTF-8").trim)
-    val merged = Seq("queries", "gc_s", "peak_mb", "cpu_s", "jit_s",
-        "shuffle_mb", "input_mb").map { f =>
-      "\"" + f + "\":{" + shardJsons.map(mapOf(_, f)).filter(_.nonEmpty).mkString(",") + "}"
-    }
-    def num(json: String, field: String): Double = {
-      val i = json.indexOf("\"" + field + "\":")
-      require(i >= 0, s"bench shard json missing numeric field $field")
-      // accept scientific notation (a tiny shard total serializes as 1.2E-4)
-      val s = json.substring(i + field.length + 3)
-        .takeWhile(c => c.isDigit || c == '.' || c == '-' || c == '+' ||
-          c == 'e' || c == 'E')
-      require(s.nonEmpty, s"bench shard json field $field not numeric")
-      s.toDouble
-    }
-    val total = shardJsons.map(num(_, "value")).sum
-    val totalGc = shardJsons.map(num(_, "total_gc_s")).sum
-    val totalCpu = shardJsons.map(num(_, "total_cpu_s")).sum
-    val totalJit = shardJsons.map(num(_, "total_jit_s")).sum
-    val totalShuf = shardJsons.map(num(_, "total_shuffle_mb")).sum
-    val totalIn = shardJsons.map(num(_, "total_input_mb")).sum
-    def raw(json: String, field: String): String = {
-      val i = json.indexOf("\"" + field + "\":")
-      require(i >= 0, s"bench shard json missing field $field")
-      val start = i + field.length + 3
-      var depth = 0; var end = start
-      while (end < json.length && (depth > 0 || (json(end) != ',' && json(end) != '}'))) {
-        if (json(end) == '{') depth += 1
-        if (json(end) == '}') depth -= 1
-        end += 1
-      }
-      json.substring(start, end)
-    }
-    val session = raw(shardJsons.last, "session")
-    val repeat = num(shardJsons.last, "repeat").toInt
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val shardJsons = outs.map(readJson)
     // the standing isolated pass: one fresh JVM per sensitive gate,
     // repeat-3 take-min — the number cross-round comparisons use for
     // the streaming/composite class (set SPARK_GRAFT_BENCH_ISOLATED=0
     // to skip in dev loops)
     val isolated =
-      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATED", "1") == "0") ""
-      else {
-        val rep = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATED_REPEAT", "3")
-        // Global time budget for the whole isolated pass (seconds): each
-        // child is a fresh JVM with warmup, ~60-90 s per gate, and the
-        // class has grown to 21 gates — unbounded, the pass could double
-        // the bench wall. Gates are ordered history-first, so when the
-        // budget trips it is the NEWEST additions that fall back to
-        // their sharded numbers; skipped names are recorded in the JSON
-        // (isolated_skipped) instead of silently missing.
-        // default sized to the list: 24 gates × ~60 s/child + the
-        // canary's second run + slack
-        val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATED_BUDGET",
-          "1800").toLong
-        // auto-promoted movers get their own additive budget so a
-        // static pass that exhausts budgetS cannot leave a fresh
-        // regression unadjudicated (the whole point of promotion)
-        val moverBudgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_MOVER_BUDGET",
-          "600").toLong
-        val currentWalls = parseNumMap(shardJsons.map(mapOf(_, "queries"))
-          .filter(_.nonEmpty).mkString(","))
-        // baselines = the repo's committed snapshots (BENCH_LOCAL.json
-        // is written at the END of this run, so reading it here sees
-        // the PREVIOUS round, plus the two newest driver-round files),
-        // not SPARK_GRAFT_BENCH_OUT — the driver points that at a
-        // fresh per-round file that does not exist yet
-        val priorPaths = sys.env.get("SPARK_GRAFT_BENCH_PRIOR")
-          .map(_.split(':').toSeq.filter(_.nonEmpty))
-          .getOrElse(defaultPriorPaths())
-        val promoted = promotedMovers(currentWalls, priorPaths,
-          repeat, sfBasename(sfDir),
-          sys.env.getOrElse("SPARK_GRAFT_BENCH_IO", "1") != "0")
-        if (promoted.nonEmpty)
-          System.err.println("[bench] auto-promoted movers (wall > 2x+2s " +
-            s"vs min over ${priorPaths.mkString(", ")}): " +
-            promoted.mkString(", "))
-        val isoStart = System.nanoTime()
-        var skipped = List.empty[String]
-        def runIsolated(gates: Seq[String], budget: Long): Seq[String] =
-          gates.flatMap { g =>
-            val elapsed = (System.nanoTime() - isoStart) / 1e9
-            if (elapsed > budget) {
-              skipped ::= g
-              None
-            } else {
-            val out = java.nio.file.Files.createTempFile(s"graft_bench_iso_$g", ".json")
-            // pinned 8 GiB heap — the r8–r10 mover-study configuration, so
-            // the isolated series stays comparable across rounds and
-            // insensitive to the parent's heap (an 89 g fresh JVM measured
-            // q151 at 14.5 s where the historical 8 g config reads 2.5 s —
-            // virgin-heap effects, not the operator). A failing isolated
-            // child must NOT kill the bench: the sharded numbers are the
-            // contract, the isolated series is telemetry — log and skip.
-            // The child wait is bounded by the budget's remainder (plus a
-            // floor so the last admitted gate gets a real attempt): a hung
-            // child lands in isolated_skipped instead of wedging the run.
-            // SPARK_GRAFT_BENCH_WARMUP=1: one UNTIMED run of the gate
-            // before the repeat-N take-min. Replay-bound streaming
-            // gates never amortized first-run JIT inside a fresh 8 g
-            // child (q323 read 29.4 s isolated vs 3.7 warmed A/B;
-            // q335 21.8 vs 8.2 — round-13 verdict #4): all N attempts
-            // stayed cold-band. The warm-up absorbs exactly what the
-            // suite-level warmup absorbs for sharded gates, so the
-            // standing isolated series reads code, not child JIT state.
-            try {
-              childJvm(Seq(g), out, Map("SPARK_GRAFT_BENCH_REPEAT" -> rep,
-                  "SPARK_GRAFT_BENCH_WARMUP" -> "1"),
-                heapOverride = Some("8g"),
-                timeoutS = Some(math.max(120L, budget - elapsed.toLong)))
-              val j = new String(java.nio.file.Files.readAllBytes(out), "UTF-8")
-              Some(mapOf(j, "queries")) // {"qNN_name":sec} body for one gate
-            } catch {
-              case e: Exception =>
-                System.err.println(s"[bench] isolated $g SKIPPED: ${e.getMessage}")
-                skipped ::= g
-                None
-            } finally {
-              java.nio.file.Files.deleteIfExists(out)
-              ()
-            }
-            }
-          }
-        // box-state canary, FIRST leg: the canary runs as its own
-        // explicit first child (isolatedSchedule — identity by
-        // construction, not list position); its wall doubles as the
-        // gate's standing isolated entry
-        val (canaryGate, standing) = isolatedSchedule(names.contains)
-        val canaryFirstEntry = runIsolated(Seq(canaryGate), budgetS)
-        val entries = canaryFirstEntry ++
-          runIsolated(standing, budgetS) ++
-            runIsolated(promoted, budgetS + moverBudgetS)
-        // canary LAST leg: run it once more so the series carries its
-        // own band measurement — first≈last ⇒ a stable window,
-        // first≪last (or ≫) ⇒ read this pass's absolute walls with
-        // that measured drift in mind. Outside the budget accounting:
-        // a skipped canary must be visible, not silently absent.
-        val canaryFirst = canaryFirstEntry.flatMap(b =>
-          parseNumMap(b).get(CanaryGate)).headOption
-        val canaryLast =
-          if (canaryFirst.isEmpty) None
-          else {
-            val out = java.nio.file.Files.createTempFile("graft_bench_canary", ".json")
-            try {
-              childJvm(Seq(CanaryGate), out,
-                Map("SPARK_GRAFT_BENCH_REPEAT" -> rep,
-                  "SPARK_GRAFT_BENCH_WARMUP" -> "1"),
-                heapOverride = Some("8g"), timeoutS = Some(300L))
-              parseNumMap(mapOf(new String(
-                java.nio.file.Files.readAllBytes(out), "UTF-8"), "queries"))
-                .get(CanaryGate)
-            } catch { case e: Exception =>
-              System.err.println(s"[bench] canary last leg SKIPPED: ${e.getMessage}")
-              None
-            } finally {
-              java.nio.file.Files.deleteIfExists(out)
-              ()
-            }
-          }
-        val canaryJson = (canaryFirst, canaryLast) match {
-          case (Some(a), Some(b)) =>
-            s""","isolated_canary":{"gate":"$CanaryGate","first":$a,"last":$b}"""
-          case _ =>
-            System.err.println("[bench] isolated_canary missing (first leg " +
-              "skipped or last leg failed)")
-            ""
-        }
-        val skippedJson =
-          if (skipped.isEmpty) ""
-          else {
-            System.err.println(s"[bench] isolated budget (${budgetS}s" +
-              s"+${moverBudgetS}s movers) hit or child failed; " +
-              s"skipped: ${skipped.reverse.mkString(", ")}")
-            s""","isolated_skipped":[${skipped.reverse.map("\"" + _ + "\"").mkString(",")}]"""
-          }
-        val promotedJson =
-          if (promoted.isEmpty) ""
-          else s""","isolated_promoted":[${promoted.map("\"" + _ + "\"").mkString(",")}]"""
-        // isolated_warmup marks the series break: r14+ isolated walls
-        // include the per-gate warm-up and are NOT comparable to
-        // r13-and-earlier isolated entries for replay-bound gates
-        s""","isolated":{${entries.mkString(",")}},"isolated_repeat":$rep""" +
-          s""","isolated_warmup":true""" +
-          canaryJson + promotedJson + skippedJson
-      }
-    val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      merged.mkString(",") + "," +
-      s""""total_gc_s":$totalGc,"total_cpu_s":$totalCpu,"total_jit_s":$totalJit,""" +
-      s""""total_shuffle_mb":$totalShuf,"total_input_mb":$totalIn,""" +
-      s""""warmed":${repeat > 1},"repeat":$repeat,"shards":$shards,""" +
-      s""""io":${sys.env.getOrElse("SPARK_GRAFT_BENCH_IO", "1") != "0"}""" +
-      isolated + "," +
-      s""""session":$session,"sf":"$sfDir"}"""
+      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATED", "1") == "0") Nil
+      else isolatedPass(names, shardJsons)
+    val merged = mergeShards(shardJsons, isolated)
+    val json = Json.render(merged)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     commitSnapshot(json, outPath)
     println(json)
     // the parsable contract line goes LAST (see compactLine)
-    println(compactLine(total, parseNumMap(mapOf(json, "queries")),
-      sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), Some(outPath)))
-    outs.foreach(p => try java.nio.file.Files.deleteIfExists(p) catch { case _: Exception => () })
+    println(compactLine(Json.double(merged \ "value").getOrElse(0.0),
+      Json.numbers(merged \ "queries"), SfDir, SessionHygiene.cpus, Some(outPath)))
+    outs.foreach(p => try Files.deleteIfExists(p) catch { case _: Exception => () })
   }
 
-  private def runSuite(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // per-run warehouse: managed-table gates (bucketed joins) never see
-    // another run's leftovers; registered for recursive delete at exit
-    // so /tmp accumulates nothing either
-    val warehouse = java.nio.file.Files.createTempDirectory("graft_wh_")
-    graft.core.TempPaths.register(warehouse)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouse.toString)
-      // broadcast/shuffle cleanup needs GC (see SessionHygiene.reset);
-      // the between-gate System.gc() covers gate boundaries, this bounds
-      // accumulation inside a single long gate without firing mid-query
-      // every minute
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      // TypedImperativeAggregates (TopKPairs) run under
-      // ObjectHashAggregateExec, which falls back to SORT-based
-      // aggregation after only 128 hash-map keys — with 10^4+ groups per
-      // partition that serializes every heap through a sort. 64k keys of
-      // k-bounded heaps is still tiny state; keep the hash path.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup: absorbs session/codegen/JIT initialization so the
-    // first measured query isn't charged for it. Beyond the scan, warm
-    // the two codegen/JIT families SCALING.md's first-gate finding
-    // showed the first measured gate otherwise pays for (a 4x penalty
-    // on q151 when it led a subset): a broadcast-join plan and a typed
-    // ObjectHashAggregate fold.
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+  /** The isolated pass's snapshot fields: the standing list, the
+    * auto-promoted movers and the canary's two legs, each gate in its
+    * own child JVM. */
+  private def isolatedPass(names: Seq[String], shardJsons: Seq[JValue]): List[JField] = {
+    val rep = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATED_REPEAT", "3")
+    // Global time budget for the whole isolated pass (seconds): each
+    // child is a fresh JVM with warmup, ~60-90 s per gate, and the
+    // class has grown to 21 gates — unbounded, the pass could double
+    // the bench wall. Gates are ordered history-first, so when the
+    // budget trips it is the NEWEST additions that fall back to
+    // their sharded numbers; skipped names are recorded in the JSON
+    // (isolated_skipped) instead of silently missing.
+    // default sized to the list: 24 gates × ~60 s/child + the
+    // canary's second run + slack
+    val budgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_ISOLATED_BUDGET", "1800").toLong
+    // auto-promoted movers get their own additive budget so a
+    // static pass that exhausts budgetS cannot leave a fresh
+    // regression unadjudicated (the whole point of promotion)
+    val moverBudgetS = sys.env.getOrElse("SPARK_GRAFT_BENCH_MOVER_BUDGET", "600").toLong
+    val currentWalls = shardJsons.flatMap(s => Json.numbers(s \ "queries")).toMap
+    // baselines = the repo's committed snapshots (BENCH_LOCAL.json
+    // is written at the END of this run, so reading it here sees
+    // the PREVIOUS round, plus the prior window), not
+    // SPARK_GRAFT_BENCH_OUT — a per-round run points that at a fresh
+    // file that does not exist yet
+    val priorPaths = sys.env.get("SPARK_GRAFT_BENCH_PRIOR")
+      .map(_.split(':').toSeq.filter(_.nonEmpty))
+      .getOrElse(defaultPriorPaths())
+    val (repeat, sfBase, ioOn) = modeOf(shardJsons.last)
+    val promoted = promotedMovers(currentWalls, priorPaths, repeat, sfBase, ioOn)
+    if (promoted.nonEmpty)
+      System.err.println("[bench] auto-promoted movers (wall > 2x+2s " +
+        s"vs min over ${priorPaths.mkString(", ")}): " +
+        promoted.mkString(", "))
+    // pinned 8 GiB heap — the r8–r10 mover-study configuration, so
+    // the isolated series stays comparable across rounds and
+    // insensitive to the parent's heap (an 89 g fresh JVM measured
+    // q151 at 14.5 s where the historical 8 g config reads 2.5 s —
+    // virgin-heap effects, not the operator).
+    // SPARK_GRAFT_BENCH_WARMUP=1: one UNTIMED run of the gate
+    // before the repeat-N take-min. Replay-bound streaming
+    // gates never amortized first-run JIT inside a fresh 8 g
+    // child (q323 read 29.4 s isolated vs 3.7 warmed A/B;
+    // q335 21.8 vs 8.2 — round-13 verdict #4): all N attempts
+    // stayed cold-band. The warm-up absorbs exactly what the
+    // suite-level warmup absorbs for sharded gates, so the
+    // standing isolated series reads code, not child JIT state.
+    def child(g: String, timeoutS: Long): List[JField] = {
+      val out = Files.createTempFile(s"graft_bench_iso_$g", ".json")
+      try {
+        childJvm(Seq(g), out, Map("SPARK_GRAFT_BENCH_REPEAT" -> rep,
+          "SPARK_GRAFT_BENCH_WARMUP" -> "1"),
+          heapOverride = Some("8g"), timeoutS = Some(timeoutS))
+        val wall = Json.fields(readJson(out) \ "queries")
+        require(wall.nonEmpty, s"isolated child for $g wrote no wall")
+        wall
+      } finally {
+        Files.deleteIfExists(out)
+        ()
+      }
+    }
+    val isoStart = System.nanoTime()
+    var skipped = List.empty[String]
+    // A failing isolated child must NOT kill the bench: the sharded
+    // numbers are the contract, the isolated series is telemetry — log
+    // and skip. The child wait is bounded by the budget's remainder
+    // (plus a floor so the last admitted gate gets a real attempt): a
+    // hung child lands in isolated_skipped instead of wedging the run.
+    def runIsolated(gates: Seq[String], budget: Long): Seq[JField] =
+      gates.flatMap { g =>
+        val elapsed = (System.nanoTime() - isoStart) / 1e9
+        if (elapsed > budget) {
+          skipped ::= g
+          Nil
+        } else
+          try child(g, math.max(120L, budget - elapsed.toLong))
+          catch {
+            case e: Exception =>
+              System.err.println(s"[bench] isolated $g SKIPPED: ${e.getMessage}")
+              skipped ::= g
+              Nil
+          }
+      }
+    // box-state canary, FIRST leg: the canary runs as its own
+    // explicit first child (isolatedSchedule — identity by
+    // construction, not list position); its wall doubles as the
+    // gate's standing isolated entry
+    val (canaryGate, standing) = isolatedSchedule(names.contains)
+    val canaryFirstEntry = runIsolated(Seq(canaryGate), budgetS)
+    val entries = canaryFirstEntry ++
+      runIsolated(standing, budgetS) ++
+        runIsolated(promoted, budgetS + moverBudgetS)
+    // canary LAST leg: run it once more so the series carries its
+    // own band measurement — first≈last ⇒ a stable window,
+    // first≪last (or ≫) ⇒ read this pass's absolute walls with
+    // that measured drift in mind. Outside the budget accounting:
+    // a skipped canary must be visible, not silently absent.
+    val canaryFirst = Json.double(JObject(canaryFirstEntry.toList) \ CanaryGate)
+    val canaryLast = canaryFirst.flatMap { _ =>
+      try Json.double(JObject(child(CanaryGate, 300L)) \ CanaryGate)
+      catch { case e: Exception =>
+        System.err.println(s"[bench] canary last leg SKIPPED: ${e.getMessage}")
+        None
+      }
+    }
+    val canary = (canaryFirst, canaryLast) match {
+      case (Some(a), Some(b)) =>
+        List[JField]("isolated_canary" -> JObject("gate" -> JString(CanaryGate),
+          "first" -> JDouble(a), "last" -> JDouble(b)))
+      case _ =>
+        System.err.println("[bench] isolated_canary missing (first leg " +
+          "skipped or last leg failed)")
+        Nil
+    }
+    if (skipped.nonEmpty)
+      System.err.println(s"[bench] isolated budget (${budgetS}s" +
+        s"+${moverBudgetS}s movers) hit or child failed; " +
+        s"skipped: ${skipped.reverse.mkString(", ")}")
+    def gateArray(key: String, gates: Seq[String]): List[JField] =
+      if (gates.isEmpty) Nil else List(key -> JArray(gates.map(JString(_)).toList))
+    // isolated_warmup marks the series break: r14+ isolated walls
+    // include the per-gate warm-up and are NOT comparable to
+    // r13-and-earlier isolated entries for replay-bound gates
+    List[JField]("isolated" -> JObject(entries.toList),
+      "isolated_repeat" -> JInt(rep.toInt), "isolated_warmup" -> JBool(true)) ++
+      canary ++ gateArray("isolated_promoted", promoted) ++
+      gateArray("isolated_skipped", skipped.reverse)
+  }
+
+  /** Untimed warm-up before the first measured gate (Bench and Probe):
+    * absorbs session/codegen/JIT initialization so the first measured
+    * gate isn't charged for it. Beyond the scan, it warms the two
+    * codegen/JIT families SCALING.md's first-gate finding showed the
+    * first measured gate otherwise pays for (a 4x penalty on q151 when
+    * it led a subset): a broadcast-join plan and a typed
+    * ObjectHashAggregate fold. */
+  private[graft] def warmUp(spark: SparkSession): Unit = {
+    spark.read.parquet(s"$SfDir/lineitem.parquet").count()
     SparkEntry.queries.getOrElse("q04_broadcast_dims",
       sys.error("warmup gate q04_broadcast_dims missing — renamed? " +
         "fix the warmup or the first measured gate silently re-absorbs " +
-        "the first-gate JIT penalty"))(spark, sfDir).count()
-    locally {
-      import org.apache.spark.sql.functions.col
-      spark.range(0, 100000)
-        .selectExpr("id % 97 AS k", "CAST(id AS DOUBLE) AS w", "id AS v")
-        .groupBy("k").agg(graft.plans.TopKAgg.topK(col("w"), col("v"), 8))
-        .count()
-    }
+        "the first-gate JIT penalty"))(spark, SfDir).count()
+    spark.range(0, 100000)
+      .selectExpr("id % 97 AS k", "CAST(id AS DOUBLE) AS w", "id AS v")
+      .groupBy("k").agg(graft.plans.TopKAgg.topK(col("w"), col("v"), 8))
+      .count()
     SessionHygiene.reset(spark)
+  }
+
+  private def runSuite(args: Array[String]): Unit = {
+    val sfDir = SfDir
+    val spark = SessionHygiene.session()
+    warmUp(spark)
     var failed = List.empty[String]
     // Per-gate GC seconds + peak heap ride along with each wall time:
     // rounds 3/4 saw 8x driver-vs-builder swings on unchanged plans that
@@ -662,7 +605,7 @@ object Bench {
     // same cold compilation state), so their standing isolated series
     // carried a ±3-8x cold-child band the canary couldn't normalize.
     val warmupGates = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "0") == "1"
-    val results = selected.map { case (name, fn) =>
+    val runs = selected.map { case (name, fn) =>
       if (warmupGates) {
         try { fn(spark, sfDir).count(); () }
         catch { case _: Throwable => () } // the timed attempt reports it
@@ -702,44 +645,19 @@ object Bench {
         // for a deterministic plan (unlike wall), so the scale harness
         // reads exchange growth straight off the bench JSON.
         val (sw1, in1) = if (ioOn) SessionHygiene.ioBytes(spark) else (0L, 0L)
-        val shufMb = (sw1 - sw0) / 1e6
-        val inMb = (in1 - in0) / 1e6
         SessionHygiene.reset(spark)
-        (name, if (ok) sec else -1.0, gcS, peakMb, cpuS, jitS, shufMb, inMb)
+        GateRun(name, if (ok) sec else -1.0, gcS, peakMb, cpuS, jitS,
+          (sw1 - sw0) / 1e6, (in1 - in0) / 1e6)
       }
-      if (attempts.exists(_._2 < 0)) { failed ::= name; attempts.find(_._2 < 0).get }
-      else attempts.minBy(_._2)
+      attempts.find(_.sec < 0) match {
+        case Some(f) => failed ::= name; f
+        case None => attempts.minBy(_.sec)
+      }
     }
     if (failed.nonEmpty)
       System.err.println(s"[bench] ${failed.size} queries failed: ${failed.sorted.mkString(", ")}")
-    val qs = results.map { case (k, v, _, _, _, _, _, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val gcs = results.map { case (k, _, g, _, _, _, _, _) => s"\"" + k + "\":" + g }
-      .mkString("{", ",", "}")
-    val peaks = results.map { case (k, _, _, p, _, _, _, _) => s"\"" + k + "\":" + p }
-      .mkString("{", ",", "}")
-    val cpus_ = results.map { case (k, _, _, _, c, _, _, _) => s"\"" + k + "\":" + c }
-      .mkString("{", ",", "}")
-    val jits = results.map { case (k, _, _, _, _, j, _, _) => s"\"" + k + "\":" + j }
-      .mkString("{", ",", "}")
-    val shufs = results.map { case (k, _, _, _, _, _, s, _) => s"\"" + k + "\":" + s }
-      .mkString("{", ",", "}")
-    val ins = results.map { case (k, _, _, _, _, _, _, i) => s"\"" + k + "\":" + i }
-      .mkString("{", ",", "}")
-    val total = results.collect { case (_, v, _, _, _, _, _, _) if v >= 0 => v }.sum
-    val totalGc = results.map(_._3).sum
-    val totalCpu = results.map(_._5).sum
-    val totalJit = results.map(_._6).sum
-    val totalShuf = results.map(_._7).sum
-    val totalIn = results.map(_._8).sum
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""gc_s":$gcs,"peak_mb":$peaks,"cpu_s":$cpus_,"jit_s":$jits,""" +
-      s""""shuffle_mb":$shufs,"input_mb":$ins,""" +
-      s""""total_gc_s":$totalGc,""" +
-      s""""total_cpu_s":$totalCpu,"total_jit_s":$totalJit,""" +
-      s""""total_shuffle_mb":$totalShuf,"total_input_mb":$totalIn,""" +
-      s""""warmed":${repeat > 1},"repeat":$repeat,"io":$ioOn,""" +
-      s""""session":${SessionHygiene.sessionInfoJson(spark)},"sf":"$sfDir"}"""
+    val snap = suiteSnapshot(runs, repeat, ioOn, SessionHygiene.sessionInfo(spark), sfDir)
+    val json = Json.render(snap)
     // The stdout line is the driver contract, but stdout scraping has
     // truncated past per-query maps — the same JSON also lands in a file
     // (SPARK_GRAFT_BENCH_OUT, default ./BENCH_LOCAL.json) so all entries
@@ -750,8 +668,7 @@ object Bench {
     val outPath = sys.env.get("SPARK_GRAFT_BENCH_OUT")
       .orElse(if (only.isEmpty) Some("BENCH_LOCAL.json") else None)
     outPath.foreach { p =>
-      try java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      try Files.write(Paths.get(p), (json + "\n").getBytes(StandardCharsets.UTF_8))
       catch { case e: Exception =>
         System.err.println(s"[bench] could not write $p: ${e.getMessage}") }
     }
@@ -760,9 +677,8 @@ object Bench {
     // driver directly, so they owe the same compact last line; shard
     // children have stdout discarded and filtered dev runs just get a
     // readable summary
-    println(compactLine(total,
-      results.map { case (k, v, _, _, _, _, _, _) => k -> v }.toMap,
-      sfDir, cpus, outPath))
+    println(compactLine(Json.double(snap \ "value").getOrElse(0.0),
+      Json.numbers(snap \ "queries"), sfDir, SessionHygiene.cpus, outPath))
     spark.stop()
   }
 }

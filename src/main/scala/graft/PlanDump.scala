@@ -20,36 +20,38 @@ object PlanDump {
     require(args.length >= 4,
       "usage: PlanDump <sfDir> <outDir> <suffix> <gate...>")
     val Array(sfDir, outDir, suffix) = args.take(3)
-    val gates = args.drop(3).toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionHygiene.session()
     Files.createDirectories(Paths.get(outDir))
-    gates.foreach { g =>
-      // pseudo-gate: ONE uncheckpointed prefix-doubling round (the loop
-      // body of q187/q188 — their gate-level plans are truncated by the
-      // per-round localCheckpoint, so the round plan is dumped directly)
-      val df =
-        if (g == "suffix_doubling_round") {
-          import org.apache.spark.sql.functions._
-          val tok = graft.core.Tables.documents(spark, sfDir)
-            .select(col("doc_id"),
-              posexplode(graft.functions.TextFns.tokens(col("text")))
-                .as(Seq("pos", "t")))
-            .select(col("doc_id"), col("pos"), (col("pos") + 1L).as("r"))
-          graft.operators.SuffixArray.doublingRound(tok, 4L, 1000L, 256)
-        } else SparkEntry.queries.getOrElse(g,
-          sys.error(s"unknown gate $g"))(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      Files.write(Paths.get(outDir, s"${g}_$suffix.txt"),
-        (plan.trim + "\n").getBytes(StandardCharsets.UTF_8))
+    args.drop(3).foreach { g =>
+      write(s"$outDir/${g}_$suffix.txt", explain(spark, sfDir, g) + "\n")
       println(s"[plandump] wrote $outDir/${g}_$suffix.txt")
     }
     spark.stop()
+  }
+
+  /** `gate`'s `.explain("formatted")` output, trimmed. */
+  def explain(spark: SparkSession, sfDir: String, gate: String): String = {
+    // pseudo-gate: ONE uncheckpointed prefix-doubling round (the loop
+    // body of q187/q188 — their gate-level plans are truncated by the
+    // per-round localCheckpoint, so the round plan is dumped directly)
+    val df =
+      if (gate == "suffix_doubling_round") {
+        import org.apache.spark.sql.functions._
+        val tok = graft.core.Tables.documents(spark, sfDir)
+          .select(col("doc_id"),
+            posexplode(graft.functions.TextFns.tokens(col("text")))
+              .as(Seq("pos", "t")))
+          .select(col("doc_id"), col("pos"), (col("pos") + 1L).as("r"))
+        graft.operators.SuffixArray.doublingRound(tok, 4L, 1000L, 256)
+      } else SparkEntry.queries.getOrElse(gate,
+        sys.error(s"unknown gate $gate"))(spark, sfDir)
+    df.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode).trim
+  }
+
+  /** `text` to `path` as UTF-8 (Plans writes PLANS.md through it). */
+  def write(path: String, text: String): Unit = {
+    Files.write(Paths.get(path), text.getBytes(StandardCharsets.UTF_8))
+    ()
   }
 }

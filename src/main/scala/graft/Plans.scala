@@ -1,10 +1,5 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan evidence dump: writes `.explain("formatted")` output for
   * the headline queries to PLANS.md so the scale-critical plan properties
   * (pushdown reaching the scan, broadcast on dims, bounded top-k
@@ -62,20 +57,9 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outPath = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val qs = SparkEntry.queries
-    val body = Headline.flatMap { name =>
-      qs.get(name).map { fn =>
-        val plan = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        s"## $name\n\n```\n${plan.trim}\n```\n"
-      }
+    val spark = SessionHygiene.session()
+    val body = Headline.map { name =>
+      s"## $name\n\n```\n${PlanDump.explain(spark, sfDir, name)}\n```\n"
     }.mkString("\n")
     val header =
       s"""# Physical plans (generated by `graft.Plans` at $sfDir)
@@ -88,8 +72,7 @@ object Plans {
          |(no full-candidate Window sort), and grouped aggregates keep
          |map-side partial aggregation.
          |""".stripMargin
-    Files.write(Paths.get(outPath),
-      (header + "\n" + body).getBytes(StandardCharsets.UTF_8))
+    PlanDump.write(outPath, header + "\n" + body)
     println(s"[plans] wrote ${Headline.size} plans to $outPath")
     spark.stop()
   }

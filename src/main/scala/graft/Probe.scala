@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement-only dev tool for the optimization rounds (guide §1:
   * measure first): run ONE gate under the Bench session plus arbitrary
@@ -23,24 +22,7 @@ object Probe {
     val overrides = args.drop(1).filter(_.contains("=")).map { kv =>
       val i = kv.indexOf('='); kv.substring(0, i) -> kv.substring(i + 1)
     }
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val warehouse = java.nio.file.Files.createTempDirectory("graft_probe_wh_")
-    graft.core.TempPaths.register(warehouse)
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouse.toString)
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-    overrides.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionHygiene.session(overrides.toSeq: _*)
     if (overrides.nonEmpty)
       System.err.println(s"[probe] overrides: ${overrides.map { case (k, v) => s"$k=$v" }.mkString(" ")}")
 
@@ -69,14 +51,12 @@ object Probe {
 
     val fn = SparkEntry.queries.getOrElse(gate,
       sys.error(s"unknown gate $gate"))
-    // same warmups as Bench so attempt 1 is comparable
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    SparkEntry.queries("q04_broadcast_dims")(spark, sfDir).count()
-    SessionHygiene.reset(spark)
+    // Bench's warm-up, so attempt 1 is comparable
+    Bench.warmUp(spark)
     (1 to repeat).foreach { i =>
       jobTotals.clear()
       val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
+      fn(spark, Bench.SfDir).count()
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"[probe] $gate attempt $i wall $sec%.3f s")
       if (i == repeat) {

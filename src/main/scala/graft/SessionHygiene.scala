@@ -1,8 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.json4s._
 
-/** Between-gate session reset for the Bench/Verify harnesses.
+import graft.core.TempPaths
+
+/** The one session factory, and the between-gate session reset for the
+  * Bench/Verify harnesses.
   *
   * 133 gate queries share one JVM; gate closures cache inputs for their
   * own multi-consumer plans, and a leaked block from gate N steals
@@ -13,6 +17,42 @@ import org.apache.spark.sql.SparkSession
   * run where each job gets its own executors.
   */
 object SessionHygiene {
+
+  /** SPARK_GRAFT_CPUS, default 4: the local core count of every main. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+
+  /** The session every main runs on: `local[cpus]` with shuffle
+    * partitions = cpus (not the 200 default), AQE with partition
+    * coalescing and skew-join splitting, UTC, no UI, log level WARN, and
+    * a per-run warehouse — managed-table gates (bucketed joins) never
+    * see another run's leftovers, and [[TempPaths]] deletes it at exit.
+    * `overrides` (Probe's `k=v` arguments) are applied last. */
+  def session(overrides: (String, String)*): SparkSession = {
+    val warehouse = TempPaths.registered(java.nio.file.Files.createTempDirectory("graft_wh_"))
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", warehouse.toString)
+      // broadcast/shuffle cleanup needs GC (see reset); the between-gate
+      // System.gc() covers gate boundaries, this bounds accumulation
+      // inside a single long gate without firing mid-query every minute
+      .config("spark.cleaner.periodicGC.interval", "5min")
+      // TypedImperativeAggregates (TopKPairs) run under
+      // ObjectHashAggregateExec, which falls back to SORT-based
+      // aggregation after only 128 hash-map keys — with 10^4+ groups per
+      // partition that serializes every heap through a sort. 64k keys of
+      // k-bounded heaps is still tiny state; keep the hash path.
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+    overrides.foreach { case (k, v) => b.config(k, v) }
+    val spark = b.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Drop everything a gate can leak into the shared session: the SQL
     * cache (DataFrame.cache sites), RDD-level persisted blocks
@@ -50,23 +90,22 @@ object SessionHygiene {
     * to every Verify dump and inside the Bench JSON so a
     * driver-vs-local divergence (correctness OR wall-time) diffs in one
     * look instead of being argued from memory. */
-  def sessionInfoJson(spark: SparkSession): String = {
-    def c(k: String) = try spark.conf.get(k) catch { case _: Exception => "" }
-    val heapMb = Runtime.getRuntime.maxMemory() / (1024L * 1024L)
+  def sessionInfo(spark: SparkSession): JObject = {
+    def c(k: String) = JString(try spark.conf.get(k) catch { case _: Exception => "" })
     val (ccUsed, ccMax) = codeCacheMb()
-    s"""{"spark_version":"${spark.version}"""" +
-      s""","code_cache_used_mb":$ccUsed""" +
-      s""","code_cache_reserved_mb":$ccMax""" +
-      s""","master":"${spark.sparkContext.master}"""" +
-      s""","java":"${System.getProperty("java.vm.version")}"""" +
-      s""","heap_max_mb":$heapMb""" +
-      s""","default_parallelism":${spark.sparkContext.defaultParallelism}""" +
-      s""","shuffle_partitions":"${c("spark.sql.shuffle.partitions")}"""" +
-      s""","aqe":"${c("spark.sql.adaptive.enabled")}"""" +
-      s""","whole_stage_codegen":"${c("spark.sql.codegen.wholeStage")}"""" +
-      s""","auto_broadcast_threshold":"${c("spark.sql.autoBroadcastJoinThreshold")}"""" +
-      s""","object_hash_fallback":"${c("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")}"""" +
-      s""","timezone":"${c("spark.sql.session.timeZone")}"}"""
+    JObject("spark_version" -> JString(spark.version),
+      "code_cache_used_mb" -> JLong(ccUsed),
+      "code_cache_reserved_mb" -> JLong(ccMax),
+      "master" -> JString(spark.sparkContext.master),
+      "java" -> JString(System.getProperty("java.vm.version")),
+      "heap_max_mb" -> JLong(Runtime.getRuntime.maxMemory() / (1024L * 1024L)),
+      "default_parallelism" -> JInt(spark.sparkContext.defaultParallelism),
+      "shuffle_partitions" -> c("spark.sql.shuffle.partitions"),
+      "aqe" -> c("spark.sql.adaptive.enabled"),
+      "whole_stage_codegen" -> c("spark.sql.codegen.wholeStage"),
+      "auto_broadcast_threshold" -> c("spark.sql.autoBroadcastJoinThreshold"),
+      "object_hash_fallback" -> c("spark.sql.objectHashAggregate.sortBased.fallbackThreshold"),
+      "timezone" -> c("spark.sql.session.timeZone"))
   }
 
   // ---- task-level IO telemetry (shuffle/input bytes per gate) ----

@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.core.Json
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -20,36 +22,13 @@ object Verify {
         s"[verify] filter '$a' matches no gate (exact or '${a}_*')")
       hits
     }.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // per-run warehouse: managed-table gates (bucketed joins) never see
-    // another run's leftovers; registered for recursive delete at exit
-    // so /tmp accumulates nothing either
-    val warehouse = Files.createTempDirectory("graft_wh_")
-    graft.core.TempPaths.register(warehouse)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouse.toString)
-      // broadcast/shuffle cleanup needs GC (see SessionHygiene.reset);
-      // the between-gate System.gc() covers gate boundaries, this bounds
-      // accumulation inside a single long gate without firing mid-query
-      // every minute
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      // keep TopKPairs heaps on the hash-aggregation path (see Bench)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionHygiene.session()
     new java.io.File(outDir).mkdirs()
     // Effective session config beside the dumps: when a driver-run
     // result diverges from a local run of the same commit (the round-4
     // q135 mystery), the first diff to take is this file, not memory.
     Files.writeString(Paths.get(s"$outDir/_session.json"),
-      SessionHygiene.sessionInfoJson(spark))
+      Json.render(SessionHygiene.sessionInfo(spark)))
     var errors = List.empty[(String, String)]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
@@ -62,28 +41,14 @@ object Verify {
       }
       SessionHygiene.reset(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def strMap(kvs: Iterable[(String, String)]): String =
+      kvs.map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), strMap(SparkEntry.oracleSql))
     // A crashing query leaves no parquet dir and would silently vanish
     // from the correctness report (q131 was invisible in round 3 until
     // cross-referenced against the bench). Leave an explicit marker the
     // driver — or a human — can pick up.
-    val errJson = errors.reverse
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/_errors.json"), errJson)
+    Files.writeString(Paths.get(s"$outDir/_errors.json"), strMap(errors.reverse))
     if (errors.nonEmpty)
       System.err.println(s"[verify] ${errors.size} queries failed: " +
         errors.map(_._1).sorted.mkString(", "))

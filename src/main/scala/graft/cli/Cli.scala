@@ -3,7 +3,7 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Cross, Tables}
+import graft.core.{Cross, Json, Tables}
 import graft.model._
 import graft.sources.ModelIO
 
@@ -18,18 +18,9 @@ import graft.sources.ModelIO
   * where <model> ∈ {baseline, itemcf, usercf, als, hybrid}.
   */
 object Cli {
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  /** [[graft.SessionHygiene.session]], under the name the benchmark
+    * harness compiles against. */
+  def session(): SparkSession = graft.SessionHygiene.session()
 
   def testPairs(spark: SparkSession, dir: String): DataFrame =
     Tables.customer(spark, dir).filter(pmod(col("c_custkey"), lit(19)) === 0)
@@ -243,7 +234,12 @@ object Evaluate {
     val byDecision =
       if (row.getLong(2) == 0) ""
       else Recommender.rmseByDecision(preds, gt).orderBy("decision").collect()
-        .map(r => s""""${r.getString(0)}":{"rmse":${r.getDouble(1)},"n":${r.getLong(2)}}""")
+        .map { r =>
+          // the tag comes from the input file, so it is escaped; an
+          // untagged group keeps its "null" key
+          val tag = Json.str(String.valueOf(r.getString(0)))
+          s"""$tag:{"rmse":${r.getDouble(1)},"n":${r.getLong(2)}}"""
+        }
         .mkString(""","by_decision":{""", ",", "}")
     s"""{"rmse":$rmse,"missing_pairs":${row.getLong(1)}$byDecision}"""
   }

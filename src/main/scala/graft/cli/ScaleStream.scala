@@ -1,8 +1,9 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.json4s._
 
 import graft.streaming.EventStreams
 
@@ -33,14 +34,7 @@ object ScaleStream {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val batches = args.lift(1).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionHygiene.session()
 
     // one replay source shared by all strategies
     val base = graft.core.Tables.events(spark, sfDir)
@@ -70,7 +64,8 @@ object ScaleStream {
     }
 
     var expect: Option[(Long, Long)] = None
-    val results = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val results = scala.collection.mutable.LinkedHashMap.empty[String, JValue]
+    def cents(x: Double): JValue = JDecimal(BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP))
     def measure(name: String)(run: String => DataFrame): Unit = {
       val path = graft.core.TempPaths.gatePath(s"scalestream_$name")
       graft.core.TempPaths.clearDir(path)
@@ -85,8 +80,8 @@ object ScaleStream {
         case Some(e) => require(e == cs,
           s"$name disagrees: $cs vs $e — fold strategies must be equivalent")
       }
-      results(name) =
-        f"""{"sec":$sec%.2f,"mb_written":$mb%.2f,"rows":${cs._1}}"""
+      results(name) = JObject("sec" -> cents(sec), "mb_written" -> cents(mb),
+        "rows" -> JLong(cs._1))
       System.err.println(s"[scalestream] $name ${f"$sec%.2f"}s ${f"$mb%.1f"}MB")
     }
 
@@ -107,9 +102,9 @@ object ScaleStream {
     }
 
     val inputRows = spark.read.parquet(replay.toString).count()
-    val json = s"""{"sf":"$sfDir","batches":$batches,"input_rows":$inputRows,""" +
-      s""""strategies":{${results.map { case (k, v) => s"\"$k\":$v" }.mkString(",")}}}"""
-    println(json)
+    println(graft.core.Json.render(JObject("sf" -> JString(sfDir),
+      "batches" -> JInt(batches), "input_rows" -> JLong(inputRows),
+      "strategies" -> JObject(results.toList))))
     spark.stop()
   }
 }

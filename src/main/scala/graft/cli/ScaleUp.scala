@@ -37,13 +37,7 @@ object ScaleUp {
     val dst = args(1)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionHygiene.session()
     run(spark, src, dst, factor)
     spark.stop()
   }

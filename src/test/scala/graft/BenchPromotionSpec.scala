@@ -1,6 +1,9 @@
 package graft
 
+import org.json4s._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.core.Json
 
 /** The bench's mover auto-promotion: gates whose fresh sharded wall
   * exceeds 2× + 2 s of the MIN over a window of prior committed
@@ -39,9 +42,13 @@ class BenchPromotionSpec extends AnyFunSuite {
     Bench.promotedMovers(current, priors, repeat = 1, sfBase = "x",
       ioOn = true)
 
-  test("parseNumMap round-trips flat numeric maps incl. scientific notation") {
-    assert(Bench.parseNumMap("") == Map.empty)
-    assert(Bench.parseNumMap(""""a":1.5,"b":2.0E-4,"c":-1""") ==
+  /** The `queries` map of a whole JSON line, read by the codec. */
+  private def numMap(line: String): Map[String, Double] =
+    Json.numbers(Json.parse(line) \ "queries")
+
+  test("the codec reads flat numeric maps incl. scientific notation") {
+    assert(numMap("""{"queries":{}}""") == Map.empty)
+    assert(numMap("""{"queries":{"a":1.5,"b":2.0E-4,"c":-1}}""") ==
       Map("a" -> 1.5, "b" -> 2.0e-4, "c" -> -1.0))
   }
 
@@ -215,10 +222,9 @@ class BenchPromotionSpec extends AnyFunSuite {
     assert(line.contains(""""cpus":32"""))
     assert(line.contains(""""queries_n":400"""))
     assert(line.endsWith("}}"))
-    // the queries that made the cut parse back with the shard parser and
-    // are the MOST EXPENSIVE ones
-    val body = line.substring(line.indexOf("\"queries\":{") + 11, line.length - 2)
-    val parsed = Bench.parseNumMap(body)
+    // the queries that made the cut parse back with the codec and are
+    // the MOST EXPENSIVE ones
+    val parsed = numMap(line)
     assert(parsed.nonEmpty && parsed.size < qs.size)
     // greedy fill may squeeze one short-valued small gate into the last
     // few bytes; the MOST EXPENSIVE gates must all be present regardless
@@ -271,13 +277,68 @@ class BenchPromotionSpec extends AnyFunSuite {
     val line = Bench.compactLine(0.5, qs, "/sf", "8", Some("B.json"))
     assert(line.contains(""""queries_dropped":1,"""), line)
     assert(line.length <= 1700)
-    val body = line.substring(line.indexOf("\"queries\":{") + 11, line.length - 2)
-    assert(Bench.parseNumMap(body).keySet == (1 to 5).map(i => s"q0$i").toSet)
+    assert(numMap(line).keySet == (1 to 5).map(i => s"q0$i").toSet)
     // dropped + kept always accounts for every gate
     val many = (1 to 400).map(i => f"q$i%03d_some_longish_gate_name" -> i * 0.123).toMap
     val big = Bench.compactLine(1.0, many, "/sf", "8", Some("B.json"))
     val dropped = """"queries_dropped":(\d+)""".r.findFirstMatchIn(big).get.group(1).toInt
-    val kept = Bench.parseNumMap(big.substring(big.indexOf("\"queries\":{") + 11, big.length - 2))
+    val kept = numMap(big)
     assert(dropped > 0 && dropped + kept.size == many.size)
+  }
+
+  // --- the JSON codec on whole snapshots ---
+
+  private def run(name: String, sec: Double): Bench.GateRun =
+    Bench.GateRun(name, sec, gcS = 0.5, peakMb = 100L, cpuS = 2.0, jitS = 0.25,
+      shuffleMb = 1.5, inputMb = 3.0)
+
+  test("a pretty-printed baseline promotes the same movers as its compact form") {
+    val compact = snapshot("qa" -> 1.0, "qb" -> 5.0)
+    val pretty = org.json4s.jackson.JsonMethods.pretty(Json.parse(compact))
+    assert(pretty.contains("\n  \"queries\""), pretty)
+    val current = Map("qa" -> 11.0, "qb" -> 6.0)
+    assert(promoted(current, tmpFile(compact)) == Seq("qa"))
+    assert(promoted(current, tmpFile(pretty)) == Seq("qa"),
+      "a reformatted baseline must not drop out of the window")
+  }
+
+  test("a snapshot whose sf holds a quote, a backslash or a newline round-trips") {
+    val sf = "/data/a \"quoted\" dir\\x\nsf0.1"
+    val json = Json.render(Bench.suiteSnapshot(Seq(run("q01_a", 1.0)), repeat = 2,
+      ioOn = false, JObject(), sf))
+    assert(Json.parse(json) \ "sf" == JString(sf))
+    assert(Bench.snapshotMode(json) == ((2, Bench.sfBasename(sf), false)))
+  }
+
+  test("shard merge: per-gate maps concatenate, totals sum, session from the last shard") {
+    val s1 = Bench.suiteSnapshot(Seq(run("q01_a", 1.0), run("q02_b", -1.0)), 1, true,
+      JObject("master" -> JString("first")), "/sf/sf0.01")
+    val s2 = Bench.suiteSnapshot(Seq(run("q03_c", 2.5)), 1, true,
+      JObject("master" -> JString("last")), "/sf/sf0.01")
+    val iso = List[JField]("isolated" -> JObject("q01_a" -> JDouble(0.75)))
+    val merged = Bench.mergeShards(Seq(s1, s2), iso)
+    assert(numMap(Json.render(merged)) == Map("q01_a" -> 1.0, "q02_b" -> -1.0, "q03_c" -> 2.5))
+    assert(Json.fields(merged \ "peak_mb").map(_._1) == List("q01_a", "q02_b", "q03_c"))
+    // value sums the walls that did not fail; telemetry totals sum all
+    assert(Json.double(merged \ "value").contains(3.5))
+    assert(Json.double(merged \ "total_gc_s").contains(1.5))
+    assert(Json.double(merged \ "total_input_mb").contains(9.0))
+    assert(merged \ "shards" == JInt(2))
+    assert(merged \ "session" == JObject("master" -> JString("last")))
+    assert(merged.obj.map(_._1) == List("metric", "value", "unit", "queries", "gc_s",
+      "peak_mb", "cpu_s", "jit_s", "shuffle_mb", "input_mb", "total_gc_s", "total_cpu_s",
+      "total_jit_s", "total_shuffle_mb", "total_input_mb", "warmed", "repeat", "shards",
+      "io", "isolated", "session", "sf"))
+    assert(Bench.snapshotMode(Json.render(merged)) == ((1, "sf0.01", true)))
+  }
+
+  test("the committed snapshots parse to the sf0.1 mode with every gate") {
+    Seq("BENCH_LOCAL.json", "bench_prior_1.json", "bench_prior_2.json",
+        "bench_prior_3.json").foreach { f =>
+      val json = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(f)), "UTF-8")
+      assert(Bench.snapshotMode(json) == ((1, "sf0.1", true)), f)
+      assert(numMap(json).size == 345, f)
+    }
   }
 }

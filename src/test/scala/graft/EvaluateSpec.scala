@@ -53,7 +53,7 @@ class EvaluateSpec extends SparkSpec {
   private def line(u: Long, b: Long, stars: String, decision: String = null): String =
     s"""{"user_id":$u,"business_id":$b""" +
       (if (stars == null) "" else s""","stars":$stars""") +
-      (if (decision == null) "" else s""","decision":"$decision"""") + "}"
+      (if (decision == null) "" else s""","decision":${graft.core.Json.str(decision)}""") + "}"
 
   private def check(path: String): String = {
     val got = Evaluate.run(spark, path, sf())
@@ -118,5 +118,15 @@ class EvaluateSpec extends SparkSpec {
     graft.cli.Train.runWith(spark, "baseline", sf(), s"$dir/model", Map.empty)
     graft.cli.Predict.run(spark, "baseline", sf(), s"$dir/model", s"$dir/preds")
     check(s"$dir/preds")
+  }
+
+  test("a decision tag with a quote or a backslash keeps the report strict JSON") {
+    val (u0, b0) = pair(0); val (u1, b1) = pair(1)
+    val tags = Seq("say \"hi\"", "back\\slash")
+    val got = Evaluate.run(spark, predFile(line(u0, b0, "4.0", tags(0)),
+      line(u1, b1, "2.0", tags(1))), sf())
+    val byDecision = new com.fasterxml.jackson.databind.ObjectMapper().readTree(got)
+      .get("by_decision")
+    tags.foreach(t => assert(byDecision.get(t).get("n").asLong == 1L, got))
   }
 }
