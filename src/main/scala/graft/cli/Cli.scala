@@ -202,9 +202,8 @@ object Evaluate {
     * One aggregate over `gt FULL JOIN preds` gives all three overall
     * figures (the ground truth is deduplicated once, not per figure):
     *   - rmse: [[Recommender.rmse]]'s semantics — every (prediction
-    *     line, ground-truth pair) match with a non-NaN `pred` counts,
-    *     a duplicate line once per match, and a null `pred` counts
-    *     without adding to the sum (`!isnan(null)` is true);
+    *     line, ground-truth pair) match with a [[Recommender.scored]]
+    *     `pred` counts, a duplicate line once per match;
     *   - missing pairs: ground-truth pairs with no prediction line;
     *   - tagged: some line, matched or not, carries a `decision`. */
   def run(spark: SparkSession, predPath: String, sfDir: String): String = {
@@ -212,7 +211,7 @@ object Evaluate {
     val gt = Recommender.dedupReviews(Tables.reviews(spark, sfDir))
     val inGt = col("in_gt").isNotNull
     val predicted = col("predicted").isNotNull
-    val scored = inGt && predicted && !isnan(col("pred"))
+    val scored = inGt && predicted && Recommender.scored(col("pred"))
     val se = (col("pred") - col("stars")) * (col("pred") - col("stars"))
     val row = gt.withColumn("in_gt", lit(true))
       .join(preds.withColumn("predicted", lit(true)), Seq("user_id", "business_id"), "full")

@@ -186,6 +186,23 @@ object TextSql {
        | i -> array_to_string(list_slice($toks, i * $step + 1, i * $step + $chunkSize), ' '))""".stripMargin.replace("\n", "")
   }
 
+  /** BM25 (k1 = 1.5, b = 0.75) of each `documents` token matching a query
+    * term: `scored(doc_id, s)`, one row per (doc, term) hit. The
+    * constants are binary-exact, so every literal is bit-identical in
+    * both engines. */
+  def bm25ScoredCte(terms: Seq[String]): String =
+    s"""tok AS (SELECT doc_id, unnest(${tokens("text")}) AS t FROM documents),
+       |stats AS (SELECT COUNT(DISTINCT doc_id) AS n_docs, COUNT(*) AS n_tok FROM tok),
+       |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
+       |qt AS (SELECT doc_id, t FROM tok WHERE t IN ${terms.map(t => s"'$t'").mkString("(", ", ", ")")}),
+       |df AS (SELECT t, COUNT(*) AS df FROM (SELECT DISTINCT doc_id, t FROM qt) d GROUP BY t),
+       |tf AS (SELECT doc_id, t, COUNT(*) AS tf FROM qt GROUP BY doc_id, t),
+       |scored AS (
+       |  SELECT tf.doc_id,
+       |    ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) * tf * 2.5 /
+       |      (tf + 1.5 * (1.0 - 0.75 + 0.75 * dl::DOUBLE / (n_tok::DOUBLE / n_docs::DOUBLE))) AS s
+       |  FROM tf JOIN df USING (t) JOIN dl USING (doc_id) CROSS JOIN stats)""".stripMargin
+
   def scrubPii(t: String): String =
     s"""regexp_replace(regexp_replace(regexp_replace($t,
        | '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),

@@ -265,11 +265,16 @@ object Recommender {
         Cross.r6(when(col("den") > 0.0, col("num") / col("den")).otherwise(2.5)).as("pred"))
   }
 
+  /** A prediction that counts toward RMSE: a number, neither null nor
+    * NaN (`!isnan(null)` alone is true, so a null would count as a match
+    * with zero error). */
+  def scored(pred: Column): Column = pred.isNotNull && !isnan(pred)
+
   /** Per-decision-rule RMSE breakdown (P10 — reference
     * scripts/evaluate.py:104-121 re-filters predictions per rule):
     * expects a `decision` column tagging which rule produced each row. */
   def rmseByDecision(preds: DataFrame, gt: DataFrame): DataFrame =
-    preds.filter(!isnan(col("pred")))
+    preds.filter(scored(col("pred")))
       .join(gt, Seq("user_id", "business_id"))
       .groupBy("decision")
       .agg(Cross.r6(sqrt(Cross.dsum(
@@ -278,9 +283,9 @@ object Recommender {
         count(lit(1)).as("n"))
 
   /** RMSE over joined (prediction, ground truth), skipping missing pairs
-    * and NaN predictions (M8 — reference scripts/evaluate.py:87-102). */
+    * and unscored predictions (M8 — reference scripts/evaluate.py:87-102). */
   def rmse(preds: DataFrame, gt: DataFrame): DataFrame =
-    preds.filter(!isnan(col("pred")))
+    preds.filter(scored(col("pred")))
       .join(gt, Seq("user_id", "business_id"))
       .select(((col("pred") - col("stars")) * (col("pred") - col("stars"))).as("se"))
       .agg(Cross.r6(sqrt(Cross.dsum(col("se"), 6) / count(lit(1)))).as("rmse"))

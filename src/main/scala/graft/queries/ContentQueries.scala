@@ -297,8 +297,8 @@ object ContentQueries {
        |  SELECT user_id, business_id, 3.0 AS stars FROM pairs
        |  WHERE user_id >= 10000000 OR business_id >= 10000000)
        |SELECT decision,
-       |  (round((sqrt(${ds("(pred - stars) * (pred - stars)")} / COUNT(*))) + 1e-9, 6) + 0.0) AS rmse,
-       |  COUNT(*) AS n
+       |  (round((sqrt(${ds("(pred - stars) * (pred - stars)")} / COUNT(pred))) + 1e-9, 6) + 0.0) AS rmse,
+       |  COUNT(pred) AS n
        |FROM preds JOIN gt USING (user_id, business_id)
        |GROUP BY decision
        |ORDER BY decision""".stripMargin) { (spark, dir) =>

@@ -27,6 +27,56 @@ object DedupQueries {
        |  FROM hx CROSS JOIN ${HashFns.minhashParamsSql(K)}
        |  GROUP BY doc_id, h_idx)""".stripMargin
 
+  /** Shingles, signatures and `bands(doc_id, band, bkey)`: the signature
+    * grouped `rows` per band into one comparable key. */
+  private def bandsCte(rows: Int = R): String =
+    s"""$shingleCte,
+       |$sigCte,
+       |bands AS (
+       |  SELECT doc_id, h_idx // $rows AS band,
+       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
+       |  FROM sigs GROUP BY doc_id, h_idx // $rows)""".stripMargin
+
+  /** [[bandsCte]] plus `cand(doc_a, doc_b)`: the distinct `doc_a < doc_b`
+    * pairs sharing a band key, narrowed by `where` when given. */
+  private def candCte(rows: Int = R, where: String = ""): String = {
+    val filter = if (where.isEmpty) "" else s"\n  WHERE $where"
+    s"""${bandsCte(rows)},
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id$filter)""".stripMargin
+  }
+
+  /** Exact-Jaccard inputs for `cand`: shared shingles `inter(doc_a, doc_b,
+    * i)` and set sizes `sizes(doc_id, n)`. */
+  private val verifyCte =
+    """inter AS (
+      |  SELECT c.doc_a, c.doc_b, COUNT(*) AS i
+      |  FROM cand c
+      |  JOIN sh a ON a.doc_id = c.doc_a
+      |  JOIN sh b ON b.doc_id = c.doc_b AND b.s = a.s
+      |  GROUP BY 1, 2),
+      |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)""".stripMargin
+
+  /** Banded-LSH candidates at `rows` per band, each with its exact
+    * Jaccard. */
+  private def lshPairs(name: String, rows: Int) = QueryDef(
+    name,
+    s"""WITH ${candCte(rows)},
+       |$verifyCte
+       |SELECT c.doc_a AS doc_a, c.doc_b AS doc_b,
+       |  (round((COALESCE(i.i, 0)::DOUBLE /
+       |        (sa.n + sb.n - COALESCE(i.i, 0))::DOUBLE) + 1e-9, 6) + 0.0) AS jaccard
+       |FROM cand c
+       |LEFT JOIN inter i ON c.doc_a = i.doc_a AND c.doc_b = i.doc_b
+       |JOIN sizes sa ON c.doc_a = sa.doc_id
+       |JOIN sizes sb ON c.doc_b = sb.doc_id
+       |ORDER BY c.doc_a, c.doc_b""".stripMargin) { (spark, dir) =>
+    Dedup.minhashNearDups(spark, graft.core.Tables.documents(spark, dir), K, rows, ShingleN)
+      .orderBy("doc_a", "doc_b")
+  }
+
   /** Exact dedup: group by raw-text hash, keep min doc_id. */
   val q30 = QueryDef(
     "q30_dedup_exact",
@@ -49,36 +99,7 @@ object DedupQueries {
   }
 
   /** Banded-LSH candidate pairs with exact Jaccard verification (X8/X9/X11). */
-  val q32 = QueryDef(
-    "q32_minhash_lsh_pairs",
-    s"""WITH $shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  SELECT doc_id, h_idx // $R AS band,
-       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
-       |  FROM sigs GROUP BY doc_id, h_idx // $R),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |inter AS (
-       |  SELECT c.doc_a, c.doc_b, COUNT(*) AS i
-       |  FROM cand c
-       |  JOIN sh a ON a.doc_id = c.doc_a
-       |  JOIN sh b ON b.doc_id = c.doc_b AND b.s = a.s
-       |  GROUP BY 1, 2),
-       |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)
-       |SELECT c.doc_a AS doc_a, c.doc_b AS doc_b,
-       |  (round((COALESCE(i.i, 0)::DOUBLE /
-       |        (sa.n + sb.n - COALESCE(i.i, 0))::DOUBLE) + 1e-9, 6) + 0.0) AS jaccard
-       |FROM cand c
-       |LEFT JOIN inter i ON c.doc_a = i.doc_a AND c.doc_b = i.doc_b
-       |JOIN sizes sa ON c.doc_a = sa.doc_id
-       |JOIN sizes sb ON c.doc_b = sb.doc_id
-       |ORDER BY c.doc_a, c.doc_b""".stripMargin) { (spark, dir) =>
-    Dedup.minhashNearDups(spark, graft.core.Tables.documents(spark, dir), K, R, ShingleN)
-      .orderBy("doc_a", "doc_b")
-  }
+  val q32 = lshPairs("q32_minhash_lsh_pairs", R)
 
   /** Exact n-gram Jaccard pairs over a threshold (inverted-index join),
     * with the hot-shingle df-cap ACTIVE (the Σ df² skew guard): shingles
@@ -157,36 +178,7 @@ object DedupQueries {
     * 131-134 groups by the whole signature), not any-band OR semantics.
     * Expressed with the same banded operator at rowsPerBand = K — a single
     * band spanning all K signatures IS the AND gate. */
-  val q37 = QueryDef(
-    "q37_lsh_and_pairs",
-    s"""WITH $shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  SELECT doc_id, h_idx // $K AS band,
-       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
-       |  FROM sigs GROUP BY doc_id, h_idx // $K),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |inter AS (
-       |  SELECT c.doc_a, c.doc_b, COUNT(*) AS i
-       |  FROM cand c
-       |  JOIN sh a ON a.doc_id = c.doc_a
-       |  JOIN sh b ON b.doc_id = c.doc_b AND b.s = a.s
-       |  GROUP BY 1, 2),
-       |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)
-       |SELECT c.doc_a AS doc_a, c.doc_b AS doc_b,
-       |  (round((COALESCE(i.i, 0)::DOUBLE /
-       |        (sa.n + sb.n - COALESCE(i.i, 0))::DOUBLE) + 1e-9, 6) + 0.0) AS jaccard
-       |FROM cand c
-       |LEFT JOIN inter i ON c.doc_a = i.doc_a AND c.doc_b = i.doc_b
-       |JOIN sizes sa ON c.doc_a = sa.doc_id
-       |JOIN sizes sb ON c.doc_b = sb.doc_id
-       |ORDER BY c.doc_a, c.doc_b""".stripMargin) { (spark, dir) =>
-    Dedup.minhashNearDups(spark, graft.core.Tables.documents(spark, dir), K, K, ShingleN)
-      .orderBy("doc_a", "doc_b")
-  }
+  val q37 = lshPairs("q37_lsh_and_pairs", K)
 
   /** Cluster-level dedup: LSH near-dup pairs → connected components →
     * one survivor per cluster. The oracle computes the transitive closure
@@ -195,23 +187,8 @@ object DedupQueries {
     * verifies the iteration's correctness, not just one round. */
   val q38 = QueryDef(
     "q38_dedup_clusters",
-    s"""WITH RECURSIVE $shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  SELECT doc_id, h_idx // $R AS band,
-       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
-       |  FROM sigs GROUP BY doc_id, h_idx // $R),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |inter AS (
-       |  SELECT c.doc_a, c.doc_b, COUNT(*) AS i
-       |  FROM cand c
-       |  JOIN sh a ON a.doc_id = c.doc_a
-       |  JOIN sh b ON b.doc_id = c.doc_b AND b.s = a.s
-       |  GROUP BY 1, 2),
-       |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
+    s"""WITH RECURSIVE ${candCte()},
+       |$verifyCte,
        |edges0 AS (
        |  SELECT c.doc_a AS a, c.doc_b AS b
        |  FROM cand c
@@ -310,12 +287,7 @@ object DedupQueries {
     * hash-matches it exactly. */
   val q137 = QueryDef(
     "q137_stream_neardup",
-    s"""WITH $shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  SELECT doc_id, h_idx // $R AS band,
-       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
-       |  FROM sigs GROUP BY doc_id, h_idx // $R)
+    s"""WITH ${bandsCte()}
        |SELECT a.doc_id AS doc_id, b.doc_id AS corpus_id, COUNT(*) AS n_bands
        |FROM bands a JOIN bands b
        |  ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id <> b.doc_id
@@ -336,23 +308,8 @@ object DedupQueries {
     * same oracle algebra as q32 plus the jaccard cut. */
   val q36 = QueryDef(
     "q36_similarity_join_op",
-    s"""WITH $shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  SELECT doc_id, h_idx // $R AS band,
-       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
-       |  FROM sigs GROUP BY doc_id, h_idx // $R),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
-       |inter AS (
-       |  SELECT c.doc_a, c.doc_b, COUNT(*) AS i
-       |  FROM cand c
-       |  JOIN sh a ON a.doc_id = c.doc_a
-       |  JOIN sh b ON b.doc_id = c.doc_b AND b.s = a.s
-       |  GROUP BY 1, 2),
-       |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)
+    s"""WITH ${candCte()},
+       |$verifyCte
        |SELECT id_a, id_b, jaccard FROM (
        |  SELECT c.doc_a AS id_a, c.doc_b AS id_b,
        |    (round((COALESCE(i.i, 0)::DOUBLE /
@@ -400,12 +357,7 @@ object DedupQueries {
     * Jaccard through the candidates, threshold on the rounded value. */
   val q115 = QueryDef(
     "q115_decontaminate_fuzzy",
-    s"""WITH $shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  SELECT doc_id, h_idx // $R AS band,
-       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
-       |  FROM sigs GROUP BY doc_id, h_idx // $R),
+    s"""WITH ${bandsCte()},
        |cand AS (
        |  SELECT DISTINCT a.doc_id AS doc_id, b.doc_id AS bench_id
        |  FROM bands a JOIN bands b
@@ -445,12 +397,7 @@ object DedupQueries {
     * decision — not just the candidate pairs — is hash-verified. */
   val q150 = QueryDef(
     "q150_ingest_verdicts",
-    s"""WITH $shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  SELECT doc_id, h_idx // $R AS band,
-       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
-       |  FROM sigs GROUP BY doc_id, h_idx // $R),
+    s"""WITH ${bandsCte()},
        |cb AS (SELECT * FROM bands WHERE doc_id % 5 = 0),
        |cd AS (SELECT DISTINCT md5(text) AS dg FROM documents WHERE doc_id % 5 = 0),
        |ex AS (SELECT d.doc_id, (COUNT(c.dg) > 0) AS exact_dup
@@ -624,16 +571,7 @@ object DedupQueries {
     * engine-exact. The oracle rebuilds blocking AND both gram orders. */
   val q166 = QueryDef(
     "q166_rouge_pairs",
-    s"""WITH $shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  SELECT doc_id, h_idx // $R AS band,
-       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
-       |  FROM sigs GROUP BY doc_id, h_idx // $R),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+    s"""WITH ${candCte()},
        |c1 AS (SELECT doc_id, g, COUNT(*) AS c
        |       FROM (SELECT doc_id, unnest(${TextSql.shingles("tk", 1)}) AS g FROM tok)
        |       GROUP BY doc_id, g),
@@ -806,24 +744,8 @@ object DedupQueries {
     * batch semantics exactly, pair for pair and Jaccard for Jaccard. */
   val q203 = QueryDef(
     "q203_incremental_neardup",
-    s"""WITH $shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  SELECT doc_id, h_idx // $R AS band,
-       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
-       |  FROM sigs GROUP BY doc_id, h_idx // $R),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
-       |  WHERE a.doc_id % 5 = 0 OR b.doc_id % 5 = 0),
-       |inter AS (
-       |  SELECT c.doc_a, c.doc_b, COUNT(*) AS i
-       |  FROM cand c
-       |  JOIN sh a ON a.doc_id = c.doc_a
-       |  JOIN sh b ON b.doc_id = c.doc_b AND b.s = a.s
-       |  GROUP BY 1, 2),
-       |sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id)
+    s"""WITH ${candCte(where = "a.doc_id % 5 = 0 OR b.doc_id % 5 = 0")},
+       |$verifyCte
        |SELECT c.doc_a AS doc_a, c.doc_b AS doc_b,
        |  ${Cross.r6Sql("COALESCE(i.i, 0)::DOUBLE / (sa.n + sb.n - COALESCE(i.i, 0))::DOUBLE")} AS jaccard
        |FROM cand c
@@ -958,16 +880,7 @@ object DedupQueries {
     * mass is the argument for cross-source (not per-source) dedup. */
   val q238 = QueryDef(
     "q238_neardup_source_matrix",
-    s"""WITH $shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  SELECT doc_id, h_idx // $R AS band,
-       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
-       |  FROM sigs GROUP BY doc_id, h_idx // $R),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id)
+    s"""WITH ${candCte()}
        |SELECT LEAST(sa.source, sb.source) AS src_a,
        |       GREATEST(sa.source, sb.source) AS src_b,
        |       COUNT(*) AS n_pairs
@@ -1026,14 +939,11 @@ object DedupQueries {
       .orderBy("id_a", "id_b")
   }
 
-  /** Per-node triangle counts (Graph.triangleCounts) over arithmetic
-    * fixture edges (chain + skip links inside 5-blocks → known
-    * triangles): the cluster-cohesion diagnostic, degree-ordered so the
-    * wedge join is arboricity-bounded. The oracle brute-forces the
-    * u<v<w triangle join and per-corner credits. */
-  val q242 = QueryDef(
-    "q242_triangles",
-    """WITH ids AS (SELECT doc_id AS id FROM documents),
+  /** Chain plus skip-2 fixture edges inside 5-blocks (known triangles),
+    * brute-forced in SQL: `und(a, b)`, `tri(u, v, w)` for u < v < w,
+    * per-node `tc(id, triangles)` and `deg(id, degree)`. */
+  private val triangleCte =
+    """ids AS (SELECT doc_id AS id FROM documents),
       |e1 AS (SELECT id AS a, id + 1 AS b FROM ids
       |       WHERE id % 5 < 4 AND id + 1 IN (SELECT id FROM ids)),
       |e2 AS (SELECT id AS a, id + 2 AS b FROM ids
@@ -1047,17 +957,27 @@ object DedupQueries {
       |  SELECT u AS id FROM tri UNION ALL SELECT v FROM tri UNION ALL SELECT w FROM tri),
       |tc AS (SELECT id, COUNT(*) AS triangles FROM corners GROUP BY id),
       |sym AS (SELECT a, b FROM und UNION ALL SELECT b, a FROM und),
-      |deg AS (SELECT a AS id, COUNT(*) AS degree FROM sym GROUP BY a)
-      |SELECT deg.id, deg.degree, COALESCE(tc.triangles, 0) AS triangles
-      |FROM deg LEFT JOIN tc ON deg.id = tc.id
-      |ORDER BY deg.id""".stripMargin) { (spark, dir) =>
+      |deg AS (SELECT a AS id, COUNT(*) AS degree FROM sym GROUP BY a)""".stripMargin
+
+  private def triangleEdges(spark: org.apache.spark.sql.SparkSession, dir: String) = {
     val ids = graft.core.Tables.documents(spark, dir)
       .select(col("doc_id").as("id"))
     def arm(step: Int, mod: Int) = ids.filter(col("id") % 5 < mod)
       .select(col("id").as("a"), (col("id") + step).as("b"))
       .join(ids.select(col("id").as("b")), Seq("b"), "left_semi")
-    graft.operators.Graph.triangleCounts(
-        arm(1, 4).unionByName(arm(2, 3)))
+    arm(1, 4).unionByName(arm(2, 3))
+  }
+
+  /** Per-node triangle counts (Graph.triangleCounts) over the
+    * [[triangleCte]] fixture graph: the cluster-cohesion diagnostic,
+    * degree-ordered so the wedge join is arboricity-bounded. */
+  val q242 = QueryDef(
+    "q242_triangles",
+    s"""WITH $triangleCte
+      |SELECT deg.id, deg.degree, COALESCE(tc.triangles, 0) AS triangles
+      |FROM deg LEFT JOIN tc ON deg.id = tc.id
+      |ORDER BY deg.id""".stripMargin) { (spark, dir) =>
+    graft.operators.Graph.triangleCounts(triangleEdges(spark, dir))
       .orderBy("id")
   }
 
@@ -1068,12 +988,7 @@ object DedupQueries {
     * same rounded fold. */
   val q243 = QueryDef(
     "q243_modularity",
-    s"""WITH ids AS (SELECT doc_id AS id FROM documents),
-       |e1 AS (SELECT id AS a, id + 1 AS b FROM ids
-       |       WHERE id % 5 <> 4 AND id + 1 IN (SELECT id FROM ids)),
-       |e2 AS (SELECT id AS a, id + 5 AS b FROM ids
-       |       WHERE id % 25 = 0 AND id + 5 IN (SELECT id FROM ids)),
-       |und AS (SELECT a, b FROM e1 UNION SELECT a, b FROM e2),
+    s"""WITH $fixtureEdgesCte,
        |t AS (SELECT a, b, a // 5 AS ca, b // 5 AS cb FROM und),
        |m AS (SELECT COUNT(*) AS m FROM t),
        |ein AS (SELECT ca AS cluster, COUNT(*) AS e_in FROM t WHERE ca = cb GROUP BY ca),
@@ -1176,16 +1091,7 @@ object DedupQueries {
     * and ranks by (df, shingle) flat. */
   val q246 = QueryDef(
     "q246_neardup_evidence",
-    s"""WITH $shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  SELECT doc_id, h_idx // $R AS band,
-       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
-       |  FROM sigs GROUP BY doc_id, h_idx // $R),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+    s"""WITH ${candCte()},
        |dfs AS (SELECT s, COUNT(*) AS df FROM sh GROUP BY s),
        |shared AS (
        |  SELECT c.doc_a, c.doc_b, sa.s AS sh, dfs.df
@@ -1212,16 +1118,7 @@ object DedupQueries {
     * masses, and the guarded division. */
   val q248 = QueryDef(
     "q248_weighted_jaccard",
-    s"""WITH $shingleCte,
-       |$sigCte,
-       |bands AS (
-       |  SELECT doc_id, h_idx // $R AS band,
-       |         string_agg(sig::VARCHAR, ',' ORDER BY h_idx) AS bkey
-       |  FROM sigs GROUP BY doc_id, h_idx // $R),
-       |cand AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
+    s"""WITH ${candCte()},
        |nn AS (SELECT COUNT(*) AS n FROM documents),
        |dfs AS (
        |  SELECT s, ${Cross.r6Sql("log2(n::DOUBLE / COUNT(*)::DOUBLE)")} AS idf
@@ -1265,21 +1162,7 @@ object DedupQueries {
     * degree 2 — the per-node clique-likeness view of q242. */
   val q251 = QueryDef(
     "q251_clustering_coeff",
-    """WITH ids AS (SELECT doc_id AS id FROM documents),
-      |e1 AS (SELECT id AS a, id + 1 AS b FROM ids
-      |       WHERE id % 5 < 4 AND id + 1 IN (SELECT id FROM ids)),
-      |e2 AS (SELECT id AS a, id + 2 AS b FROM ids
-      |       WHERE id % 5 < 3 AND id + 2 IN (SELECT id FROM ids)),
-      |und AS (SELECT a, b FROM e1 UNION SELECT a, b FROM e2),
-      |tri AS (
-      |  SELECT x.a AS u, x.b AS v, y.b AS w
-      |  FROM und x JOIN und y ON x.a = y.a AND x.b < y.b
-      |  JOIN und z ON z.a = x.b AND z.b = y.b),
-      |corners AS (
-      |  SELECT u AS id FROM tri UNION ALL SELECT v FROM tri UNION ALL SELECT w FROM tri),
-      |tc AS (SELECT id, COUNT(*) AS triangles FROM corners GROUP BY id),
-      |sym AS (SELECT a, b FROM und UNION ALL SELECT b, a FROM und),
-      |deg AS (SELECT a AS id, COUNT(*) AS degree FROM sym GROUP BY a)
+    s"""WITH $triangleCte
       |SELECT deg.id, deg.degree, COALESCE(tc.triangles, 0) AS triangles,
       |  CASE WHEN deg.degree >= 2 THEN
       |    (round(((COALESCE(tc.triangles, 0) * 2)::DOUBLE /
@@ -1287,13 +1170,7 @@ object DedupQueries {
       |  END AS coefficient
       |FROM deg LEFT JOIN tc ON deg.id = tc.id
       |ORDER BY deg.id""".stripMargin) { (spark, dir) =>
-    val ids = graft.core.Tables.documents(spark, dir)
-      .select(col("doc_id").as("id"))
-    def arm(step: Int, mod: Int) = ids.filter(col("id") % 5 < mod)
-      .select(col("id").as("a"), (col("id") + step).as("b"))
-      .join(ids.select(col("id").as("b")), Seq("b"), "left_semi")
-    graft.operators.Graph.clusteringCoefficients(
-        arm(1, 4).unionByName(arm(2, 3)))
+    graft.operators.Graph.clusteringCoefficients(triangleEdges(spark, dir))
       .orderBy("id")
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Cross, Tables}
-import graft.functions.{HashFns, VectorFns, VectorSql}
+import graft.functions.{HashFns, TextSql, VectorFns, VectorSql}
 import graft.operators.SimilaritySearch
 
 /** Similarity-search gate queries over `embeddings` (64-dim float
@@ -17,6 +17,83 @@ object EmbeddingQueries {
   private val Planes = 8
   private val Cells = 4
 
+  /** Per-query top-`k` of `scored(query_id, neighbor_id, cos)` by cosine
+    * (ties to the lower id), cosine rounded to 6 dp. */
+  private def cosTopKSql(k: Int): String =
+    s"""ranked AS (
+       |  SELECT query_id, neighbor_id, cos,
+       |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
+       |  FROM scored)
+       |SELECT query_id, rank, neighbor_id, (round((cos) + 1e-9, 6) + 0.0) AS cos
+       |FROM ranked WHERE rank <= $k
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** Per-query top-3 of `from(query_id, neighbor_id, <dist>)` by ascending
+    * `dist` (ties to the lower id). */
+  private def ascTopKSql(dist: String, from: String): String =
+    s"""ranked AS (
+       |  SELECT query_id, neighbor_id, $dist,
+       |         row_number() OVER (PARTITION BY query_id ORDER BY $dist, neighbor_id) AS rank
+       |  FROM $from)
+       |SELECT query_id, rank, neighbor_id, $dist
+       |FROM ranked WHERE rank <= 3
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** Each vector L2-normalized once with its label: `normed(vec_id,
+    * label, ne)`, `ne` NULL for a zero vector. */
+  private def labelledNormedCte: String =
+    s"""nrm AS (
+       |  SELECT vec_id, label, embedding,
+       |         ${VectorSql.norm2("embedding")} AS nrm
+       |  FROM embeddings),
+       |normed AS (
+       |  SELECT vec_id, label,
+       |    CASE WHEN nrm = 0 THEN NULL
+       |    ELSE list_transform(range(1, len(embedding) + 1), i -> embedding[i]::DOUBLE / nrm)
+       |    END AS ne
+       |  FROM nrm)""".stripMargin
+
+  /** Each nonzero vector L2-normalized once: `normed(vec_id, ne)`. */
+  private def normedCte: String =
+    s"""nrm AS (
+       |  SELECT vec_id, embedding, ${VectorSql.norm2("embedding")} AS nrm
+       |  FROM embeddings),
+       |normed AS (
+       |  SELECT vec_id,
+       |    list_transform(range(1, len(embedding) + 1),
+       |      i -> embedding[i]::DOUBLE / nrm) AS ne
+       |  FROM nrm WHERE nrm > 0)""".stripMargin
+
+  /** One `UNION ALL` arm per seed centroid: `cols` of every `source` row
+    * with its cell and squared distance `d` to that centroid. */
+  private def ivfArmsSql(cols: String, source: String): String =
+    (0 until Cells).map { c =>
+      val w = HashFns.litVector(s"centroid-$c", Dims)
+      s"SELECT $cols, $c AS cell, ${VectorSql.sqDistLit("embedding", w)} AS d FROM $source"
+    }.mkString("\nUNION ALL\n")
+
+  /** Each `source` vector's nearest seed centroid (ties to the lower cell)
+    * and its rounded distance. */
+  private def ivfAssignSql(source: String): String =
+    s"""dists AS (
+       |${ivfArmsSql("vec_id, label", source)}),
+       |ranked AS (
+       |  SELECT vec_id, label, cell, d,
+       |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+       |  FROM dists)
+       |SELECT vec_id, label, cell, (round((d) + 1e-9, 6) + 0.0) AS dist
+       |FROM ranked WHERE rn = 1
+       |ORDER BY vec_id""".stripMargin
+
+  /** The probe of `q(query_id, qe, cell)` into the `corpus` rows of its
+    * cell: cosine top-3 per query. */
+  private def ivfProbeSql(corpus: String): String =
+    s"""scored AS (
+       |  SELECT query_id, a.vec_id AS neighbor_id,
+       |         ${VectorSql.cosine("qe", "a.embedding")} AS cos
+       |  FROM q JOIN $corpus a USING (cell) WHERE query_id <> a.vec_id),
+       |${cosTopKSql(3)}""".stripMargin
+
   /** Exact cosine top-5 for a small broadcast query set. */
   val q40 = QueryDef(
     "q40_knn_brute",
@@ -25,13 +102,7 @@ object EmbeddingQueries {
        |  SELECT query_id, vec_id AS neighbor_id,
        |         ${VectorSql.cosine("qe", "embedding")} AS cos
        |  FROM q CROSS JOIN embeddings WHERE query_id <> vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cos,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, rank, neighbor_id, (round((cos) + 1e-9, 6) + 0.0) AS cos
-       |FROM ranked WHERE rank <= 5
-       |ORDER BY query_id, rank""".stripMargin) { (spark, dir) =>
+       |${cosTopKSql(5)}""".stripMargin) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
     SimilaritySearch.bruteForceTopK(emb.filter(col("vec_id") < 8), emb, 5)
       .orderBy("query_id", "rank")
@@ -43,16 +114,7 @@ object EmbeddingQueries {
     * hot loop at scale. */
   val q41 = QueryDef(
     "q41_embed_neardup",
-    s"""WITH nrm AS (
-       |  SELECT vec_id, label, embedding,
-       |         ${VectorSql.norm2("embedding")} AS nrm
-       |  FROM embeddings),
-       |normed AS (
-       |  SELECT vec_id, label,
-       |    CASE WHEN nrm = 0 THEN NULL
-       |    ELSE list_transform(range(1, len(embedding) + 1), i -> embedding[i]::DOUBLE / nrm)
-       |    END AS ne
-       |  FROM nrm)
+    s"""WITH $labelledNormedCte
        |SELECT vec_a, vec_b, (round((cos) + 1e-9, 6) + 0.0) AS cos FROM (
        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
        |    list_sum(list_transform(range(1, len(a.ne) + 1), i -> a.ne[i] * b.ne[i])) AS cos
@@ -85,16 +147,7 @@ object EmbeddingQueries {
     * fixpoint verified against a recursive CTE (the q38 pattern). */
   val q122 = QueryDef(
     "q122_embed_dedup_clusters",
-    s"""WITH RECURSIVE nrm AS (
-       |  SELECT vec_id, label, embedding,
-       |         ${VectorSql.norm2("embedding")} AS nrm
-       |  FROM embeddings),
-       |normed AS (
-       |  SELECT vec_id, label,
-       |    CASE WHEN nrm = 0 THEN NULL
-       |    ELSE list_transform(range(1, len(embedding) + 1), i -> embedding[i]::DOUBLE / nrm)
-       |    END AS ne
-       |  FROM nrm),
+    s"""WITH RECURSIVE $labelledNormedCte,
        |edges0 AS (
        |  SELECT a.vec_id AS a, b.vec_id AS b
        |  FROM normed a JOIN normed b
@@ -130,13 +183,7 @@ object EmbeddingQueries {
        |  SELECT query_id, h.vec_id AS neighbor_id,
        |         ${VectorSql.cosine("qe", "h.embedding")} AS cos
        |  FROM q JOIN hashed h USING (bucket) WHERE query_id <> h.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cos,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, rank, neighbor_id, (round((cos) + 1e-9, 6) + 0.0) AS cos
-       |FROM ranked WHERE rank <= 3
-       |ORDER BY query_id, rank""".stripMargin) { (spark, dir) =>
+       |${cosTopKSql(3)}""".stripMargin) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
     SimilaritySearch.lshTopK(emb.filter(col("vec_id") < 32), emb, 3, Planes, Dims)
       .orderBy("query_id", "rank")
@@ -164,21 +211,7 @@ object EmbeddingQueries {
 
   /** IVF coarse quantization against fixed seed centroids. */
   val q44 = QueryDef(
-    "q44_ivf_assign", {
-      val arms = (0 until Cells).map { c =>
-        val w = HashFns.litVector(s"centroid-$c", Dims)
-        s"SELECT vec_id, label, $c AS cell, ${VectorSql.sqDistLit("embedding", w)} AS d FROM embeddings"
-      }.mkString("\nUNION ALL\n")
-      s"""WITH dists AS (
-         |$arms),
-         |ranked AS (
-         |  SELECT vec_id, label, cell, d,
-         |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-         |  FROM dists)
-         |SELECT vec_id, label, cell, (round((d) + 1e-9, 6) + 0.0) AS dist
-         |FROM ranked WHERE rn = 1
-         |ORDER BY vec_id""".stripMargin
-    }) { (spark, dir) =>
+    "q44_ivf_assign", s"""WITH ${ivfAssignSql("embeddings")}""") { (spark, dir) =>
     SimilaritySearch.ivfAssign(Tables.embeddings(spark, dir), Cells, Dims)
       .orderBy("vec_id")
   }
@@ -193,28 +226,7 @@ object EmbeddingQueries {
     * maintenance law maintain(assign(S), Δ) ≡ assign(apply(S, Δ)) —
     * the index never re-quantizes the corpus for a delta. */
   val q268 = QueryDef(
-    "q268_incremental_ivf", {
-      val arms = (0 until Cells).map { c =>
-        val w = HashFns.litVector(s"centroid-$c", Dims)
-        s"SELECT vec_id, label, $c AS cell, ${VectorSql.sqDistLit("embedding", w)} AS d FROM snap"
-      }.mkString("\nUNION ALL\n")
-      s"""WITH upd AS (
-         |  SELECT vec_id, label, list_reverse(embedding) AS embedding
-         |  FROM embeddings WHERE vec_id % 7 = 0),
-         |kept AS (
-         |  SELECT vec_id, label, embedding FROM embeddings
-         |  WHERE vec_id % 7 <> 0 AND vec_id % 13 <> 0),
-         |snap AS (SELECT * FROM kept UNION ALL SELECT * FROM upd),
-         |dists AS (
-         |$arms),
-         |ranked AS (
-         |  SELECT vec_id, label, cell, d,
-         |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-         |  FROM dists)
-         |SELECT vec_id, label, cell, (round((d) + 1e-9, 6) + 0.0) AS dist
-         |FROM ranked WHERE rn = 1
-         |ORDER BY vec_id""".stripMargin
-    }) { (spark, dir) =>
+    "q268_incremental_ivf", s"""WITH $servedSnapCtes${ivfAssignSql("snap")}""") { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
     val baseAssign = SimilaritySearch.ivfAssign(emb, Cells, Dims)
     val upserts = emb.filter(col("vec_id") % 7 === 0)
@@ -259,17 +271,13 @@ object EmbeddingQueries {
     graft.core.TempPaths.clearDir(path)
     val reduce = (df: org.apache.spark.sql.DataFrame) =>
       graft.operators.Cdc.compactLatestGc(df, "vec_id", "ver")
-    def tick(rows: org.apache.spark.sql.DataFrame, ver: Long,
-        deleted: Boolean): org.apache.spark.sql.DataFrame =
-      SimilaritySearch.ivfAssignWithVec(rows, Cells, Dims)
-        .withColumn("deleted", lit(deleted)).withColumn("ver", lit(ver))
     val delPred = col("vec_id") % 7 =!= 0 && col("vec_id") % 13 === 0
-    val b0 = tick(emb, 0L, deleted = false)
-    val b1 = tick(emb.filter(col("vec_id") % 7 === 0)
+    val b0 = servedTick(emb, 0L, deleted = false)
+    val b1 = servedTick(emb.filter(col("vec_id") % 7 === 0)
       .select(col("vec_id"), col("label"),
         reverse(col("embedding")).as("embedding")), 1L, deleted = false)
-    val b2 = tick(emb.filter(delPred), 2L, deleted = true)
-    val b3 = tick(emb.filter(delPred), 3L, deleted = false) // re-creation
+    val b2 = servedTick(emb.filter(delPred), 2L, deleted = true)
+    val b3 = servedTick(emb.filter(delPred), 3L, deleted = false) // re-creation
     EventStreams.foldLog(path, b0, 0L, compactEvery = 2)(reduce)
     EventStreams.foldLog(path, b1, 1L, compactEvery = 2)(reduce) // compacts
     EventStreams.foldLog(path, b2, 2L, compactEvery = 2)(reduce)
@@ -302,14 +310,10 @@ object EmbeddingQueries {
   /** The same oracle with the CORPUS side filtered by `corpusPred`
     * (queries stay unfiltered) — the q327 metadata-filtered probe. */
   private def ivfNprobe1OracleWhere(corpusPred: String): String = {
-    val arms = (0 until Cells).map { c =>
-      val w = HashFns.litVector(s"centroid-$c", Dims)
-      s"SELECT vec_id, embedding, label, $c AS cell, ${VectorSql.sqDistLit("embedding", w)} AS d FROM embeddings"
-    }.mkString("\nUNION ALL\n")
     val corpus = if (corpusPred.isEmpty) "assigned"
       else s"(SELECT * FROM assigned WHERE $corpusPred)"
     s"""WITH dists AS (
-       |$arms),
+       |${ivfArmsSql("vec_id, embedding, label", "embeddings")}),
        |assigned AS (
        |  SELECT vec_id, embedding, label, cell FROM (
        |    SELECT vec_id, embedding, label, cell,
@@ -317,17 +321,7 @@ object EmbeddingQueries {
        |    FROM dists) t WHERE rn = 1),
        |q AS (SELECT vec_id AS query_id, embedding AS qe, cell
        |      FROM assigned WHERE vec_id < 32),
-       |scored AS (
-       |  SELECT query_id, a.vec_id AS neighbor_id,
-       |         ${VectorSql.cosine("qe", "a.embedding")} AS cos
-       |  FROM q JOIN $corpus a USING (cell) WHERE query_id <> a.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cos,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, rank, neighbor_id, (round((cos) + 1e-9, 6) + 0.0) AS cos
-       |FROM ranked WHERE rank <= 3
-       |ORDER BY query_id, rank""".stripMargin
+       |${ivfProbeSql(corpus)}""".stripMargin
   }
 
   /** IVF search (nProbe=1): top-3 by exact cosine within the query's own
@@ -379,14 +373,10 @@ object EmbeddingQueries {
     * q332 filtered multiprobe. */
   private def ivfMultiprobeOracleWhere(corpusPred: String,
       source: String = "embeddings", prefixCtes: String = ""): String = {
-    val arms = (0 until Cells).map { c =>
-      val w = HashFns.litVector(s"centroid-$c", Dims)
-      s"SELECT vec_id, embedding, label, $c AS cell, ${VectorSql.sqDistLit("embedding", w)} AS d FROM $source"
-    }.mkString("\nUNION ALL\n")
     val corpus = if (corpusPred.isEmpty) "assigned"
       else s"(SELECT * FROM assigned WHERE $corpusPred)"
     s"""WITH $prefixCtes dists AS (
-       |$arms),
+       |${ivfArmsSql("vec_id, embedding, label", source)}),
        |cells AS (
        |  SELECT vec_id, embedding, label, cell,
        |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
@@ -394,17 +384,7 @@ object EmbeddingQueries {
        |assigned AS (SELECT vec_id, embedding, label, cell FROM cells WHERE rn = 1),
        |q AS (SELECT vec_id AS query_id, embedding AS qe, cell
        |      FROM cells WHERE rn <= 2 AND vec_id < 32),
-       |scored AS (
-       |  SELECT query_id, a.vec_id AS neighbor_id,
-       |         ${VectorSql.cosine("qe", "a.embedding")} AS cos
-       |  FROM q JOIN $corpus a USING (cell) WHERE query_id <> a.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cos,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, rank, neighbor_id, (round((cos) + 1e-9, 6) + 0.0) AS cos
-       |FROM ranked WHERE rank <= 3
-       |ORDER BY query_id, rank""".stripMargin
+       |${ivfProbeSql(corpus)}""".stripMargin
   }
 
   val q46 = QueryDef(
@@ -432,10 +412,10 @@ object EmbeddingQueries {
       .orderBy("query_id", "rank")
   }
 
-  /** The q334/q338 applied-snapshot CTEs: every 7th vector re-embedded
-    * reversed, every 13th other tombstoned — the logical content of the
-    * served table after the build + CDC ticks. */
-  private val servedSnapCtes: String =
+  /** The applied-snapshot CTEs of q268 and the served-index gates: every
+    * 7th vector re-embedded reversed, every 13th other tombstoned — the
+    * logical content of the served table after the build + CDC ticks. */
+  private def servedSnapCtes: String =
     """upd AS (
       |  SELECT vec_id, label, list_reverse(embedding) AS embedding
       |  FROM embeddings WHERE vec_id % 7 = 0),
@@ -444,6 +424,48 @@ object EmbeddingQueries {
       |  WHERE vec_id % 7 <> 0 AND vec_id % 13 <> 0),
       |snap AS (SELECT * FROM kept UNION ALL SELECT * FROM upd),
       |""".stripMargin
+
+  /** One batch of a served IVF table: `rows` with their seed cell,
+    * stamped with version `ver` and tombstone flag `deleted`. */
+  private def servedTick(rows: org.apache.spark.sql.DataFrame, ver: Long,
+      deleted: Boolean): org.apache.spark.sql.DataFrame =
+    SimilaritySearch.ivfAssignWithVec(rows, Cells, Dims)
+      .withColumn("deleted", lit(deleted)).withColumn("ver", lit(ver))
+
+  private def servedReduce(df: org.apache.spark.sql.DataFrame) =
+    graft.operators.Cdc.compactLatest(df, "vec_id", "ver")
+
+  /** The served table behind [[servedSnapCtes]], folded latest-wins at
+    * compactEvery = 2 into a fresh `<gate>_serving` path: the full build
+    * (ver 0), the re-embeddings (ver 1) and the tombstones (ver 2); the
+    * second fold compacts. Returns the path and the three batches. */
+  private def buildServed(spark: org.apache.spark.sql.SparkSession, dir: String,
+      gate: String): (String, Seq[org.apache.spark.sql.DataFrame]) = {
+    val emb = Tables.embeddings(spark, dir)
+    val path = graft.core.TempPaths.gatePath(s"${gate}_serving")
+    graft.core.TempPaths.clearDir(path)
+    val batches = Seq(
+      servedTick(emb, 0L, deleted = false),
+      servedTick(emb.filter(col("vec_id") % 7 === 0)
+        .select(col("vec_id"), col("label"),
+          reverse(col("embedding")).as("embedding")), 1L, deleted = false),
+      servedTick(emb.filter(col("vec_id") % 7 =!= 0 &&
+        col("vec_id") % 13 === 0), 2L, deleted = true))
+    batches.zipWithIndex.foreach { case (b, v) =>
+      graft.streaming.EventStreams.foldLog(path, b, v.toLong, compactEvery = 2)(servedReduce)
+    }
+    (path, batches)
+  }
+
+  /** nProbe = 2 top-3 over a served table's live rows: queries
+    * vec_id < 32, corpus label = 1. */
+  private def probeServed(served: org.apache.spark.sql.DataFrame) =
+    SimilaritySearch.ivfTopKServed(
+        served.filter(!col("deleted") && col("vec_id") < 32)
+          .select("vec_id", "embedding"),
+        served.filter(!col("deleted") && col("label") === 1),
+        3, Cells, Dims, nProbe = 2)
+      .orderBy("query_id", "rank")
 
   /** The SERVED ANN index end-to-end — the maintenance path a 100 TB
     * deployment actually runs, composed from pieces already gated
@@ -470,38 +492,15 @@ object EmbeddingQueries {
     "q334_served_ivf_index", ivfMultiprobeOracleWhere(
       "label = 1", source = "snap", prefixCtes = servedSnapCtes)) { (spark, dir) =>
     import graft.streaming.EventStreams
-    val emb = Tables.embeddings(spark, dir)
-    val path = graft.core.TempPaths.gatePath("q334_serving")
-    graft.core.TempPaths.clearDir(path)
-    val reduce = (df: org.apache.spark.sql.DataFrame) =>
-      graft.operators.Cdc.compactLatest(df, "vec_id", "ver")
-    def tick(rows: org.apache.spark.sql.DataFrame, ver: Long,
-        deleted: Boolean): org.apache.spark.sql.DataFrame =
-      SimilaritySearch.ivfAssignWithVec(rows, Cells, Dims)
-        .withColumn("deleted", lit(deleted)).withColumn("ver", lit(ver))
-    val b0 = tick(emb, 0L, deleted = false) // full build
-    val b1 = tick(emb.filter(col("vec_id") % 7 === 0) // re-embeddings
-      .select(col("vec_id"), col("label"),
-        reverse(col("embedding")).as("embedding")), 1L, deleted = false)
-    val b2 = tick(emb.filter(col("vec_id") % 7 =!= 0 && // tombstones
-      col("vec_id") % 13 === 0), 2L, deleted = true)
-    EventStreams.foldLog(path, b0, 0L, compactEvery = 2)(reduce)
-    EventStreams.foldLog(path, b1, 1L, compactEvery = 2)(reduce) // compacts
-    EventStreams.foldLog(path, b2, 2L, compactEvery = 2)(reduce)
+    val (path, Seq(b0, _, b2)) = buildServed(spark, dir, "q334")
     // at-least-once: redeliver the LIVE tick (manifest already-live
     // no-op), compact to the read-optimized state, then redeliver the
     // CONSUMED full build (consumed-range no-op — re-adding would
     // resurrect deleted vectors and stale assignments)
-    EventStreams.foldLog(path, b2, 2L, compactEvery = 2)(reduce)
-    EventStreams.compactLog(spark, path)(reduce)
-    EventStreams.foldLog(path, b0, 0L, compactEvery = 2)(reduce)
-    val served = EventStreams.readCompactedBase(spark, path)
-    SimilaritySearch.ivfTopKServed(
-        served.filter(!col("deleted") && col("vec_id") < 32)
-          .select("vec_id", "embedding"),
-        served.filter(!col("deleted") && col("label") === 1),
-        3, Cells, Dims, nProbe = 2)
-      .orderBy("query_id", "rank")
+    EventStreams.foldLog(path, b2, 2L, compactEvery = 2)(servedReduce)
+    EventStreams.compactLog(spark, path)(servedReduce)
+    EventStreams.foldLog(path, b0, 0L, compactEvery = 2)(servedReduce)
+    probeServed(EventStreams.readCompactedBase(spark, path))
   }
 
   /** PINNED-GENERATION read under a RACING compactor — the last gap
@@ -531,33 +530,9 @@ object EmbeddingQueries {
           prefixCtes = servedSnapCtes)}
        |) t""".stripMargin) { (spark, dir) =>
     import graft.streaming.EventStreams
-    val emb = Tables.embeddings(spark, dir)
-    val path = graft.core.TempPaths.gatePath("q338_serving")
-    graft.core.TempPaths.clearDir(path)
-    val reduce = (df: org.apache.spark.sql.DataFrame) =>
-      graft.operators.Cdc.compactLatest(df, "vec_id", "ver")
-    def tick(rows: org.apache.spark.sql.DataFrame, ver: Long,
-        deleted: Boolean): org.apache.spark.sql.DataFrame =
-      SimilaritySearch.ivfAssignWithVec(rows, Cells, Dims)
-        .withColumn("deleted", lit(deleted)).withColumn("ver", lit(ver))
-    val b0 = tick(emb, 0L, deleted = false)
-    val b1 = tick(emb.filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id"), col("label"),
-        reverse(col("embedding")).as("embedding")), 1L, deleted = false)
-    val b2 = tick(emb.filter(col("vec_id") % 7 =!= 0 &&
-      col("vec_id") % 13 === 0), 2L, deleted = true)
-    EventStreams.foldLog(path, b0, 0L, compactEvery = 2)(reduce)
-    EventStreams.foldLog(path, b1, 1L, compactEvery = 2)(reduce)
-    EventStreams.foldLog(path, b2, 2L, compactEvery = 2)(reduce)
-    EventStreams.compactLog(spark, path)(reduce)
-    def probe(served: org.apache.spark.sql.DataFrame) =
-      SimilaritySearch.ivfTopKServed(
-          served.filter(!col("deleted") && col("vec_id") < 32)
-            .select("vec_id", "embedding"),
-          served.filter(!col("deleted") && col("label") === 1),
-          3, Cells, Dims, nProbe = 2)
-        .orderBy("query_id", "rank")
-    val expected = probe(EventStreams.readCompactedBase(spark, path))
+    val (path, Seq(b0, _, b2)) = buildServed(spark, dir, "q338")
+    EventStreams.compactLog(spark, path)(servedReduce)
+    val expected = probeServed(EventStreams.readCompactedBase(spark, path))
       .collect().toSeq
     // the racing maintainer: content-stable base rotations (files churn,
     // the logical table never changes) plus consumed-batch redeliveries
@@ -566,24 +541,24 @@ object EmbeddingQueries {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val rotator = new Thread(() => {
       try while (!stop.get()) {
-        EventStreams.compactLog(spark, path)(reduce)
-        EventStreams.foldLog(path, b0, 0L, compactEvery = 2)(reduce)
-        EventStreams.foldLog(path, b2, 2L, compactEvery = 2)(reduce)
+        EventStreams.compactLog(spark, path)(servedReduce)
+        EventStreams.foldLog(path, b0, 0L, compactEvery = 2)(servedReduce)
+        EventStreams.foldLog(path, b2, 2L, compactEvery = 2)(servedReduce)
       } catch { case t: Throwable => errs.add(t) }
     }, "q338-rotator")
     rotator.start()
     val nProbes = 6
     var matched = 0
     try (1 to nProbes).foreach { _ =>
-      val got = EventStreams.withPinnedRead(spark, path)(reduce)(
-        served => probe(served).collect().toSeq)
+      val got = EventStreams.withPinnedRead(spark, path)(servedReduce)(
+        served => probeServed(served).collect().toSeq)
       if (got == expected) matched += 1
     } finally { stop.set(true); rotator.join() }
     val raceOk = matched == nProbes && errs.isEmpty
     // the rotator has joined: the table is quiesced and fully compacted,
     // so the returned frame is the plan-visible probe over the bare base
     // relation (PLANS.md shows the pushed predicates, same as q334)
-    probe(EventStreams.readCompactedBase(spark, path))
+    probeServed(EventStreams.readCompactedBase(spark, path))
       .withColumn("race_ok", lit(if (raceOk) 1L else 0L))
       .orderBy("query_id", "rank")
   }
@@ -593,10 +568,6 @@ object EmbeddingQueries {
     * plus the candidate rows each depth scans — the full recall curve
     * re-derived relationally. */
   private def recallCurveOracle: String = {
-    val arms = (0 until Cells).map { c =>
-      val w = HashFns.litVector(s"centroid-$c", Dims)
-      s"SELECT vec_id, embedding, label, $c AS cell, ${VectorSql.sqDistLit("embedding", w)} AS d FROM snap"
-    }.mkString("\nUNION ALL\n")
     val sweep = (1 to Cells).map { p =>
       s"""SELECT $p AS n_probe, 3 AS k,
          |  (SELECT COUNT(*) FROM (
@@ -612,7 +583,7 @@ object EmbeddingQueries {
          |     JOIN corpus a USING (cell) WHERE qc.query_id <> a.vec_id)::BIGINT AS cand_rows""".stripMargin
     }.mkString("\nUNION ALL\n")
     s"""WITH ${servedSnapCtes}dists AS (
-       |$arms),
+       |${ivfArmsSql("vec_id, embedding, label", "snap")}),
        |cells AS (
        |  SELECT vec_id, embedding, label, cell,
        |         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
@@ -646,25 +617,8 @@ object EmbeddingQueries {
   val q341 = QueryDef(
     "q341_served_ivf_recall_curve", recallCurveOracle) { (spark, dir) =>
     import graft.streaming.EventStreams
-    val emb = Tables.embeddings(spark, dir)
-    val path = graft.core.TempPaths.gatePath("q341_serving")
-    graft.core.TempPaths.clearDir(path)
-    val reduce = (df: org.apache.spark.sql.DataFrame) =>
-      graft.operators.Cdc.compactLatest(df, "vec_id", "ver")
-    def tick(rows: org.apache.spark.sql.DataFrame, ver: Long,
-        deleted: Boolean): org.apache.spark.sql.DataFrame =
-      SimilaritySearch.ivfAssignWithVec(rows, Cells, Dims)
-        .withColumn("deleted", lit(deleted)).withColumn("ver", lit(ver))
-    EventStreams.foldLog(path, tick(emb, 0L, deleted = false), 0L,
-      compactEvery = 2)(reduce)
-    EventStreams.foldLog(path, tick(emb.filter(col("vec_id") % 7 === 0)
-      .select(col("vec_id"), col("label"),
-        reverse(col("embedding")).as("embedding")), 1L, deleted = false), 1L,
-      compactEvery = 2)(reduce)
-    EventStreams.foldLog(path, tick(emb.filter(col("vec_id") % 7 =!= 0 &&
-      col("vec_id") % 13 === 0), 2L, deleted = true), 2L,
-      compactEvery = 2)(reduce)
-    EventStreams.compactLog(spark, path)(reduce)
+    val (path, _) = buildServed(spark, dir, "q341")
+    EventStreams.compactLog(spark, path)(servedReduce)
     val served = EventStreams.readCompactedBase(spark, path)
       .localCheckpoint(true)
     SimilaritySearch.recallCurveServed(
@@ -713,12 +667,25 @@ object EmbeddingQueries {
        |  SELECT vec_id, dim, embedding[dim]::DOUBLE AS e
        |  FROM embeddings CROSS JOIN (SELECT unnest(range(1, ${Dims + 1})) AS dim) dd)""".stripMargin
 
-  val q49 = QueryDef(
-    "q49_ivf_train",
-    s"""WITH $lloydEmbCte,
+  /** The q49 unroll: long-form `emb`, seed centroids `c0` and two Lloyd
+    * rounds ending at the trained centroids `c2(cell, dim, v)`. */
+  private def lloydTrainedCte: String =
+    s"""$lloydEmbCte,
        |c0(cell, dim, v) AS (VALUES $lloydSeedVals),
        |${lloydRound("c0", 1)},
-       |${lloydRound("c1", 2)}
+       |${lloydRound("c1", 2)}""".stripMargin
+
+  /** [[lloydTrainedCte]] plus every vector's rounded squared distance to
+    * every trained centroid, `d3(vec_id, cell, d)`. */
+  private def lloydDistCte: String =
+    s"""$lloydTrainedCte,
+       |d3 AS (
+       |  SELECT vec_id, cell, ${Cross.r6Sql("SUM((e - v) * (e - v))")} AS d
+       |  FROM emb JOIN c2 USING (dim) GROUP BY vec_id, cell)""".stripMargin
+
+  val q49 = QueryDef(
+    "q49_ivf_train",
+    s"""WITH $lloydTrainedCte
        |SELECT cell, dim, v FROM c2
        |ORDER BY cell, dim""".stripMargin) { (spark, dir) =>
     import spark.implicits._
@@ -739,13 +706,7 @@ object EmbeddingQueries {
     * the quantizer. */
   val q140 = QueryDef(
     "q140_ivf_persist",
-    s"""WITH $lloydEmbCte,
-       |c0(cell, dim, v) AS (VALUES $lloydSeedVals),
-       |${lloydRound("c0", 1)},
-       |${lloydRound("c1", 2)},
-       |d3 AS (
-       |  SELECT vec_id, cell, ${Cross.r6Sql("SUM((e - v) * (e - v))")} AS d
-       |  FROM emb JOIN c2 USING (dim) GROUP BY vec_id, cell),
+    s"""WITH $lloydDistCte,
        |a3 AS (SELECT vec_id, cell FROM (
        |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
        |  FROM d3) t WHERE rn = 1),
@@ -754,17 +715,7 @@ object EmbeddingQueries {
        |  FROM a3 JOIN embeddings e USING (vec_id)),
        |q AS (SELECT vec_id AS query_id, embedding AS qe, cell
        |      FROM assigned WHERE vec_id < 32),
-       |scored AS (
-       |  SELECT query_id, a.vec_id AS neighbor_id,
-       |         ${VectorSql.cosine("qe", "a.embedding")} AS cos
-       |  FROM q JOIN assigned a USING (cell) WHERE query_id <> a.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cos,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, rank, neighbor_id, (round((cos) + 1e-9, 6) + 0.0) AS cos
-       |FROM ranked WHERE rank <= 3
-       |ORDER BY query_id, rank""".stripMargin) { (spark, dir) =>
+       |${ivfProbeSql("assigned")}""".stripMargin) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
     val cents = SimilaritySearch.ivfTrain(emb, Cells, Dims, iters = 2)
     // pid-keyed path + overwrite (TempPaths): stable within a run, safe
@@ -806,13 +757,7 @@ object EmbeddingQueries {
        |  SELECT query_id, b.vec_id AS neighbor_id,
        |         ${VectorSql.cosineI8("qa", "b.c")} AS cos
        |  FROM q CROSS JOIN qc b WHERE query_id <> b.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, cos,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank
-       |  FROM scored)
-       |SELECT query_id, rank, neighbor_id, (round((cos) + 1e-9, 6) + 0.0) AS cos
-       |FROM ranked WHERE rank <= 3
-       |ORDER BY query_id, rank""".stripMargin) { (spark, dir) =>
+       |${cosTopKSql(3)}""".stripMargin) { (spark, dir) =>
     val qc = Tables.embeddings(spark, dir)
       .select(col("vec_id"), VectorFns.quantizeI8(col("embedding")).getField("codes").as("codes"))
     val queries = qc.filter(col("vec_id") < 8)
@@ -843,6 +788,61 @@ object EmbeddingQueries {
       }
     }.mkString("\nUNION ALL\n")
 
+  /** [[pqArmsSql]] as `encd(vec_id, s, c, d)`, each vector's argmin
+    * `codes(vec_id, s, code)`, the query rows' distances `qd` (vec_id < 8)
+    * and every (query, vector) ADC sum `adc(query_id, neighbor_id,
+    * adist)`. */
+  private def pqAdcCte: String =
+    s"""encd AS (
+       |$pqArmsSql),
+       |codes AS (
+       |  SELECT vec_id, s, c AS code FROM (
+       |    SELECT vec_id, s, c, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, c) AS rn
+       |    FROM encd) t WHERE rn = 1),
+       |qd AS (SELECT vec_id AS query_id, s, c, d FROM encd WHERE vec_id < 8),
+       |adc AS (
+       |  SELECT qd.query_id, cd.vec_id AS neighbor_id,
+       |         ${Cross.r6Sql("(SUM(qd.d::DECIMAL(18,6)))::DOUBLE")} AS adist
+       |  FROM codes cd JOIN qd ON qd.s = cd.s AND qd.c = cd.code AND qd.query_id <> cd.vec_id
+       |  GROUP BY qd.query_id, cd.vec_id)""".stripMargin
+
+  /** The IVF-PQ encode: coarse seed-cell `assigned(vec_id, cell)`, the
+    * per-dimension residuals re-based into subspaces, their distances
+    * `ad(vec_id, s, c, d)` to the flat seed codebook `pqw` and the argmin
+    * `codes(vec_id, s, code)`. */
+  private def ivfPqCodesCte: String = {
+    val pqwVals = (0 until PqM).flatMap { s =>
+      (0 until PqK).flatMap { c =>
+        HashFns.litVector(s"pq-$s-$c", PqSub).zipWithIndex.map {
+          case (v, i) => s"($s, $c, ${i + 1}, ${v})"
+        }
+      }
+    }.mkString(", ")
+    s"""$lloydEmbCte,
+       |cd AS (
+       |${ivfArmsSql("vec_id", "embeddings")}),
+       |assigned AS (SELECT vec_id, cell FROM (
+       |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
+       |  FROM cd) t WHERE rn = 1),
+       |cc(cell, dim, v) AS (VALUES $lloydSeedVals),
+       |r AS (
+       |  SELECT emb.vec_id, emb.dim, emb.e - cc.v AS e
+       |  FROM emb JOIN assigned USING (vec_id)
+       |  JOIN cc ON cc.cell = assigned.cell AND cc.dim = emb.dim),
+       |rsub AS (
+       |  SELECT vec_id, (dim - 1) // $PqSub AS s, ((dim - 1) % $PqSub) + 1 AS dim, e
+       |  FROM r),
+       |pqw(s, c, dim, wv) AS (VALUES $pqwVals),
+       |ad AS (
+       |  SELECT rsub.vec_id, pqw.s, pqw.c,
+       |         ${Cross.r6Sql("SUM((e - wv) * (e - wv))")} AS d
+       |  FROM rsub JOIN pqw ON pqw.s = rsub.s AND pqw.dim = rsub.dim
+       |  GROUP BY 1, 2, 3),
+       |codes AS (SELECT vec_id, s, c AS code FROM (
+       |  SELECT vec_id, s, c, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, c) AS rn
+       |  FROM ad) t WHERE rn = 1)""".stripMargin
+  }
+
   /** PQ encode (SimilaritySearch.pqEncode): every vector compresses to
     * m small integers — argmin centroid per subspace, computed in ONE
     * codegen'd projection (no shuffle). The oracle recomputes all m×k
@@ -870,25 +870,8 @@ object EmbeddingQueries {
     * compression ladder: float (q40) → int8 (q98) → PQ codes. */
   val q144 = QueryDef(
     "q144_pq_adc_topk",
-    s"""WITH encd AS (
-       |$pqArmsSql),
-       |codes AS (
-       |  SELECT vec_id, s, c AS code FROM (
-       |    SELECT vec_id, s, c, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, c) AS rn
-       |    FROM encd) t WHERE rn = 1),
-       |qd AS (SELECT vec_id AS query_id, s, c, d FROM encd WHERE vec_id < 8),
-       |adc AS (
-       |  SELECT qd.query_id, cd.vec_id AS neighbor_id,
-       |         ${Cross.r6Sql("(SUM(qd.d::DECIMAL(18,6)))::DOUBLE")} AS adist
-       |  FROM codes cd JOIN qd ON qd.s = cd.s AND qd.c = cd.code AND qd.query_id <> cd.vec_id
-       |  GROUP BY qd.query_id, cd.vec_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, adist,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rank
-       |  FROM adc)
-       |SELECT query_id, rank, neighbor_id, adist
-       |FROM ranked WHERE rank <= 3
-       |ORDER BY query_id, rank""".stripMargin) { (spark, dir) =>
+    s"""WITH $pqAdcCte,
+       |${ascTopKSql("adist", "adc")}""".stripMargin) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
     val cb = SimilaritySearch.pqSeedCodebooks(PqM, PqK, PqSub)
     SimilaritySearch.pqAdcTopK(emb.filter(col("vec_id") < 8),
@@ -905,18 +888,7 @@ object EmbeddingQueries {
     * final ranks all hash-match. */
   val q153 = QueryDef(
     "q153_pq_refine_topk",
-    s"""WITH encd AS (
-       |$pqArmsSql),
-       |codes AS (
-       |  SELECT vec_id, s, c AS code FROM (
-       |    SELECT vec_id, s, c, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, c) AS rn
-       |    FROM encd) t WHERE rn = 1),
-       |qd AS (SELECT vec_id AS query_id, s, c, d FROM encd WHERE vec_id < 8),
-       |adc AS (
-       |  SELECT qd.query_id, cd.vec_id AS neighbor_id,
-       |         ${Cross.r6Sql("(SUM(qd.d::DECIMAL(18,6)))::DOUBLE")} AS adist
-       |  FROM codes cd JOIN qd ON qd.s = cd.s AND qd.c = cd.code AND qd.query_id <> cd.vec_id
-       |  GROUP BY qd.query_id, cd.vec_id),
+    s"""WITH $pqAdcCte,
        |short AS (
        |  SELECT query_id, neighbor_id FROM (
        |    SELECT query_id, neighbor_id,
@@ -928,13 +900,7 @@ object EmbeddingQueries {
        |  FROM short sh
        |  JOIN embeddings qa ON qa.vec_id = sh.query_id
        |  JOIN embeddings nb ON nb.vec_id = sh.neighbor_id),
-       |ranked AS (
-       |  SELECT query_id, neighbor_id, dist,
-       |         row_number() OVER (PARTITION BY query_id ORDER BY dist, neighbor_id) AS rank
-       |  FROM ex)
-       |SELECT query_id, rank, neighbor_id, dist
-       |FROM ranked WHERE rank <= 3
-       |ORDER BY query_id, rank""".stripMargin) { (spark, dir) =>
+       |${ascTopKSql("dist", "ex")}""".stripMargin) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
     val cb = SimilaritySearch.pqSeedCodebooks(PqM, PqK, PqSub)
     SimilaritySearch.pqAdcRefineTopK(emb.filter(col("vec_id") < 8),
@@ -995,50 +961,11 @@ object EmbeddingQueries {
     * argmin against a flat (s, c, dim, wv) codebook relation — cell and
     * all m codes hash-verified per vector. */
   val q146 = QueryDef(
-    "q146_ivfpq_encode", {
-      val coarseArms = (0 until Cells).map { c =>
-        val w = HashFns.litVector(s"centroid-$c", Dims)
-        s"SELECT vec_id, $c AS cell, ${VectorSql.sqDistLit("embedding", w)} AS d FROM embeddings"
-      }.mkString("\nUNION ALL\n")
-      val coarseVals = (0 until Cells).flatMap { c =>
-        HashFns.litVector(s"centroid-$c", Dims).zipWithIndex.map {
-          case (v, i) => s"($c, ${i + 1}, ${v})"
-        }
-      }.mkString(", ")
-      val pqwVals = (0 until PqM).flatMap { s =>
-        (0 until PqK).flatMap { c =>
-          HashFns.litVector(s"pq-$s-$c", PqSub).zipWithIndex.map {
-            case (v, i) => s"($s, $c, ${i + 1}, ${v})"
-          }
-        }
-      }.mkString(", ")
-      s"""WITH $lloydEmbCte,
-         |cd AS (
-         |$coarseArms),
-         |assigned AS (SELECT vec_id, cell FROM (
-         |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-         |  FROM cd) t WHERE rn = 1),
-         |cc(cell, dim, v) AS (VALUES $coarseVals),
-         |r AS (
-         |  SELECT emb.vec_id, emb.dim, emb.e - cc.v AS e
-         |  FROM emb JOIN assigned USING (vec_id)
-         |  JOIN cc ON cc.cell = assigned.cell AND cc.dim = emb.dim),
-         |rsub AS (
-         |  SELECT vec_id, (dim - 1) // $PqSub AS s, ((dim - 1) % $PqSub) + 1 AS dim, e
-         |  FROM r),
-         |pqw(s, c, dim, wv) AS (VALUES $pqwVals),
-         |ad AS (
-         |  SELECT rsub.vec_id, pqw.s, pqw.c,
-         |         ${Cross.r6Sql("SUM((e - wv) * (e - wv))")} AS d
-         |  FROM rsub JOIN pqw ON pqw.s = rsub.s AND pqw.dim = rsub.dim
-         |  GROUP BY 1, 2, 3),
-         |codes AS (SELECT vec_id, s, c AS code FROM (
-         |  SELECT vec_id, s, c, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, c) AS rn
-         |  FROM ad) t WHERE rn = 1)
-         |SELECT a.vec_id, a.cell, codes.s, codes.code
-         |FROM assigned a JOIN codes USING (vec_id)
-         |ORDER BY vec_id, s""".stripMargin
-    }) { (spark, dir) =>
+    "q146_ivfpq_encode",
+    s"""WITH $ivfPqCodesCte
+       |SELECT a.vec_id, a.cell, codes.s, codes.code
+       |FROM assigned a JOIN codes USING (vec_id)
+       |ORDER BY vec_id, s""".stripMargin) { (spark, dir) =>
     val cb = SimilaritySearch.pqSeedCodebooks(PqM, PqK, PqSub)
     SimilaritySearch.ivfPqEncode(Tables.embeddings(spark, dir), Cells, Dims, cb, PqSub)
       .select(col("vec_id"), col("cell"),
@@ -1052,63 +979,18 @@ object EmbeddingQueries {
     * The oracle chains the q146 encode with the q144 ADC algebra over
     * query residuals, so every rank and distance hash-matches. */
   val q147 = QueryDef(
-    "q147_ivfpq_topk", {
-      val coarseArms = (0 until Cells).map { c =>
-        val w = HashFns.litVector(s"centroid-$c", Dims)
-        s"SELECT vec_id, $c AS cell, ${VectorSql.sqDistLit("embedding", w)} AS d FROM embeddings"
-      }.mkString("\nUNION ALL\n")
-      val coarseVals = (0 until Cells).flatMap { c =>
-        HashFns.litVector(s"centroid-$c", Dims).zipWithIndex.map {
-          case (v, i) => s"($c, ${i + 1}, ${v})"
-        }
-      }.mkString(", ")
-      val pqwVals = (0 until PqM).flatMap { s =>
-        (0 until PqK).flatMap { c =>
-          HashFns.litVector(s"pq-$s-$c", PqSub).zipWithIndex.map {
-            case (v, i) => s"($s, $c, ${i + 1}, ${v})"
-          }
-        }
-      }.mkString(", ")
-      s"""WITH $lloydEmbCte,
-         |cd AS (
-         |$coarseArms),
-         |assigned AS (SELECT vec_id, cell FROM (
-         |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-         |  FROM cd) t WHERE rn = 1),
-         |cc(cell, dim, v) AS (VALUES $coarseVals),
-         |r AS (
-         |  SELECT emb.vec_id, emb.dim, emb.e - cc.v AS e
-         |  FROM emb JOIN assigned USING (vec_id)
-         |  JOIN cc ON cc.cell = assigned.cell AND cc.dim = emb.dim),
-         |rsub AS (
-         |  SELECT vec_id, (dim - 1) // $PqSub AS s, ((dim - 1) % $PqSub) + 1 AS dim, e
-         |  FROM r),
-         |pqw(s, c, dim, wv) AS (VALUES $pqwVals),
-         |ad AS (
-         |  SELECT rsub.vec_id, pqw.s, pqw.c,
-         |         ${Cross.r6Sql("SUM((e - wv) * (e - wv))")} AS d
-         |  FROM rsub JOIN pqw ON pqw.s = rsub.s AND pqw.dim = rsub.dim
-         |  GROUP BY 1, 2, 3),
-         |codes AS (SELECT vec_id, s, c AS code FROM (
-         |  SELECT vec_id, s, c, row_number() OVER (PARTITION BY vec_id, s ORDER BY d, c) AS rn
-         |  FROM ad) t WHERE rn = 1),
-         |adc AS (
-         |  SELECT qa.vec_id AS query_id, cdn.vec_id AS neighbor_id,
-         |         ${Cross.r6Sql("(SUM(qd.d::DECIMAL(18,6)))::DOUBLE")} AS adist
-         |  FROM codes cdn
-         |  JOIN assigned an ON an.vec_id = cdn.vec_id
-         |  JOIN assigned qa ON qa.cell = an.cell AND qa.vec_id < 8
-         |  JOIN ad qd ON qd.vec_id = qa.vec_id AND qd.s = cdn.s AND qd.c = cdn.code
-         |  WHERE qa.vec_id <> cdn.vec_id
-         |  GROUP BY 1, 2),
-         |ranked AS (
-         |  SELECT query_id, neighbor_id, adist,
-         |         row_number() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rank
-         |  FROM adc)
-         |SELECT query_id, rank, neighbor_id, adist
-         |FROM ranked WHERE rank <= 3
-         |ORDER BY query_id, rank""".stripMargin
-    }) { (spark, dir) =>
+    "q147_ivfpq_topk",
+    s"""WITH $ivfPqCodesCte,
+       |adc AS (
+       |  SELECT qa.vec_id AS query_id, cdn.vec_id AS neighbor_id,
+       |         ${Cross.r6Sql("(SUM(qd.d::DECIMAL(18,6)))::DOUBLE")} AS adist
+       |  FROM codes cdn
+       |  JOIN assigned an ON an.vec_id = cdn.vec_id
+       |  JOIN assigned qa ON qa.cell = an.cell AND qa.vec_id < 8
+       |  JOIN ad qd ON qd.vec_id = qa.vec_id AND qd.s = cdn.s AND qd.c = cdn.code
+       |  WHERE qa.vec_id <> cdn.vec_id
+       |  GROUP BY 1, 2),
+       |${ascTopKSql("adist", "adc")}""".stripMargin) { (spark, dir) =>
     val emb = Tables.embeddings(spark, dir)
     val cb = SimilaritySearch.pqSeedCodebooks(PqM, PqK, PqSub)
     SimilaritySearch.ivfPqTopK(emb.filter(col("vec_id") < 8),
@@ -1128,13 +1010,7 @@ object EmbeddingQueries {
     * one chain. */
   val q164 = QueryDef(
     "q164_semantic_dedup",
-    s"""WITH $lloydEmbCte,
-       |c0(cell, dim, v) AS (VALUES $lloydSeedVals),
-       |${lloydRound("c0", 1)},
-       |${lloydRound("c1", 2)},
-       |d3 AS (
-       |  SELECT vec_id, cell, ${Cross.r6Sql("SUM((e - v) * (e - v))")} AS d
-       |  FROM emb JOIN c2 USING (dim) GROUP BY vec_id, cell),
+    s"""WITH $lloydDistCte,
        |a3 AS (SELECT vec_id, cell FROM (
        |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
        |  FROM d3) t WHERE rn = 1),
@@ -1167,13 +1043,7 @@ object EmbeddingQueries {
     * cosines, mirroring the Spark column order exactly. */
   val q170 = QueryDef(
     "q170_contrastive_triplets",
-    s"""WITH $lloydEmbCte,
-       |c0(cell, dim, v) AS (VALUES $lloydSeedVals),
-       |${lloydRound("c0", 1)},
-       |${lloydRound("c1", 2)},
-       |d3 AS (
-       |  SELECT vec_id, cell, ${Cross.r6Sql("SUM((e - v) * (e - v))")} AS d
-       |  FROM emb JOIN c2 USING (dim) GROUP BY vec_id, cell),
+    s"""WITH $lloydDistCte,
        |ranked AS (
        |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
        |  FROM d3),
@@ -1217,17 +1087,7 @@ object EmbeddingQueries {
     * ranks, and the outer-join fusion. */
   val q163 = QueryDef(
     "q163_rrf_fusion",
-    s"""WITH tok AS (SELECT doc_id, unnest(${graft.functions.TextSql.tokens("text")}) AS t FROM documents),
-       |stats AS (SELECT COUNT(DISTINCT doc_id) AS n_docs, COUNT(*) AS n_tok FROM tok),
-       |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-       |qt AS (SELECT doc_id, t FROM tok WHERE t IN ('spark', 'query', 'window')),
-       |df AS (SELECT t, COUNT(*) AS df FROM (SELECT DISTINCT doc_id, t FROM qt) d GROUP BY t),
-       |tf AS (SELECT doc_id, t, COUNT(*) AS tf FROM qt GROUP BY doc_id, t),
-       |scored AS (
-       |  SELECT tf.doc_id,
-       |    ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) * tf * 2.5 /
-       |      (tf + 1.5 * (1.0 - 0.75 + 0.75 * dl::DOUBLE / (n_tok::DOUBLE / n_docs::DOUBLE))) AS s
-       |  FROM tf JOIN df USING (t) JOIN dl USING (doc_id) CROSS JOIN stats),
+    s"""WITH ${TextSql.bm25ScoredCte(Seq("spark", "query", "window"))},
        |agg AS (
        |  SELECT doc_id, (round((${Cross.dsumSql("s", 6)}) + 1e-9, 6) + 0.0) AS score
        |  FROM scored GROUP BY doc_id),
@@ -1427,14 +1287,7 @@ object EmbeddingQueries {
     val (roundCtes, arms) = mmrUnrollSql(k, lam, oneMinus)
     QueryDef(
       "q259_mmr_select",
-      s"""WITH nrm AS (
-         |  SELECT vec_id, embedding, ${VectorSql.norm2("embedding")} AS nrm
-         |  FROM embeddings),
-         |normed AS (
-         |  SELECT vec_id,
-         |    list_transform(range(1, len(embedding) + 1),
-         |      i -> embedding[i]::DOUBLE / nrm) AS ne
-         |  FROM nrm WHERE nrm > 0),
+      s"""WITH $normedCte,
          |q AS (SELECT ne AS qne FROM normed WHERE vec_id = 1),
          |c AS (
          |  SELECT vec_id, ne, ${Cross.r6Sql(cosSql("ne", "qne"))} AS rel
@@ -1583,14 +1436,7 @@ object EmbeddingQueries {
       .mkString("\nUNION ALL ")
     QueryDef(
       "q269_mmr_per_query",
-      s"""WITH nrm AS (
-         |  SELECT vec_id, embedding, ${VectorSql.norm2("embedding")} AS nrm
-         |  FROM embeddings),
-         |normed AS (
-         |  SELECT vec_id,
-         |    list_transform(range(1, len(embedding) + 1),
-         |      i -> embedding[i]::DOUBLE / nrm) AS ne
-         |  FROM nrm WHERE nrm > 0),
+      s"""WITH $normedCte,
          |q AS (SELECT vec_id AS query_id, ne AS qne FROM normed WHERE vec_id < 3),
          |c AS (
          |  SELECT q.query_id, n.vec_id, n.ne,

@@ -242,4 +242,16 @@ private[queries] object MonitorGate {
       .head
     (r.getLong(0), r.getLong(1))
   }
+
+  /** Whether the single columns of `a` and `b` hold the same distinct
+    * values (NULL included), from ONE action: one aggregate over a
+    * null-safe full join of the two distinct sets, counting rows that
+    * miss a side. */
+  def sameKeys(a: DataFrame, b: DataFrame): Boolean = {
+    val l = a.toDF("k_a").distinct().withColumn("in_a", lit(true))
+    val r = b.toDF("k_b").distinct().withColumn("in_b", lit(true))
+    l.join(r, col("k_a") <=> col("k_b"), "full")
+      .agg(count_if(col("in_a").isNull || col("in_b").isNull))
+      .head.getLong(0) == 0L
+  }
 }

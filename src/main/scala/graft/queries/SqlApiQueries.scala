@@ -603,8 +603,7 @@ object SqlApiQueries {
       .select("key")
       .localCheckpoint(true)
     // the SQL view must serve EXACTLY the predicted live keys
-    val keysOk = cube.select("key").except(expectedLive).count() == 0L &&
-      expectedLive.except(cube.select("key")).count() == 0L
+    val keysOk = MonitorGate.sameKeys(cube.select("key"), expectedLive)
     val sk = cube
       .select(col("key"), col("t_ref").as("t_sk"), col("w").as("w_sk"),
         explode(col("entries")).as("e"))

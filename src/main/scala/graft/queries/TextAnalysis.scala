@@ -300,17 +300,7 @@ object TextAnalysis {
     * score is epsilon-rounded before the ordering it drives. */
   val q112 = QueryDef(
     "q112_bm25",
-    s"""WITH tok AS (SELECT doc_id, unnest($toks) AS t FROM documents),
-       |stats AS (SELECT COUNT(DISTINCT doc_id) AS n_docs, COUNT(*) AS n_tok FROM tok),
-       |dl AS (SELECT doc_id, COUNT(*) AS dl FROM tok GROUP BY doc_id),
-       |qt AS (SELECT doc_id, t FROM tok WHERE t IN ('spark', 'query', 'window')),
-       |df AS (SELECT t, COUNT(*) AS df FROM (SELECT DISTINCT doc_id, t FROM qt) d GROUP BY t),
-       |tf AS (SELECT doc_id, t, COUNT(*) AS tf FROM qt GROUP BY doc_id, t),
-       |scored AS (
-       |  SELECT tf.doc_id,
-       |    ln((n_docs - df + 0.5) / (df + 0.5) + 1.0) * tf * 2.5 /
-       |      (tf + 1.5 * (1.0 - 0.75 + 0.75 * dl::DOUBLE / (n_tok::DOUBLE / n_docs::DOUBLE))) AS s
-       |  FROM tf JOIN df USING (t) JOIN dl USING (doc_id) CROSS JOIN stats),
+    s"""WITH ${TextSql.bm25ScoredCte(Seq("spark", "query", "window"))},
        |agg AS (
        |  SELECT doc_id, COUNT(*) AS n_hit_terms,
        |         (round((${Cross.dsumSql("s", 6)}) + 1e-9, 6) + 0.0) AS score
@@ -420,17 +410,27 @@ object TextAnalysis {
     s"log2($lmLambda::DOUBLE * (cab + $lmAlpha::DOUBLE) / (ca + $lmAlpha::DOUBLE * v) + " +
       s"${1.0 - lmLambda}::DOUBLE * cb / tt)"
 
-  val q128 = QueryDef(
-    "q128_bigram_lm",
-    s"""WITH tl AS (SELECT doc_id, $toks AS ts FROM documents),
+  /** Self-trained bigram counts over each doc's tokens `tl(doc_id, ts)`:
+    * positions `bg(doc_id, a, b)` and `bgc(a, b, cab)`. */
+  private val bigramCte =
+    s"""tl AS (SELECT doc_id, $toks AS ts FROM documents),
        |pos AS (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i FROM tl),
        |bg AS (SELECT doc_id, ts[i] AS a, ts[i + 1] AS b FROM pos),
-       |bgc AS (SELECT a, b, COUNT(*) AS cab FROM bg GROUP BY a, b),
+       |bgc AS (SELECT a, b, COUNT(*) AS cab FROM bg GROUP BY a, b)""".stripMargin
+
+  /** [[bigramCte]] plus the interpolated mix's inputs: prefix mass
+    * `pre(a, ca)`, unigram counts `ug(t, cb)` and totals `sc(tt, v)`. */
+  private val bigramLmCte =
+    s"""$bigramCte,
        |pre AS (SELECT a, SUM(cab) AS ca FROM bgc GROUP BY a),
        |ug AS (SELECT t, COUNT(*) AS cb
        |       FROM (SELECT unnest(ts) AS t FROM tl) GROUP BY t),
-       |sc AS (SELECT SUM(cb) AS tt, COUNT(*) AS v FROM ug),
-       |scored AS (
+       |sc AS (SELECT SUM(cb) AS tt, COUNT(*) AS v FROM ug)""".stripMargin
+
+  /** Per-doc `scored(doc_id, s, n_bigrams)`: the decimal sum of the
+    * interpolated log2 terms over [[bigramLmCte]]. */
+  private val lmScoredCte =
+    s"""scored AS (
        |  SELECT doc_id,
        |    ${Cross.dsumSql(lmMixSql, 6)} AS s,
        |    COUNT(*) AS n_bigrams
@@ -438,7 +438,12 @@ object TextAnalysis {
        |  JOIN bgc USING (a, b) JOIN pre USING (a)
        |  JOIN ug ON ug.t = bg.b
        |  CROSS JOIN sc
-       |  GROUP BY doc_id)
+       |  GROUP BY doc_id)""".stripMargin
+
+  val q128 = QueryDef(
+    "q128_bigram_lm",
+    s"""WITH $bigramLmCte,
+       |$lmScoredCte
        |SELECT doc_id, n_bigrams,
        |  ${Cross.r6Sql("s / n_bigrams::DOUBLE")} AS avg_logprob
        |FROM scored
@@ -464,10 +469,7 @@ object TextAnalysis {
 
   val q162 = QueryDef(
     "q162_kneser_ney",
-    s"""WITH tl AS (SELECT doc_id, $toks AS ts FROM documents),
-       |pos AS (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i FROM tl),
-       |bg AS (SELECT doc_id, ts[i] AS a, ts[i + 1] AS b FROM pos),
-       |bgc AS (SELECT a, b, COUNT(*) AS cab FROM bg GROUP BY a, b),
+    s"""WITH $bigramCte,
        |pre AS (SELECT a, SUM(cab) AS ca, COUNT(*) AS n1pa FROM bgc GROUP BY a),
        |cont AS (SELECT b, COUNT(*) AS n1pb FROM bgc GROUP BY b),
        |sc AS (SELECT COUNT(*) AS ntypes FROM bgc),
@@ -641,9 +643,11 @@ object TextAnalysis {
     * aggregation), smoothed log probs, and decimal-rounded per-feature
     * sums, so the whole distribution-matching chain hash-matches. */
   private val dsirBuckets = 128
-  val q165 = QueryDef(
-    "q165_dsir_weights",
-    s"""WITH d AS (SELECT doc_id, (lang = 'en') AS is_target, $toks AS tk FROM documents),
+  /** Hashed unigram+bigram features `feats(doc_id, is_target, f)` of each
+    * doc (target = English) and per-doc `scored(doc_id, [n_feats,] s)`:
+    * the decimal sum of the smoothed target-vs-pool log2 ratios. */
+  private def dsirScoredCte(nFeats: Boolean): String =
+    s"""d AS (SELECT doc_id, (lang = 'en') AS is_target, $toks AS tk FROM documents),
        |feats AS (
        |  SELECT doc_id, is_target, ${Cross.hash31Sql("x")} % $dsirBuckets AS f
        |  FROM (SELECT doc_id, is_target,
@@ -654,12 +658,16 @@ object TextAnalysis {
        |  FROM feats GROUP BY f),
        |sc AS (SELECT SUM(nr) AS tr, SUM(nt) AS tt FROM counts),
        |scored AS (
-       |  SELECT doc_id, COUNT(*) AS n_feats,
+       |  SELECT doc_id,${if (nFeats) " COUNT(*) AS n_feats," else ""}
        |    ${Cross.dsumSql(
              s"log2((nt + 1)::DOUBLE / ((tt + $dsirBuckets)::DOUBLE)) - " +
                s"log2((nr + 1)::DOUBLE / ((tr + $dsirBuckets)::DOUBLE))", 6)} AS s
        |  FROM feats JOIN counts USING (f) CROSS JOIN sc
-       |  GROUP BY doc_id)
+       |  GROUP BY doc_id)""".stripMargin
+
+  val q165 = QueryDef(
+    "q165_dsir_weights",
+    s"""WITH ${dsirScoredCte(nFeats = true)}
        |SELECT doc_id, n_feats, ${Cross.r6Sql("s")} AS log_weight
        |FROM scored
        |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
@@ -680,35 +688,11 @@ object TextAnalysis {
     * end to end. */
   val q169 = QueryDef(
     "q169_dsir_select",
-    s"""WITH d AS (SELECT doc_id, (lang = 'en') AS is_target, $toks AS tk FROM documents),
-       |feats AS (
-       |  SELECT doc_id, is_target, ${Cross.hash31Sql("x")} % $dsirBuckets AS f
-       |  FROM (SELECT doc_id, is_target,
-       |          unnest(list_concat(tk, ${TextSql.shingles("tk", 2)})) AS x FROM d)),
-       |counts AS (
-       |  SELECT f, COUNT(*) AS nr,
-       |    SUM(CASE WHEN is_target THEN 1 ELSE 0 END)::BIGINT AS nt
-       |  FROM feats GROUP BY f),
-       |sc AS (SELECT SUM(nr) AS tr, SUM(nt) AS tt FROM counts),
-       |scored AS (
-       |  SELECT doc_id,
-       |    ${Cross.dsumSql(
-             s"log2((nt + 1)::DOUBLE / ((tt + $dsirBuckets)::DOUBLE)) - " +
-               s"log2((nr + 1)::DOUBLE / ((tr + $dsirBuckets)::DOUBLE))", 6)} AS s
-       |  FROM feats JOIN counts USING (f) CROSS JOIN sc
-       |  GROUP BY doc_id),
+    s"""WITH ${dsirScoredCte(nFeats = false)},
        |q AS (
        |  SELECT s.doc_id, ${Cross.r6Sql("s.s")} AS quality, len(d.tk)::BIGINT AS ntok
        |  FROM scored s JOIN d ON s.doc_id = d.doc_id),
-       |c AS (
-       |  SELECT a.doc_id, a.quality, a.ntok, COALESCE(SUM(b.ntok), 0) AS cum_before
-       |  FROM q a LEFT JOIN q b
-       |    ON b.quality > a.quality OR (b.quality = a.quality AND b.doc_id < a.doc_id)
-       |  GROUP BY a.doc_id, a.quality, a.ntok)
-       |SELECT doc_id, quality, ntok, cum_before::BIGINT AS cum_before,
-       |  (cum_before + ntok <= 20000) AS selected
-       |FROM c
-       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+       |${budgetSelectSql(20000)}""".stripMargin) { (spark, dir) =>
     val docs = Tables.documents(spark, dir)
     val w = graft.operators.Dsir.importanceWeights(docs, col("doc_id"),
         TextFns.tokens(col("text")), col("lang") === "en", buckets = dsirBuckets)
@@ -723,46 +707,63 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
+  /** q23's stopword ratio of `tk` as floor(ratio·1e6 + 0.5001)/1e6: only
+    * correctly-rounded IEEE ops, no round(), whose half-way rule differs
+    * between the engines (the cause of a past q135 hash divergence); 0.0
+    * for an empty doc. */
+  private val stopQualitySql =
+    s"CASE WHEN len(tk) > 0 THEN floor((${TextSql.lexiconHits("tk", TextFns.stopwords)}::DOUBLE / len(tk)::DOUBLE) * 1000000.0 + 0.5001) / 1000000.0 ELSE 0.0 END"
+
+  /** The Spark side of [[stopQualitySql]], as column `quality`. */
+  private def stopQuality = when(size(col("tk")) > 0,
+      floor(TextFns.lexiconHits(col("tk"), TextFns.stopwords).cast("double") /
+        size(col("tk")).cast("double") * 1e6 + 0.5001) / 1e6)
+    .otherwise(0.0).as("quality")
+
+  /** Flat join-based prefix sum over `q(doc_id, [key,] quality, ntok)`:
+    * `c.cum_before` is the token mass of every doc strictly earlier in
+    * (quality DESC, doc_id) order — within the same key when `keyed`. */
+  private def prefixCte(keyed: Boolean): String = {
+    val earlier = "b.quality > a.quality OR (b.quality = a.quality AND b.doc_id < a.doc_id)"
+    val (k, on) =
+      if (keyed) ("a.key, ", s"b.key = a.key AND\n       ($earlier)") else ("", earlier)
+    s"""c AS (
+       |  SELECT a.doc_id, ${k}a.quality, a.ntok, COALESCE(SUM(b.ntok), 0) AS cum_before
+       |  FROM q a LEFT JOIN q b
+       |    ON $on
+       |  GROUP BY a.doc_id, ${k}a.quality, a.ntok)""".stripMargin
+  }
+
+  /** Unkeyed [[prefixCte]] and its verdict: a doc is selected while its
+    * prefix plus its own tokens fit `budget`. */
+  private def budgetSelectSql(budget: Long): String =
+    s"""${prefixCte(keyed = false)}
+       |SELECT doc_id, quality, ntok, cum_before::BIGINT AS cum_before,
+       |  (cum_before + ntok <= $budget) AS selected
+       |FROM c
+       |ORDER BY doc_id""".stripMargin
+
   /** Token-budget corpus selection (Curation.selectUnderBudget): keep
     * the highest-quality docs (stopword-ratio score, the q23 formula)
     * until a global 20k-token budget is exhausted — greedy prefix of the
     * (quality DESC, doc_id) order. The Spark side runs the banded
     * two-level prefix sum; the oracle computes the same cumulative sum
-    * as a join-based "sum over strictly-earlier docs", so hash-equality
-    * proves the distributed scan reproduces the global order exactly.
-    *
-    * Hardened after the round-4 driver-only hash divergence (green
-    * locally under a cpus=1/4/32 × codegen/interpreted sweep): quality
-    * is floor(ratio*1e6 + 0.5001)/1e6 — division, multiply, add, floor,
-    * division, ALL correctly-rounded IEEE ops with zero implementation
-    * latitude — instead of round(), whose BigDecimal-HALF_UP (Spark) vs
-    * fp-rounding (DuckDB, version-dependent) semantics are the one
-    * engine-latitude surface this gate had; and the oracle avoids
-    * window-frame semantics entirely. */
+    * as a join-based "sum over strictly-earlier docs" ([[prefixCte]],
+    * no window-frame semantics), so hash-equality proves the distributed
+    * scan reproduces the global order exactly. */
   val q135 = QueryDef(
     "q135_budget_select",
     s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
        |q AS (
        |  SELECT doc_id, len(tk)::BIGINT AS ntok,
-       |    CASE WHEN len(tk) > 0 THEN floor((${TextSql.lexiconHits("tk", TextFns.stopwords)}::DOUBLE / len(tk)::DOUBLE) * 1000000.0 + 0.5001) / 1000000.0 ELSE 0.0 END AS quality
+       |    $stopQualitySql AS quality
        |  FROM t),
-       |c AS (
-       |  SELECT a.doc_id, a.quality, a.ntok, COALESCE(SUM(b.ntok), 0) AS cum_before
-       |  FROM q a LEFT JOIN q b
-       |    ON b.quality > a.quality OR (b.quality = a.quality AND b.doc_id < a.doc_id)
-       |  GROUP BY a.doc_id, a.quality, a.ntok)
-       |SELECT doc_id, quality, ntok, cum_before::BIGINT AS cum_before,
-       |  (cum_before + ntok <= 20000) AS selected
-       |FROM c
-       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+       |${budgetSelectSql(20000)}""".stripMargin) { (spark, dir) =>
     val d = Tables.documents(spark, dir)
       .withColumn("tk", TextFns.tokens(col("text")))
       .select(col("doc_id"),
         size(col("tk")).cast("long").as("ntok"),
-        when(size(col("tk")) > 0,
-          floor(TextFns.lexiconHits(col("tk"), TextFns.stopwords).cast("double") /
-            size(col("tk")).cast("double") * 1e6 + 0.5001) / 1e6)
-          .otherwise(0.0).as("quality"))
+        stopQuality)
     graft.operators.Curation.selectUnderBudget(d,
         col("doc_id"), col("quality"), col("ntok"), budget = 20000L, bands = 64)
       .withColumnRenamed("id", "doc_id")
@@ -782,25 +783,14 @@ object TextAnalysis {
     s"""WITH t AS (SELECT doc_id, $toks AS tk FROM documents),
        |q AS (
        |  SELECT doc_id, len(tk)::BIGINT AS ntok,
-       |    CASE WHEN len(tk) > 0 THEN floor((${TextSql.lexiconHits("tk", TextFns.stopwords)}::DOUBLE / len(tk)::DOUBLE) * 1000000.0 + 0.5001) / 1000000.0 ELSE 0.0 END AS quality
+       |    $stopQualitySql AS quality
        |  FROM t),
-       |c AS (
-       |  SELECT a.doc_id, a.quality, a.ntok, COALESCE(SUM(b.ntok), 0) AS cum_before
-       |  FROM q a LEFT JOIN q b
-       |    ON b.quality > a.quality OR (b.quality = a.quality AND b.doc_id < a.doc_id)
-       |  GROUP BY a.doc_id, a.quality, a.ntok)
-       |SELECT doc_id, quality, ntok, cum_before::BIGINT AS cum_before,
-       |  (cum_before + ntok <= 60000) AS selected
-       |FROM c
-       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+       |${budgetSelectSql(60000)}""".stripMargin) { (spark, dir) =>
     val d = Tables.documents(spark, dir)
       .withColumn("tk", TextFns.tokens(col("text")))
       .select(col("doc_id"),
         size(col("tk")).cast("long").as("ntok"),
-        when(size(col("tk")) > 0,
-          floor(TextFns.lexiconHits(col("tk"), TextFns.stopwords).cast("double") /
-            size(col("tk")).cast("double") * 1e6 + 0.5001) / 1e6)
-          .otherwise(0.0).as("quality"))
+        stopQuality)
     graft.operators.Curation.selectUnderBudgetEquiDepth(d,
         col("doc_id"), col("quality"), col("ntok"), budget = 60000L, bands = 16)
       .withColumnRenamed("id", "doc_id")
@@ -819,14 +809,9 @@ object TextAnalysis {
     s"""WITH t AS (SELECT doc_id, source, $toks AS tk FROM documents),
        |q AS (
        |  SELECT doc_id, source AS key, len(tk)::BIGINT AS ntok,
-       |    CASE WHEN len(tk) > 0 THEN floor((${TextSql.lexiconHits("tk", TextFns.stopwords)}::DOUBLE / len(tk)::DOUBLE) * 1000000.0 + 0.5001) / 1000000.0 ELSE 0.0 END AS quality
+       |    $stopQualitySql AS quality
        |  FROM t),
-       |c AS (
-       |  SELECT a.doc_id, a.key, a.quality, a.ntok, COALESCE(SUM(b.ntok), 0) AS cum_before
-       |  FROM q a LEFT JOIN q b
-       |    ON b.key = a.key AND
-       |       (b.quality > a.quality OR (b.quality = a.quality AND b.doc_id < a.doc_id))
-       |  GROUP BY a.doc_id, a.key, a.quality, a.ntok)
+       |${prefixCte(keyed = true)}
        |SELECT doc_id, key, quality, ntok, cum_before::BIGINT AS cum_before,
        |  (cum_before + ntok <=
        |    CASE key WHEN 'src1' THEN 5000 WHEN 'src2' THEN 2000 ELSE 1000 END) AS selected
@@ -836,10 +821,7 @@ object TextAnalysis {
       .withColumn("tk", TextFns.tokens(col("text")))
       .select(col("doc_id"), col("source"),
         size(col("tk")).cast("long").as("ntok"),
-        when(size(col("tk")) > 0,
-          floor(TextFns.lexiconHits(col("tk"), TextFns.stopwords).cast("double") /
-            size(col("tk")).cast("double") * 1e6 + 0.5001) / 1e6)
-          .otherwise(0.0).as("quality"))
+        stopQuality)
     graft.operators.Curation.selectUnderBudgetPerKey(d,
         col("source"), col("doc_id"), col("quality"), col("ntok"),
         budgets = Map("src1" -> 5000L, "src2" -> 2000L),
@@ -862,7 +844,7 @@ object TextAnalysis {
     s"""WITH t AS (SELECT doc_id, source, $toks AS tk FROM documents),
        |q AS (
        |  SELECT doc_id, source AS key,
-       |    CASE WHEN len(tk) > 0 THEN floor((${TextSql.lexiconHits("tk", TextFns.stopwords)}::DOUBLE / len(tk)::DOUBLE) * 1000000.0 + 0.5001) / 1000000.0 ELSE 0.0 END AS quality
+       |    $stopQualitySql AS quality
        |  FROM t),
        |r AS (
        |  SELECT key, doc_id, quality,
@@ -878,15 +860,50 @@ object TextAnalysis {
     val d = Tables.documents(spark, dir)
       .withColumn("tk", TextFns.tokens(col("text")))
       .select(col("doc_id"), col("source"),
-        when(size(col("tk")) > 0,
-          floor(TextFns.lexiconHits(col("tk"), TextFns.stopwords).cast("double") /
-            size(col("tk")).cast("double") * 1e6 + 0.5001) / 1e6)
-          .otherwise(0.0).as("quality"))
+        stopQuality)
     graft.operators.Curation.quantileNormalizeByKey(d,
         col("source"), col("doc_id"), col("quality"), bands = 64)
       .withColumnRenamed("id", "doc_id")
       .orderBy("key", "doc_id")
   }
+
+  /** Each doc's tokens `tk(doc_id, tk)`, positioned `tok(doc_id, pos, t)`,
+    * and its 3-token spans `sp(doc_id, spos, sp)`; positions are 0-based. */
+  private val spanCte =
+    s"""tk AS (SELECT doc_id, $toks AS tk FROM documents),
+       |tokpos AS (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS i FROM tk),
+       |tok AS (SELECT doc_id, i - 1 AS pos, tk[i] AS t FROM tokpos),
+       |sps AS (SELECT doc_id, ${TextSql.shingles("tk", 3)} AS sl FROM tk),
+       |spspos AS (SELECT doc_id, sl, unnest(range(1, len(sl) + 1)) AS i FROM sps),
+       |sp AS (SELECT doc_id, i - 1 AS spos, sl[i] AS sp FROM spspos)""".stripMargin
+
+  /** `flag(doc_id, pos)`: every position a cross-document duplicated span
+    * covers in a doc other than the span's keeper (its min doc_id). */
+  private val crossDocFlagCte =
+    """d AS (SELECT sp, COUNT(DISTINCT doc_id) AS nd, MIN(doc_id) AS keeper
+      |      FROM sp GROUP BY sp),
+      |flag AS (
+      |  SELECT DISTINCT sp.doc_id, sp.spos + o.o AS pos
+      |  FROM sp JOIN d USING (sp)
+      |  CROSS JOIN (SELECT unnest(range(0, 3)) AS o) o
+      |  WHERE d.nd >= 2 AND sp.doc_id <> d.keeper)""".stripMargin
+
+  /** Drops the `removed(doc_id, pos)` positions and reassembles each doc's
+    * surviving tokens in order. */
+  private def spanTailSql(removed: String): String =
+    s"""kept AS (
+       |  SELECT tok.doc_id, tok.pos, tok.t
+       |  FROM tok ANTI JOIN $removed USING (doc_id, pos)),
+       |agg AS (
+       |  SELECT doc_id, COUNT(*) AS n_kept,
+       |         string_agg(t, ' ' ORDER BY pos) AS kept_text
+       |  FROM kept GROUP BY doc_id)
+       |SELECT tk.doc_id,
+       |  COALESCE(agg.n_kept, 0) AS n_kept,
+       |  len(tk.tk) - COALESCE(agg.n_kept, 0) AS n_removed,
+       |  COALESCE(agg.kept_text, '') AS kept_text
+       |FROM tk LEFT JOIN agg USING (doc_id)
+       |ORDER BY doc_id""".stripMargin
 
   /** Exact substring dedup at fixed width
     * (Repetition.removeDuplicatedSpans): cross-document duplicated
@@ -897,32 +914,9 @@ object TextAnalysis {
     * so the positional bookkeeping is verified end to end. */
   val q139 = QueryDef(
     "q139_span_dedup",
-    s"""WITH tk AS (SELECT doc_id, $toks AS tk FROM documents),
-       |tokpos AS (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS i FROM tk),
-       |tok AS (SELECT doc_id, i - 1 AS pos, tk[i] AS t FROM tokpos),
-       |sps AS (SELECT doc_id, ${TextSql.shingles("tk", 3)} AS sl FROM tk),
-       |spspos AS (SELECT doc_id, sl, unnest(range(1, len(sl) + 1)) AS i FROM sps),
-       |sp AS (SELECT doc_id, i - 1 AS spos, sl[i] AS sp FROM spspos),
-       |d AS (SELECT sp, COUNT(DISTINCT doc_id) AS nd, MIN(doc_id) AS keeper
-       |      FROM sp GROUP BY sp),
-       |flag AS (
-       |  SELECT DISTINCT sp.doc_id, sp.spos + o.o AS pos
-       |  FROM sp JOIN d USING (sp)
-       |  CROSS JOIN (SELECT unnest(range(0, 3)) AS o) o
-       |  WHERE d.nd >= 2 AND sp.doc_id <> d.keeper),
-       |kept AS (
-       |  SELECT tok.doc_id, tok.pos, tok.t
-       |  FROM tok ANTI JOIN flag USING (doc_id, pos)),
-       |agg AS (
-       |  SELECT doc_id, COUNT(*) AS n_kept,
-       |         string_agg(t, ' ' ORDER BY pos) AS kept_text
-       |  FROM kept GROUP BY doc_id)
-       |SELECT tk.doc_id,
-       |  COALESCE(agg.n_kept, 0) AS n_kept,
-       |  len(tk.tk) - COALESCE(agg.n_kept, 0) AS n_removed,
-       |  COALESCE(agg.kept_text, '') AS kept_text
-       |FROM tk LEFT JOIN agg USING (doc_id)
-       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+    s"""WITH $spanCte,
+       |$crossDocFlagCte,
+       |${spanTailSql("flag")}""".stripMargin) { (spark, dir) =>
     graft.operators.Repetition.removeDuplicatedSpans(
         Tables.documents(spark, dir), w = 3)
       .orderBy("doc_id")
@@ -937,12 +931,7 @@ object TextAnalysis {
     * token and string. */
   val q152 = QueryDef(
     "q152_self_repetition",
-    s"""WITH tk AS (SELECT doc_id, $toks AS tk FROM documents),
-       |tokpos AS (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS i FROM tk),
-       |tok AS (SELECT doc_id, i - 1 AS pos, tk[i] AS t FROM tokpos),
-       |sps AS (SELECT doc_id, ${TextSql.shingles("tk", 3)} AS sl FROM tk),
-       |spspos AS (SELECT doc_id, sl, unnest(range(1, len(sl) + 1)) AS i FROM sps),
-       |sp AS (SELECT doc_id, i - 1 AS spos, sl[i] AS sp FROM spspos),
+    s"""WITH $spanCte,
        |f AS (SELECT doc_id, sp, COUNT(*) AS n, MIN(spos) AS first
        |      FROM sp GROUP BY doc_id, sp),
        |flag AS (
@@ -950,19 +939,7 @@ object TextAnalysis {
        |  FROM sp JOIN f USING (doc_id, sp)
        |  CROSS JOIN (SELECT unnest(range(0, 3)) AS o) o
        |  WHERE f.n >= 2 AND sp.spos > f.first),
-       |kept AS (
-       |  SELECT tok.doc_id, tok.pos, tok.t
-       |  FROM tok ANTI JOIN flag USING (doc_id, pos)),
-       |agg AS (
-       |  SELECT doc_id, COUNT(*) AS n_kept,
-       |         string_agg(t, ' ' ORDER BY pos) AS kept_text
-       |  FROM kept GROUP BY doc_id)
-       |SELECT tk.doc_id,
-       |  COALESCE(agg.n_kept, 0) AS n_kept,
-       |  len(tk.tk) - COALESCE(agg.n_kept, 0) AS n_removed,
-       |  COALESCE(agg.kept_text, '') AS kept_text
-       |FROM tk LEFT JOIN agg USING (doc_id)
-       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+       |${spanTailSql("flag")}""".stripMargin) { (spark, dir) =>
     graft.operators.Repetition.removeSelfRepetition(
         Tables.documents(spark, dir), w = 3)
       .orderBy("doc_id")
@@ -977,19 +954,8 @@ object TextAnalysis {
     * hash-match. */
   val q142 = QueryDef(
     "q142_span_dedup_runs",
-    s"""WITH tk AS (SELECT doc_id, $toks AS tk FROM documents),
-       |tokpos AS (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS i FROM tk),
-       |tok AS (SELECT doc_id, i - 1 AS pos, tk[i] AS t FROM tokpos),
-       |sps AS (SELECT doc_id, ${TextSql.shingles("tk", 3)} AS sl FROM tk),
-       |spspos AS (SELECT doc_id, sl, unnest(range(1, len(sl) + 1)) AS i FROM sps),
-       |sp AS (SELECT doc_id, i - 1 AS spos, sl[i] AS sp FROM spspos),
-       |d AS (SELECT sp, COUNT(DISTINCT doc_id) AS nd, MIN(doc_id) AS keeper
-       |      FROM sp GROUP BY sp),
-       |flag AS (
-       |  SELECT DISTINCT sp.doc_id, sp.spos + o.o AS pos
-       |  FROM sp JOIN d USING (sp)
-       |  CROSS JOIN (SELECT unnest(range(0, 3)) AS o) o
-       |  WHERE d.nd >= 2 AND sp.doc_id <> d.keeper),
+    s"""WITH $spanCte,
+       |$crossDocFlagCte,
        |isl AS (
        |  SELECT doc_id, pos,
        |         pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS island
@@ -999,19 +965,7 @@ object TextAnalysis {
        |         COUNT(*) OVER (PARTITION BY doc_id, island) AS run_len
        |  FROM isl),
        |cov AS (SELECT doc_id, pos FROM runs WHERE run_len >= 5),
-       |kept AS (
-       |  SELECT tok.doc_id, tok.pos, tok.t
-       |  FROM tok ANTI JOIN cov USING (doc_id, pos)),
-       |agg AS (
-       |  SELECT doc_id, COUNT(*) AS n_kept,
-       |         string_agg(t, ' ' ORDER BY pos) AS kept_text
-       |  FROM kept GROUP BY doc_id)
-       |SELECT tk.doc_id,
-       |  COALESCE(agg.n_kept, 0) AS n_kept,
-       |  len(tk.tk) - COALESCE(agg.n_kept, 0) AS n_removed,
-       |  COALESCE(agg.kept_text, '') AS kept_text
-       |FROM tk LEFT JOIN agg USING (doc_id)
-       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+       |${spanTailSql("cov")}""".stripMargin) { (spark, dir) =>
     graft.operators.Repetition.removeDuplicatedSpans(
         Tables.documents(spark, dir), w = 3, minRun = 5)
       .orderBy("doc_id")
@@ -1027,7 +981,7 @@ object TextAnalysis {
     s"""WITH t0 AS (SELECT doc_id, $toks AS tk FROM documents),
        |q AS (
        |  SELECT doc_id,
-       |    CASE WHEN len(tk) > 0 THEN floor((${TextSql.lexiconHits("tk", TextFns.stopwords)}::DOUBLE / len(tk)::DOUBLE) * 1000000.0 + 0.5001) / 1000000.0 ELSE 0.0 END AS quality
+       |    $stopQualitySql AS quality
        |  FROM t0),
        |r AS (
        |  SELECT a.doc_id, a.quality, 1 + COUNT(b.doc_id) AS rank
@@ -1041,10 +995,7 @@ object TextAnalysis {
     val d = Tables.documents(spark, dir)
       .withColumn("tk", TextFns.tokens(col("text")))
       .select(col("doc_id"),
-        when(size(col("tk")) > 0,
-          floor(TextFns.lexiconHits(col("tk"), TextFns.stopwords).cast("double") /
-            size(col("tk")).cast("double") * 1e6 + 0.5001) / 1e6)
-          .otherwise(0.0).as("quality"))
+        stopQuality)
     graft.operators.Curation.curriculumShards(d,
         col("doc_id"), col("quality"), nShards = 8, bands = 64)
       .withColumnRenamed("id", "doc_id")
@@ -1163,37 +1114,14 @@ object TextAnalysis {
     * end. */
   val q158 = QueryDef(
     "q158_perplexity_select",
-    s"""WITH tl AS (SELECT doc_id, $toks AS ts FROM documents),
-       |pos AS (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i FROM tl),
-       |bg AS (SELECT doc_id, ts[i] AS a, ts[i + 1] AS b FROM pos),
-       |bgc AS (SELECT a, b, COUNT(*) AS cab FROM bg GROUP BY a, b),
-       |pre AS (SELECT a, SUM(cab) AS ca FROM bgc GROUP BY a),
-       |ug AS (SELECT t, COUNT(*) AS cb
-       |       FROM (SELECT unnest(ts) AS t FROM tl) GROUP BY t),
-       |sc AS (SELECT SUM(cb) AS tt, COUNT(*) AS v FROM ug),
-       |scored AS (
-       |  SELECT doc_id,
-       |    ${Cross.dsumSql(lmMixSql, 6)} AS s,
-       |    COUNT(*) AS n_bigrams
-       |  FROM bg
-       |  JOIN bgc USING (a, b) JOIN pre USING (a)
-       |  JOIN ug ON ug.t = bg.b
-       |  CROSS JOIN sc
-       |  GROUP BY doc_id),
+    s"""WITH $bigramLmCte,
+       |$lmScoredCte,
        |q AS (
        |  SELECT s.doc_id,
        |    ${Cross.r6Sql("s.s / s.n_bigrams::DOUBLE")} AS quality,
        |    len(tl.ts)::BIGINT AS ntok
        |  FROM scored s JOIN tl ON s.doc_id = tl.doc_id),
-       |c AS (
-       |  SELECT a.doc_id, a.quality, a.ntok, COALESCE(SUM(b.ntok), 0) AS cum_before
-       |  FROM q a LEFT JOIN q b
-       |    ON b.quality > a.quality OR (b.quality = a.quality AND b.doc_id < a.doc_id)
-       |  GROUP BY a.doc_id, a.quality, a.ntok)
-       |SELECT doc_id, quality, ntok, cum_before::BIGINT AS cum_before,
-       |  (cum_before + ntok <= 20000) AS selected
-       |FROM c
-       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+       |${budgetSelectSql(20000)}""".stripMargin) { (spark, dir) =>
     val docs = Tables.documents(spark, dir)
     val scored = graft.operators.Lm.bigramScore(docs,
       lambda = lmLambda, alpha = lmAlpha)
@@ -1340,19 +1268,26 @@ object TextAnalysis {
       |    string_agg(id::VARCHAR, ' ' ORDER BY pos, spos) AS ids
       |  FROM idrows GROUP BY doc_id)""".stripMargin
 
-  val q339 = QueryDef(
-    "q339_bpe_encode_corpus",
+  /** The full 8-merge unroll encoding `documents`: `(doc_id, n_ids, ids)`. */
+  private val bpeEncodeOracle =
     bpeCtes(8) + bpeEncodeCtes("documents") +
       """
         |SELECT doc_id, n_ids, ids FROM perdoc
-        |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+        |ORDER BY doc_id""".stripMargin
+
+  /** An encoded `(doc_id, ids)` frame in [[bpeEncodeOracle]]'s shape. */
+  private def encodedIds(df: org.apache.spark.sql.DataFrame) =
+    df.select(col("doc_id"), size(col("ids")).cast("long").as("n_ids"),
+        concat_ws(" ", transform(col("ids"), _.cast("string"))).as("ids"))
+      .orderBy("doc_id")
+
+  val q339 = QueryDef(
+    "q339_bpe_encode_corpus",
+    bpeEncodeOracle) { (spark, dir) =>
     val docs = Tables.documents(spark, dir)
     val toksCol = TextFns.tokens(col("text"))
     val mt = graft.operators.Bpe.train(docs, toksCol, nMerges = 8)
-    graft.operators.Bpe.encodeDocs(docs, col("doc_id"), toksCol, mt)
-      .select(col("doc_id"), size(col("ids")).cast("long").as("n_ids"),
-        concat_ws(" ", transform(col("ids"), _.cast("string"))).as("ids"))
-      .orderBy("doc_id")
+    encodedIds(graft.operators.Bpe.encodeDocs(docs, col("doc_id"), toksCol, mt))
   }
 
   /** Tokenizer ARTIFACT round-trip (ModelIO.saveMergeTable /
@@ -1365,10 +1300,7 @@ object TextAnalysis {
     * changes some document's id sequence. */
   val q342 = QueryDef(
     "q342_bpe_artifact_roundtrip",
-    bpeCtes(8) + bpeEncodeCtes("documents") +
-      """
-        |SELECT doc_id, n_ids, ids FROM perdoc
-        |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+    bpeEncodeOracle) { (spark, dir) =>
     val docs = Tables.documents(spark, dir)
     val toksCol = TextFns.tokens(col("text"))
     val path = graft.core.TempPaths.gatePath("q342_tokenizer")
@@ -1376,10 +1308,7 @@ object TextAnalysis {
     graft.sources.ModelIO.saveMergeTable(
       graft.operators.Bpe.train(docs, toksCol, nMerges = 8), path)
     val mt = graft.sources.ModelIO.loadMergeTable(spark, path)
-    graft.operators.Bpe.encodeDocs(docs, col("doc_id"), toksCol, mt)
-      .select(col("doc_id"), size(col("ids")).cast("long").as("n_ids"),
-        concat_ws(" ", transform(col("ids"), _.cast("string"))).as("ids"))
-      .orderBy("doc_id")
+    encodedIds(graft.operators.Bpe.encodeDocs(docs, col("doc_id"), toksCol, mt))
   }
 
   /** STREAMING BPE encode against the PERSISTED tokenizer — the
@@ -1400,10 +1329,7 @@ object TextAnalysis {
     * one-shot batch encode document by document. */
   val q343 = QueryDef(
     "q343_stream_bpe_encode",
-    bpeCtes(8) + bpeEncodeCtes("documents") +
-      """
-        |SELECT doc_id, n_ids, ids FROM perdoc
-        |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
+    bpeEncodeOracle) { (spark, dir) =>
     import graft.streaming.EventStreams
     val docs = Tables.documents(spark, dir)
     val toksCol = TextFns.tokens(col("text"))
@@ -1438,10 +1364,7 @@ object TextAnalysis {
         }.start()
       try q.processAllAvailable() finally q.stop()
     }
-    EventStreams.readLog(spark, outDir)(reduce)
-      .select(col("doc_id"), size(col("ids")).cast("long").as("n_ids"),
-        concat_ws(" ", transform(col("ids"), _.cast("string"))).as("ids"))
-      .orderBy("doc_id")
+    encodedIds(EventStreams.readLog(spark, outDir)(reduce))
   }
 
   /** The PRETRAINING PIPELINE end-to-end — curate → tokenize → pack →
@@ -1463,7 +1386,7 @@ object TextAnalysis {
     bpeCtes(8, source = "curated", prefixCtes =
       s"""cq AS (
          |  SELECT doc_id, len(tk)::BIGINT AS ntok,
-         |    CASE WHEN len(tk) > 0 THEN floor((${TextSql.lexiconHits("tk", TextFns.stopwords)}::DOUBLE / len(tk)::DOUBLE) * 1000000.0 + 0.5001) / 1000000.0 ELSE 0.0 END AS quality
+         |    $stopQualitySql AS quality
          |  FROM (SELECT doc_id, $toks AS tk FROM documents)),
          |cc AS (
          |  SELECT a.doc_id, a.ntok, COALESCE(SUM(b.ntok), 0) AS cum_before
@@ -1492,10 +1415,7 @@ object TextAnalysis {
     val scored = base.withColumn("tk", toksCol)
       .select(col("doc_id"),
         size(col("tk")).cast("long").as("ntok"),
-        when(size(col("tk")) > 0,
-          floor(TextFns.lexiconHits(col("tk"), TextFns.stopwords).cast("double") /
-            size(col("tk")).cast("double") * 1e6 + 0.5001) / 1e6)
-          .otherwise(0.0).as("quality"))
+        stopQuality)
     val keep = graft.operators.Curation.selectUnderBudgetEquiDepth(scored,
         col("doc_id"), col("quality"), col("ntok"), budget = 60000L, bands = 16)
       .filter(col("selected")).select("id")
@@ -1757,6 +1677,18 @@ object TextAnalysis {
        |  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
        |  FROM (SELECT lang, $toks AS tk FROM documents))""".stripMargin
 
+  /** [[scoredSql]] swept at every distinct score: `cum(score, n, npos,
+    * pred_pos, tp)` counts docs and positives at or above it, `tot(t_n,
+    * t_p)` the totals. */
+  private val sweepCte =
+    s"""$scoredSql,
+       |per AS (SELECT score, COUNT(*) AS n, SUM(y) AS npos FROM sc GROUP BY score),
+       |cum AS (SELECT score, n, npos,
+       |          SUM(n) OVER (ORDER BY score DESC) AS pred_pos,
+       |          SUM(npos) OVER (ORDER BY score DESC) AS tp
+       |        FROM per),
+       |tot AS (SELECT COUNT(*) AS t_n, SUM(y) AS t_p FROM sc)""".stripMargin
+
   private def scoredDf(spark: org.apache.spark.sql.SparkSession, dir: String) = {
     val d = Tables.documents(spark, dir).withColumn("tk", TextFns.tokens(col("text")))
     d.select(
@@ -1772,13 +1704,7 @@ object TextAnalysis {
     * cumulative counts, integer confusion cells. */
   val q198 = QueryDef(
     "q198_pr_curve",
-    s"""WITH $scoredSql,
-       |per AS (SELECT score, COUNT(*) AS n, SUM(y) AS npos FROM sc GROUP BY score),
-       |cum AS (SELECT score, n, npos,
-       |          SUM(n) OVER (ORDER BY score DESC) AS pred_pos,
-       |          SUM(npos) OVER (ORDER BY score DESC) AS tp
-       |        FROM per),
-       |tot AS (SELECT COUNT(*) AS t_n, SUM(y) AS t_p FROM sc)
+    s"""WITH $sweepCte
        |SELECT score AS threshold, tp::BIGINT AS tp, (pred_pos - tp)::BIGINT AS fp,
        |       (t_p - tp)::BIGINT AS fn, (t_n - pred_pos - t_p + tp)::BIGINT AS tn,
        |       ${Cross.r6Sql("tp::DOUBLE / pred_pos::DOUBLE")} AS precision,
@@ -1833,13 +1759,7 @@ object TextAnalysis {
     * threshold ASC) argmax over 6-dp-rounded operands. */
   val q212 = QueryDef(
     "q212_best_threshold",
-    s"""WITH $scoredSql,
-       |per AS (SELECT score, COUNT(*) AS n, SUM(y) AS npos FROM sc GROUP BY score),
-       |cum AS (SELECT score, n, npos,
-       |          SUM(n) OVER (ORDER BY score DESC) AS pred_pos,
-       |          SUM(npos) OVER (ORDER BY score DESC) AS tp
-       |        FROM per),
-       |tot AS (SELECT COUNT(*) AS t_n, SUM(y) AS t_p FROM sc),
+    s"""WITH $sweepCte,
        |cells AS (
        |  SELECT score AS threshold, tp::BIGINT AS tp, (pred_pos - tp)::BIGINT AS fp,
        |         (t_p - tp)::BIGINT AS fn, (t_n - pred_pos - t_p + tp)::BIGINT AS tn
@@ -1856,6 +1776,16 @@ object TextAnalysis {
       col("score"), col("y"), criterion = "youden")
   }
 
+  /** Each doc's harmonic `c(id, ntok, size_class)` at bin size 64: class
+    * k packs k docs, −1 flags an oversize doc. */
+  private val sizeClassCte =
+    s"""t AS (SELECT doc_id AS id, len($toks)::BIGINT AS ntok FROM documents),
+       |c AS (SELECT id, ntok,
+       |        CASE WHEN ntok > 64 THEN -1
+       |             WHEN ntok <= 0 THEN 8
+       |             ELSE LEAST(8, 64 // ntok) END AS size_class
+       |      FROM t)""".stripMargin
+
   /** Harmonic whole-document packing (Packing.packHarmonic): size-class
     * bins where class k packs exactly k docs — the no-straddle packing
     * whose bin assignment is pure rank arithmetic, no sequential bin
@@ -1864,12 +1794,7 @@ object TextAnalysis {
     * bin, and slot with flat per-class windows. */
   val q213 = QueryDef(
     "q213_harmonic_pack",
-    s"""WITH t AS (SELECT doc_id AS id, len($toks)::BIGINT AS ntok FROM documents),
-       |c AS (SELECT id, ntok,
-       |        CASE WHEN ntok > 64 THEN -1
-       |             WHEN ntok <= 0 THEN 8
-       |             ELSE LEAST(8, 64 // ntok) END AS size_class
-       |      FROM t),
+    s"""WITH $sizeClassCte,
        |r AS (SELECT id, ntok, size_class,
        |        row_number() OVER (PARTITION BY size_class ORDER BY id) - 1 AS r0
        |      FROM c WHERE size_class >= 1)
@@ -2071,14 +1996,7 @@ object TextAnalysis {
       Cross.r6Sql(s"${Cross.dsumSql(gamma(lam), 6)} / COUNT(*)::DOUBLE")
     QueryDef(
       "q229_lm_em_lambda",
-      s"""WITH tl AS (SELECT doc_id, $toks AS ts FROM documents),
-         |pos AS (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i FROM tl),
-         |bg AS (SELECT doc_id, ts[i] AS a, ts[i + 1] AS b FROM pos),
-         |bgc AS (SELECT a, b, COUNT(*) AS cab FROM bg GROUP BY a, b),
-         |pre AS (SELECT a, SUM(cab) AS ca FROM bgc GROUP BY a),
-         |ug AS (SELECT t, COUNT(*) AS cb
-         |       FROM (SELECT unnest(ts) AS t FROM tl) GROUP BY t),
-         |sc AS (SELECT SUM(cb) AS tt, COUNT(*) AS v FROM ug),
+      s"""WITH $bigramLmCte,
          |inst AS (
          |  SELECT (cab::DOUBLE + $alpha) / (ca::DOUBLE + $alpha * v::DOUBLE) AS pbi,
          |         cb::DOUBLE / tt::DOUBLE AS puni
@@ -2179,14 +2097,7 @@ object TextAnalysis {
     * rounded terms through exact decimal moment sums. */
   val q234 = QueryDef(
     "q234_lm_confidence",
-    s"""WITH tl AS (SELECT doc_id, $toks AS ts FROM documents),
-       |pos AS (SELECT doc_id, ts, unnest(range(1, len(ts))) AS i FROM tl),
-       |bg AS (SELECT doc_id, ts[i] AS a, ts[i + 1] AS b FROM pos),
-       |bgc AS (SELECT a, b, COUNT(*) AS cab FROM bg GROUP BY a, b),
-       |pre AS (SELECT a, SUM(cab) AS ca FROM bgc GROUP BY a),
-       |ug AS (SELECT t, COUNT(*) AS cb
-       |       FROM (SELECT unnest(ts) AS t FROM tl) GROUP BY t),
-       |sc AS (SELECT SUM(cb) AS tt, COUNT(*) AS v FROM ug),
+    s"""WITH $bigramLmCte,
        |scored AS (
        |  SELECT doc_id, COUNT(*) AS n_bigrams,
        |    ${Cross.dsumSql(Cross.r6Sql(lmMixSql), 6)} AS sx,
@@ -2384,12 +2295,7 @@ object TextAnalysis {
     * hash-match. */
   val q344 = QueryDef(
     "q344_epoch_shard_order",
-    s"""WITH t AS (SELECT doc_id AS id, len($toks)::BIGINT AS ntok FROM documents),
-       |c AS (SELECT id, ntok,
-       |        CASE WHEN ntok > 64 THEN -1
-       |             WHEN ntok <= 0 THEN 8
-       |             ELSE LEAST(8, 64 // ntok) END AS size_class
-       |      FROM t),
+    s"""WITH $sizeClassCte,
        |r AS (SELECT id, size_class,
        |        row_number() OVER (PARTITION BY size_class ORDER BY id) - 1 AS r0
        |      FROM c WHERE size_class >= 1),
@@ -2728,14 +2634,9 @@ object TextAnalysis {
        |  FROM sc2 CROSS JOIN z),
        |q AS (
        |  SELECT doc_id, source AS key, len(tk)::BIGINT AS ntok,
-       |    CASE WHEN len(tk) > 0 THEN floor((${TextSql.lexiconHits("tk", TextFns.stopwords)}::DOUBLE / len(tk)::DOUBLE) * 1000000.0 + 0.5001) / 1000000.0 ELSE 0.0 END AS quality
+       |    $stopQualitySql AS quality
        |  FROM t),
-       |c AS (
-       |  SELECT a.doc_id, a.key, a.quality, a.ntok, COALESCE(SUM(b.ntok), 0) AS cum_before
-       |  FROM q a LEFT JOIN q b
-       |    ON b.key = a.key AND
-       |       (b.quality > a.quality OR (b.quality = a.quality AND b.doc_id < a.doc_id))
-       |  GROUP BY a.doc_id, a.key, a.quality, a.ntok)
+       |${prefixCte(keyed = true)}
        |SELECT c.doc_id, c.key, c.quality, c.ntok, c.cum_before::BIGINT AS cum_before,
        |  (c.cum_before + c.ntok <= COALESCE(bud.budget_tokens, 0)) AS selected
        |FROM c LEFT JOIN bud ON c.key = bud.key
@@ -2748,10 +2649,7 @@ object TextAnalysis {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val scored = d.select(col("doc_id"), col("source"),
       size(col("tk")).cast("long").as("ntok"),
-      when(size(col("tk")) > 0,
-        floor(TextFns.lexiconHits(col("tk"), TextFns.stopwords).cast("double") /
-          size(col("tk")).cast("double") * 1e6 + 0.5001) / 1e6)
-        .otherwise(0.0).as("quality"))
+      stopQuality)
     graft.operators.Curation.selectUnderBudgetPerKey(scored,
         col("source"), col("doc_id"), col("quality"), col("ntok"),
         budgets = budgets, defaultBudget = 0L, bands = 64)

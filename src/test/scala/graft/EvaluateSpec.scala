@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.cli.Evaluate
@@ -11,8 +12,8 @@ import graft.model.Recommender
 /** `Evaluate.run` computes its report in one aggregate. On hand-built
   * prediction files with every edge the format admits, it must return
   * exactly what the two-action formulation returns: an inferred-schema
-  * JSON read, [[Recommender.rmse]]`.head()`, and the `left_anti`
-  * missing-pairs count. */
+  * JSON read, an RMSE folded in plain Scala over the prediction lines,
+  * and the `left_anti` missing-pairs count. */
 class EvaluateSpec extends SparkSpec {
 
   /** The first ground-truth (user_id, business_id) pairs. */
@@ -27,13 +28,10 @@ class EvaluateSpec extends SparkSpec {
     val preds = raw.select(Seq(col("user_id"), col("business_id"), col("stars").as("pred")) ++
       (if (raw.columns.contains("decision")) Seq(col("decision")) else Nil): _*)
     val gt = Recommender.dedupReviews(Tables.reviews(spark, sf()))
-    val rmseRow = Recommender.rmse(preds, gt).head()
-    val rmse =
-      if (rmseRow.isNullAt(0)) "\"N/A\""
-      else {
-        val v = rmseRow.getDouble(0)
-        if (java.lang.Double.isFinite(v)) v.toString else "\"" + v + "\""
-      }
+    val rmse = foldRmse(raw, gt) match {
+      case None => "\"N/A\""
+      case Some(v) => if (java.lang.Double.isFinite(v)) v.toString else "\"" + v + "\""
+    }
     val missing = gt.join(preds, Seq("user_id", "business_id"), "left_anti").count()
     val byDecision =
       if (!preds.columns.contains("decision")) ""
@@ -41,6 +39,30 @@ class EvaluateSpec extends SparkSpec {
         .map(r => s""""${r.getString(0)}":{"rmse":${r.getDouble(1)},"n":${r.getLong(2)}}""")
         .mkString(""","by_decision":{""", ",", "}")
     s"""{"rmse":$rmse,"missing_pairs":$missing$byDecision}"""
+  }
+
+  /** The reference RMSE: every prediction line whose pair is in the
+    * ground truth and whose stars are a number (not null, not NaN) adds
+    * its squared error, once per line; errors are rounded to 6 dp and
+    * summed exactly (as `Cross.dsum`), then r6(sqrt(sum / n)). An
+    * infinite error counts in n but not in the sum, where `Cross.dsum`'s
+    * decimal cast nulls it. None when nothing is summed. */
+  private def foldRmse(raw: DataFrame, gt: DataFrame): Option[Double] = {
+    import java.math.RoundingMode.HALF_UP
+    val truth = gt.select("user_id", "business_id", "stars").collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    val se = raw.select("user_id", "business_id", "stars").collect().toSeq.flatMap { r =>
+      val pred = if (r.isNullAt(2)) Double.NaN else r.get(2).toString.toDouble
+      truth.get((r.getLong(0), r.getLong(1))).filterNot(_ => pred.isNaN)
+        .map(s => (pred - s) * (pred - s))
+    }
+    val finite = se.filter(e => java.lang.Double.isFinite(e))
+    if (finite.isEmpty) None
+    else {
+      val sum = finite.map(e => BigDecimal(BigDecimal(e).bigDecimal.setScale(6, HALF_UP))).sum
+      val r = math.sqrt(sum.toDouble / se.size)
+      Some(BigDecimal(r + 1e-9).bigDecimal.setScale(6, HALF_UP).doubleValue + 0.0)
+    }
   }
 
   /** Write `lines` as a one-file prediction directory; return its path. */
@@ -77,9 +99,12 @@ class EvaluateSpec extends SparkSpec {
     check(predFile(line(u0, b0, "\"NaN\""), line(u1, b1, "NaN"), line(u2, b2, "3.25")))
   }
 
-  test("a line without stars counts in rmse's n but not its sum") {
+  test("a line without stars is skipped by rmse") {
     val (u0, b0) = pair(0); val (u1, b1) = pair(1)
-    check(predFile(line(u0, b0, null), line(u1, b1, "2.0")))
+    def rmse(report: String) =
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(report).get("rmse")
+    assert(rmse(check(predFile(line(u0, b0, null), line(u1, b1, "2.0")))) ==
+      rmse(check(predFile(line(u1, b1, "2.0")))))
   }
 
   test("duplicate pair lines count once per match") {

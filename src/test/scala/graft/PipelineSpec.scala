@@ -18,6 +18,11 @@ class PipelineSpec extends SparkSpec {
     val names = SparkEntry.defs.map(_.name)
     assert(names.distinct.size == names.size)
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    // a fragment moved out of an interpolated string leaves its `$name`
+    // or `${...}` in the SQL verbatim
+    val leaked = SparkEntry.oracleSql.collect { case (name, sql)
+      if sql.contains("${") || "\\$[A-Za-z]".r.findFirstIn(sql).isDefined => name }
+    assert(leaked.isEmpty)
   }
 
   test("ALS trains, predicts in range, and cold-start repairs to 2.5") {

@@ -151,4 +151,25 @@ class ReplaySpec extends SparkSpec {
     assert(MonitorGate.evictionCounts(dmKeys, dmLog, MonitorGate.Seconds,
       Bounds(0L, 1000L), 100L) == ((1L, 0L)))
   }
+
+  test("same key set from one action matches the two-except formulation") {
+    val s = spark
+    import s.implicits._
+    def keys(ks: String*) = ks.toDF("key")
+    def twoExcept(a: DataFrame, b: DataFrame) =
+      a.except(b).count() == 0L && b.except(a).count() == 0L
+    val cases = Seq(
+      (keys("a", "b", null, "b"), keys(null, "b", "a")), // null key, duplicates
+      (keys("a", "b"), keys("a", "b", null)), // a null only on one side
+      (keys("a", null, null), keys("a")),
+      (keys("a", "a"), keys("a", "c")),
+      (keys(), keys()),
+      (keys(), keys("a")))
+    assert(cases.map { case (a, b) => twoExcept(a, b) } ==
+      Seq(true, false, false, false, true, false))
+    cases.zipWithIndex.foreach { case ((a, b), i) =>
+      assert(MonitorGate.sameKeys(a, b) == twoExcept(a, b), s"case $i")
+      assert(MonitorGate.sameKeys(b, a) == twoExcept(b, a), s"case $i swapped")
+    }
+  }
 }
