@@ -1,13 +1,14 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.json4s._
 
-import graft.core.Tables
+import graft.core.{Json, Tables}
+import graft.operators.Cdc
 import graft.operators.SlidingRows.GkSkR
 import graft.plans.GkSummary
-import graft.streaming.{EventStreams, SlidingMonitor}
+import graft.streaming.{EventStreams, Replay, SlidingMonitor}
 
 /** The always-on telemetry panel, end-to-end as one command — the
   * production topology the monitor gates (q312/q319/q321/q326) verify
@@ -74,30 +75,27 @@ object Monitor {
     require(Set("mg", "gk", "cm", "dm")(family),
       s"unknown monitor family '$family' (mg|gk|cm|dm)")
     // replay the events table as 8 micro-batches (one file per trigger)
-    val replay = java.nio.file.Files.createTempDirectory("graft_monitor_replay")
-    graft.core.TempPaths.register(replay)
-    Tables.events(spark, sfDir)
+    val stream = Replay.of(Tables.events(spark, sfDir)
       .select(col("event_type").cast("string").as("key"),
         expr("sec div 3600").as("q"), col("sec").cast("long").as("t"),
         col("user_id").cast("string").as("item"),
-        col("value").cast("double").as("v"))
-      .repartition(8).write.mode("overwrite").parquet(replay.toString)
-
-    val stream = spark.readStream
-      .schema(StructType(Seq(StructField("key", StringType),
-        StructField("q", LongType), StructField("t", LongType),
-        StructField("item", StringType), StructField("v", DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(replay.toString)
+        col("value").cast("double").as("v")), "monitor", 8).stream()
     clearServeDir(serveDir)
     val served = family match {
       case "cm" =>
+        // DELTA emissions folded with the ADDITIVE reduce (sum cells per
+        // (key, quantum)) instead of latest-wins; redelivery idempotency
+        // comes from the manifest's live/consumed no-op checks, not from
+        // content (q331 gates exactly this scenario)
         val cmRows = graft.operators.SlidingSketches.cmKeyRows(
           stream.select("key", "q", "item"), col("item"),
           col("q") * 3600L, 3600L, key = col("key"))
-        val emissions = SlidingMonitor.cmQuantumMonitor(cmRows, CmDepth,
-          CmWidth, horizonQuanta = horizon).toDF()
-        runCmServe(spark, emissions, serveDir)
+        EventStreams.runUpsertLogToCompletion(spark,
+          SlidingMonitor.cmQuantumMonitor(cmRows, CmDepth, CmWidth,
+            horizonQuanta = horizon).toDF()
+            .filter(col("q") >= 0L).select("key", "q", "entries"),
+          serveDir, name = "graft_monitor_serve_cm", compactEvery = 4,
+          mode = "update")(SlidingMonitor.cmAdditiveReduce)
       case "dm" =>
         // no quantum axis: one O(k) sketch row per key, latest wins —
         // keyed on struct(t_ref, ver), NOT bare ver: the dm read
@@ -109,8 +107,8 @@ object Monitor {
           SlidingMonitor.decayedMgMonitor(stream.select("key", "t", "item"),
             halfLifeSec = 86400L, k = k).toDF()
             .withColumn("tv", struct(col("t_ref"), col("ver"))),
-          serveDir, key = "key", version = "tv",
-          name = "graft_monitor_serve_dm", compactEvery = 4, mode = "update")
+          serveDir, name = "graft_monitor_serve_dm", compactEvery = 4,
+          mode = "update")(Cdc.compactLatest(_, "key", "tv"))
       case fam =>
         val emissions = (fam match {
           case "mg" => SlidingMonitor
@@ -120,9 +118,9 @@ object Monitor {
             .gkQuantumMonitor(stream.select("key", "q", "v"), math.max(k, 16),
               horizonQuanta = horizon).toDF()
         }).withColumn("kq", concat_ws("#", col("key"), col("q")))
-        EventStreams.runUpsertLogToCompletion(spark, emissions,
-          serveDir, key = "kq", version = "ver", name = "graft_monitor_serve",
-          compactEvery = 4, mode = "update")
+        EventStreams.runUpsertLogToCompletion(spark, emissions, serveDir,
+          name = "graft_monitor_serve", compactEvery = 4, mode = "update")(
+          Cdc.compactLatest(_, "kq", "ver"))
     }
 
     // the panel read: newest 3 in-horizon quanta per key
@@ -163,10 +161,14 @@ object Monitor {
             f"w=${r.getDouble(2)}%.2f top: $talkers")
         }
     }
-    val keys = served.select("key").distinct().count()
-    val quanta = served.count()
-    println(s"""{"family":"$family","keys":$keys,"served_quanta":$quanta,""" +
-      s""""k":$k,"horizon":$horizon}""")
+    // distinct keys (a NULL key counts once, as distinct() does) and
+    // served rows, from one aggregate
+    val n = served.agg(count_distinct(col("key")), count_if(col("key").isNull),
+      count(lit(1))).head
+    val keys = n.getLong(0) + (if (n.getLong(1) > 0L) 1L else 0L)
+    println(Json.render(JObject("family" -> JString(family), "keys" -> JLong(keys),
+      "served_quanta" -> JLong(n.getLong(2)), "k" -> JInt(k),
+      "horizon" -> JLong(horizon))))
   }
 
   /** Recreate the serving directory, but only when the target is
@@ -200,15 +202,19 @@ object Monitor {
       horizon: Long = Long.MaxValue): DataFrame = {
     served
       .transform(inHorizon(horizon))
-      .select(col("key"), col("q"), col("n"),
-        reverse(array_sort(col("entries"),
-          (a, b) => when(a.getField("est") < b.getField("est"), -1)
-            .when(a.getField("est") > b.getField("est"), 1)
-            .when(a.getField("key") > b.getField("key"), -1)
-            .when(a.getField("key") < b.getField("key"), 1)
-            .otherwise(0))).as("top"))
+      .select(col("key"), col("q"), col("n"), topByEst("key"))
       .orderBy("key", "q")
   }
+
+  /** `entries` as `top`: sorted by estimate descending, ties by the
+    * entry's `tie` field (for determinism). */
+  private def topByEst(tie: String): Column =
+    reverse(array_sort(col("entries"),
+      (a, b) => when(a.getField("est") < b.getField("est"), -1)
+        .when(a.getField("est") > b.getField("est"), 1)
+        .when(a.getField(tie) > b.getField(tie), -1)
+        .when(a.getField(tie) < b.getField(tie), 1)
+        .otherwise(0))).as("top")
 
   /** The GK family's panel: newest 3 in-horizon quanta per key, each
     * served summary decoded and rank-queried for p50/p99 (the "p99
@@ -227,27 +233,6 @@ object Monitor {
       }
       .toDF("key", "q", "n", "p50", "p99")
       .orderBy("key", "q")
-  }
-
-  /** The CM serving fold: DELTA emissions appended to the log table
-    * batch-by-batch and compacted/read with the ADDITIVE reduce (sum
-    * cells per (key, quantum)) instead of latest-wins — redelivery
-    * idempotency comes from the manifest's live/consumed no-op checks,
-    * not from content (q331 gates exactly this scenario). */
-  private def runCmServe(spark: SparkSession, emissions: DataFrame,
-      serveDir: String): DataFrame = {
-    val reduce = (df: DataFrame) => SlidingMonitor.cmAdditiveReduce(df)
-    val q = emissions.writeStream.outputMode("update")
-      .queryName("graft_monitor_serve_cm")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        EventStreams.foldLog(serveDir,
-          batch.filter(col("q") >= 0L).select("key", "q", "entries"), id,
-          compactEvery = 4)(reduce)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    EventStreams.readLog(spark, serveDir)(reduce)
   }
 
   /** The CM family's panel: per (key, quantum) — newest 3 in-horizon
@@ -278,13 +263,7 @@ object Monitor {
       // an evicted key's latest served row is its tombstone (w = 0):
       // aged off the panel, not displayed empty
       .filter(col("w") > 0.0)
-      .select(col("key"), col("t_ref"), col("w"),
-        reverse(array_sort(col("entries"),
-          (a, b) => when(a.getField("est") < b.getField("est"), -1)
-            .when(a.getField("est") > b.getField("est"), 1)
-            .when(a.getField("item") > b.getField("item"), -1)
-            .when(a.getField("item") < b.getField("item"), 1)
-            .otherwise(0))).as("top"))
+      .select(col("key"), col("t_ref"), col("w"), topByEst("item"))
       .orderBy("key")
 
   /** Shared panel windowing: drop out-of-horizon quanta (vs the global

@@ -1,11 +1,10 @@
 package graft.cli
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.json4s._
 
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, Replay}
 
 /** Streaming-fold scale measurement (SCALING.md's ingest leg): replays
   * the q277 upsert topology — the events table streamed in
@@ -35,25 +34,8 @@ object ScaleStream {
     val sfDir = args(0)
     val batches = args.lift(1).map(_.toInt).getOrElse(8)
     val spark = graft.SessionHygiene.session()
-
     // one replay source shared by all strategies
-    val base = graft.core.Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), col("event_type"), col("sec"),
-        // the guarded shared packer, not an inline pmod: folding an
-        // out-of-range event_id into a colliding version would let the
-        // strategies-agree checksum pass on tie-break luck rather than
-        // version semantics (q277's fail-loud contract)
-        graft.operators.Cdc.packedVersion(col("sec"), col("event_id"),
-          "scalestream").as("ver"))
-    val replay = java.nio.file.Files.createTempDirectory("graft_scalestream")
-    graft.core.TempPaths.register(replay)
-    base.repartition(batches).write.mode("overwrite").parquet(replay.toString)
-    val schema = StructType(Seq(
-      StructField("user_id", LongType), StructField("event_id", LongType),
-      StructField("event_type", StringType), StructField("sec", LongType),
-      StructField("ver", LongType)))
-    def stream(): DataFrame = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(replay.toString)
+    val replay = ScaleStream.replay(spark, sfDir, batches)
 
     def checksum(t: DataFrame): (Long, Long) = {
       // bit_xor: order-independent row-set digest that cannot overflow
@@ -87,24 +69,36 @@ object ScaleStream {
 
     Seq(4, 16, 64).foreach { b =>
       measure(s"bucketed_$b") { path =>
-        EventStreams.runUpsertToCompletion(spark, stream(), path,
+        EventStreams.runUpsertToCompletion(spark, replay.stream(), path,
           key = "user_id", version = "ver", name = s"ss_b$b", buckets = b)
           .localCheckpoint(true)
       }
     }
     Seq(4, 8).foreach { ce =>
       measure(s"log_compact_$ce") { path =>
-        EventStreams.runUpsertLogToCompletion(spark, stream(), path,
-          key = "user_id", version = "ver", name = s"ss_l$ce",
-          compactEvery = ce)
+        EventStreams.runUpsertLogToCompletion(spark, replay.stream(), path,
+          name = s"ss_l$ce", compactEvery = ce)(
+          graft.operators.Cdc.compactLatest(_, "user_id", "ver"))
           .localCheckpoint(true)
       }
     }
 
-    val inputRows = spark.read.parquet(replay.toString).count()
+    val inputRows = spark.read.parquet(replay.dir).count()
     println(graft.core.Json.render(JObject("sf" -> JString(sfDir),
       "batches" -> JInt(batches), "input_rows" -> JLong(inputRows),
       "strategies" -> JObject(results.toList))))
     spark.stop()
   }
+
+  /** The events table with its packed (sec, event_id) version, replayed
+    * as `batches` part files. */
+  private[graft] def replay(spark: SparkSession, sfDir: String, batches: Int): Replay =
+    Replay.of(graft.core.Tables.events(spark, sfDir)
+      .select(col("user_id"), col("event_id"), col("event_type"), col("sec"),
+        // the guarded shared packer, not an inline pmod: folding an
+        // out-of-range event_id into a colliding version would let the
+        // strategies-agree checksum pass on tie-break luck rather than
+        // version semantics (q277's fail-loud contract)
+        graft.operators.Cdc.packedVersion(col("sec"), col("event_id"),
+          "scalestream").as("ver")), "scalestream", batches)
 }

@@ -265,10 +265,12 @@ object Recommender {
         Cross.r6(when(col("den") > 0.0, col("num") / col("den")).otherwise(2.5)).as("pred"))
   }
 
-  /** A prediction that counts toward RMSE: a number, neither null nor
-    * NaN (`!isnan(null)` alone is true, so a null would count as a match
-    * with zero error). */
-  def scored(pred: Column): Column = pred.isNotNull && !isnan(pred)
+  /** A prediction that counts toward RMSE: a finite number — not null,
+    * NaN or ±Infinity. `!isnan(null)` alone is true, so a null would
+    * count as a match with zero error; an infinite error would count in
+    * n but not in the sum, where `Cross.dsum`'s decimal cast nulls it. */
+  def scored(pred: Column): Column =
+    pred.isNotNull && !isnan(pred) && abs(pred) =!= Double.PositiveInfinity
 
   /** Per-decision-rule RMSE breakdown (P10 — reference
     * scripts/evaluate.py:104-121 re-filters predictions per rule):

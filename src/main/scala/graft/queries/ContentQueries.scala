@@ -300,6 +300,7 @@ object ContentQueries {
        |  (round((sqrt(${ds("(pred - stars) * (pred - stars)")} / COUNT(pred))) + 1e-9, 6) + 0.0) AS rmse,
        |  COUNT(pred) AS n
        |FROM preds JOIN gt USING (user_id, business_id)
+       |WHERE isfinite(pred)
        |GROUP BY decision
        |ORDER BY decision""".stripMargin) { (spark, dir) =>
     val (reviews, userProf, bizProf, pairs) = sharedInputs(spark, dir)

@@ -9,7 +9,7 @@ import graft.functions.HashFns
 import graft.operators.{Skew, TemporalJoins}
 import graft.operators.{SlidingSketches => SS}
 import graft.queries.MonitorGate.{Evict, Horizon, Unbounded}
-import graft.streaming.SlidingMonitor
+import graft.streaming.{Replay, SlidingMonitor}
 
 /** Event-stream operators in their batch form over `events`: tumbling and
   * sliding window aggregation, sessionization, keyed dedup, JSON
@@ -2168,7 +2168,7 @@ object EventQueries {
     val ev = Tables.events(spark, dir)
     val item = when(pmod(col("event_id"), lit(4)) === 0,
       concat(lit("u"), col("user_id"))).otherwise(col("event_type"))
-    val replay = MonitorGate.replay(ev.select(typeKey.as("key"),
+    val replay = Replay.of(ev.select(typeKey.as("key"),
       col("sec").cast("long").as("t"), item.cast("string").as("item")), "q321", 4)
     def cadence(maxFiles: Int, tag: String): DataFrame = {
       val (log, _) = MonitorGate.run(SlidingMonitor.decayedMgMonitor(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.model.{AlsModel, HybridModel, MlpRegressor, Recommender}
-import graft.streaming.EventStreams
+import graft.streaming.{EventStreams, Replay}
 
 /** MLlib-backed + streaming gate queries. ALS/GBT/MLP/MinHashLSH model
   * INTERNALS (factor values, tree scores, murmur bucket ids) are not
@@ -557,28 +557,8 @@ object MlQueries {
       | AND v.sec BETWEEN c.sec - 3600 AND c.sec
       |GROUP BY 1
       |ORDER BY hour""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.types._
-    val base = Tables.events(spark, dir)
-      .select("user_id", "event_id", "event_type", "sec")
-    val maxSec = base.agg(max("sec")).head().getLong(0)
-    // far-future sentinels that can never pair (distinct users, one per
-    // side) push the watermark past every real window — q185's margin
-    val flushSec = maxSec + 10L * 86400L
-    val sentinels = spark.range(1).select(
-        lit(-1L).as("user_id"), lit(-1L).as("event_id"),
-        lit("click").as("event_type"), lit(flushSec).as("sec"))
-      .unionByName(spark.range(1).select(
-        lit(-2L).as("user_id"), lit(-2L).as("event_id"),
-        lit("view").as("event_type"), lit(flushSec).as("sec")))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_joinagg_replay")
-    graft.core.TempPaths.register(tmp)
-    base.unionByName(sentinels).write.mode("overwrite").parquet(tmp.toString)
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("event_type", StringType), StructField("sec", LongType))))
-      .parquet(tmp.toString)
-      .withColumn("etime", col("sec").cast("timestamp"))
+    val stream = EventStreams.clickViewFlushReplay(spark, dir, "joinagg").getOrElse(
+      throw new IllegalArgumentException(s"q276 needs events in $dir"))
     val joined = EventStreams.clickViewJoinTimed(stream)
     val agg = joined
       .groupBy(window(col("click_time"), "1 hour"))
@@ -610,7 +590,7 @@ object MlQueries {
       .select(col("user_id"), col("event_id"), col("event_type"), col("sec"),
         graft.operators.Cdc.packedVersion(col("sec"), col("event_id"), "q277")
           .as("ver"))
-    val stream = MonitorGate.replay(base, "q277", 4).stream()
+    val stream = Replay.of(base, "q277", 4).stream()
     val table = graft.core.TempPaths.gatePath("upsert_table")
     // fresh state per run: the pid-keyed path is stable WITHIN a run
     // (recursive — the fold table holds bucket subdirs)
@@ -636,12 +616,12 @@ object MlQueries {
       .select(col("user_id"), col("event_id"), col("event_type"), col("sec"),
         graft.operators.Cdc.packedVersion(col("sec"), col("event_id"), "q303")
           .as("ver"))
-    val stream = MonitorGate.replay(base, "q303", 4).stream()
+    val stream = Replay.of(base, "q303", 4).stream()
     val table = graft.core.TempPaths.gatePath("upsert_log_table")
     graft.core.TempPaths.clearDir(table)
     EventStreams.runUpsertLogToCompletion(spark, stream, table,
-        key = "user_id", version = "ver", name = "q303_upsert_log",
-        compactEvery = 2)
+        name = "q303_upsert_log", compactEvery = 2)(
+        graft.operators.Cdc.compactLatest(_, "user_id", "ver"))
       .select("user_id", "event_id", "event_type", "sec")
       .orderBy("user_id")
   }
@@ -701,7 +681,7 @@ object MlQueries {
     val ev = Tables.events(spark, dir)
       .select("event_id", "user_id", "event_type", "sec", "value")
     val doubled = ev.unionByName(ev) // at-least-once: everything twice
-    val stream = MonitorGate.replay(doubled, "q290", 6).stream()
+    val stream = Replay.of(doubled, "q290", 6).stream()
       .withColumn("etime", col("sec").cast("timestamp"))
     val deduped = EventStreams.exactlyOnceByEventId(stream, extraCols = Seq("value"))
     val (upsert, ksCounts, kmvHourly) =

@@ -2,10 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
-import graft.core.{TempPaths, Tables}
-import graft.streaming.EventStreams
+import graft.core.Tables
+import graft.streaming.{EventStreams, Replay}
 
 /** The replay-and-verify harness of the streaming monitor gates
   * (streaming.SlidingMonitor's GK, MG, count-min and decayed-MG
@@ -16,17 +15,10 @@ import graft.streaming.EventStreams
   * declares only what differs: the projection, the monitor, the
   * live-cube read and the check; everything below is shared.
   *
-  * REPLAY. The projection is written to its own temp dir (deleted at
-  * JVM exit) and read back with `readStream` over its own schema made
-  * nullable (what a parquet round trip gives) at a fixed
-  * `maxFilesPerTrigger`. An unordered replay is `repartition(n)`, so
-  * trigger order is arbitrary. A time-ordered replay cuts the event
-  * range into 4 disjoint slices, one part file each, appended
-  * oldest-first. Their modification times are PINNED strictly
-  * increasing (an hour back, 1 s apart): FileStreamSource orders a
-  * batch's discoveries by mod-time, and sequential writes can share a
-  * millisecond, which would leave trigger order unspecified exactly
-  * where retention needs slices to arrive oldest-first.
+  * REPLAY ([[graft.streaming.Replay]]). An unordered replay is
+  * `repartition(n)`, so trigger order is arbitrary. A time-ordered
+  * replay cuts the event range into 4 disjoint slices appended
+  * oldest-first, which retention needs.
   *
   * HORIZON CONTRACT. With a retention horizon of H quanta over the
   * time-ordered replay, the window starts are the grid
@@ -55,61 +47,6 @@ import graft.streaming.EventStreams
   * from one aggregate over the per-key high-water marks left-joined to
   * the tombstoned keys. */
 private[queries] object MonitorGate {
-
-  /** Slices of a time-ordered replay. */
-  val Slices = 4
-
-  /** A written replay; [[stream]] reads it back as a file stream. */
-  final case class Replay(spark: SparkSession, dir: String, schema: StructType) {
-    def stream(maxFilesPerTrigger: Int = 1): DataFrame =
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .parquet(dir)
-  }
-
-  private def replayDir(name: String): String = TempPaths.registered(
-    java.nio.file.Files.createTempDirectory(s"graft_${name}_replay")).toString
-
-  private def nullable(s: StructType): StructType =
-    StructType(s.map(_.copy(nullable = true)))
-
-  /** Unordered replay: `df` written as `partitions` part files. */
-  def replay(df: DataFrame, name: String, partitions: Int): Replay = {
-    val dir = replayDir(name)
-    df.repartition(partitions).write.mode("overwrite").parquet(dir)
-    Replay(df.sparkSession, dir, nullable(df.schema))
-  }
-
-  /** Time-ordered replay: `project(ev)` in [[Slices]] slices of the
-    * event range [smin, smax] cut in `unit`-second steps, written
-    * oldest-first with pinned mod-times. */
-  def orderedReplay(ev: DataFrame, project: DataFrame => DataFrame,
-      name: String, b: Bounds, unit: Long): Replay = {
-    val (lo, hi) = (b.smin / unit, b.smax / unit)
-    val slot = expr(s"sec div $unit")
-    val dir = replayDir(name)
-    writeOrderedReplay((0 until Slices).map { i =>
-      project(ev.filter(slot >= lo + i * (hi - lo + 1) / Slices &&
-        slot < lo + (i + 1) * (hi - lo + 1) / Slices))
-    }, dir)
-    Replay(ev.sparkSession, dir, nullable(project(ev).schema))
-  }
-
-  /** Append each slice as one part file, mod-times pinned 1 s apart. */
-  private def writeOrderedReplay(slices: Seq[DataFrame], dir: String): Unit = {
-    val base = System.currentTimeMillis() - 3600L * 1000L
-    val seen = scala.collection.mutable.Set.empty[String]
-    slices.zipWithIndex.foreach { case (df, i) =>
-      df.coalesce(1).write.mode("append").parquet(dir)
-      Option(new java.io.File(dir).listFiles).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("part-") && !seen.contains(f.getName))
-        .foreach { f =>
-          require(f.setLastModified(base + i.toLong * 1000L),
-            s"cannot pin replay order on ${f.getName}")
-          seen += f.getName
-        }
-    }
-  }
 
   /** Event-time bounds, in seconds, from one scan. */
   final case class Bounds(smin: Long, smax: Long) {
@@ -165,11 +102,12 @@ private[queries] object MonitorGate {
     retention match {
       case Unbounded(grid, n) =>
         val starts = slidingStarts(b, grid, n)
-        val (log, _) = run(monitor(replay(project(ev), name, 4).stream()), name)
+        val (log, _) = run(monitor(Replay.of(project(ev), name, 4).stream()), name)
         verify(ev, log, starts).sorted
       case Horizon(h, step, key) =>
         val (log, _) = run(monitor(
-          orderedReplay(ev, project, name, b, Quanta.unit).stream()), name)
+          Replay.ordered(ev, project, name, b.smin, b.smax, Quanta.unit).stream()),
+          name)
         val live = key match {
           case None => log.filter(col("q") > b.qMax - h)
           case Some(k) =>
@@ -218,7 +156,7 @@ private[queries] object MonitorGate {
       horizon: Long, project: DataFrame => DataFrame,
       monitor: DataFrame => DataFrame): (DataFrame, DataFrame, DataFrame => DataFrame) = {
     val (log0, stateRows) = run(monitor(
-      orderedReplay(ev, project, name, b, clock.unit).stream()), name)
+      Replay.ordered(ev, project, name, b.smin, b.smax, clock.unit).stream()), name)
     val log = log0.localCheckpoint(true)
     val perKey = ev.select(key.as("key"), col("sec").cast("long").as("sec"))
       .groupBy("key").agg(clock.hw.as(clock.hwName))

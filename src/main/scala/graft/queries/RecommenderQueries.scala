@@ -293,7 +293,8 @@ object RecommenderQueries {
        |  LEFT JOIN uavg u ON g.user_id = u.user_id
        |  LEFT JOIN bavg b ON g.business_id = b.business_id)
        |SELECT (round((sqrt(${ds("(pred - stars) * (pred - stars)", 6)} / COUNT(pred))) + 1e-9, 6) + 0.0) AS rmse
-       |FROM preds JOIN gt USING (user_id, business_id)""".stripMargin) { (spark, dir) =>
+       |FROM preds JOIN gt USING (user_id, business_id)
+       |WHERE isfinite(pred)""".stripMargin) { (spark, dir) =>
     val r = Tables.reviews(spark, dir)
     val gt = Recommender.dedupReviews(r).filter(pmod(col("user_id"), lit(7)) === 3)
     val preds = Recommender.baselinePredict(gt.select("user_id", "business_id"), r)

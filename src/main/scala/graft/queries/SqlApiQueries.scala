@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.core.{Cross, Tables}
 import graft.functions.{GraftFunctions, TextSql, VectorSql}
+import graft.streaming.Replay
 
 /** Pure-SQL API gates: the graft_* function surface registered into the
   * session's FunctionRegistry and driven entirely through `spark.sql`,
@@ -314,7 +315,7 @@ object SqlApiQueries {
     import org.apache.spark.sql.functions.{col, expr}
     import graft.streaming.{EventStreams, SlidingMonitor}
     val ev = Tables.events(spark, dir)
-    val stream = MonitorGate.replay(ev.select(col("event_type").cast("string").as("key"),
+    val stream = Replay.of(ev.select(col("event_type").cast("string").as("key"),
       expr("sec div 3600").as("q"), col("user_id").cast("string").as("item")),
       "q323", 4).stream()
     EventStreams.runToCompletion(spark,
@@ -347,7 +348,7 @@ object SqlApiQueries {
     import org.apache.spark.sql.functions._
     import graft.streaming.{EventStreams, SlidingMonitor}
     val ev = Tables.events(spark, dir)
-    val stream = MonitorGate.replay(ev.select(col("event_type").cast("string").as("key"),
+    val stream = Replay.of(ev.select(col("event_type").cast("string").as("key"),
       expr("sec div 3600").as("q"), col("user_id").cast("string").as("item")),
       "q326", 4).stream()
     val emissions = SlidingMonitor.mgQuantumMonitor(stream, 32).toDF()
@@ -355,8 +356,8 @@ object SqlApiQueries {
     val path = graft.core.TempPaths.gatePath("q326_serving")
     graft.core.TempPaths.clearDir(path)
     val served = EventStreams.runUpsertLogToCompletion(spark, emissions,
-      path, key = "kq", version = "ver", name = "q326_monitor_serve",
-      compactEvery = 3, mode = "update")
+      path, name = "q326_monitor_serve", compactEvery = 3, mode = "update")(
+      graft.operators.Cdc.compactLatest(_, "kq", "ver"))
     served
       .select(col("key"), col("q"), col("n"),
         (size(col("entries")) <= 32).cast("long").as("k_ok"),
@@ -387,42 +388,28 @@ object SqlApiQueries {
       |FROM events GROUP BY 1, 2 ORDER BY key, q""".stripMargin) {
     (spark, dir) =>
     import org.apache.spark.sql.functions._
-    import graft.operators.{SlidingSketches => SS}
     import graft.streaming.{EventStreams, SlidingMonitor}
     val ev = Tables.events(spark, dir)
-    val stream = MonitorGate.replay(
-      ev.select(col("user_id"), col("event_type"), col("sec")), "q331", 4).stream()
-    val keyRows = SS.cmKeyRows(stream, col("user_id"), col("sec"), 3600L,
-      key = col("event_type"))
-    val emissions = SlidingMonitor.cmQuantumMonitor(keyRows,
-      depth = 4, width = 32).toDF()
+    val emissions = cmEmissions(ev, "q331")
     val path = graft.core.TempPaths.gatePath("q331_serving")
     graft.core.TempPaths.clearDir(path)
     // additive serving fold (the shared cmAdditiveReduce): a valid
     // one-shot associative reduce (reduce(reduce(A) ∪ B) =
     // reduce(A ∪ B)), and exactly the fold a redelivered delta would
     // corrupt
-    val reduce = (df: org.apache.spark.sql.DataFrame) =>
-      SlidingMonitor.cmAdditiveReduce(df)
+    val reduce = SlidingMonitor.cmAdditiveReduce _
     val saved = java.nio.file.Files.createTempDirectory("graft_redeliver_saved")
     graft.core.TempPaths.register(saved)
-    EventStreams.withStreamShuffleConf(spark, emissions) {
-      val q = emissions.writeStream.outputMode("update")
-        .queryName("q331_redeliver")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          val slice = batch.select("key", "q", "entries")
-          // keep the batch bytes so the post-compaction redelivery below
-          // replays the REAL rows, not a recomputation
-          slice.write.mode("overwrite").parquet(s"$saved/b$id")
-          EventStreams.foldLog(path, slice, id, compactEvery = 3)(reduce)
-          if (id == 1L) // at-least-once: duplicate of a still-LIVE batch
-            EventStreams.foldLog(path,
-              batch.sparkSession.read.parquet(s"$saved/b$id"), id,
-              compactEvery = 3)(reduce)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    EventStreams.drain(emissions, "q331_redeliver", "update") { (batch, id) =>
+      val slice = batch.select("key", "q", "entries")
+      // keep the batch bytes so the post-compaction redelivery below
+      // replays the REAL rows, not a recomputation
+      slice.write.mode("overwrite").parquet(s"$saved/b$id")
+      EventStreams.foldLog(path, slice, id, compactEvery = 3)(reduce)
+      if (id == 1L) // at-least-once: duplicate of a still-LIVE batch
+        EventStreams.foldLog(path,
+          batch.sparkSession.read.parquet(s"$saved/b$id"), id,
+          compactEvery = 3)(reduce)
     }
     // redeliver batch 0 AFTER a compaction consumed it: the manifest's
     // consumed-batchId ranges must no-op it
@@ -432,6 +419,18 @@ object SqlApiQueries {
     val direct = graft.operators.SlidingSketches.cmHourly(ev, col("user_id"),
       col("sec"), 3600L, depth = 4, width = 32, key = col("event_type"))
     cmCellsCheck(explodeCells(served, "cnt"), direct)
+  }
+
+  /** The per-event-type count-min monitor (depth 4, width 32) over a
+    * 4-file replay of `ev`: its delta emissions. */
+  private def cmEmissions(ev: org.apache.spark.sql.DataFrame,
+      name: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.col
+    val stream = Replay.of(
+      ev.select(col("user_id"), col("event_type"), col("sec")), name, 4).stream()
+    graft.streaming.SlidingMonitor.cmQuantumMonitor(
+      graft.operators.SlidingSketches.cmKeyRows(stream, col("user_id"), col("sec"),
+        3600L, key = col("event_type")), depth = 4, width = 32).toDF()
   }
 
   /** (key, q, entries) → (key, q, idx, cnt-as-`name`) cell rows. */
@@ -478,12 +477,7 @@ object SqlApiQueries {
     import graft.operators.{SlidingSketches => SS}
     import graft.streaming.{EventStreams, SlidingMonitor}
     val ev = Tables.events(spark, dir)
-    val stream = MonitorGate.replay(
-      ev.select(col("user_id"), col("event_type"), col("sec")), "q333", 4).stream()
-    val keyRows = SS.cmKeyRows(stream, col("user_id"), col("sec"), 3600L,
-      key = col("event_type"))
-    EventStreams.runToCompletion(spark,
-        SlidingMonitor.cmQuantumMonitor(keyRows, depth = 4, width = 32).toDF(),
+    EventStreams.runToCompletion(spark, cmEmissions(ev, "q333"),
         "q333_cm_emissions", mode = "update")
       .createOrReplaceTempView("graft_cm_emissions")
     val cube = spark.sql(monitorDeltaSumSql("graft_cm_emissions"))
@@ -516,26 +510,13 @@ object SqlApiQueries {
     import graft.operators.{SlidingSketches => SS}
     import graft.streaming.{EventStreams, SlidingMonitor}
     val ev = Tables.events(spark, dir)
-    val stream = MonitorGate.replay(
-      ev.select(col("user_id"), col("event_type"), col("sec")), "q345", 4).stream()
-    val keyRows = SS.cmKeyRows(stream, col("user_id"), col("sec"), 3600L,
-      key = col("event_type"))
-    val emissions = SlidingMonitor.cmQuantumMonitor(keyRows,
-      depth = 4, width = 32).toDF()
+    val emissions = cmEmissions(ev, "q345")
     val path = graft.core.TempPaths.gatePath("q345_serving")
     graft.core.TempPaths.clearDir(path)
-    val reduce = (df: org.apache.spark.sql.DataFrame) =>
-      SlidingMonitor.cmAdditiveReduce(df)
-    EventStreams.withStreamShuffleConf(spark, emissions) {
-      val q = emissions.writeStream.outputMode("update")
-        .queryName("q345_monitor_serve")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-          EventStreams.foldLog(path, batch.select("key", "q", "entries"), id,
-            compactEvery = 3)(reduce)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    val reduce = SlidingMonitor.cmAdditiveReduce _
+    EventStreams.drain(emissions, "q345_monitor_serve", "update") { (batch, id) =>
+      EventStreams.foldLog(path, batch.select("key", "q", "entries"), id,
+        compactEvery = 3)(reduce)
     }
     EventStreams.compactLog(spark, path)(reduce)
     val expected = EventStreams.readCompactedBase(spark, path)
@@ -587,8 +568,9 @@ object SqlApiQueries {
     val halfLife = 3600L
     val retention = 64L * halfLife
     val b = MonitorGate.bounds(ev)
-    val stream = MonitorGate.orderedReplay(ev, _.select(keyCol.as("key"),
-      col("sec").cast("long").as("t"), itemCol.as("item")), "q335", b, 1L).stream()
+    val stream = Replay.ordered(ev, _.select(keyCol.as("key"),
+      col("sec").cast("long").as("t"), itemCol.as("item")), "q335", b.smin, b.smax, 1L)
+      .stream()
     EventStreams.runToCompletion(spark,
         SlidingMonitor.decayedMgMonitor(stream, halfLife, 8, evictKeys = true,
           retentionHalfLives = 64L).toDF(),
@@ -641,7 +623,7 @@ object SqlApiQueries {
     import graft.streaming.{EventStreams, SlidingMonitor}
     GraftFunctions.register(spark)
     val ev = Tables.events(spark, dir)
-    val stream = MonitorGate.replay(ev.select(col("event_type").cast("string").as("key"),
+    val stream = Replay.of(ev.select(col("event_type").cast("string").as("key"),
       expr("sec div 3600").as("q"), col("value").cast("double").as("v")),
       "q336", 4).stream()
     EventStreams.runToCompletion(spark,

@@ -1341,28 +1341,17 @@ object TextAnalysis {
     graft.sources.ModelIO.saveVocab(
       graft.operators.Bpe.symbolVocab(docs, toksCol, mt), s"$artDir/vocab")
     val vocab = graft.sources.ModelIO.loadVocab(spark, s"$artDir/vocab")
-    val srcDir = graft.core.TempPaths.gatePath("q343_src")
-    graft.core.TempPaths.clearDir(srcDir)
-    (0 until 3).foreach { g =>
-      docs.filter(col("doc_id") % 3 === g).coalesce(1)
-        .write.mode("append").parquet(srcDir)
-    }
+    val stream = graft.streaming.Replay.sliced(
+      (0 until 3).map(g => docs.filter(col("doc_id") % 3 === g)), "q343").stream()
     val outDir = graft.core.TempPaths.gatePath("q343_encoded")
     graft.core.TempPaths.clearDir(outDir)
     val reduce = (df: org.apache.spark.sql.DataFrame) =>
       graft.operators.Cdc.compactLatest(df, "doc_id", "ver")
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", 1).parquet(srcDir)
-    EventStreams.withStreamShuffleConf(spark, stream.toDF()) {
-      val q = stream.writeStream.outputMode("append").queryName("q343_encode")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          val enc = graft.operators.Bpe.encodeDocs(batch, col("doc_id"),
-              TextFns.tokens(col("text")), mt, Some(vocab))
-            .withColumn("ver", lit(batchId))
-          EventStreams.foldLog(outDir, enc, batchId, compactEvery = 2)(reduce)
-          ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
+    EventStreams.drain(stream, "q343_encode") { (batch, batchId) =>
+      val enc = graft.operators.Bpe.encodeDocs(batch, col("doc_id"),
+          TextFns.tokens(col("text")), mt, Some(vocab))
+        .withColumn("ver", lit(batchId))
+      EventStreams.foldLog(outDir, enc, batchId, compactEvery = 2)(reduce)
     }
     encodedIds(EventStreams.readLog(spark, outDir)(reduce))
   }

@@ -172,6 +172,19 @@ object EventStreams {
         try body finally spark.conf.set(key, prev)
     }
 
+  /** Drain a finite stream: run it to completion, handing each
+    * micro-batch and its id to `onBatch`, under the derived shuffle
+    * sizing ([[withStreamShuffleConf]]). The one `foreachBatch` runner:
+    * every serving fold's per-trigger path passes here. */
+  def drain(stream: DataFrame, name: String, mode: String = "append")(
+      onBatch: (DataFrame, Long) => Unit): Unit =
+    withStreamShuffleConf(stream.sparkSession, stream) {
+      val q = stream.writeStream.outputMode(mode).queryName(name)
+        .foreachBatch { (batch: DataFrame, id: Long) => onBatch(batch, id) }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+
   /** Sliding windowed aggregation: 1-hour windows every 30 minutes, so
     * each event lands in exactly two windows. Mirrors the batch sliding
     * semantics (q54's moving frame) in event-time streaming form. */
@@ -223,23 +236,20 @@ object EventStreams {
     * rows-only check. */
   def replayOrdered(spark: SparkSession, dir: String): DataFrame = {
     val schema = eventsFileSchema(spark, dir)
-    // unique per call (two replay streams can be live in one query, so a
-    // stable overwrite path is unsafe here) but deleted at JVM exit
-    val tmp = java.nio.file.Files.createTempDirectory("graft_events_replay")
-    graft.core.TempPaths.register(tmp)
     val ordered = spark.read.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .withColumn("sec", Tables.floorEpochSec(schema("ts").dataType))
       .drop("ts")
       .orderBy("sec", "event_id")
-    ordered.coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
+    // unique per call: two replay streams can be live in one query
+    val replay = Replay.of(ordered.coalesce(1), "events")
     // the determinism argument requires ONE mapper: a file larger than
     // the scan split size would be read by several tasks and the
     // shuffle-fetch interleaving at the state partition would break
     // "first arrived ≡ earliest event". Enforce rather than assume —
     // fail loudly with the remedy instead of going flaky.
-    val bytes = java.nio.file.Files.walk(tmp).filter(_.toString.endsWith(".parquet"))
+    val bytes = java.nio.file.Files.walk(java.nio.file.Paths.get(replay.dir))
+      .filter(_.toString.endsWith(".parquet"))
       .mapToLong(java.nio.file.Files.size).sum()
     val split = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
       .stripSuffix("b").trim.toLong
@@ -247,11 +257,7 @@ object EventStreams {
       s"replayOrdered needs a single-split file for deterministic arrival order: " +
         s"replay is $bytes bytes vs maxPartitionBytes=$split — raise " +
         "spark.sql.files.maxPartitionBytes or replay a smaller slice")
-    spark.readStream
-      .schema(ordered.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(tmp.toString)
-      .withColumn("etime", col("sec").cast("timestamp"))
+    replay.stream().withColumn("etime", col("sec").cast("timestamp"))
   }
 
   /** Stream-stream event-time interval join: each click pairs with the
@@ -271,7 +277,14 @@ object EventStreams {
     * composable form for join → windowed-aggregation chains (q276),
     * where the downstream window needs a watermarked event-time column
     * to group on. */
-  def clickViewJoinTimed(events: DataFrame): DataFrame = {
+  def clickViewJoinTimed(events: DataFrame): DataFrame =
+    clickViewJoined(events, "inner")
+      .select("user_id", "click_event", "click_sec", "view_event", "view_sec",
+        "click_time")
+
+  /** Watermarked clicks `joinType`-joined to the same user's views in
+    * the click's 1-hour look-back. */
+  private def clickViewJoined(events: DataFrame, joinType: String): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_event"),
         col("sec").as("click_sec"), col("etime").as("click_time"))
@@ -281,11 +294,10 @@ object EventStreams {
         col("sec").as("view_sec"), col("etime").as("view_time"))
       .withWatermark("view_time", "1 hour")
     clicks.join(views,
-        col("user_id") === col("v_user") &&
-          col("view_time") >= col("click_time") - expr("INTERVAL 1 HOUR") &&
-          col("view_time") <= col("click_time"))
-      .select("user_id", "click_event", "click_sec", "view_event", "view_sec",
-        "click_time")
+      col("user_id") === col("v_user") &&
+        col("view_time") >= col("click_time") - expr("INTERVAL 1 HOUR") &&
+        col("view_time") <= col("click_time"),
+      joinType)
   }
 
   /** LEFT-OUTER stream-stream interval join — [[clickViewJoin]] plus
@@ -298,56 +310,50 @@ object EventStreams {
     * [[clickViewLeftOuterComplete]]'s sentinel discipline). The result
     * SET is still replay-order independent: matched rows are the inner
     * join, and the viewless-click set is its exact complement. */
-  def clickViewLeftOuter(events: DataFrame): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id"), col("event_id").as("click_event"),
-        col("sec").as("click_sec"), col("etime").as("click_time"))
-      .withWatermark("click_time", "1 hour")
-    val views = events.filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_event"),
-        col("sec").as("view_sec"), col("etime").as("view_time"))
-      .withWatermark("view_time", "1 hour")
-    clicks.join(views,
-        col("user_id") === col("v_user") &&
-          col("view_time") >= col("click_time") - expr("INTERVAL 1 HOUR") &&
-          col("view_time") <= col("click_time"),
-        "leftOuter")
+  def clickViewLeftOuter(events: DataFrame): DataFrame =
+    clickViewJoined(events, "leftOuter")
       .select("user_id", "click_event", "click_sec", "view_event", "view_sec")
+
+  /** The click/view replay of a finite run: the events table's
+    * (user_id, event_id, event_type, sec) plus ONE far-future sentinel
+    * event per side (a click for the left watermark, a view for the
+    * right), streamed in one trigger with `etime`; None for an empty
+    * table. Spark's no-new-data batch after it then pushes both
+    * watermarks past every real window, so every watermark-driven
+    * emission (a windowed count, a viewless click's null row) reaches
+    * the sink before the run returns. Sentinels carry negative user ids
+    * and can never pair. */
+  def clickViewFlushReplay(spark: SparkSession, dir: String,
+      name: String): Option[DataFrame] = {
+    val base = Tables.events(spark, dir)
+      .select("user_id", "event_id", "event_type", "sec")
+    val maxRow = base.agg(max("sec")).head()
+    if (maxRow.isNullAt(0)) None
+    else {
+      // 10 days past the data: the exact eviction threshold is
+      // watermark − join-range (boundary-tight at small margins); a
+      // sentinel is not data, so take a margin no strictness rule can eat
+      val flushSec = maxRow.getLong(0) + 10L * 86400L
+      val sentinels = spark.range(1).select(
+          lit(-1L).as("user_id"), lit(-1L).as("event_id"),
+          lit("click").as("event_type"), lit(flushSec).as("sec"))
+        .unionByName(spark.range(1).select(
+          lit(-2L).as("user_id"), lit(-2L).as("event_id"),
+          lit("view").as("event_type"), lit(flushSec).as("sec")))
+      Some(Replay.of(base.unionByName(sentinels), name).streamAll
+        .withColumn("etime", col("sec").cast("timestamp")))
+    }
   }
 
-  /** Finite-replay runner for [[clickViewLeftOuter]]: rewrites the
-    * events table plus ONE far-future sentinel event per side (a click
-    * for the left watermark, a view for the right) to a temp parquet,
-    * streams it, and lets Spark's no-new-data batch evict every real
-    * click's state — so each viewless click's null row actually reaches
-    * the sink before processAllAvailable returns. Sentinels carry
-    * negative user ids and filter back out; their own state never
+  /** Finite-replay runner for [[clickViewLeftOuter]] over
+    * [[clickViewFlushReplay]]: each viewless click's null row reaches
+    * the sink before the run returns, and the sentinels' own state never
     * crosses the final watermark, so they cannot leak into the result. */
   def clickViewLeftOuterComplete(spark: SparkSession, dir: String,
       queryName: String = "clicks_outer"): DataFrame = {
-    val base = graft.core.Tables.events(spark, dir)
-      .select("user_id", "event_id", "event_type", "sec")
-    val maxRow = base.agg(max("sec")).head()
-    if (maxRow.isNullAt(0)) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Nil))
-    val maxSec = maxRow.getLong(0)
-    // 10 days past the data: the exact eviction threshold is
-    // watermark − join-range (boundary-tight at small margins); a
-    // sentinel is not data, so take a margin no strictness rule can eat
-    val flushSec = maxSec + 10L * 86400L
-    val sentinels = spark.range(1).select(
-        lit(-1L).as("user_id"), lit(-1L).as("event_id"),
-        lit("click").as("event_type"), lit(flushSec).as("sec"))
-      .unionByName(spark.range(1).select(
-        lit(-2L).as("user_id"), lit(-2L).as("event_id"),
-        lit("view").as("event_type"), lit(flushSec).as("sec")))
-    val replayed = base.unionByName(sentinels)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_outer_replay")
-    graft.core.TempPaths.register(tmp)
-    replayed.write.mode("overwrite").parquet(tmp.toString)
-    val stream = spark.readStream.schema(replayed.schema).parquet(tmp.toString)
-      .withColumn("etime", col("sec").cast("timestamp"))
+    val stream = clickViewFlushReplay(spark, dir, "outer").getOrElse(
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StructType(Nil)))
     // The sentinel filter runs on the MATERIALIZED result, not inside
     // the streaming plan: a pre-sink filter(user_id >= 0) would be
     // pushed below the join into BOTH scans (the equi-key lets Catalyst
@@ -445,18 +451,11 @@ object EventStreams {
   def runUpsertToCompletion(spark: SparkSession, stream: DataFrame,
       path: String, key: String, version: String, name: String,
       buckets: Int = 16): DataFrame = {
-    withStreamShuffleConf(spark, stream) {
-      val q = stream.writeStream
-        .outputMode("append").queryName(name)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          foldParquet(path, batch, key, buckets) { (snapshot, slice) =>
-            graft.operators.Cdc.compactLatest(
-              snapshot.unionByName(slice), key, version)
-          }
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    drain(stream, name) { (batch, _) =>
+      foldParquet(path, batch, key, buckets) { (snapshot, slice) =>
+        graft.operators.Cdc.compactLatest(
+          snapshot.unionByName(slice), key, version)
+      }
     }
     readFold(spark, path)
   }
@@ -515,23 +514,18 @@ object EventStreams {
     * Writers must own disjoint batchId spaces (each delta dir is one
     * writer's idempotent overwrite target). PipelineSpec drives 4
     * concurrent writers through fold+compact races and checks the
-    * final table equals the single-writer fold. */
+    * final table equals the single-writer fold.
+    *
+    * `reduce` is the table's fold, with [[foldLog]]'s contract:
+    * latest-wins (`Cdc.compactLatest` on a key and version) for an
+    * upsert table, or an additive re-aggregation (the count-min
+    * serving cube's `SlidingMonitor.cmAdditiveReduce`). */
   def runUpsertLogToCompletion(spark: SparkSession, stream: DataFrame,
-      path: String, key: String, version: String, name: String,
-      compactEvery: Int = 4, mode: String = "append",
-      compactBytes: Long = Long.MaxValue): DataFrame = {
+      path: String, name: String, compactEvery: Int = 4, mode: String = "append",
+      compactBytes: Long = Long.MaxValue)(reduce: DataFrame => DataFrame): DataFrame = {
     require(compactEvery >= 2, s"compactEvery out of range: $compactEvery")
-    val reduce = (df: DataFrame) =>
-      graft.operators.Cdc.compactLatest(df, key, version)
-    withStreamShuffleConf(spark, stream) {
-      val q = stream.writeStream
-        .outputMode(mode).queryName(name)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          foldLog(path, batch, batchId, compactEvery, compactBytes)(reduce)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally q.stop()
+    drain(stream, name, mode) { (batch, batchId) =>
+      foldLog(path, batch, batchId, compactEvery, compactBytes)(reduce)
     }
     readLog(spark, path)(reduce)
   }
@@ -708,9 +702,7 @@ object EventStreams {
     // localCheckpoint-then-overwrite discipline as foldParquet);
     // nanoTime suffix keeps rival compactors' physical dirs disjoint —
     // uniqueness only, never ordering (generations order the chain)
-    val merged = reduce(spark.read.parquet(m0.live.map(n =>
-        new java.io.File(path, n).toString): _*))
-      .localCheckpoint(true)
+    val merged = reduce(readLive(spark, path, m0.live)).localCheckpoint(true)
     val baseName = f"base_${gen0 + 1}%09d_${System.nanoTime()}%x"
     merged.write.mode("overwrite").parquet(new java.io.File(path, baseName).toString)
     val baseBytes = dirSize(new java.io.File(path, baseName))
@@ -781,19 +773,27 @@ object EventStreams {
       reduce: DataFrame => DataFrame): DataFrame = {
     var attempt = 0
     while (true) {
-      val m = readManifest(path)
-      require(m.live.nonEmpty, s"log table at $path has no committed manifest")
+      val m = committedManifest(path)
       beforeRead()
       try {
-        return reduce(spark.read.parquet(m.live.map(n =>
-          new java.io.File(path, n).toString): _*))
-          .localCheckpoint(true)
+        return reduce(readLive(spark, path, m.live)).localCheckpoint(true)
       } catch {
         case e: Throwable if attempt < 3 && isSweptRead(e) => attempt += 1
       }
     }
     throw new IllegalStateException("unreachable")
   }
+
+  /** The latest manifest; it must have committed a generation. */
+  private def committedManifest(path: String): LogManifest = {
+    val m = readManifest(path)
+    require(m.live.nonEmpty, s"log table at $path has no committed manifest")
+    m
+  }
+
+  /** The bare parquet relation over `live` generations of the table. */
+  private def readLive(spark: SparkSession, path: String, live: Seq[String]): DataFrame =
+    spark.read.parquet(live.map(n => new java.io.File(path, n).toString): _*)
 
   /** PLAN-VISIBLE read of a FULLY-COMPACTED log table: requires the
     * manifest's live set to be exactly one base generation and returns
@@ -807,13 +807,12 @@ object EventStreams {
     * a rival compactor. Raises (rather than silently merging) when
     * live deltas exist — use [[readLog]] there. */
   def readCompactedBase(spark: SparkSession, path: String): DataFrame = {
-    val m = readManifest(path)
-    require(m.live.nonEmpty, s"log table at $path has no committed manifest")
+    val m = committedManifest(path)
     require(m.live.size == 1 && m.live.head.startsWith("base_"),
       s"log table at $path is not fully compacted " +
         s"(live = ${m.live.mkString(", ")}) — run compactLog first or " +
         "read through readLog")
-    spark.read.parquet(new java.io.File(path, m.live.head).toString)
+    readLive(spark, path, m.live)
   }
 
   /** PLAN-VISIBLE read PINNED to one manifest generation — the serving
@@ -848,12 +847,9 @@ object EventStreams {
     * action in that retry. */
   def readLogPinned(spark: SparkSession, path: String)(
       reduce: DataFrame => DataFrame): DataFrame = {
-    val m = readManifest(path)
-    require(m.live.nonEmpty, s"log table at $path has no committed manifest")
-    if (m.live.size == 1 && m.live.head.startsWith("base_"))
-      spark.read.parquet(new java.io.File(path, m.live.head).toString)
-    else reduce(spark.read.parquet(m.live.map(n =>
-      new java.io.File(path, n).toString): _*))
+    val m = committedManifest(path)
+    if (m.live.size == 1 && m.live.head.startsWith("base_")) readLive(spark, path, m.live)
+    else reduce(readLive(spark, path, m.live))
   }
 
   /** Execute `use` against a pinned read, retrying resolve + action
@@ -972,50 +968,43 @@ object EventStreams {
     // fresh state per run: the pid-keyed base is stable WITHIN a run
     // (recursive — the fold tables hold bucket subdirs)
     Seq(upsertPath, ksPath, kmvPath).foreach(graft.core.TempPaths.clearDir)
-    withStreamShuffleConf(spark, deduped) {
-    val q = deduped.writeStream
-      .outputMode("append").queryName(name)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        // one materialization feeds all three folds
-        val b = batch0.localCheckpoint(true)
-        val withVer = b.select(col("user_id"), col("event_id"),
-          col("event_type"), col("sec"),
-          graft.operators.Cdc.packedVersion(col("sec"), col("event_id"), name)
-            .as("ver"))
-        val bc = ksValueCountsPerKey(b, col("event_type"),
-          pmod(col("event_id"), lit(2)), col("value"))
-        val bh = graft.operators.Sketches.kmvSketch(
-          b, expr("sec div 3600"), col("user_id"), 64)
-        // The three folds touch DISJOINT tables off the one checkpointed
-        // batch, so their job chains run CONCURRENTLY — per-batch wall is
-        // max(fold) instead of sum(fold). This is the production shape
-        // too: a foreachBatch fan-out that serializes independent sink
-        // maintenance wastes exactly the scheduler's ability to overlap
-        // small jobs (q290 spends its wall on per-batch job latency, not
-        // rows — SCALING.md round 9 measured α = 0.02 across 10× data).
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val folds = Seq(
-          Future(foldParquet(upsertPath, withVer, "user_id") { (snap, slice) =>
-            graft.operators.Cdc.compactLatest(
-              snap.unionByName(slice), "user_id", "ver")
-          }),
-          Future(foldParquet(ksPath, bc, "key") { (snap, slice) =>
-            snap.unionByName(slice).groupBy("key", "v")
-              .agg(sum("c1").as("c1"), sum("c2").as("c2"))
-          }),
-          Future(foldParquet(kmvPath, bh, "key") { (snap, slice) =>
-            snap.unionByName(slice)
-              .select(col("key"), explode(col("sketch")).as("h"))
-              .groupBy("key")
-              .agg(graft.plans.Kmv.minValues(col("h"), 64).as("sketch"))
-          }))
-        Await.result(Future.sequence(folds), Duration.Inf)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    drain(deduped, name) { (batch0, _) =>
+      // one materialization feeds all three folds
+      val b = batch0.localCheckpoint(true)
+      val withVer = b.select(col("user_id"), col("event_id"),
+        col("event_type"), col("sec"),
+        graft.operators.Cdc.packedVersion(col("sec"), col("event_id"), name)
+          .as("ver"))
+      val bc = ksValueCountsPerKey(b, col("event_type"),
+        pmod(col("event_id"), lit(2)), col("value"))
+      val bh = graft.operators.Sketches.kmvSketch(
+        b, expr("sec div 3600"), col("user_id"), 64)
+      // The three folds touch DISJOINT tables off the one checkpointed
+      // batch, so their job chains run CONCURRENTLY — per-batch wall is
+      // max(fold) instead of sum(fold). This is the production shape
+      // too: a foreachBatch fan-out that serializes independent sink
+      // maintenance wastes exactly the scheduler's ability to overlap
+      // small jobs (q290 spends its wall on per-batch job latency, not
+      // rows — SCALING.md round 9 measured α = 0.02 across 10× data).
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration.Duration
+      val folds = Seq(
+        Future(foldParquet(upsertPath, withVer, "user_id") { (snap, slice) =>
+          graft.operators.Cdc.compactLatest(
+            snap.unionByName(slice), "user_id", "ver")
+        }),
+        Future(foldParquet(ksPath, bc, "key") { (snap, slice) =>
+          snap.unionByName(slice).groupBy("key", "v")
+            .agg(sum("c1").as("c1"), sum("c2").as("c2"))
+        }),
+        Future(foldParquet(kmvPath, bh, "key") { (snap, slice) =>
+          snap.unionByName(slice)
+            .select(col("key"), explode(col("sketch")).as("h"))
+            .groupBy("key")
+            .agg(graft.plans.Kmv.minValues(col("h"), 64).as("sketch"))
+        }))
+      Await.result(Future.sequence(folds), Duration.Inf)
     }
     (readFold(spark, upsertPath), readFold(spark, ksPath),
       readFold(spark, kmvPath))

@@ -193,21 +193,14 @@ object Sessionize {
     val maxSec = maxRow.getLong(0)
     val flush = events.select("user_id").distinct()
       .select(col("user_id"), lit(-1L).as("event_id"), lit(maxSec + gapSeconds + 1).as("sec"))
-    // unique per call (replay source stays live for the query) but
-    // deleted at JVM exit
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sess_replay")
-    graft.core.TempPaths.register(tmp)
-    events.toDF().unionByName(flush).write.mode("overwrite").parquet(tmp.toString)
-    val replay = spark.readStream
-      .schema(org.apache.spark.sql.Encoders.product[Event].schema)
-      .parquet(tmp.toString).as[Event]
+    val replay = Replay.of(events.toDF().unionByName(flush), "sess")
+      .copy(schema = org.apache.spark.sql.Encoders.product[Event].schema)
     val out = EventStreams.runToCompletion(spark,
-      sessionizedStream(replay, gapSeconds).toDF(), queryName, mode = "append")
+      sessionizedStream(replay.streamAll.as[Event], gapSeconds).toDF(), queryName,
+      mode = "append")
     // the memory sink holds the result; the replay copy is dead weight —
     // delete it so repeated gate runs don't accumulate temp copies
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(tmp).iterator().asScala.toSeq.reverse
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    graft.core.TempPaths.clearDir(replay.dir)
     out
   }
 

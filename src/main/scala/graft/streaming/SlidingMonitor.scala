@@ -2,7 +2,8 @@ package graft.streaming
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.functions.{col, timestamp_seconds}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.SlidingRows.{CmCell, GkSkR, MgEntry}
@@ -149,37 +150,86 @@ object SlidingMonitor {
       "key eviction requires a finite horizon")
   }
 
-  /** Shared key-eviction plumbing (all three monitors use it
-    * identically): EventTimeTimeout needs a watermarked attribute in
-    * the stateful operator's child, derived here from the partial's
-    * quantum (its start, zero delay) — the extra column rides beside
-    * the typed partials and never enters the fold. */
-  private def watermarked(parts: DataFrame, quantumSec: Long): DataFrame =
+  /** A quantum monitor's pre-shuffle partial: one (partition, key,
+    * quantum) summary. */
+  sealed trait QuantumPart { def key: String; def q: Long }
+
+  /** A quantum monitor's per-key state: its emission version and its
+    * high-water quantum. */
+  sealed trait QuantumState { def ver: Long; def qMax: Long }
+
+  /** The one stateful skeleton of the GK, MG and count-min monitors:
+    * `cols` of the stream read as `I` rows, pre-folded per partition
+    * into `P` partials, then folded per key into `S` state with
+    * Update-mode `O` emissions. `fold` is one key's one-trigger fold
+    * given the admission floor, `tombstone(key, ver)` the eviction
+    * emission. With `evictKeys` the skeleton owns the key-eviction
+    * plumbing the three share:
+    *   - the watermark: EventTimeTimeout needs a watermarked attribute
+    *     in the stateful operator's child, derived from the partial's
+    *     quantum (its start, zero delay); the extra column rides beside
+    *     the typed partials and never enters the fold;
+    *   - the tombstone on timeout: the key's newest quantum is a full
+    *     horizon behind the watermark, so every quantum it holds is out
+    *     of horizon;
+    *   - the admission floor: a quantum a full horizon behind the
+    *     watermark drops on arrival. It was already evicted if its key
+    *     ever held it (eviction implies the watermark passed every held
+    *     quantum + horizon), so admitting it would resurrect a partial
+    *     quantum under a re-created key;
+    *   - the re-armed timeout at (high-water quantum + horizon)'s
+    *     start: admitted data always lands it strictly past the current
+    *     watermark (the floor guarantees q ≥ wmQ − horizon + 1), and
+    *     the max() guards the degenerate boundary. */
+  private def quantumMonitor[I: Encoder, P <: QuantumPart: Encoder,
+      S <: QuantumState: Encoder, O: Encoder](stream: DataFrame, cols: Seq[String],
+      horizonQuanta: Long, evictKeys: Boolean, quantumSec: Long, empty: S,
+      tombstone: (String, Long) => O)(prefold: Iterator[I] => Iterator[P])(
+      fold: (Seq[P], S, Long) => (S, Seq[O])): Dataset[O] = {
+    requireEvictableHorizon(evictKeys, horizonQuanta, quantumSec)
+    val timeout =
+      if (evictKeys) GroupStateTimeout.EventTimeTimeout
+      else GroupStateTimeout.NoTimeout
+    val parts0 = stream.select(cols.head, cols.tail: _*).as[I].mapPartitions(prefold)
+    val parts = if (!evictKeys) parts0 else parts0.toDF()
+      .withColumn("ets", timestamp_seconds(col("q") * quantumSec))
+      .withWatermark("ets", "0 seconds").as[P]
     parts
-      .withColumn("ets", org.apache.spark.sql.functions.timestamp_seconds(
-        org.apache.spark.sql.functions.col("q") * quantumSec))
-      .withWatermark("ets", "0 seconds")
+      .groupByKey((p: P) => p.key)(Encoders.STRING)
+      .flatMapGroupsWithState(OutputMode.Update, timeout) {
+        (key: String, parts: Iterator[P], state: GroupState[S]) =>
+          if (evictKeys && state.hasTimedOut) {
+            val ver = state.getOption.map(_.ver).getOrElse(0L) + 1
+            state.remove()
+            Iterator.single(tombstone(key, ver))
+          } else {
+            val ps = parts.toSeq
+            if (ps.isEmpty) Iterator.empty
+            else {
+              val floorQ =
+                if (!evictKeys) Long.MinValue
+                else state.getCurrentWatermarkMs() / (quantumSec * 1000L) - horizonQuanta + 1
+              val (st2, outs) = fold(ps, state.getOption.getOrElse(empty), floorQ)
+              state.update(st2)
+              if (evictKeys) state.setTimeoutTimestamp(math.max(
+                (st2.qMax + horizonQuanta) * quantumSec * 1000L,
+                state.getCurrentWatermarkMs() + 1L))
+              outs.iterator
+            }
+          }
+      }
+  }
 
-  /** The watermark-derived admission floor: a quantum a full horizon
-    * behind the global watermark must drop on arrival — it was already
-    * evicted if its key ever held it (eviction implies the watermark
-    * passed every held quantum + horizon), so admitting it would
-    * resurrect a partial quantum under a re-created key. */
-  private def admissionFloor(state: GroupState[_], evictKeys: Boolean,
-      quantumSec: Long, horizonQuanta: Long): Long =
-    if (evictKeys)
-      state.getCurrentWatermarkMs() / (quantumSec * 1000L) - horizonQuanta + 1
-    else Long.MinValue
-
-  /** Arm the key's event-time timeout at (its high-water quantum +
-    * horizon)'s start; admitted data always lands it strictly past the
-    * current watermark (the admission floor guarantees q ≥ wmQ −
-    * horizon + 1), and the max() guards the degenerate boundary. */
-  private def armEviction(state: GroupState[_], qMax: Long,
-      horizonQuanta: Long, quantumSec: Long): Unit =
-    state.setTimeoutTimestamp(math.max(
-      (qMax + horizonQuanta) * quantumSec * 1000L,
-      state.getCurrentWatermarkMs() + 1L))
+  /** The head of every quantum fold: the key's new high-water quantum,
+    * the eviction boundary (the horizon cut, no lower than the admission
+    * floor `floorQ`; quanta below it leave state) and the partials at
+    * or past it grouped by quantum, oldest first. */
+  private def horizonCut[P <: QuantumPart](parts: Seq[P], qMax0: Long,
+      horizonQuanta: Long, floorQ: Long): (Long, Long, Seq[(Long, Seq[P])]) = {
+    val qMax = math.max(qMax0, parts.iterator.map(_.q).max)
+    val cut = math.max(cutoffQ(qMax, horizonQuanta), floorQ)
+    (qMax, cut, parts.filter(_.q >= cut).groupBy(_.q).toSeq.sortBy(_._1))
+  }
 
   // ------------------------------------------------------------------
   // GK quantile monitor
@@ -187,12 +237,13 @@ object SlidingMonitor {
 
   final case class In(key: String, q: Long, v: Double)
   final case class MonState(quanta: Map[Long, Seq[GkSkR]], ver: Long, qMax: Long)
+    extends QuantumState
   final case class Out(key: String, q: Long, ver: Long, sk: GkSkR)
 
   /** Pre-shuffle partial: one exact, once-pruned batch summary per
     * (partition, key, quantum) — the only row shape that crosses the
     * exchange into the stateful stage. */
-  final case class GkPart(key: String, q: Long, sk: GkSkR)
+  final case class GkPart(key: String, q: Long, sk: GkSkR) extends QuantumPart
 
   private def levelFor(n: Long, bufCap: Int): Int = {
     var l = 0
@@ -222,14 +273,12 @@ object SlidingMonitor {
   private def foldKey(parts: Seq[GkPart], st: MonState, m: Int,
       horizonQuanta: Long, floorQ: Long = Long.MinValue): (MonState, Seq[Out]) = {
     val bufCap = math.max(2048, m)
-    val qMax = math.max(st.qMax, parts.iterator.map(_.q).max)
-    val cut = math.max(cutoffQ(qMax, horizonQuanta), floorQ)
-    val live = parts.filter(_.q >= cut)
+    val (qMax, cut, live) = horizonCut(parts, st.qMax, horizonQuanta, floorQ)
     var quanta = st.quanta.filter { case (q, _) => q >= cut }
     if (live.isEmpty) (MonState(quanta, st.ver, qMax), Nil)
     else {
       val ver = st.ver + 1
-      val outs = live.groupBy(_.q).toSeq.sortBy(_._1).map { case (q, ps) =>
+      val outs = live.map { case (q, ps) =>
         val gst = new GkState(bufCap, m)
         quanta.getOrElse(q, Nil).zipWithIndex.foreach { case (lv, i) =>
           if (lv.n > 0) {
@@ -248,7 +297,7 @@ object SlidingMonitor {
         (q, GkSkR.of(gst.result()))
       }
       (MonState(quanta, ver, qMax),
-        outs.map { case (q, sk) => Out(live.head.key, q, ver, sk) })
+        outs.map { case (q, sk) => Out(parts.head.key, q, ver, sk) })
     }
   }
 
@@ -283,40 +332,13 @@ object SlidingMonitor {
   def gkQuantumMonitor(stream: DataFrame, m: Int,
       horizonQuanta: Long = Long.MaxValue,
       evictKeys: Boolean = false, quantumSec: Long = 3600L): Dataset[Out] = {
-    requireEvictableHorizon(evictKeys, horizonQuanta, quantumSec)
     val spark = stream.sparkSession
     import spark.implicits._
-    val timeout =
-      if (evictKeys) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    val parts0 = stream.select("key", "q", "v").as[In]
-      .mapPartitions(rows => gkPrefold(rows, m))
-    val parts = if (evictKeys) watermarked(parts0.toDF(), quantumSec).as[GkPart]
-      else parts0
-    parts
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Update, timeout) {
-        (key: String, parts: Iterator[GkPart], state: GroupState[MonState]) =>
-          if (evictKeys && state.hasTimedOut) {
-            // the key's newest quantum is a full horizon behind the
-            // watermark ⇒ every quantum it holds is out of horizon
-            val ver = state.getOption.map(_.ver).getOrElse(0L) + 1
-            state.remove()
-            Iterator.single(Out(key, -1L, ver, GkSkR(0L, Nil)))
-          } else {
-            val ps = parts.toSeq
-            if (ps.isEmpty) Iterator.empty
-            else {
-              val st = state.getOption.getOrElse(MonState(Map.empty, 0L, Long.MinValue))
-              val floorQ = admissionFloor(state, evictKeys, quantumSec,
-                horizonQuanta)
-              val (st2, outs) = foldKey(ps, st, m, horizonQuanta, floorQ)
-              state.update(st2)
-              if (evictKeys) armEviction(state, st2.qMax, horizonQuanta, quantumSec)
-              outs.iterator
-            }
-          }
-      }
+    quantumMonitor[In, GkPart, MonState, Out](stream, Seq("key", "q", "v"),
+      horizonQuanta, evictKeys, quantumSec, MonState(Map.empty, 0L, Long.MinValue),
+      (key, ver) => Out(key, -1L, ver, GkSkR(0L, Nil)))(
+      rows => gkPrefold(rows, m))(
+      (ps, st, floorQ) => foldKey(ps, st, m, horizonQuanta, floorQ))
   }
 
   // ------------------------------------------------------------------
@@ -326,12 +348,14 @@ object SlidingMonitor {
   final case class MgIn(key: String, q: Long, item: String)
   final case class MgQuantum(n: Long, entries: Map[String, Long])
   final case class MgMonState(quanta: Map[Long, MgQuantum], ver: Long, qMax: Long)
+    extends QuantumState
   final case class MgOut(key: String, q: Long, ver: Long, n: Long,
       entries: Seq[MgEntry])
 
   /** Pre-shuffle partial: exact count n and a once-pruned k-bounded
     * counter map for one (partition, key, quantum). */
   final case class MgPart(key: String, q: Long, n: Long, entries: Seq[MgEntry])
+    extends QuantumPart
 
   /** Stage 1 (stateless, per partition): exact per-(key, quantum)
     * counts, pruned once to k (the mergeable-summaries bound makes
@@ -353,14 +377,12 @@ object SlidingMonitor {
 
   private def mgFoldKey(parts: Seq[MgPart], st: MgMonState, k: Int,
       horizonQuanta: Long, floorQ: Long = Long.MinValue): (MgMonState, Seq[MgOut]) = {
-    val qMax = math.max(st.qMax, parts.iterator.map(_.q).max)
-    val cut = math.max(cutoffQ(qMax, horizonQuanta), floorQ)
-    val live = parts.filter(_.q >= cut)
+    val (qMax, cut, live) = horizonCut(parts, st.qMax, horizonQuanta, floorQ)
     var quanta = st.quanta.filter { case (q, _) => q >= cut }
     if (live.isEmpty) (MgMonState(quanta, st.ver, qMax), Nil)
     else {
       val ver = st.ver + 1
-      val outs = live.groupBy(_.q).toSeq.sortBy(_._1).map { case (q, ps) =>
+      val outs = live.map { case (q, ps) =>
         // SUM the partials' counter maps first (commutative — immune to
         // shuffle arrival order), then ONE mergeable reduce into the
         // stored summary: a valid weighted-MG merge tree, so the
@@ -376,7 +398,7 @@ object SlidingMonitor {
           .getOrElse((0L, Map.empty[String, Long]))
         val (n, merged) = SlidingEh.mgMerge(prev, (nBatch, summed), k)
         quanta = quanta.updated(q, MgQuantum(n, merged))
-        MgOut(live.head.key, q, ver, n,
+        MgOut(parts.head.key, q, ver, n,
           merged.toSeq.sortBy { case (kk, c) => (-c, kk) }
             .map { case (kk, c) => MgEntry(kk, c) })
       }
@@ -400,39 +422,13 @@ object SlidingMonitor {
   def mgQuantumMonitor(stream: DataFrame, k: Int,
       horizonQuanta: Long = Long.MaxValue,
       evictKeys: Boolean = false, quantumSec: Long = 3600L): Dataset[MgOut] = {
-    requireEvictableHorizon(evictKeys, horizonQuanta, quantumSec)
     val spark = stream.sparkSession
     import spark.implicits._
-    val timeout =
-      if (evictKeys) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    val parts0 = stream.select("key", "q", "item").as[MgIn]
-      .mapPartitions(rows => mgPrefold(rows, k))
-    val parts = if (evictKeys) watermarked(parts0.toDF(), quantumSec).as[MgPart]
-      else parts0
-    parts
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Update, timeout) {
-        (key: String, parts: Iterator[MgPart], state: GroupState[MgMonState]) =>
-          if (evictKeys && state.hasTimedOut) {
-            val ver = state.getOption.map(_.ver).getOrElse(0L) + 1
-            state.remove()
-            Iterator.single(MgOut(key, -1L, ver, 0L, Nil))
-          } else {
-            val ps = parts.toSeq
-            if (ps.isEmpty) Iterator.empty
-            else {
-              val st = state.getOption.getOrElse(
-                MgMonState(Map.empty, 0L, Long.MinValue))
-              val floorQ = admissionFloor(state, evictKeys, quantumSec,
-                horizonQuanta)
-              val (st2, outs) = mgFoldKey(ps, st, k, horizonQuanta, floorQ)
-              state.update(st2)
-              if (evictKeys) armEviction(state, st2.qMax, horizonQuanta, quantumSec)
-              outs.iterator
-            }
-          }
-      }
+    quantumMonitor[MgIn, MgPart, MgMonState, MgOut](stream, Seq("key", "q", "item"),
+      horizonQuanta, evictKeys, quantumSec, MgMonState(Map.empty, 0L, Long.MinValue),
+      (key, ver) => MgOut(key, -1L, ver, 0L, Nil))(
+      rows => mgPrefold(rows, k))(
+      (ps, st, floorQ) => mgFoldKey(ps, st, k, horizonQuanta, floorQ))
   }
 
   // ------------------------------------------------------------------
@@ -459,13 +455,14 @@ object SlidingMonitor {
     * high-water quantum alone enforces the horizon contract (rows for
     * quanta behind the horizon drop, so an aged-off quantum can never
     * receive a late delta and read back partial). */
-  final case class CmMonState(ver: Long, qMax: Long)
+  final case class CmMonState(ver: Long, qMax: Long) extends QuantumState
   final case class CmOut(key: String, q: Long, ver: Long, entries: Seq[CmCell])
 
   /** Pre-shuffle partial: exact sparse cell counts for one
     * (partition, key, quantum) — additive, canonical, ≤ depth·width
     * entries. */
   final case class CmPart(key: String, q: Long, entries: Seq[CmCell])
+    extends QuantumPart
 
   /** Stage 1 (stateless, per partition): hash-explode each event to
     * its `depth` cells and sum exactly per (key, quantum). */
@@ -489,13 +486,11 @@ object SlidingMonitor {
 
   private def cmFoldKey(parts: Seq[CmPart], st: CmMonState,
       horizonQuanta: Long, floorQ: Long = Long.MinValue): (CmMonState, Seq[CmOut]) = {
-    val qMax = math.max(st.qMax, parts.iterator.map(_.q).max)
-    val cut = math.max(cutoffQ(qMax, horizonQuanta), floorQ)
-    val live = parts.filter(_.q >= cut)
+    val (qMax, _, live) = horizonCut(parts, st.qMax, horizonQuanta, floorQ)
     if (live.isEmpty) (CmMonState(st.ver, qMax), Nil)
     else {
       val ver = st.ver + 1
-      val outs = live.groupBy(_.q).toSeq.sortBy(_._1).map { case (q, ps) =>
+      val outs = live.map { case (q, ps) =>
         // DELTA emission: this trigger's summed partials only — the
         // round-11 shape re-emitted the cumulative cell list (≤
         // depth·width rows) for every touched quantum every trigger,
@@ -505,7 +500,7 @@ object SlidingMonitor {
         val sums = mutable.HashMap.empty[Long, Long]
         ps.foreach(_.entries.foreach(e =>
           sums.update(e.idx, sums.getOrElse(e.idx, 0L) + e.cnt)))
-        CmOut(live.head.key, q, ver,
+        CmOut(parts.head.key, q, ver,
           sums.toSeq.sortBy(_._1).map { case (i, c) => CmCell(i, c) })
       }
       (CmMonState(ver, qMax), outs)
@@ -563,39 +558,13 @@ object SlidingMonitor {
   def cmQuantumMonitor(stream: DataFrame, depth: Int, width: Int,
       horizonQuanta: Long = Long.MaxValue,
       evictKeys: Boolean = false, quantumSec: Long = 3600L): Dataset[CmOut] = {
-    requireEvictableHorizon(evictKeys, horizonQuanta, quantumSec)
     val spark = stream.sparkSession
     import spark.implicits._
-    val timeout =
-      if (evictKeys) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    val parts0 = stream.select("key", "q", "x").as[CmIn]
-      .mapPartitions(rows => cmPrefold(rows, depth, width))
-    val parts = if (evictKeys) watermarked(parts0.toDF(), quantumSec).as[CmPart]
-      else parts0
-    parts
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Update, timeout) {
-        (key: String, parts: Iterator[CmPart], state: GroupState[CmMonState]) =>
-          if (evictKeys && state.hasTimedOut) {
-            val ver = state.getOption.map(_.ver).getOrElse(0L) + 1
-            state.remove()
-            Iterator.single(CmOut(key, -1L, ver, Nil))
-          } else {
-            val ps = parts.toSeq
-            if (ps.isEmpty) Iterator.empty
-            else {
-              val st = state.getOption.getOrElse(
-                CmMonState(0L, Long.MinValue))
-              val floorQ = admissionFloor(state, evictKeys, quantumSec,
-                horizonQuanta)
-              val (st2, outs) = cmFoldKey(ps, st, horizonQuanta, floorQ)
-              state.update(st2)
-              if (evictKeys) armEviction(state, st2.qMax, horizonQuanta, quantumSec)
-              outs.iterator
-            }
-          }
-      }
+    quantumMonitor[CmIn, CmPart, CmMonState, CmOut](stream, Seq("key", "q", "x"),
+      horizonQuanta, evictKeys, quantumSec, CmMonState(0L, Long.MinValue),
+      (key, ver) => CmOut(key, -1L, ver, Nil))(
+      rows => cmPrefold(rows, depth, width))(
+      (ps, st, floorQ) => cmFoldKey(ps, st, horizonQuanta, floorQ))
   }
 
   // ------------------------------------------------------------------
@@ -726,8 +695,7 @@ object SlidingMonitor {
       .mapPartitions(rows => dmPrefold(rows, halfLifeSec, k))
     val parts =
       if (evictKeys) parts0.toDF()
-        .withColumn("ets", org.apache.spark.sql.functions.timestamp_seconds(
-          org.apache.spark.sql.functions.col("tMax")))
+        .withColumn("ets", timestamp_seconds(col("tMax")))
         .withWatermark("ets", "0 seconds")
         .as[DmPart]
       else parts0

@@ -42,24 +42,22 @@ class EvaluateSpec extends SparkSpec {
   }
 
   /** The reference RMSE: every prediction line whose pair is in the
-    * ground truth and whose stars are a number (not null, not NaN) adds
-    * its squared error, once per line; errors are rounded to 6 dp and
-    * summed exactly (as `Cross.dsum`), then r6(sqrt(sum / n)). An
-    * infinite error counts in n but not in the sum, where `Cross.dsum`'s
-    * decimal cast nulls it. None when nothing is summed. */
+    * ground truth and whose stars are a finite number (not null, NaN or
+    * ±Infinity) adds its squared error, once per line; errors are
+    * rounded to 6 dp and summed exactly (as `Cross.dsum`), then
+    * r6(sqrt(sum / n)). None when no line counts. */
   private def foldRmse(raw: DataFrame, gt: DataFrame): Option[Double] = {
     import java.math.RoundingMode.HALF_UP
     val truth = gt.select("user_id", "business_id", "stars").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val se = raw.select("user_id", "business_id", "stars").collect().toSeq.flatMap { r =>
       val pred = if (r.isNullAt(2)) Double.NaN else r.get(2).toString.toDouble
-      truth.get((r.getLong(0), r.getLong(1))).filterNot(_ => pred.isNaN)
+      truth.get((r.getLong(0), r.getLong(1))).filter(_ => java.lang.Double.isFinite(pred))
         .map(s => (pred - s) * (pred - s))
     }
-    val finite = se.filter(e => java.lang.Double.isFinite(e))
-    if (finite.isEmpty) None
+    if (se.isEmpty) None
     else {
-      val sum = finite.map(e => BigDecimal(BigDecimal(e).bigDecimal.setScale(6, HALF_UP))).sum
+      val sum = se.map(e => BigDecimal(BigDecimal(e).bigDecimal.setScale(6, HALF_UP))).sum
       val r = math.sqrt(sum.toDouble / se.size)
       Some(BigDecimal(r + 1e-9).bigDecimal.setScale(6, HALF_UP).doubleValue + 0.0)
     }
@@ -122,8 +120,14 @@ class EvaluateSpec extends SparkSpec {
 
   test("Infinity stars keep the report parseable") {
     val (u0, b0) = pair(0); val (u1, b1) = pair(1)
-    check(predFile(line(u0, b0, "\"Infinity\""), line(u1, b1, "3.0")))
-    check(predFile(line(u0, b0, "Infinity")))
+    def rmse(report: String) =
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(report).get("rmse")
+    // an infinite prediction is skipped: it adds to neither n nor the sum
+    val finite = rmse(check(predFile(line(u1, b1, "3.0"))))
+    for (inf <- Seq("\"Infinity\"", "Infinity", "\"-Infinity\"")) {
+      assert(rmse(check(predFile(line(u0, b0, inf), line(u1, b1, "3.0")))) == finite, inf)
+      assert(check(predFile(line(u0, b0, inf))).startsWith("""{"rmse":"N/A","""), inf)
+    }
   }
 
   test("decision-tagged files get the per-decision breakdown, untagged ones do not") {

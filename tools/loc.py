@@ -11,8 +11,9 @@ Rule:
     sits in at least one window whose text occurs more than once anywhere
     in src/main (in the same file or another).
 
-Prints the two totals and a per-file table (files with duplicated lines,
-most duplicated first).
+Prints the two totals, a per-directory table (both totals for each
+package directory under src/main) and a per-file table (files with
+duplicated lines, most duplicated first).
 
 Usage: python3 tools/loc.py [repo_root]
 """
@@ -71,6 +72,15 @@ def main():
 
     print(f"non-comment lines: {total}")
     print(f"duplicated lines:  {dup_total}")
+    print()
+    per_dir = collections.defaultdict(lambda: [0, 0])
+    for dup, n, name in per_file:
+        d = per_dir[os.path.dirname(name)]
+        d[0] += dup
+        d[1] += n
+    print(f"{'duplicated':>10}  {'lines':>6}  directory")
+    for name, (dup, n) in sorted(per_dir.items()):
+        print(f"{dup:>10}  {n:>6}  {name}")
     print()
     print(f"{'duplicated':>10}  {'lines':>6}  file")
     for dup, n, name in sorted(per_file, key=lambda r: (-r[0], r[2])):

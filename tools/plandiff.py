@@ -14,6 +14,8 @@ location or a per-run path, not a plan property:
   * lambda-variable counters: `lambda x_22` -> `lambda x_N`;
   * object hashes and JVM lambda classes: `Foo@1a2b3c4d` -> `Foo@<hash>`,
     `Foo$$$Lambda$6998/0x00007fbdad847710` -> `Foo$$$Lambda$<id>`;
+  * UUIDs: a streaming plan's `runId` and its watermark node ids ->
+    `<uuid>`;
   * temp paths: anything under the temp dir (`/tmp` or `$TMPDIR`, where
     the per-run `graft_wh_*` warehouses live) and any `spark-warehouse`
     dir -> `<tmp>`.
@@ -37,6 +39,7 @@ MASKS = [
     (re.compile(r"(lambda \w+?)_\d+"), r"\1_N"),
     (re.compile(r"@[0-9a-f]{4,16}\b"), "@<hash>"),
     (re.compile(r"Lambda\$\d+/0x[0-9a-f]+"), "Lambda$<id>"),
+    (re.compile(r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}\b"), "<uuid>"),
     (re.compile(r"(?:file:)?(?:(?:/tmp|" + TMP + r")/|[^\s,\[\]()]*spark-warehouse)"
                 r"[^\s,\[\]()]*"), "<tmp>"),
 ]
