@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.json4s._
 
-import graft.core.TempPaths
+import graft.core.{LocalFs, TempPaths}
 
 /** The one session factory, and the between-gate session reset for the
   * Bench/Verify harnesses.
@@ -26,7 +26,10 @@ object SessionHygiene {
     * coalescing and skew-join splitting, UTC, no UI, log level WARN, and
     * a per-run warehouse — managed-table gates (bucketed joins) never
     * see another run's leftovers, and [[TempPaths]] deletes it at exit.
-    * `overrides` (Probe's `k=v` arguments) are applied last. */
+    * `file:` I/O goes through the fork-free [[LocalFs]].
+    * `overrides` (Probe's `k=v` arguments) are applied last; they win
+    * over [[LocalFs.install]], so `fs.file.impl=...` A/Bs the stock
+    * filesystem. */
   def session(overrides: (String, String)*): SparkSession = {
     val warehouse = TempPaths.registered(java.nio.file.Files.createTempDirectory("graft_wh_"))
     val b = SparkSession.builder()
@@ -51,6 +54,7 @@ object SessionHygiene {
     overrides.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    LocalFs.install(spark)
     spark
   }
 
@@ -105,7 +109,8 @@ object SessionHygiene {
       "whole_stage_codegen" -> c("spark.sql.codegen.wholeStage"),
       "auto_broadcast_threshold" -> c("spark.sql.autoBroadcastJoinThreshold"),
       "object_hash_fallback" -> c("spark.sql.objectHashAggregate.sortBased.fallbackThreshold"),
-      "timezone" -> c("spark.sql.session.timeZone"))
+      "timezone" -> c("spark.sql.session.timeZone"),
+      "local_fs" -> JString(LocalFs.resolved(spark)))
   }
 
   // ---- task-level IO telemetry (shuffle/input bytes per gate) ----

@@ -3,7 +3,7 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Cross, Json, Tables}
+import graft.core.{Cross, Json, LocalFs, Tables}
 import graft.model._
 import graft.sources.ModelIO
 
@@ -68,6 +68,7 @@ object Train {
 
   def runWith(spark: SparkSession, model: String, sfDir: String,
       artifactDir: String, hp: Map[String, String]): Unit = {
+    LocalFs.install(spark)
     def hpInt(k: String, d: Int): Int = hp.get(k).map(_.toDouble.toInt).getOrElse(d)
     def hpDouble(k: String, d: Double): Double = hp.get(k).map(_.toDouble).getOrElse(d)
     // reference metric names (models/item_cf_model.py:167): pears/cos/jacc
@@ -142,6 +143,7 @@ object Predict {
 
   def run(spark: SparkSession, model: String, sfDir: String,
       artifactDir: String, outPath: String): Unit = {
+    LocalFs.install(spark)
     val pairs = Cli.testPairs(spark, sfDir)
     val preds = model match {
       case "baseline" =>

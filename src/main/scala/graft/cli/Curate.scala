@@ -3,7 +3,7 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Cross, Tables}
+import graft.core.{Cross, LocalFs, Tables}
 import graft.functions.TextFns
 import graft.operators.{Curation, Dedup}
 
@@ -93,6 +93,7 @@ object Curate {
     * (share, weight, budget, realized tokens) to `outDir/mixture`. */
   def runMix(spark: SparkSession, sfDir: String, outDir: String,
       totalBudget: Long, tau: Double): MixStats = {
+    LocalFs.install(spark)
     val docs = Tables.documents(spark, sfDir).select("doc_id", "source", "text")
     val scored = score(docs).join(docs.select("doc_id", "source"), "doc_id")
     val budgetsDf = Curation.temperatureBudgets(scored, col("source"),
@@ -129,6 +130,7 @@ object Curate {
     * corpus card to `outDir/card`, cross-source contamination matrix to
     * `outDir/overlap`, totals returned (and printed by main). */
   def runProfile(spark: SparkSession, sfDir: String, outDir: String): ProfileStats = {
+    LocalFs.install(spark)
     val docs = Tables.documents(spark, sfDir)
     val card = graft.operators.Profile.corpusCard(docs).orderBy("source")
     card.write.mode("overwrite").parquet(s"$outDir/card")
@@ -209,6 +211,7 @@ object Curate {
       spanMinRun: Int = 0, paraMinDf: Int = 0,
       classifierQuality: Boolean = false,
       blockPhrases: Seq[String] = Nil): Stats = {
+    LocalFs.install(spark)
     val allDocs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val nInput = allDocs.count()
 
@@ -396,6 +399,7 @@ object Curate {
     * to a downstream writer. */
   def runIngest(spark: SparkSession, incomingDir: String, corpusDir: String,
       outDir: String, minBandHits: Int = 1): IngestStats = {
+    LocalFs.install(spark)
     import org.apache.spark.sql.types._
     def artifact(dir: String, name: String): Option[org.apache.spark.sql.DataFrame] = {
       val p = java.nio.file.Paths.get(dir, name)

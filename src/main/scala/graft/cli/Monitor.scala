@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
 
-import graft.core.{Json, Tables}
+import graft.core.{Json, LocalFs, Tables}
 import graft.operators.Cdc
 import graft.operators.SlidingRows.GkSkR
 import graft.plans.GkSummary
@@ -74,6 +74,8 @@ object Monitor {
       k: Int, horizon: Long, family: String = "mg"): Unit = {
     require(Set("mg", "gk", "cm", "dm")(family),
       s"unknown monitor family '$family' (mg|gk|cm|dm)")
+    // the caller's session may not come from SessionHygiene.session()
+    LocalFs.install(spark)
     // replay the events table as 8 micro-batches (one file per trigger)
     val stream = Replay.of(Tables.events(spark, sfDir)
       .select(col("event_type").cast("string").as("key"),

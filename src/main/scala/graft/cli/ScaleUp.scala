@@ -43,6 +43,7 @@ object ScaleUp {
   }
 
   def run(spark: SparkSession, src: String, dst: String, factor: Int): Unit = {
+    graft.core.LocalFs.install(spark)
     def rd(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def wr(df: DataFrame, t: String, parts: Int): Unit =
       df.repartition(parts).write.mode("overwrite").parquet(s"$dst/$t.parquet")

@@ -8,8 +8,8 @@ import graft.functions.AttrParser
 /** Extended content model features (reference
   * models/extended_content_model.py): business demographics — category
   * one-hots against a fixed vocabulary (X3), safely-parsed attribute
-  * encodings (X4), and the sparse feature concatenation with offsets (X5)
-  * — plus user engagement counters. The reference assembles driver-side
+  * encodings (X4), and the sparse feature concatenation with offsets (X5).
+  * The reference assembles driver-side
   * SparseVectors; here features live in long form (entity, feature, value)
   * so assembly is a union and the downstream cosine is the same term-join
   * used by ContentBased (profile algebra scales with a shuffle, not with
@@ -44,25 +44,6 @@ object ExtendedContent {
         parseBool(element_at(col("attributes"), a)).cast("double").as("value"))
     }
     (Seq(alcohol, noise) ++ bools).reduce(_ union _).filter(col("value") =!= 0.0)
-  }
-
-  /** User engagement counters (14 numeric fields, absent → 0 — reference
-    * models/extended_content_model.py:82-97). */
-  val userCounterCols: Seq[String] = Seq(
-    "funny", "useful", "cool", "compliment_cool", "compliment_cute",
-    "compliment_funny", "compliment_hot", "compliment_list",
-    "compliment_more", "compliment_note", "compliment_photos",
-    "compliment_plain", "compliment_profile", "compliment_writer")
-
-  def userFeatures(users: DataFrame): DataFrame = {
-    val present = users.columns.toSet
-    val arms = userCounterCols.map { c =>
-      val v = if (present(c)) coalesce(col(c).cast("double"), lit(0.0)) else lit(0.0)
-      struct(lit(s"user:$c").as("feature"), v.as("value"))
-    }
-    users.select(col("user_id"), explode(array(arms: _*)).as("f"))
-      .select(col("user_id"), col("f.feature"), col("f.value"))
-      .filter(col("value") =!= 0.0)
   }
 
   /** X5: concatenate feature families — long form needs no offset

@@ -14,7 +14,5 @@ package object queries {
   object QueryDef {
     def apply(name: String, sql: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
       QueryDef(name, fn, Some(sql))
-    def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-      QueryDef(name, fn, None)
   }
 }

@@ -698,11 +698,11 @@ object EventStreams {
     val (gen0, m0) = readManifestGen(path)
     if (m0.live.isEmpty) return
     val consumed = m0.live.toSet
-    // materialize BEFORE the commit flips visibility (same
-    // localCheckpoint-then-overwrite discipline as foldParquet);
-    // nanoTime suffix keeps rival compactors' physical dirs disjoint —
-    // uniqueness only, never ordering (generations order the chain)
-    val merged = reduce(readLive(spark, path, m0.live)).localCheckpoint(true)
+    // written straight from the live generations, no checkpoint: the
+    // base dir is fresh (nanoTime suffix — keeps rival compactors'
+    // physical dirs disjoint; uniqueness only, generations order the
+    // chain) and no reader resolves it until the manifest commit below
+    val merged = reduce(readLive(spark, path, m0.live))
     val baseName = f"base_${gen0 + 1}%09d_${System.nanoTime()}%x"
     merged.write.mode("overwrite").parquet(new java.io.File(path, baseName).toString)
     val baseBytes = dirSize(new java.io.File(path, baseName))

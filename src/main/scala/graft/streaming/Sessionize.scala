@@ -209,23 +209,4 @@ object Sessionize {
     graft.core.Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("sec")).as[Event]
   }
-
-  /** Minimal GroupState impl so the shared fold also runs in batch. */
-  private final class InMemoryGroupState[T] extends GroupState[T] {
-    private var v: Option[T] = None
-    override def exists: Boolean = v.isDefined
-    override def get: T = v.get
-    override def getOption: Option[T] = v
-    override def update(newValue: T): Unit = v = Some(newValue)
-    override def remove(): Unit = v = None
-    override def hasTimedOut: Boolean = false
-    override def setTimeoutDuration(durationMs: Long): Unit = ()
-    override def setTimeoutDuration(duration: String): Unit = ()
-    override def setTimeoutTimestamp(timestampMs: Long): Unit = ()
-    override def setTimeoutTimestamp(timestampMs: Long, additionalDuration: String): Unit = ()
-    override def setTimeoutTimestamp(timestamp: java.sql.Date): Unit = ()
-    override def setTimeoutTimestamp(timestamp: java.sql.Date, additionalDuration: String): Unit = ()
-    override def getCurrentWatermarkMs(): Long = 0L
-    override def getCurrentProcessingTimeMs(): Long = 0L
-  }
 }
