@@ -3,6 +3,8 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.LocalFs
+
 /** Deterministic scale-up generator for SCALE MEASUREMENT (not
   * correctness — the oracle gates stay on the driver-generated SFs):
   * writes `factor` shifted copies of every table under the testdata
@@ -43,7 +45,7 @@ object ScaleUp {
   }
 
   def run(spark: SparkSession, src: String, dst: String, factor: Int): Unit = {
-    graft.core.LocalFs.install(spark)
+    LocalFs.install(spark)
     def rd(t: String) = spark.read.parquet(s"$src/$t.parquet")
     def wr(df: DataFrame, t: String, parts: Int): Unit =
       df.repartition(parts).write.mode("overwrite").parquet(s"$dst/$t.parquet")

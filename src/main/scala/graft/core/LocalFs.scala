@@ -75,7 +75,7 @@ object LocalFs {
     * stores. The cache switch is load-bearing: Hadoop's `FileSystem`
     * cache is JVM-wide and keyed by scheme and user, not by conf, so a
     * `file:` instance cached from any other conf would be returned. */
-  val confs: Seq[(String, String)] = Seq(
+  private val confs: Seq[(String, String)] = Seq(
     "fs.file.impl" -> classOf[FileSystemImpl].getName,
     "fs.file.impl.disable.cache" -> "true",
     "fs.AbstractFileSystem.file.impl" -> classOf[FileContextImpl].getName)

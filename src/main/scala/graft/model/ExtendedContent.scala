@@ -9,11 +9,10 @@ import graft.functions.AttrParser
   * models/extended_content_model.py): business demographics — category
   * one-hots against a fixed vocabulary (X3), safely-parsed attribute
   * encodings (X4), and the sparse feature concatenation with offsets (X5).
-  * The reference assembles driver-side
-  * SparseVectors; here features live in long form (entity, feature, value)
-  * so assembly is a union and the downstream cosine is the same term-join
-  * used by ContentBased (profile algebra scales with a shuffle, not with
-  * driver memory).
+  * The reference assembles driver-side SparseVectors; here features live
+  * in long form (entity, feature, value) so assembly is a union and the
+  * downstream cosine is the same term-join used by ContentBased (profile
+  * algebra scales with a shuffle, not with driver memory).
   */
 object ExtendedContent {
 

@@ -14,11 +14,9 @@ directory. Prints:
      since the previous job ended (time no job was running).
 
 Usage:
-  python3 tools/trigger_account.py <event-log> [--jobs N] [--json]
+  python3 tools/trigger_account.py <event-log>
 
---jobs N limits the printed timeline to the first N jobs (the gap totals
-still cover every job); --json prints one machine-readable object instead
-of the tables. Standard library only.
+Standard library only.
 """
 import argparse
 import json
@@ -102,8 +100,6 @@ def phase_sums(triggers):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("log")
-    ap.add_argument("--jobs", type=int, default=None)
-    ap.add_argument("--json", action="store_true")
     a = ap.parse_args()
     files = log_files(a.log)
     if not files:
@@ -119,12 +115,6 @@ def main():
     state_ms = sum(t["state_commit_ms"] for t in triggers)
     span = (tl[-1]["end"] - tl[0]["start"]) if tl else 0
     gaps = sum(j["gap"] for j in tl)
-    if a.json:
-        print(json.dumps({"triggers": triggers, "phase_sums_ms": sums,
-                          "state_commit_ms": state_ms, "jobs": len(tl),
-                          "streaming_jobs": sum(j["streaming"] for j in tl),
-                          "job_span_ms": span, "driver_gap_ms": gaps}))
-        return
     phases = list(sums)
     print(f"# {len(triggers)} triggers")
     print("query\tbatch\trows\tstate_commit\t" + "\t".join(phases))
@@ -137,7 +127,7 @@ def main():
           f"span {span} ms, driver gaps {gaps} ms")
     print("job\tat_ms\tdur_ms\tgap_ms\tstream\tok\tcall site")
     t0 = tl[0]["start"] if tl else 0
-    for j in tl[:a.jobs] if a.jobs is not None else tl:
+    for j in tl:
         print(f"{j['job']}\t{j['start'] - t0}\t{j['dur']}\t{j['gap']}\t"
               f"{'y' if j['streaming'] else ''}\t{'' if j['ok'] else 'FAILED'}\t{j['site']}")
 
