@@ -6,7 +6,7 @@ import graft.queries._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   * Every operator family from SURVEY.md §2 registers its gate queries here;
-  * entries with an oracle get DuckDB hash-compared, the rest rows-checked. */
+  * every entry's oracle SQL is DuckDB hash-compared. */
 object SparkEntry {
 
   /** All gate queries, grouped by operator family. */
@@ -22,7 +22,7 @@ object SparkEntry {
     defs.map(d => d.name -> d.fn).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    defs.flatMap(d => d.oracle.map(d.name -> _)).toMap
+    defs.map(d => d.name -> d.oracle).toMap
 }

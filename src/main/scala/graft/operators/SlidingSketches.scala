@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.plans.{GkSummary, SlidingEh}
+import graft.plans.{CmSketch, GkSketch, GkSummary, MgSketch, SlidingEh}
 
 /** Row shapes for the typed (Dataset) legs of the sliding sketches.
   * Top-level case classes so implicit Encoders derive. Field names
@@ -70,8 +70,6 @@ object SlidingSketches {
     * gaps between sparse quanta are staleness-free). */
   val C = 4
 
-  private def decodeGk(r: GkSkR): GkSummary = GkSkR.summary(r)
-
   /** Per-(key, quantum) GK summaries: the distributed step. `key`
     * null-safe string (use lit("") for a global sketch). */
   def gkHourly(df: DataFrame, key: Column, value: Column, sec: Column,
@@ -102,15 +100,15 @@ object SlidingSketches {
     import spark.implicits._
     val startsV = starts.toVector
     val phisV = phis.toVector
+    val gk = GkSketch(m)
     hourly.select(col("key"), col("q"), col("sk")).as[GkHourRow]
       .groupByKey(_.key)
       .flatMapGroups { (key: String, it: Iterator[GkHourRow]) =>
         // SPARSE grid: only quanta with data enter the EH (timestamped
         // buckets) — a key with two events a year apart at minute
         // quanta costs two buckets, no dense fill, no span guard
-        val quanta = it.map(r => r.q -> decodeGk(r.sk)).toVector.sortBy(_._1)
-        val buckets = SlidingEh.build(quanta, C,
-          (a: GkSummary, b: GkSummary) => SlidingEh.gkMerge(a, b, m))
+        val quanta = it.map(r => r.q -> GkSkR.summary(r.sk)).toVector.sortBy(_._1)
+        val buckets = SlidingEh.build(quanta, C, gk.mergeSummaries)
         startsV.iterator.flatMap { s =>
           SlidingEh.cover(buckets, s / u, C) match {
             case None => Iterator.empty // window past newest data ⇒ empty
@@ -226,31 +224,21 @@ object SlidingSketches {
     val spark = hourly.sparkSession
     import spark.implicits._
     val startsV = starts.toVector
-    val size = depth * width
+    val cm = CmSketch(depth, width)
     hourly.select(col("key"), col("q"), col("entries")).as[CmHourRow]
       .groupByKey(_.key)
       .flatMapGroups { (key: String, it: Iterator[CmHourRow]) =>
-        def dense(es: Seq[CmCell]): Array[Long] = {
-          val a = new Array[Long](size)
-          es.foreach(e => a(e.idx.toInt) += e.cnt)
-          a
-        }
-        def add(a: Array[Long], b: Array[Long]): Array[Long] = {
-          val o = new Array[Long](size)
-          var i = 0
-          while (i < size) { o(i) = a(i) + b(i); i += 1 }
-          o
-        }
         // SPARSE grid: only quanta with data enter (cells are additive,
         // an absent quantum contributes nothing)
-        val quanta = it.map(r => r.q -> dense(r.entries)).toVector.sortBy(_._1)
-        val buckets = SlidingEh.build(quanta, C, add)
+        val quanta = it.map(r => r.q ->
+            r.entries.foldLeft(cm.empty())((s, e) => cm.add(s, e.idx, e.cnt)))
+          .toVector.sortBy(_._1)
+        val buckets = SlidingEh.build(quanta, C, cm.merge)
         startsV.iterator.flatMap { s =>
           SlidingEh.cover(buckets, s / u, C) match {
             case None => Iterator.empty
             case Some(cov) =>
-              val cells = cov.covered.map(_.s)
-                .foldLeft(new Array[Long](size))(add)
+              val cells = cm.dense(cov.covered.map(_.s).foldLeft(cm.empty())(cm.merge))
               val nCov = cells.take(width).sum
               if (nCov == 0) Iterator.empty
               else Iterator.single(CmCovRow(key, s, cov.tCovQ * u, nCov,
@@ -368,29 +356,26 @@ object SlidingSketches {
     val spark = hourlyMg.sparkSession
     import spark.implicits._
     val startsV = starts.toVector
+    val mg = MgSketch(k)
     hourlyMg.select(col("key"), col("q"), col("n"), col("entries"))
       .as[MgHourRow]
       .groupByKey(_.key)
       .flatMapGroups { (key: String, it: Iterator[MgHourRow]) =>
         // SPARSE grid: only quanta with data enter the EH
-        val empty = (0L, Map.empty[String, Long])
-        val quanta = it.map(r =>
-            r.q -> ((r.n, r.entries.map(e => e.key -> e.est).toMap)))
+        val quanta = it.map(r => r.q -> ((r.n,
+            r.entries.foldLeft(mg.empty())((s, e) => mg.add(s, e.key, e.est)))))
           .toVector.sortBy(_._1)
-        val buckets = SlidingEh.build(quanta, C,
-          (a: (Long, Map[String, Long]), b: (Long, Map[String, Long])) =>
-            SlidingEh.mgMerge(a, b, k))
+        val buckets = SlidingEh.build(quanta, C, mg.mergeCounted)
         startsV.iterator.flatMap { s =>
           SlidingEh.cover(buckets, s / u, C) match {
             case None => Iterator.empty
             case Some(cov) =>
-              val merged = cov.covered.map(_.s)
-                .foldLeft(empty)((a, b) => SlidingEh.mgMerge(a, b, k))
-              if (merged._1 == 0) Iterator.empty
-              else Iterator.single(MgCovRow(key, s, cov.tCovQ * u, merged._1,
+              val (n, merged) = cov.covered.map(_.s)
+                .foldLeft((0L, mg.empty()))(mg.mergeCounted)
+              if (n == 0) Iterator.empty
+              else Iterator.single(MgCovRow(key, s, cov.tCovQ * u, n,
                 if (cov.staleOk) 1L else 0L,
-                merged._2.toSeq.sortBy { case (kk, c) => (-c, kk) }
-                  .map { case (kk, c) => MgEntry(kk, c) }))
+                mg.result(merged).map { case (kk, c) => MgEntry(kk, c) }))
           }
         }
       }

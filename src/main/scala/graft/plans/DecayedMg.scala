@@ -1,19 +1,13 @@
 package graft.plans
 
 import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Exponentially-DECAYED Misra–Gries — "top talkers, recency-weighted"
   * in one pass: [[DecayedSumAgg]]'s O(1) rebasing composed with
@@ -51,78 +45,16 @@ case class DecayedMgAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[DecayedMgAgg.State]
+  extends SketchAgg[DecayedMgSketch.State, DecayedMgSketch](DecayedMgSketch(halfLifeSec, k))
   with BinaryLike[Expression] {
-
-  require(halfLifeSec > 0, s"halfLifeSec out of range: $halfLifeSec")
-  require(k > 0 && k <= 65536, s"k out of range: $k")
-
-  import DecayedMgAgg.State
 
   override def left: Expression = tExpr
   override def right: Expression = keyExpr
 
-  override def createAggregationBuffer(): State =
-    new State(Long.MinValue, 0.0, mutable.HashMap.empty[String, Double])
+  override def update(buf: DecayedMgSketch.State, input: InternalRow): DecayedMgSketch.State =
+    family.insert(buf, tExpr.eval(input).asInstanceOf[java.lang.Long],
+      Sketch.string(keyExpr.eval(input)))
 
-  override def update(buf: State, input: InternalRow): State = {
-    val tRaw = tExpr.eval(input)
-    val kRaw = keyExpr.eval(input)
-    if (tRaw != null && kRaw != null) {
-      DecayedMgAgg.updateState(buf, tRaw.asInstanceOf[Long],
-        kRaw.asInstanceOf[UTF8String].toString, halfLifeSec, k)
-    }
-    buf
-  }
-
-  override def merge(buf: State, other: State): State =
-    DecayedMgAgg.mergeState(buf, other, halfLifeSec, k)
-
-  override def eval(buf: State): Any =
-    if (buf.w == 0.0 && buf.counters.isEmpty) null
-    else {
-      val sorted = buf.counters.toArray.sortBy { case (kk, c) => (-c, kk) }
-      InternalRow(buf.tMax, buf.w,
-        new GenericArrayData(sorted.map { case (kk, c) =>
-          InternalRow(UTF8String.fromString(kk), c): Any
-        }))
-    }
-
-  override def serialize(buf: State): Array[Byte] = {
-    val entries = buf.counters.toArray.map { case (kk, c) =>
-      (kk.getBytes(StandardCharsets.UTF_8), c)
-    }
-    val bb = ByteBuffer.allocate(8 + 8 + 4 + entries.map(e => 4 + e._1.length + 8).sum)
-    bb.putLong(buf.tMax); bb.putDouble(buf.w); bb.putInt(entries.length)
-    entries.foreach { case (bytes, c) =>
-      bb.putInt(bytes.length); bb.put(bytes); bb.putDouble(c)
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): State = {
-    val bb = ByteBuffer.wrap(bytes)
-    val t = bb.getLong; val w = bb.getDouble; val n = bb.getInt
-    val buf = new State(t, w, mutable.HashMap.empty[String, Double])
-    var i = 0
-    while (i < n) {
-      val len = bb.getInt
-      val arr = new Array[Byte](len)
-      bb.get(arr)
-      buf.counters.update(new String(arr, StandardCharsets.UTF_8), bb.getDouble)
-      i += 1
-    }
-    buf
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("t_ref", LongType, nullable = false),
-    StructField("w", DoubleType, nullable = false),
-    StructField("entries", ArrayType(
-      StructType(Seq(StructField("key", StringType),
-        StructField("est", DoubleType))), containsNull = false),
-      nullable = false)))
-  override def nullable: Boolean = true
   override def withNewMutableAggBufferOffset(newOffset: Int): DecayedMgAgg =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): DecayedMgAgg =
@@ -132,24 +64,33 @@ case class DecayedMgAgg(
     copy(tExpr = newLeft, keyExpr = newRight)
 }
 
-/** The pure state arithmetic, shared between the Catalyst aggregate
+/** The decayed-MG family's algebra, shared by the Catalyst aggregate
   * above and the streaming monitor leg
   * ([[graft.streaming.SlidingMonitor.decayedMgMonitor]]) — ONE
   * definition of the rebasing identity and the weighted eviction, so
   * batch and always-on answers obey the same guarantees by
   * construction. */
-object DecayedMgAgg {
-  final class State(var tMax: Long, var w: Double,
-      val counters: mutable.HashMap[String, Double])
+final case class DecayedMgSketch(halfLifeSec: Long, k: Int)
+  extends AggSketch[DecayedMgSketch.State] {
+  require(halfLifeSec > 0, s"halfLifeSec out of range: $halfLifeSec")
+  require(k > 0 && k <= 65536, s"k out of range: $k")
+
+  import DecayedMgSketch.State
+
+  def empty(): State = new State(Long.MinValue, 0.0, mutable.HashMap.empty[String, Double])
+
+  private def isEmpty(s: State): Boolean = s.w == 0.0 && s.counters.isEmpty
+
+  private def decay(from: Long, to: Long): Double = Sketch.decay(from, to, halfLifeSec)
 
   /** Advance the watermark: every stored mass scales by one factor.
     * Counters that underflow to 0.0 drop — a row older than ~1075
     * half-lives carries no mass and must not waste one of the k
     * slots. */
-  private def rebase(s: State, tNew: Long, halfLifeSec: Long): Unit = {
+  private def rebase(s: State, tNew: Long): Unit = {
     if (tNew > s.tMax) {
       if (s.w > 0.0) {
-        val f = math.pow(2.0, (s.tMax - tNew).toDouble / halfLifeSec.toDouble)
+        val f = decay(s.tMax, tNew)
         s.w *= f
         s.counters.mapValuesInPlace((_, c) => c * f)
         s.counters.filterInPlace((_, c) => c > 0.0)
@@ -168,7 +109,7 @@ object DecayedMgAgg {
     * (the MG value guarantees survive — a skipped key only misses a
     * subtraction, so est ≤ truth and the undercount bound both hold —
     * but per-key state stops being O(k)). */
-  private def evict(s: State, k: Int): Unit = {
+  private def evict(s: State): Unit = {
     if (s.counters.size > k) {
       val masses = s.counters.values.toArray
       java.util.Arrays.sort(masses)
@@ -180,51 +121,67 @@ object DecayedMgAgg {
     }
   }
 
-  /** Fold one (t, key) row into the state. A weight that underflows to
-    * exactly 0.0 (age past ~1075 half-lives) neither inserts nor
-    * retains a zero-mass counter entry. */
-  def updateState(buf: State, t: Long, key: String, halfLifeSec: Long,
-      k: Int): Unit = {
-    rebase(buf, t, halfLifeSec)
-    val wt = math.pow(2.0, (t - buf.tMax).toDouble / halfLifeSec.toDouble)
-    if (wt > 0.0) {
-      buf.w += wt
-      buf.counters.update(key, buf.counters.getOrElse(key, 0.0) + wt)
-      evict(buf, k)
+  /** Fold one (t, key) row into the state; NULL in either drops. A
+    * weight that underflows to exactly 0.0 (age past ~1075 half-lives)
+    * neither inserts nor retains a zero-mass counter entry. */
+  def insert(s: State, t: java.lang.Long, key: String): State = {
+    if (t != null && key != null) {
+      rebase(s, t)
+      val wt = decay(t, s.tMax)
+      if (wt > 0.0) {
+        s.w += wt
+        s.counters.update(key, s.counters.getOrElse(key, 0.0) + wt)
+        evict(s)
+      }
     }
+    s
   }
 
-  /** Merge `other` into `buf`: rebase both to the max watermark, add
-    * masses, evict to k. O(k) per call — the mergeable path. */
-  def mergeState(buf: State, other: State, halfLifeSec: Long, k: Int): State = {
-    if (other.w == 0.0 && other.counters.isEmpty) buf
-    else {
-      val tNew = math.max(buf.tMax, other.tMax)
-      rebase(buf, tNew, halfLifeSec)
-      val f =
-        if (other.tMax < tNew)
-          math.pow(2.0, (other.tMax - tNew).toDouble / halfLifeSec.toDouble)
-        else 1.0
-      buf.w += other.w * f
-      other.counters.foreach { case (kk, c) =>
+  /** Merge `b` into `a`: rebase both to the max watermark, add masses,
+    * evict to k. O(k) per call — the mergeable path. */
+  def merge(a: State, b: State): State = {
+    if (!isEmpty(b)) {
+      val tNew = math.max(a.tMax, b.tMax)
+      rebase(a, tNew)
+      val f = if (b.tMax < tNew) decay(b.tMax, tNew) else 1.0
+      a.w += b.w * f
+      b.counters.foreach { case (kk, c) =>
         val m = c * f
-        if (m > 0.0) buf.counters.update(kk, buf.counters.getOrElse(kk, 0.0) + m)
+        if (m > 0.0) a.counters.update(kk, a.counters.getOrElse(kk, 0.0) + m)
       }
-      evict(buf, k)
-      buf
+      evict(a)
     }
+    a
   }
+
+  def result(s: State): Seq[(String, Double)] = Sketch.ranked(s.counters)
+
+  def encode(s: State): Array[Byte] =
+    Sketch.encodeKeyed(s.counters, 16)(_.putDouble(_))
+      .putLong(s.tMax).putDouble(s.w).array()
+
+  def decode(bytes: Array[Byte]): State = {
+    val bb = ByteBuffer.wrap(bytes)
+    val counters = Sketch.decodeKeyed(bb, mutable.HashMap.empty[String, Double])(_.getDouble)
+    new State(bb.getLong, bb.getDouble, counters)
+  }
+
+  def dataType: DataType = StructType(Seq(
+    StructField("t_ref", LongType, nullable = false),
+    StructField("w", DoubleType, nullable = false),
+    StructField("entries", ArrayType(
+      StructType(Seq(StructField("key", StringType),
+        StructField("est", DoubleType))), containsNull = false),
+      nullable = false)))
+  override def nullable: Boolean = true
+
+  /** struct<t_ref, w, entries> in [[result]] order; null when empty. */
+  def value(s: State): Any =
+    if (isEmpty(s)) null
+    else InternalRow(s.tMax, s.w, Sketch.entriesValue(result(s)))
 }
 
-object DecayedMg {
-  /** `graft_decayed_mg(t, key, halfLifeSec, k)` aggregate column:
-    * struct<t_ref, w, entries> — ≤ k recency-weighted counters with
-    * t_ref = max(t) of the group and w = total decayed mass. */
-  def of(t: Column, key: Column, halfLifeSec: Long, k: Int): Column =
-    GraftSqlBridge.toColumn(
-      DecayedMgAgg(
-        GraftSqlBridge.toExpression(t.cast("long")),
-        GraftSqlBridge.toExpression(key.cast("string")),
-        halfLifeSec, k)
-        .toAggregateExpression())
+object DecayedMgSketch {
+  final class State(var tMax: Long, var w: Double,
+      val counters: mutable.HashMap[String, Double])
 }

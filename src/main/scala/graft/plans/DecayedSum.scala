@@ -2,11 +2,8 @@ package graft.plans
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types._
 
@@ -38,76 +35,16 @@ case class DecayedSumAgg(
     halfLifeSec: Long,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[DecayedSumAgg.State]
+  extends SketchAgg[DecayedSumSketch.State, DecayedSumSketch](DecayedSumSketch(halfLifeSec))
   with BinaryLike[Expression] {
-
-  require(halfLifeSec > 0, s"halfLifeSec out of range: $halfLifeSec")
-
-  import DecayedSumAgg.State
 
   override def left: Expression = tExpr
   override def right: Expression = xExpr
 
-  override def createAggregationBuffer(): State = new State(Long.MinValue, 0.0, 0L)
+  override def update(buf: DecayedSumSketch.State, input: InternalRow): DecayedSumSketch.State =
+    family.insert(buf, tExpr.eval(input).asInstanceOf[java.lang.Long],
+      xExpr.eval(input).asInstanceOf[java.lang.Double])
 
-  private def rebase(s: State, tNew: Long): Unit = {
-    if (s.n > 0L && tNew > s.tMax)
-      s.sum *= math.pow(2.0, (s.tMax - tNew).toDouble / halfLifeSec.toDouble)
-    if (tNew > s.tMax || s.n == 0L) s.tMax = tNew
-  }
-
-  override def update(buf: State, input: InternalRow): State = {
-    val tRaw = tExpr.eval(input)
-    val xRaw = xExpr.eval(input)
-    if (tRaw != null && xRaw != null) {
-      val t = tRaw.asInstanceOf[Long]
-      val x = xRaw.asInstanceOf[Double]
-      if (buf.n == 0L) { buf.tMax = t; buf.sum = x; buf.n = 1L }
-      else {
-        rebase(buf, t)
-        buf.sum += x * math.pow(2.0, (t - buf.tMax).toDouble / halfLifeSec.toDouble)
-        buf.n += 1L
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: State, other: State): State = {
-    if (other.n == 0L) buf
-    else if (buf.n == 0L) { buf.tMax = other.tMax; buf.sum = other.sum; buf.n = other.n; buf }
-    else {
-      val tNew = math.max(buf.tMax, other.tMax)
-      rebase(buf, tNew)
-      val oScaled =
-        if (other.tMax < tNew)
-          other.sum * math.pow(2.0, (other.tMax - tNew).toDouble / halfLifeSec.toDouble)
-        else other.sum
-      buf.sum += oScaled
-      buf.n += other.n
-      buf
-    }
-  }
-
-  override def eval(buf: State): Any =
-    if (buf.n == 0L) null else InternalRow(buf.n, buf.tMax, buf.sum)
-
-  override def serialize(buf: State): Array[Byte] = {
-    val bb = ByteBuffer.allocate(24)
-    bb.putLong(buf.n); bb.putLong(buf.tMax); bb.putDouble(buf.sum)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): State = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getLong; val t = bb.getLong; val s = bb.getDouble
-    new State(t, s, n)
-  }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("t_ref", LongType, nullable = false),
-    StructField("sum", DoubleType, nullable = false)))
-  override def nullable: Boolean = true
   override def withNewMutableAggBufferOffset(newOffset: Int): DecayedSumAgg =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): DecayedSumAgg =
@@ -117,19 +54,64 @@ case class DecayedSumAgg(
     copy(tExpr = newLeft, xExpr = newRight)
 }
 
-object DecayedSumAgg {
-  final class State(var tMax: Long, var sum: Double, var n: Long)
+/** The decayed-sum family's algebra: (tMax, s, n) with s rebased to
+  * tMax. */
+final case class DecayedSumSketch(halfLifeSec: Long) extends AggSketch[DecayedSumSketch.State] {
+  require(halfLifeSec > 0, s"halfLifeSec out of range: $halfLifeSec")
+
+  import DecayedSumSketch.State
+
+  def empty(): State = new State(Long.MinValue, 0.0, 0L)
+
+  private def decay(from: Long, to: Long): Double = Sketch.decay(from, to, halfLifeSec)
+
+  private def rebase(s: State, tNew: Long): Unit = {
+    if (s.n > 0L && tNew > s.tMax) s.sum *= decay(s.tMax, tNew)
+    if (tNew > s.tMax || s.n == 0L) s.tMax = tNew
+  }
+
+  /** One (t, x) row; NULL in either drops. */
+  def insert(s: State, t: java.lang.Long, x: java.lang.Double): State = {
+    if (t != null && x != null) {
+      if (s.n == 0L) { s.tMax = t; s.sum = x; s.n = 1L }
+      else {
+        rebase(s, t)
+        s.sum += x * decay(t, s.tMax)
+        s.n += 1L
+      }
+    }
+    s
+  }
+
+  def merge(a: State, b: State): State = {
+    if (b.n == 0L) a
+    else if (a.n == 0L) { a.tMax = b.tMax; a.sum = b.sum; a.n = b.n; a }
+    else {
+      val tNew = math.max(a.tMax, b.tMax)
+      rebase(a, tNew)
+      a.sum += (if (b.tMax < tNew) b.sum * decay(b.tMax, tNew) else b.sum)
+      a.n += b.n
+      a
+    }
+  }
+
+  def encode(s: State): Array[Byte] =
+    ByteBuffer.allocate(24).putLong(s.tMax).putDouble(s.sum).putLong(s.n).array()
+  def decode(bytes: Array[Byte]): State = {
+    val bb = ByteBuffer.wrap(bytes)
+    new State(bb.getLong, bb.getDouble, bb.getLong)
+  }
+
+  def dataType: DataType = StructType(Seq(
+    StructField("n", LongType, nullable = false),
+    StructField("t_ref", LongType, nullable = false),
+    StructField("sum", DoubleType, nullable = false)))
+  override def nullable: Boolean = true
+
+  /** struct<n, t_ref, sum>; null when empty. */
+  def value(s: State): Any = if (s.n == 0L) null else InternalRow(s.n, s.tMax, s.sum)
 }
 
-object DecayedSum {
-  /** `graft_decayed(t, x, halfLifeSec)` aggregate column:
-    * struct<n, t_ref, sum> with sum = Σ 2^((t − t_ref)/h)·x and
-    * t_ref = max(t) of the group. */
-  def of(t: Column, x: Column, halfLifeSec: Long): Column =
-    GraftSqlBridge.toColumn(
-      DecayedSumAgg(
-        GraftSqlBridge.toExpression(t.cast("long")),
-        GraftSqlBridge.toExpression(x.cast("double")),
-        halfLifeSec)
-        .toAggregateExpression())
+object DecayedSumSketch {
+  final class State(var tMax: Long, var sum: Double, var n: Long)
 }

@@ -4,11 +4,8 @@ import java.nio.ByteBuffer
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -108,6 +105,12 @@ object GkSummary {
       idx.map(rmins(_)).toArray, idx.map(rmaxs(_)).toArray)
   }
 
+  /** The exact summary of `vs` (sorted in place), pruned once to m. */
+  def once(vs: Array[Double], m: Int): GkSummary = {
+    java.util.Arrays.sort(vs)
+    prune(exact(vs, vs.length), m)
+  }
+
   /** Prune to ≤ m tuples: always keep the first and last (exact min and
     * max survive every prune), plus for each target rank
     * r_i = 1 + ⌊i·(n−1)/(m−1)⌋ the tuple whose midpoint 2·mid =
@@ -181,10 +184,14 @@ final class GkState(val bufCap: Int, val m: Int) {
 
   def flush(): Unit = {
     if (bufLen == 0) return
-    val copy = java.util.Arrays.copyOf(buf, bufLen)
-    java.util.Arrays.sort(copy)
-    carry(0, GkSummary.prune(GkSummary.exact(copy, bufLen), m))
+    carry(0, GkSummary.once(java.util.Arrays.copyOf(buf, bufLen), m))
     bufLen = 0
+  }
+
+  /** Set level `l` (a decoded or restored level structure). */
+  def place(l: Int, s: GkSummary): Unit = {
+    while (levels.length <= l) levels += GkSummary.empty
+    levels(l) = s
   }
 
   def carry(level: Int, s: GkSummary): Unit = {
@@ -194,8 +201,7 @@ final class GkState(val bufCap: Int, val m: Int) {
       levels(l) = GkSummary.empty
       l += 1
     }
-    while (levels.length <= l) levels += GkSummary.empty
-    levels(l) = cur
+    place(l, cur)
   }
 
   def mergeIn(other: GkState): Unit = {
@@ -251,9 +257,6 @@ final class GkState(val bufCap: Int, val m: Int) {
   * Nulls/NaNs are dropped (an agg ignoring nulls; NaN has no rank).
   * Output: struct<n: long, tuples: array<struct<v, rmin, rmax>>>
   * sorted by (v, rmin), ≤ m tuples.
-  *
-  * Same ObjectHashAggregateExec planning contract as [[TopKPairs]]
-  * (raise the sort-based fallback threshold when grouping widely).
   */
 case class GkQuantileAgg(
     valueExpr: Expression,
@@ -261,66 +264,127 @@ case class GkQuantileAgg(
     bufCap: Int = 2048,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[GkState]
-  with UnaryLike[Expression] {
-
-  require(m >= 16 && m <= 65536, s"summary size out of range: $m")
-  require(bufCap >= m && bufCap <= (1 << 20), s"bufCap out of range: $bufCap")
+  extends GkAgg(m, bufCap) {
 
   override def child: Expression = valueExpr
 
-  override def createAggregationBuffer(): GkState = new GkState(bufCap, m)
+  override def update(buf: GkState, input: InternalRow): GkState =
+    family.insert(buf, valueExpr.eval(input).asInstanceOf[java.lang.Double])
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): GkQuantileAgg =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): GkQuantileAgg =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildInternal(newChild: Expression): GkQuantileAgg =
+    copy(valueExpr = newChild)
+}
+
+/** The two GK aggregates' shared base: one GK family over one child. */
+abstract class GkAgg(m: Int, bufCap: Int)
+  extends SketchAgg[GkState, GkSketch](GkSketch(m, bufCap)) with UnaryLike[Expression]
+
+/** Merge ALREADY-BUILT [[GkQuantileAgg]] summaries — the roll-up
+  * aggregate that makes the sketch a first-class mergeable OBJECT:
+  * per-hour sketches fold into a day sketch (or per-source into a
+  * corpus one) WITHOUT rescanning raw values, exactly the KMV re-fold
+  * capability but for quantiles. Each input summary enters the level
+  * structure at its size-matched level ([[GkSketch.carry]]) so the
+  * equal-size merge discipline (and with it the O(log)
+  * prune-per-element bound) is preserved across roll-up stages.
+  * Soundness of every interval is untouched by merging, so the
+  * rolled-up sketch carries the same guarantees as a direct build —
+  * the q287-style merge≡direct gate law. Same family, state, result
+  * and wire format as [[GkQuantileAgg]]. */
+case class GkMergeAgg(
+    sketchExpr: Expression,
+    m: Int,
+    bufCap: Int = 2048,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends GkAgg(m, bufCap) {
+
+  override def child: Expression = sketchExpr
 
   override def update(buf: GkState, input: InternalRow): GkState = {
-    val raw = valueExpr.eval(input)
-    if (raw != null) {
-      val v = raw.asInstanceOf[Double]
-      if (!v.isNaN) buf.insert(v)
+    val raw = sketchExpr.eval(input)
+    if (raw == null) buf
+    else family.carry(buf, GkSketch.fromRow(raw.asInstanceOf[InternalRow]))
+  }
+
+  override def withNewMutableAggBufferOffset(newOffset: Int): GkMergeAgg =
+    copy(mutableAggBufferOffset = newOffset)
+  override def withNewInputAggBufferOffset(newOffset: Int): GkMergeAgg =
+    copy(inputAggBufferOffset = newOffset)
+  override protected def withNewChildInternal(newChild: Expression): GkMergeAgg =
+    copy(sketchExpr = newChild)
+}
+
+/** The GK family's algebra over the level structure [[GkState]]: the
+  * two aggregates above, the EH bucket merge
+  * ([[graft.operators.SlidingSketches.gkSlidingEstimates]]) and the
+  * monitor's prefold and fold ([[graft.streaming.SlidingMonitor]]) all
+  * go through it. */
+final case class GkSketch(m: Int, bufCap: Int) extends AggSketch[GkState] {
+  require(m >= 16 && m <= 65536, s"summary size out of range: $m")
+  require(bufCap >= m && bufCap <= (1 << 20), s"bufCap out of range: $bufCap")
+
+  def empty(): GkState = new GkState(bufCap, m)
+
+  /** One value; NULL and NaN have no rank and drop
+    * ([[GkSketch.ranks]]). */
+  def insert(s: GkState, v: java.lang.Double): GkState = {
+    if (GkSketch.ranks(v)) s.insert(v)
+    s
+  }
+
+  /** An already-built summary enters at level ⌈log2(n/bufCap)⌉, so a
+    * summary at level i still covers ≥ bufCap·2^i values; an empty one
+    * is a no-op. */
+  def carry(s: GkState, sk: GkSummary): GkState = {
+    if (sk.n > 0) {
+      var l = 0
+      var c = bufCap.toLong
+      while (c < sk.n && l < 62) { c <<= 1; l += 1 }
+      s.carry(l, sk)
     }
-    buf
+    s
   }
 
-  override def merge(buf: GkState, other: GkState): GkState = {
-    buf.flush()
-    buf.mergeIn(other)
-    buf
+  def merge(a: GkState, b: GkState): GkState = {
+    a.flush()
+    a.mergeIn(b)
+    a
   }
 
-  override def eval(buf: GkState): Any = {
-    val s = buf.result()
-    val tuples = new Array[Any](s.size)
-    var i = 0
-    while (i < s.size) {
-      tuples(i) = InternalRow(s.vs(i), s.rmins(i), s.rmaxs(i))
-      i += 1
-    }
-    InternalRow(s.n, new GenericArrayData(tuples))
-  }
+  /** Flat summaries merged and pruned to m: the EH bucket merge. */
+  def mergeSummaries(a: GkSummary, b: GkSummary): GkSummary =
+    GkSummary.prune(GkSummary.merge(a, b), m)
 
-  override def serialize(buf: GkState): Array[Byte] = {
-    buf.flush()
-    val live = buf.levels.zipWithIndex.filter(_._1.n > 0)
-    var bytes = 4 // live-level count; m/bufCap travel in the expression
-    live.foreach { case (s, _) => bytes += 4 + 8 + 4 + s.size * 24 }
-    val bb = ByteBuffer.allocate(bytes)
+  def result(s: GkState): GkSummary = s.result()
+
+  /** Live levels only: (level, n, size, size × (v, rmin, rmax)); m and
+    * bufCap travel in the expression. */
+  def encode(s: GkState): Array[Byte] = {
+    s.flush()
+    val live = s.levels.zipWithIndex.filter(_._1.n > 0)
+    val bb = ByteBuffer.allocate(4 + live.map(_._1.size * 24 + 16).sum)
     bb.putInt(live.size)
-    live.foreach { case (s, l) =>
-      bb.putInt(l); bb.putLong(s.n); bb.putInt(s.size)
+    live.foreach { case (sk, l) =>
+      bb.putInt(l); bb.putLong(sk.n); bb.putInt(sk.size)
       var i = 0
-      while (i < s.size) {
-        bb.putDouble(s.vs(i)); bb.putLong(s.rmins(i)); bb.putLong(s.rmaxs(i))
+      while (i < sk.size) {
+        bb.putDouble(sk.vs(i)); bb.putLong(sk.rmins(i)); bb.putLong(sk.rmaxs(i))
         i += 1
       }
     }
     bb.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): GkState = {
+  def decode(bytes: Array[Byte]): GkState = {
     val bb = ByteBuffer.wrap(bytes)
-    val st = new GkState(bufCap, m)
-    val nLevels = bb.getInt
-    var li = 0
-    while (li < nLevels) {
+    val st = empty()
+    var li = bb.getInt
+    while (li > 0) {
       val l = bb.getInt; val n = bb.getLong; val sz = bb.getInt
       val vs = new Array[Double](sz)
       val rmins = new Array[Long](sz)
@@ -330,165 +394,48 @@ case class GkQuantileAgg(
         vs(i) = bb.getDouble; rmins(i) = bb.getLong; rmaxs(i) = bb.getLong
         i += 1
       }
-      while (st.levels.length <= l) st.levels += GkSummary.empty
-      st.levels(l) = GkSummary(n, vs, rmins, rmaxs)
-      li += 1
+      st.place(l, GkSummary(n, vs, rmins, rmaxs))
+      li -= 1
     }
     st
   }
 
-  private val tupleType = StructType(Seq(
-    StructField("v", DoubleType, nullable = false),
-    StructField("rmin", LongType, nullable = false),
-    StructField("rmax", LongType, nullable = false)))
-
-  override def dataType: DataType = StructType(Seq(
+  def dataType: DataType = StructType(Seq(
     StructField("n", LongType, nullable = false),
-    StructField("tuples", ArrayType(tupleType, containsNull = false),
+    StructField("tuples", ArrayType(StructType(Seq(
+      StructField("v", DoubleType, nullable = false),
+      StructField("rmin", LongType, nullable = false),
+      StructField("rmax", LongType, nullable = false))), containsNull = false),
       nullable = false)))
-  override def nullable: Boolean = false
-  override def withNewMutableAggBufferOffset(newOffset: Int): GkQuantileAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): GkQuantileAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): GkQuantileAgg =
-    copy(valueExpr = newChild)
+
+  /** struct<n, tuples> of [[result]], tuples sorted by (v, rmin). */
+  def value(s: GkState): Any = {
+    val sk = result(s)
+    InternalRow(sk.n, new GenericArrayData(
+      Array.tabulate[Any](sk.size)(i => InternalRow(sk.vs(i), sk.rmins(i), sk.rmaxs(i)))))
+  }
 }
 
-/** Merge ALREADY-BUILT [[GkQuantileAgg]] summaries — the roll-up
-  * aggregate that makes the sketch a first-class mergeable OBJECT:
-  * per-hour sketches fold into a day sketch (or per-source into a
-  * corpus one) WITHOUT rescanning raw values, exactly the KMV re-fold
-  * capability but for quantiles. Each input summary enters the level
-  * structure at ⌈log2(n/bufCap)⌉ so the equal-size merge discipline
-  * (and with it the O(log) prune-per-element bound) is preserved
-  * across roll-up stages. Soundness of every interval is untouched by
-  * merging, so the rolled-up sketch carries the same guarantees as a
-  * direct build — the q287-style merge≡direct gate law. */
-case class GkMergeAgg(
-    sketchExpr: Expression,
-    m: Int,
-    bufCap: Int = 2048,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[GkState]
-  with UnaryLike[Expression] {
+object GkSketch {
+  /** The buffer size the column builders and the monitor use. */
+  def apply(m: Int): GkSketch = GkSketch(m, math.max(2048, m))
 
-  require(m >= 16 && m <= 65536, s"summary size out of range: $m")
-  // fail at construction, not mid-shuffle inside the delegated
-  // serialize (GkQuantileAgg enforces the same bound)
-  require(bufCap >= m && bufCap <= (1 << 20), s"bufCap out of range: $bufCap")
+  /** The family's row rule: a value has a rank unless NULL or NaN. */
+  def ranks(v: java.lang.Double): Boolean = v != null && !v.isNaN
 
-  override def child: Expression = sketchExpr
-
-  override def createAggregationBuffer(): GkState = new GkState(bufCap, m)
-
-  private def levelFor(n: Long): Int = {
-    var l = 0
-    var c = bufCap.toLong
-    while (c < n && l < 62) { c <<= 1; l += 1 }
-    l
-  }
-
-  override def update(buf: GkState, input: InternalRow): GkState = {
-    val raw = sketchExpr.eval(input)
-    if (raw != null) {
-      val row = raw.asInstanceOf[InternalRow]
-      val n = row.getLong(0)
-      if (n > 0) {
-        val arr = row.getArray(1)
-        val sz = arr.numElements()
-        val vs = new Array[Double](sz)
-        val rmins = new Array[Long](sz)
-        val rmaxs = new Array[Long](sz)
-        var i = 0
-        while (i < sz) {
-          val t = arr.getStruct(i, 3)
-          vs(i) = t.getDouble(0); rmins(i) = t.getLong(1); rmaxs(i) = t.getLong(2)
-          i += 1
-        }
-        buf.carry(levelFor(n), GkSummary(n, vs, rmins, rmaxs))
-      }
-    }
-    buf
-  }
-
-  override def merge(buf: GkState, other: GkState): GkState = {
-    buf.mergeIn(other); buf
-  }
-
-  override def eval(buf: GkState): Any = {
-    val s = buf.result()
-    val tuples = new Array[Any](s.size)
+  /** A [[GkSketch.value]] struct read back into a summary. */
+  def fromRow(row: InternalRow): GkSummary = {
+    val arr = row.getArray(1)
+    val sz = arr.numElements()
+    val vs = new Array[Double](sz)
+    val rmins = new Array[Long](sz)
+    val rmaxs = new Array[Long](sz)
     var i = 0
-    while (i < s.size) {
-      tuples(i) = InternalRow(s.vs(i), s.rmins(i), s.rmaxs(i))
+    while (i < sz) {
+      val t = arr.getStruct(i, 3)
+      vs(i) = t.getDouble(0); rmins(i) = t.getLong(1); rmaxs(i) = t.getLong(2)
       i += 1
     }
-    InternalRow(s.n, new GenericArrayData(tuples))
-  }
-
-  // identical wire format to GkQuantileAgg (levels of summaries)
-  override def serialize(buf: GkState): Array[Byte] =
-    GkQuantileAgg(sketchExpr, m, bufCap).serialize(buf)
-  override def deserialize(bytes: Array[Byte]): GkState =
-    GkQuantileAgg(sketchExpr, m, bufCap).deserialize(bytes)
-
-  private val tupleType = StructType(Seq(
-    StructField("v", DoubleType, nullable = false),
-    StructField("rmin", LongType, nullable = false),
-    StructField("rmax", LongType, nullable = false)))
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("n", LongType, nullable = false),
-    StructField("tuples", ArrayType(tupleType, containsNull = false),
-      nullable = false)))
-  override def nullable: Boolean = false
-  override def withNewMutableAggBufferOffset(newOffset: Int): GkMergeAgg =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): GkMergeAgg =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): GkMergeAgg =
-    copy(sketchExpr = newChild)
-}
-
-object GkQuantile {
-  /** `graft_gk(value, m)` aggregate column: the mergeable quantile
-    * summary struct<n, tuples> over a numeric column. The raw buffer
-    * auto-sizes to max(2048, m) so every documented-legal m works. */
-  def sketch(value: Column, m: Int): Column =
-    GraftSqlBridge.toColumn(
-      GkQuantileAgg(GraftSqlBridge.toExpression(value.cast("double")), m,
-          bufCap = math.max(2048, m))
-        .toAggregateExpression())
-
-  /** `graft_gk_merge(sketch, m)` aggregate column: fold already-built
-    * summaries into one (hour→day roll-up; no raw-value rescan). */
-  def mergeSketches(sketch: Column, m: Int): Column =
-    GraftSqlBridge.toColumn(
-      GkMergeAgg(GraftSqlBridge.toExpression(sketch), m,
-          bufCap = math.max(2048, m))
-        .toAggregateExpression())
-
-  /** `graft_gk_q(sketch, phi)` SCALAR: extract the φ-quantile estimate
-    * from a summary struct — value of the tuple whose midpoint is
-    * nearest the target rank 2r in integer score, first tuple on ties
-    * (the array is (v, rmin)-sorted, so "first" ≡ GkSummary.query's
-    * lowest-index rule and gkQuantiles' min_by tie-break: ONE rule,
-    * three surfaces). Pure array fold — usable per row in SQL over a
-    * published sketch column, no re-aggregation. */
-  def quantileCol(sk: Column, phi: Double): Column = {
-    import org.apache.spark.sql.functions._
-    val n = sk.getField("n")
-    val r = lit(1L) + round(lit(phi) * (n.cast("double") - 1.0)).cast("long")
-    val folded = aggregate(sk.getField("tuples"),
-      struct(lit(Long.MaxValue).as("score"), lit(Double.NaN).as("v")),
-      (acc, t) => {
-        val score = abs(t.getField("rmin") + t.getField("rmax") - lit(2L) * r)
-        when(score < acc.getField("score"),
-          struct(score.as("score"), t.getField("v").as("v")))
-          .otherwise(acc)
-      })
-    folded.getField("v")
+    GkSummary(row.getLong(0), vs, rmins, rmaxs)
   }
 }

@@ -1,12 +1,9 @@
 package graft.plans
 
-import java.nio.ByteBuffer
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -47,78 +44,21 @@ import org.apache.spark.sql.types._
   * an early reject of values above the current k-th minimum, merge
   * folds the other set with the same bound. Rides the ordinary
   * partial-aggregation path — the shuffle carries ≤ k longs per group
-  * per map partition. Same ObjectHashAggregateExec planning contract
-  * as [[TopKPairs]] (raise the sort-based fallback threshold when
-  * grouping widely).
+  * per map partition.
   */
 case class KmvMinValues(
     hashExpr: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeSet[java.lang.Long]]
+  extends SketchAgg[KmvSketch.Mins, KmvSketch](KmvSketch(k))
   with UnaryLike[Expression] {
-
-  require(k > 0 && k <= 65536, s"k out of range: $k")
 
   override def child: Expression = hashExpr
 
-  override def createAggregationBuffer(): java.util.TreeSet[java.lang.Long] =
-    new java.util.TreeSet[java.lang.Long]()
+  override def update(buf: KmvSketch.Mins, input: InternalRow): KmvSketch.Mins =
+    family.insert(buf, hashExpr.eval(input).asInstanceOf[java.lang.Long])
 
-  private def insert(buf: java.util.TreeSet[java.lang.Long], h: Long): Unit = {
-    if (buf.size < k) { buf.add(h); () }
-    else if (h < buf.last()) {
-      // strictly below the current k-th minimum: displace it (no-op if
-      // h is already present — add() returns false and nothing changed,
-      // so only evict on a REAL insertion)
-      if (buf.add(h)) { buf.pollLast(); () }
-    }
-  }
-
-  override def update(
-      buf: java.util.TreeSet[java.lang.Long],
-      input: InternalRow): java.util.TreeSet[java.lang.Long] = {
-    val raw = hashExpr.eval(input)
-    if (raw != null) insert(buf, raw.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(
-      buf: java.util.TreeSet[java.lang.Long],
-      other: java.util.TreeSet[java.lang.Long]): java.util.TreeSet[java.lang.Long] = {
-    val it = other.iterator()
-    while (it.hasNext) insert(buf, it.next())
-    buf
-  }
-
-  override def eval(buf: java.util.TreeSet[java.lang.Long]): Any = {
-    val arr = new Array[Any](buf.size)
-    val it = buf.iterator()
-    var i = 0
-    while (it.hasNext) { arr(i) = it.next().longValue(); i += 1 }
-    new GenericArrayData(arr)
-  }
-
-  override def serialize(buf: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 8 * buf.size)
-    bb.putInt(buf.size)
-    val it = buf.iterator()
-    while (it.hasNext) bb.putLong(it.next().longValue())
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): java.util.TreeSet[java.lang.Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = createAggregationBuffer()
-    var i = 0
-    while (i < n) { buf.add(bb.getLong); i += 1 }
-    buf
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
   override def withNewMutableAggBufferOffset(newOffset: Int): KmvMinValues =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): KmvMinValues =
@@ -127,12 +67,41 @@ case class KmvMinValues(
     copy(hashExpr = newChild)
 }
 
-object Kmv {
-  /** `kmv_min_values(h, k)` aggregate column over an ALREADY-HASHED
-    * long column: ascending array<long> of the k smallest distinct
-    * values. */
-  def minValues(h: Column, k: Int): Column =
-    GraftSqlBridge.toColumn(
-      KmvMinValues(GraftSqlBridge.toExpression(h.cast("long")), k)
-        .toAggregateExpression())
+/** The KMV family's algebra: the ≤ k smallest distinct hashes. */
+final case class KmvSketch(k: Int) extends AggSketch[KmvSketch.Mins] {
+  require(k > 0 && k <= 65536, s"k out of range: $k")
+
+  import KmvSketch.Mins
+
+  def empty(): Mins = new java.util.TreeSet[java.lang.Long]()
+
+  /** One hash; NULL drops. Full at k, only a hash strictly below the
+    * current k-th minimum gets in, displacing it (no-op if already
+    * present — add() returns false, so evict only on a REAL insertion). */
+  def insert(s: Mins, h: java.lang.Long): Mins = {
+    if (h != null) {
+      if (s.size < k) s.add(h)
+      else if (h < s.last() && s.add(h)) s.pollLast()
+    }
+    s
+  }
+
+  def merge(a: Mins, b: Mins): Mins = {
+    b.forEach(h => insert(a, h))
+    a
+  }
+
+  /** Ascending. */
+  def result(s: Mins): Array[Long] = s.asScala.iterator.map(_.longValue).toArray
+
+  def encode(s: Mins): Array[Byte] = Sketch.encodeAll(result(s), 8)(_.putLong(_))
+  def decode(bytes: Array[Byte]): Mins =
+    Sketch.decodeAll(bytes, empty())((s, bb) => s.add(bb.getLong))
+
+  def dataType: DataType = ArrayType(LongType, containsNull = false)
+  def value(s: Mins): Any = new GenericArrayData(result(s).map(h => h: Any))
+}
+
+object KmvSketch {
+  type Mins = java.util.TreeSet[java.lang.Long]
 }

@@ -1,12 +1,9 @@
 package graft.plans
 
-import java.nio.ByteBuffer
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -53,106 +50,17 @@ case class KmvSlidingState(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeMap[java.lang.Long, java.lang.Long]]
+  extends SketchAgg[KmvSlidingSketch.Latest, KmvSlidingSketch](KmvSlidingSketch(k))
   with BinaryLike[Expression] {
-
-  require(k > 0 && k <= 65536, s"k out of range: $k")
 
   override def left: Expression = hashExpr
   override def right: Expression = tsExpr
 
-  private def pruneCap = math.max(4 * k, 256)
+  override def update(buf: KmvSlidingSketch.Latest,
+      input: InternalRow): KmvSlidingSketch.Latest =
+    family.insert(buf, hashExpr.eval(input).asInstanceOf[java.lang.Long],
+      tsExpr.eval(input).asInstanceOf[java.lang.Long])
 
-  override def createAggregationBuffer(): java.util.TreeMap[java.lang.Long, java.lang.Long] =
-    new java.util.TreeMap[java.lang.Long, java.lang.Long]()
-
-  /** Exact prune: ascending hash order, drop h when the k largest
-    * later-or-equal... precisely: when ≥ k previously-seen (smaller)
-    * hashes carry ts ≥ ts(h). A min-heap of the k largest previous
-    * ts values decides membership in O(log k) per entry. Entries of
-    * pruned hashes never need to count as "previous": each pruned
-    * hash's own k witnesses are smaller AND later-or-equal, so they
-    * witness every hash the pruned one would have. */
-  private def prune(buf: java.util.TreeMap[java.lang.Long, java.lang.Long]): Unit = {
-    val heap = new java.util.PriorityQueue[java.lang.Long](k)
-    val it = buf.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val ts = e.getValue
-      if (heap.size() == k && heap.peek() >= ts) it.remove()
-      else {
-        heap.add(ts)
-        if (heap.size() > k) heap.poll()
-      }
-    }
-  }
-
-  private def insert(buf: java.util.TreeMap[java.lang.Long, java.lang.Long],
-      h: Long, ts: Long): Unit = {
-    val prev = buf.get(h)
-    if (prev == null || prev < ts) buf.put(h, ts)
-    if (buf.size() > pruneCap) prune(buf)
-  }
-
-  override def update(
-      buf: java.util.TreeMap[java.lang.Long, java.lang.Long],
-      input: InternalRow): java.util.TreeMap[java.lang.Long, java.lang.Long] = {
-    val h = hashExpr.eval(input)
-    val t = tsExpr.eval(input)
-    if (h != null && t != null)
-      insert(buf, h.asInstanceOf[Long], t.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(
-      buf: java.util.TreeMap[java.lang.Long, java.lang.Long],
-      other: java.util.TreeMap[java.lang.Long, java.lang.Long]): java.util.TreeMap[java.lang.Long, java.lang.Long] = {
-    val it = other.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      insert(buf, e.getKey.longValue(), e.getValue.longValue())
-    }
-    buf
-  }
-
-  override def eval(buf: java.util.TreeMap[java.lang.Long, java.lang.Long]): Any = {
-    prune(buf) // canonical: the exact rule-kept set, whatever the cap left
-    val arr = new Array[Any](buf.size)
-    val it = buf.entrySet().iterator()
-    var i = 0
-    while (it.hasNext) {
-      val e = it.next()
-      arr(i) = InternalRow(e.getKey.longValue(), e.getValue.longValue())
-      i += 1
-    }
-    new GenericArrayData(arr)
-  }
-
-  override def serialize(buf: java.util.TreeMap[java.lang.Long, java.lang.Long]): Array[Byte] = {
-    prune(buf) // ship only the rule-kept set
-    val bb = ByteBuffer.allocate(4 + 16 * buf.size)
-    bb.putInt(buf.size)
-    val it = buf.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      bb.putLong(e.getKey.longValue()); bb.putLong(e.getValue.longValue())
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): java.util.TreeMap[java.lang.Long, java.lang.Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = createAggregationBuffer()
-    var i = 0
-    while (i < n) { buf.put(bb.getLong, bb.getLong); i += 1 }
-    buf
-  }
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("h", LongType, nullable = false),
-    StructField("ts", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
   override def withNewMutableAggBufferOffset(newOffset: Int): KmvSlidingState =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): KmvSlidingState =
@@ -162,13 +70,71 @@ case class KmvSlidingState(
     copy(hashExpr = newLeft, tsExpr = newRight)
 }
 
-object KmvSliding {
-  /** `kmv_sliding(hash, ts, k)` aggregate column over an
-    * ALREADY-HASHED long column plus its event time: the suffix-minima
-    * state array<struct<h, ts>> ascending by hash. */
-  def state(h: Column, ts: Column, k: Int): Column =
-    GraftSqlBridge.toColumn(
-      KmvSlidingState(GraftSqlBridge.toExpression(h.cast("long")),
-        GraftSqlBridge.toExpression(ts.cast("long")), k)
-        .toAggregateExpression())
+/** The sliding-KMV family's algebra: hash → latest ts, pruned to the
+  * rule-kept set (exactly, on [[result]] and [[encode]]; lazily past a
+  * cap in between — the cap only chooses when to prune, never what
+  * survives). */
+final case class KmvSlidingSketch(k: Int) extends AggSketch[KmvSlidingSketch.Latest] {
+  require(k > 0 && k <= 65536, s"k out of range: $k")
+
+  import KmvSlidingSketch.Latest
+
+  private def pruneCap = math.max(4 * k, 256)
+
+  def empty(): Latest = new java.util.TreeMap[java.lang.Long, java.lang.Long]()
+
+  /** Exact prune: ascending hash order, drop h when ≥ k previously-seen
+    * (smaller) hashes carry ts ≥ ts(h). A min-heap of the k largest
+    * previous ts values decides membership in O(log k) per entry.
+    * Entries of pruned hashes never need to count as "previous": each
+    * pruned hash's own k witnesses are smaller AND later-or-equal, so
+    * they witness every hash the pruned one would have. */
+  def prune(s: Latest): Latest = {
+    val heap = new java.util.PriorityQueue[java.lang.Long](k)
+    val it = s.entrySet().iterator()
+    while (it.hasNext) {
+      val ts = it.next().getValue
+      if (heap.size() == k && heap.peek() >= ts) it.remove()
+      else {
+        heap.add(ts)
+        if (heap.size() > k) heap.poll()
+      }
+    }
+    s
+  }
+
+  /** One (hash, ts) arrival; NULL in either drops. */
+  def insert(s: Latest, h: java.lang.Long, ts: java.lang.Long): Latest = {
+    if (h != null && ts != null) {
+      val prev = s.get(h)
+      if (prev == null || prev < ts) s.put(h, ts)
+      if (s.size() > pruneCap) prune(s)
+    }
+    s
+  }
+
+  def merge(a: Latest, b: Latest): Latest = {
+    b.forEach((h, ts) => insert(a, h, ts))
+    a
+  }
+
+  /** The exact rule-kept (h, ts) set, ascending by hash. */
+  def result(s: Latest): Array[(Long, Long)] =
+    prune(s).asScala.iterator.map { case (h, ts) => (h.longValue, ts.longValue) }.toArray
+
+  /** Only the rule-kept set ships. */
+  def encode(s: Latest): Array[Byte] =
+    Sketch.encodeAll(result(s), 16) { case (bb, (h, ts)) => bb.putLong(h).putLong(ts) }
+  def decode(bytes: Array[Byte]): Latest =
+    Sketch.decodeAll(bytes, empty())((s, bb) => s.put(bb.getLong, bb.getLong))
+
+  def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("h", LongType, nullable = false),
+    StructField("ts", LongType, nullable = false))), containsNull = false)
+  def value(s: Latest): Any =
+    new GenericArrayData(result(s).map { case (h, ts) => InternalRow(h, ts): Any })
+}
+
+object KmvSlidingSketch {
+  type Latest = java.util.TreeMap[java.lang.Long, java.lang.Long]
 }

@@ -1,19 +1,13 @@
 package graft.plans
 
 import java.nio.ByteBuffer
-import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Misra–Gries heavy-hitters summary as a custom Catalyst aggregate —
   * the frequent-items sketch beside count-min (q110) and the quantile
@@ -23,9 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why it earns its place at 100 TB: "which sources/domains/tokens
   * dominate this corpus" over tera-cardinality keys cannot run as an
   * exact groupBy (the aggregation state IS the cardinality). This
-  * summary is k-bounded per partition, merges associatively (the
-  * Agarwal et al. mergeable-summaries rule: sum counters, subtract the
-  * (k+1)-th largest, keep positive), and rides Spark's ordinary
+  * summary is k-bounded per partition, merges associatively through
+  * [[MgSketch.merge]] (the family's one merge rule, which the EH and
+  * the monitor call too), and rides Spark's ordinary
   * partial-aggregation path — so the shuffle carries ≤ k counters per
   * map partition, like [[TopKPairs]].
   *
@@ -40,106 +34,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Null keys are dropped (an agg ignoring nulls). Output is
   * array<struct<key, est>> ordered (est desc, key asc).
-  *
-  * Same ObjectHashAggregateExec planning contract as [[TopKPairs]]
-  * (raise the sort-based fallback threshold when grouping widely).
   */
 case class MisraGriesSummary(
     keyExpr: Expression,
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.HashMap[String, Long]]
+  extends SketchAgg[MgSketch.Counters, MgSketch](MgSketch(k))
   with UnaryLike[Expression] {
-
-  require(k > 0 && k <= 65536, s"k out of range: $k")
 
   override def child: Expression = keyExpr
 
-  override def createAggregationBuffer(): mutable.HashMap[String, Long] =
-    mutable.HashMap.empty[String, Long]
+  override def update(buf: MgSketch.Counters, input: InternalRow): MgSketch.Counters =
+    family.insert(buf, Sketch.string(keyExpr.eval(input)))
 
-  override def update(
-      buf: mutable.HashMap[String, Long],
-      input: InternalRow): mutable.HashMap[String, Long] = {
-    val raw = keyExpr.eval(input)
-    if (raw != null) {
-      val key = raw.asInstanceOf[UTF8String].toString
-      buf.get(key) match {
-        case Some(c) => buf.update(key, c + 1L)
-        case None =>
-          if (buf.size < k) buf.update(key, 1L)
-          else {
-            // classic MG decrement-all; O(k) amortized over k arrivals.
-            // Snapshot before mutating: updating a mutable HashMap
-            // through its own keysIterator skips keys (measured — see
-            // DecayedMgAgg.evict), leaving should-die counters alive
-            // and breaking the ≤ k state bound.
-            buf.toArray.foreach { case (kk, c) =>
-              val nc = c - 1L
-              if (nc <= 0L) buf.remove(kk) else buf.update(kk, nc)
-            }
-          }
-      }
-    }
-    buf
-  }
-
-  override def merge(
-      buf: mutable.HashMap[String, Long],
-      other: mutable.HashMap[String, Long]): mutable.HashMap[String, Long] = {
-    other.foreach { case (kk, c) => buf.update(kk, buf.getOrElse(kk, 0L) + c) }
-    if (buf.size > k) {
-      // subtract the (k+1)-th largest counter from everything, keep > 0
-      // (snapshot before mutating — same hazard as update's decrement)
-      val counts = buf.values.toArray.sortBy(-_)
-      val pivot = counts(k)
-      buf.toArray.foreach { case (kk, c) =>
-        val nc = c - pivot
-        if (nc <= 0L) buf.remove(kk) else buf.update(kk, nc)
-      }
-    }
-    buf
-  }
-
-  override def eval(buf: mutable.HashMap[String, Long]): Any = {
-    val sorted = buf.toArray.sortBy { case (kk, c) => (-c, kk) }
-    new GenericArrayData(sorted.map { case (kk, c) =>
-      InternalRow(UTF8String.fromString(kk), c): Any
-    })
-  }
-
-  override def serialize(buf: mutable.HashMap[String, Long]): Array[Byte] = {
-    val entries = buf.toArray.map { case (kk, c) =>
-      (kk.getBytes(StandardCharsets.UTF_8), c)
-    }
-    val bb = ByteBuffer.allocate(4 + entries.map(e => 4 + e._1.length + 8).sum)
-    bb.putInt(entries.length)
-    entries.foreach { case (bytes, c) =>
-      bb.putInt(bytes.length); bb.put(bytes); bb.putLong(c)
-    }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): mutable.HashMap[String, Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = createAggregationBuffer()
-    var i = 0
-    while (i < n) {
-      val len = bb.getInt
-      val arr = new Array[Byte](len)
-      bb.get(arr)
-      buf.update(new String(arr, StandardCharsets.UTF_8), bb.getLong)
-      i += 1
-    }
-    buf
-  }
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("key", StringType), StructField("est", LongType))),
-    containsNull = false)
-  override def nullable: Boolean = false
   override def withNewMutableAggBufferOffset(newOffset: Int): MisraGriesSummary =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): MisraGriesSummary =
@@ -148,12 +56,76 @@ case class MisraGriesSummary(
     copy(keyExpr = newChild)
 }
 
-object MisraGries {
-  /** `misra_gries(key, k)` aggregate column: array<struct<key, est>> —
-    * at most k counters, (est desc, key asc) ordered. */
-  def summary(key: Column, k: Int): Column =
-    GraftSqlBridge.toColumn(
-      MisraGriesSummary(
-        GraftSqlBridge.toExpression(key.cast("string")), k)
-        .toAggregateExpression())
+/** The Misra–Gries family's algebra: at most `k` (key, count) counters.
+  * The aggregate above, the EH bucket merge
+  * ([[graft.operators.SlidingSketches.mgSlidingSummaries]]) and the
+  * monitor's prefold and fold ([[graft.streaming.SlidingMonitor]]) all
+  * merge through [[merge]]; where an exact row count n rides beside the
+  * counters (EH buckets, monitor quanta) it adds ([[mergeCounted]]). */
+final case class MgSketch(k: Int) extends AggSketch[MgSketch.Counters] {
+  require(k > 0 && k <= 65536, s"k out of range: $k")
+
+  import MgSketch.Counters
+
+  def empty(): Counters = mutable.HashMap.empty[String, Long]
+
+  /** Subtract `d` from every counter, keep those still positive.
+    * Snapshot before mutating: updating a mutable HashMap through its
+    * own keysIterator skips keys (measured — see DecayedMgSketch.evict),
+    * leaving should-die counters alive and breaking the ≤ k bound. */
+  private def subtract(s: Counters, d: Long): Unit =
+    s.toArray.foreach { case (kk, c) =>
+      val nc = c - d
+      if (nc <= 0L) s.remove(kk) else s.update(kk, nc)
+    }
+
+  /** One row. A NULL key drops. A new key with k counters live
+    * decrements all (classic MG; O(k) amortized over k arrivals). */
+  def insert(s: Counters, key: String): Counters = {
+    if (key != null) s.get(key) match {
+      case Some(c) => s.update(key, c + 1L)
+      case None => if (s.size < k) s.update(key, 1L) else subtract(s, 1L)
+    }
+    s
+  }
+
+  /** Exact count `c` for `key`, no prune: merge's sum step and the
+    * monitor prefold's exact count. A NULL key drops. */
+  def add(s: Counters, key: String, c: Long): Counters = {
+    if (key != null) s.update(key, s.getOrElse(key, 0L) + c)
+    s
+  }
+
+  /** With more than k counters, subtract the (k+1)-th largest. */
+  def prune(s: Counters): Counters = {
+    if (s.size > k) subtract(s, s.values.toArray.sortBy(-_).apply(k))
+    s
+  }
+
+  /** The mergeable reduce: sum counters, then [[prune]]. The undercount
+    * stays ≤ n/(k+1) under ANY merge tree, so EH depth and monitor
+    * cadence cost nothing. */
+  def merge(a: Counters, b: Counters): Counters = {
+    b.foreach { case (kk, c) => add(a, kk, c) }
+    prune(a)
+  }
+
+  def mergeCounted(a: (Long, Counters), b: (Long, Counters)): (Long, Counters) =
+    (a._1 + b._1, merge(a._2, b._2))
+
+  def result(s: Counters): Seq[(String, Long)] = Sketch.ranked(s)
+
+  def encode(s: Counters): Array[Byte] =
+    Sketch.encodeKeyed(s, 0)(_.putLong(_)).array()
+  def decode(bytes: Array[Byte]): Counters =
+    Sketch.decodeKeyed(ByteBuffer.wrap(bytes), empty())(_.getLong)
+
+  def dataType: DataType = ArrayType(
+    StructType(Seq(StructField("key", StringType), StructField("est", LongType))),
+    containsNull = false)
+  def value(s: Counters): Any = Sketch.entriesValue(result(s))
+}
+
+object MgSketch {
+  type Counters = mutable.HashMap[String, Long]
 }

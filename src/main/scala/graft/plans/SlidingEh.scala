@@ -74,10 +74,13 @@ object SlidingEh {
 
   /** Fold an oldest→newest sequence of (quantum, summary) pairs —
     * NON-EMPTY quanta only, strictly increasing q — into the EH bucket
-    * list (oldest first). `merge` is the summary's mergeable-reduce
-    * (it may prune: per-element prune count is bounded by the dyadic
-    * depth log2(#quanta), which is what keeps GK's rank-error budget
-    * bounded — see the q285 bound). */
+    * list (oldest first). `merge` is the summary family's own merge
+    * ([[MgSketch.mergeCounted]], [[GkSketch.mergeSummaries]],
+    * [[CmSketch.merge]]); it may reuse its first argument, the older
+    * bucket's summary, which the merged bucket replaces. It may prune:
+    * per-element prune count is bounded by the dyadic depth
+    * log2(#quanta), which is what keeps GK's rank-error budget bounded
+    * — see the q285 bound; MG's undercount bound is merge-tree-free. */
   def build[S](quanta: Seq[(Long, S)], c: Int,
       merge: (S, S) => S): Vector[Bucket[S]] = {
     require(c >= 2, s"EH branching out of range: $c")
@@ -144,31 +147,6 @@ object SlidingEh {
       Some(Cover(tCovQ, covered, strad.map(_.cnt).getOrElse(0L), staleOk))
     }
   }
-
-  /** Misra–Gries mergeable reduce over (n, counters) pairs — the same
-    * rule as [[MisraGriesSummary.merge]] (sum counters; if more than k
-    * survive, subtract the (k+1)-th largest and keep positive), kept
-    * here in map form for EH buckets. n (exact count) adds. The
-    * Agarwal et al. mergeable-summaries result: undercount stays
-    * ≤ n/(k+1) under ANY merge tree, so EH depth costs nothing. */
-  def mgMerge(a: (Long, Map[String, Long]), b: (Long, Map[String, Long]),
-      k: Int): (Long, Map[String, Long]) = {
-    var m = a._2
-    b._2.foreach { case (key, c) => m = m.updated(key, m.getOrElse(key, 0L) + c) }
-    if (m.size > k) {
-      val pivot = m.values.toArray.sortBy(-_).apply(k)
-      m = m.collect { case (key, c) if c - pivot > 0L => key -> (c - pivot) }
-    }
-    (a._1 + b._1, m)
-  }
-
-  /** GK mergeable reduce with a prune to m — the EH bucket merge for
-    * quantile summaries. Interval soundness survives both steps; each
-    * element is pruned ≤ dyadic-depth more times than in its
-    * per-quantum build, which the q285 error-budget math accounts
-    * for. */
-  def gkMerge(a: GkSummary, b: GkSummary, m: Int): GkSummary =
-    GkSummary.prune(GkSummary.merge(a, b), m)
 
   /** Query-side merge of covered GK buckets WITHOUT pruning: the
     * answer summary may hold Σ bucket sizes (≤ c·log W · m) tuples —

@@ -1,16 +1,11 @@
 package graft.plans
 
-import java.nio.ByteBuffer
-
 import scala.collection.mutable
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** Bounded per-group top-k as a custom Catalyst aggregate (T2/T3 done
@@ -55,96 +50,16 @@ case class TopKPairs(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.PriorityQueue[(Double, Long)]]
+  extends SketchAgg[TopKSketch.Heap, TopKSketch](TopKSketch(k))
   with BinaryLike[Expression] {
-
-  require(k > 0, "k must be positive")
 
   override def left: Expression = wExpr
   override def right: Expression = idExpr
 
-  /** Head of the queue = WORST kept entry (smallest w, then largest id),
-    * so `dequeue()` evicts correctly when the heap exceeds k. */
-  private def worstFirst: Ordering[(Double, Long)] = new Ordering[(Double, Long)] {
-    override def compare(a: (Double, Long), b: (Double, Long)): Int = {
-      val c = java.lang.Double.compare(b._1, a._1)
-      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
-    }
-  }
+  override def update(buf: TopKSketch.Heap, input: InternalRow): TopKSketch.Heap =
+    family.insert(buf, wExpr.eval(input).asInstanceOf[java.lang.Double],
+      idExpr.eval(input).asInstanceOf[java.lang.Long])
 
-  override def createAggregationBuffer(): mutable.PriorityQueue[(Double, Long)] =
-    mutable.PriorityQueue.empty[(Double, Long)](worstFirst)
-
-  /** Insert with a quick reject: once the heap holds k entries, a
-    * candidate no better than the current worst is dropped with ONE
-    * comparison — no tuple allocation, no O(log k) sift. On a top-5 over
-    * millions of candidate rows per group, almost every update takes
-    * this path (same Double.compare total order as [[worstFirst]], so
-    * NaN weights — which compare above everything — still displace). */
-  private def insert(
-      buf: mutable.PriorityQueue[(Double, Long)], w: Double, id: Long): Unit = {
-    if (buf.size < k) buf.enqueue((w, id))
-    else {
-      val (hw, hid) = buf.head
-      val c = java.lang.Double.compare(w, hw)
-      if (c > 0 || (c == 0 && id < hid)) {
-        buf.enqueue((w, id))
-        buf.dequeue()
-        ()
-      }
-    }
-  }
-
-  override def update(
-      buf: mutable.PriorityQueue[(Double, Long)],
-      input: InternalRow): mutable.PriorityQueue[(Double, Long)] = {
-    val w = wExpr.eval(input)
-    val id = idExpr.eval(input)
-    if (w != null && id != null) {
-      insert(buf, w.asInstanceOf[Double], id.asInstanceOf[Long])
-    }
-    buf
-  }
-
-  override def merge(
-      buf: mutable.PriorityQueue[(Double, Long)],
-      other: mutable.PriorityQueue[(Double, Long)]): mutable.PriorityQueue[(Double, Long)] = {
-    other.foreach { case (w, id) => insert(buf, w, id) }
-    buf
-  }
-
-  override def eval(buf: mutable.PriorityQueue[(Double, Long)]): Any = {
-    // sorted ascending by worstFirst = best entries first (worstFirst
-    // compares "worse" as greater). Uses the same Double.compare-based
-    // total order as update/merge so NaN weights sort consistently instead
-    // of violating the sort contract (sortWith with > is not a strict weak
-    // ordering under NaN).
-    val sorted = buf.toArray.sorted(worstFirst)
-    new GenericArrayData(sorted.map { case (w, id) =>
-      InternalRow(w, id): Any
-    })
-  }
-
-  override def serialize(buf: mutable.PriorityQueue[(Double, Long)]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(4 + 16 * buf.size)
-    bb.putInt(buf.size)
-    buf.foreach { case (w, id) => bb.putDouble(w); bb.putLong(id) }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): mutable.PriorityQueue[(Double, Long)] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt
-    val buf = createAggregationBuffer()
-    var i = 0
-    while (i < n) { buf.enqueue((bb.getDouble, bb.getLong)); i += 1 }
-    buf
-  }
-
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("w", DoubleType), StructField("id", LongType))),
-    containsNull = false)
-  override def nullable: Boolean = false
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKPairs =
     copy(mutableAggBufferOffset = newOffset)
   override def withNewInputAggBufferOffset(newOffset: Int): TopKPairs =
@@ -154,13 +69,65 @@ case class TopKPairs(
     copy(wExpr = newLeft, idExpr = newRight)
 }
 
-object TopKAgg {
-  /** `top_k(w, id, k)` aggregate column: array<struct<w,id>> of the k
-    * best (w desc, id asc) entries of the group. */
-  def topK(w: Column, id: Column, k: Int): Column =
-    GraftSqlBridge.toColumn(
-      TopKPairs(
-        GraftSqlBridge.toExpression(w.cast("double")),
-        GraftSqlBridge.toExpression(id.cast("long")),
-        k).toAggregateExpression())
+/** The top-k family's algebra: a k-bounded heap of (w, id). */
+final case class TopKSketch(k: Int) extends AggSketch[TopKSketch.Heap] {
+  require(k > 0, "k must be positive")
+
+  import TopKSketch.{Heap, worstFirst}
+
+  def empty(): Heap = mutable.PriorityQueue.empty[(Double, Long)](worstFirst)
+
+  /** One (w, id); NULL in either drops, NaN w is ranked. Quick reject:
+    * once the heap holds k entries, a candidate no better than the
+    * current worst is dropped with ONE comparison — no tuple
+    * allocation, no O(log k) sift. On a top-5 over millions of
+    * candidate rows per group, almost every update takes this path
+    * (same Double.compare total order as [[TopKSketch.worstFirst]], so
+    * NaN weights — which compare above everything — still displace). */
+  def insert(s: Heap, w: java.lang.Double, id: java.lang.Long): Heap = {
+    if (w != null && id != null) {
+      if (s.size < k) s.enqueue((w, id))
+      else {
+        val (hw, hid) = s.head
+        val c = java.lang.Double.compare(w, hw)
+        if (c > 0 || (c == 0 && id < hid)) {
+          s.enqueue((w, id))
+          s.dequeue()
+        }
+      }
+    }
+    s
+  }
+
+  def merge(a: Heap, b: Heap): Heap = {
+    b.foreach { case (w, id) => insert(a, w, id) }
+    a
+  }
+
+  /** Best first: w descending, id ascending, under the same
+    * Double.compare total order as [[insert]] (sortWith with > is not a
+    * strict weak ordering under NaN). */
+  def result(s: Heap): Array[(Double, Long)] = s.toArray.sorted(worstFirst)
+
+  def encode(s: Heap): Array[Byte] =
+    Sketch.encodeAll(s, 16) { case (bb, (w, id)) => bb.putDouble(w).putLong(id) }
+  def decode(bytes: Array[Byte]): Heap =
+    Sketch.decodeAll(bytes, empty())((s, bb) => s.enqueue((bb.getDouble, bb.getLong)))
+
+  def dataType: DataType = ArrayType(
+    StructType(Seq(StructField("w", DoubleType), StructField("id", LongType))),
+    containsNull = false)
+  def value(s: Heap): Any =
+    new GenericArrayData(result(s).map { case (w, id) => InternalRow(w, id): Any })
+}
+
+object TopKSketch {
+  type Heap = mutable.PriorityQueue[(Double, Long)]
+
+  /** Head of the queue = WORST kept entry (smallest w, then largest
+    * id), so `dequeue()` evicts correctly when the heap exceeds k. */
+  val worstFirst: Ordering[(Double, Long)] = (a, b) => {
+    val c = java.lang.Double.compare(b._1, a._1)
+    if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+  }
 }

@@ -900,7 +900,7 @@ object EventQueries {
     * q270's guarantee reduction against batch-exact truth. Same oracle
     * as q270: the MG guarantees are merge-order-independent, so
     * hash-equality proves the stream fold honors them. */
-  val q273 = QueryDef("q273_stream_misra_gries", q270.oracle.get) { (spark, dir) =>
+  val q273 = QueryDef("q273_stream_misra_gries", q270.oracle) { (spark, dir) =>
     import graft.streaming.EventStreams
     val summary = EventStreams.runToCompletion(spark,
       EventStreams.readEvents(spark, dir)
@@ -997,7 +997,7 @@ object EventQueries {
     * monitor — and the completed fold runs the identical banded
     * per-key KS arithmetic. Same oracle as q265: hash-equality proves
     * stream fold ≡ batch per key. */
-  val q267 = QueryDef("q267_stream_ks_per_key", q265.oracle.get) { (spark, dir) =>
+  val q267 = QueryDef("q267_stream_ks_per_key", q265.oracle) { (spark, dir) =>
     import graft.streaming.EventStreams
     val counts = EventStreams.ksValueCountsPerKey(
       EventStreams.readEvents(spark, dir),
@@ -1073,7 +1073,7 @@ object EventQueries {
     * sketch is batching-independent, so hash-equality proves the
     * stream fold equals the batch sketch exactly, not just within
     * bounds. */
-  val q281 = QueryDef("q281_stream_kmv", q280.oracle.get) { (spark, dir) =>
+  val q281 = QueryDef("q281_stream_kmv", q280.oracle) { (spark, dir) =>
     import graft.streaming.EventStreams
     val folded = EventStreams.runToCompletion(spark,
       EventStreams.readEvents(spark, dir)
@@ -1290,7 +1290,7 @@ object EventQueries {
     * "distinct users in the last N hours" panel state. The kept set
     * is arrival-order-independent, so the stream fold hash-matches
     * q294's batch oracle exactly. */
-  val q296 = QueryDef("q296_stream_kmv_sliding", q294.oracle.get) { (spark, dir) =>
+  val q296 = QueryDef("q296_stream_kmv_sliding", q294.oracle) { (spark, dir) =>
     import graft.streaming.EventStreams
     val folded = EventStreams.runToCompletion(spark,
       EventStreams.readEvents(spark, dir)
@@ -1337,7 +1337,7 @@ object EventQueries {
     * sketch × streaming matrix: KMV/MG/GK/sliding/KS/count-min all
     * now have global AND per-key streaming legs). Same guarantee
     * reduction as the batch per-key gate (q285's oracle shape). */
-  val q298 = QueryDef("q298_stream_gk_per_key", q285.oracle.get) { (spark, dir) =>
+  val q298 = QueryDef("q298_stream_gk_per_key", q285.oracle) { (spark, dir) =>
     import graft.operators.Sketches
     import graft.streaming.EventStreams
     val folded = EventStreams.runToCompletion(spark,
@@ -1718,7 +1718,7 @@ object EventQueries {
     * q299 (same oracle). This is the production shape: an always-on
     * stream maintains the per-quantum cube; ANY window query answers
     * from the cube without touching the stream. */
-  val q302 = QueryDef("q302_stream_gk_sliding", q299.oracle.get) { (spark, dir) =>
+  val q302 = QueryDef("q302_stream_gk_sliding", q299.oracle) { (spark, dir) =>
     import graft.streaming.EventStreams
     val ev = Tables.events(spark, dir)
     val starts = MonitorGate.slidingStarts(ev, 6, 6)
@@ -1740,7 +1740,7 @@ object EventQueries {
     * the streamed state obeys the batch error budget; the live cube
     * passes the batch per-key gate's check under q300's oracle
     * verbatim. */
-  val q305 = QueryDef("q305_stream_gk_monitor", q300.oracle.get) { (spark, dir) =>
+  val q305 = QueryDef("q305_stream_gk_monitor", q300.oracle) { (spark, dir) =>
     MonitorGate(spark, dir, "q305_monitor", Unbounded(4, 4), gkReplay(typeKey),
         s => SlidingMonitor.gkQuantumMonitor(s, 2048).toDF()) { (ev, log, starts) =>
       gkCheck(ev, Some(typeKey), gkCube(log), 2048, starts, Seq(0.25, 0.75))
@@ -1824,7 +1824,7 @@ object EventQueries {
     * merge-tree-free undercount bound makes the level-carry structure
     * unnecessary: any cadence stays within n/(k+1)); q301's oracle
     * verbatim. */
-  val q312 = QueryDef("q312_stream_mg_monitor", q301.oracle.get) { (spark, dir) =>
+  val q312 = QueryDef("q312_stream_mg_monitor", q301.oracle) { (spark, dir) =>
     MonitorGate(spark, dir, "q312_mg_monitor", Unbounded(6, 6),
         mgReplay(lit(""), userItem),
         s => SlidingMonitor.mgQuantumMonitor(s, 64).toDF()) { (ev, log, starts) =>
@@ -1840,7 +1840,7 @@ object EventQueries {
     * pre-hashed as a pure streaming projection (SlidingSketches
     * .cmKeyRows, one row per event); the ×depth cell explosion happens
     * in the executor-side pre-fold. q306's oracle verbatim. */
-  val q313 = QueryDef("q313_stream_cm_monitor", q306.oracle.get) { (spark, dir) =>
+  val q313 = QueryDef("q313_stream_cm_monitor", q306.oracle) { (spark, dir) =>
     MonitorGate(spark, dir, "q313_cm_monitor", Unbounded(6, 6),
         _.select(col("user_id"), col("sec")), cmMonitor(lit(""))) { (ev, log, starts) =>
       cmCheck(ev, None, userItem, SlidingMonitor.cmCubeFromDeltas(log), starts)
@@ -1865,7 +1865,7 @@ object EventQueries {
 
   /** Per-KEY streaming MG monitor: q312 per event type, completing the
     * monitor family's global/per-key symmetry; q304's oracle. */
-  val q316 = QueryDef("q316_stream_mg_monitor_per_key", q304.oracle.get) {
+  val q316 = QueryDef("q316_stream_mg_monitor_per_key", q304.oracle) {
     (spark, dir) =>
     MonitorGate(spark, dir, "q316_mg_monitor_k", Unbounded(4, 4),
         mgReplay(typeKey, userItem),
@@ -1877,7 +1877,7 @@ object EventQueries {
   /** Per-KEY streaming count-min monitor: q313 per event type (hashed
     * item rows carry the key; one state group per type); q310's
     * oracle. */
-  val q317 = QueryDef("q317_stream_cm_monitor_per_key", q310.oracle.get) {
+  val q317 = QueryDef("q317_stream_cm_monitor_per_key", q310.oracle) {
     (spark, dir) =>
     MonitorGate(spark, dir, "q317_cm_monitor_k", Unbounded(4, 4), cmReplay,
         cmMonitor(col("event_type"))) { (ev, log, starts) =>

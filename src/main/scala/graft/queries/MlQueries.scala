@@ -611,7 +611,7 @@ object MlQueries {
     * matches the same batch latest-row oracle whatever the cadence —
     * the extreme-churn answer the bucketed fold's scaladoc deferred to
     * "a format with native MERGE". */
-  val q303 = QueryDef("q303_stream_upsert_log", q277.oracle.get) { (spark, dir) =>
+  val q303 = QueryDef("q303_stream_upsert_log", q277.oracle) { (spark, dir) =>
     val base = Tables.events(spark, dir)
       .select(col("user_id"), col("event_id"), col("event_type"), col("sec"),
         graft.operators.Cdc.packedVersion(col("sec"), col("event_id"), "q303")

@@ -200,7 +200,7 @@ object SqlApiQueries {
     * raw-sketch oracle (the strongest sketch verdict: the KMV of a
     * fixed multiset is unique, so SQL path ≡ DataFrame path ≡ DuckDB
     * mirror, value for value). */
-  val q282 = QueryDef("q282_sql_kmv", EventQueries.q280.oracle.get) { (spark, dir) =>
+  val q282 = QueryDef("q282_sql_kmv", EventQueries.q280.oracle) { (spark, dir) =>
     GraftFunctions.register(spark)
     Tables.events(spark, dir).createOrReplaceTempView("graft_ev_kmv")
     val folded = spark.sql(
@@ -218,7 +218,7 @@ object SqlApiQueries {
     * and oracle as the streaming fold (q288): the merged sketch is
     * bound by the same order-independent rank-error guarantees however
     * it was accumulated. */
-  val q289 = QueryDef("q289_sql_gk", EventQueries.q288.oracle.get) { (spark, dir) =>
+  val q289 = QueryDef("q289_sql_gk", EventQueries.q288.oracle) { (spark, dir) =>
     import org.apache.spark.sql.functions.col
     GraftFunctions.register(spark)
     Tables.events(spark, dir).createOrReplaceTempView("graft_ev_gk")
@@ -238,7 +238,7 @@ object SqlApiQueries {
     * same guarantee reduction and oracle as the streaming fold (q308):
     * exact n/t_ref anchors plus the n·1e-6 closeness flag against the
     * two-pass decimal reference. */
-  val q309 = QueryDef("q309_sql_decayed", EventQueries.q308.oracle.get) { (spark, dir) =>
+  val q309 = QueryDef("q309_sql_decayed", EventQueries.q308.oracle) { (spark, dir) =>
     import org.apache.spark.sql.functions.col
     GraftFunctions.register(spark)
     Tables.events(spark, dir)
@@ -343,7 +343,7 @@ object SqlApiQueries {
     * emission-log scan at read time. Verified with q323's oracle: the
     * served table's n per (key, quantum) is the exact count, the kept
     * set is k-bounded, and the MG mass invariant holds. */
-  val q326 = QueryDef("q326_monitor_log_serving", q323.oracle.get) {
+  val q326 = QueryDef("q326_monitor_log_serving", q323.oracle) {
     (spark, dir) =>
     import org.apache.spark.sql.functions._
     import graft.streaming.{EventStreams, SlidingMonitor}

@@ -2586,7 +2586,7 @@ object TextAnalysis {
     * with NO watermark and NO aggregation: the shape an always-on
     * "ingest → chunk → index" pipeline runs. Same oracle as q258:
     * hash-equality proves stream ≡ batch for the whole chunk artifact. */
-  val q260 = QueryDef("q260_stream_chunks", q258.oracle.get) { (spark, dir) =>
+  val q260 = QueryDef("q260_stream_chunks", q258.oracle) { (spark, dir) =>
     import org.apache.spark.sql.types._
     val stream = graft.streaming.EventStreams.readTable(spark, dir, "documents")
     graft.streaming.EventStreams.runToCompletion(spark,
@@ -2706,7 +2706,7 @@ object TextAnalysis {
     * fold equals the batch selection EXACTLY, and the gate reuses
     * q272's full oracle — closing the one sketch-family member (KMV,
     * MG, top-k, count-min, KS all had streaming legs) that didn't. */
-  val q284 = QueryDef("q284_stream_weighted_topn", q272.oracle.get) { (spark, dir) =>
+  val q284 = QueryDef("q284_stream_weighted_topn", q272.oracle) { (spark, dir) =>
     import graft.streaming.EventStreams
     val docs = EventStreams.readTable(spark, dir, "documents")
     EventStreams.runToCompletion(spark,

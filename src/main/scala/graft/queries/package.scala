@@ -3,16 +3,16 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 package object queries {
-  /** One gate entry: a Spark query over an sf directory plus (optionally)
-    * the equivalent ANSI SQL the driver runs in DuckDB on the same parquet
-    * tables. Oracle-less entries get a weaker rows-only check. */
+  /** One gate entry: a Spark query over an sf directory plus the
+    * equivalent ANSI SQL, which the correctness check runs in DuckDB
+    * on the same parquet tables. */
   final case class QueryDef(
       name: String,
       fn: (SparkSession, String) => DataFrame,
-      oracle: Option[String])
+      oracle: String)
 
   object QueryDef {
     def apply(name: String, sql: String)(fn: (SparkSession, String) => DataFrame): QueryDef =
-      QueryDef(name, fn, Some(sql))
+      QueryDef(name, fn, sql)
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.{col, timestamp_seconds}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.SlidingRows.{CmCell, GkSkR, MgEntry}
-import graft.plans.{DecayedMgAgg, GkState, GkSummary, SlidingEh}
+import graft.plans.{CmSketch, DecayedMgSketch, GkSketch, GkSummary, MgSketch}
 
 /** STREAMING-NATIVE sliding-sketch monitors — the always-on form of
   * the EH sliding family for all three order-dependent members:
@@ -158,8 +158,16 @@ object SlidingMonitor {
     * high-water quantum. */
   sealed trait QuantumState { def ver: Long; def qMax: Long }
 
+  /** A monitor's typed read of `cols` from the stream: rows whose key
+    * or quantum/time (the first two columns) is NULL have no place in
+    * the state and drop first; a NULL in the value column reaches the
+    * family's `insert`, which owns the family's null rule. */
+  private def typedRead[I: Encoder](stream: DataFrame, cols: Seq[String]): Dataset[I] =
+    stream.select(cols.map(col): _*)
+      .filter(col(cols(0)).isNotNull && col(cols(1)).isNotNull).as[I]
+
   /** The one stateful skeleton of the GK, MG and count-min monitors:
-    * `cols` of the stream read as `I` rows, pre-folded per partition
+    * `cols` of the stream read as `I` rows ([[typedRead]]), pre-folded per partition
     * into `P` partials, then folded per key into `S` state with
     * Update-mode `O` emissions. `fold` is one key's one-trigger fold
     * given the admission floor, `tombstone(key, ver)` the eviction
@@ -190,7 +198,7 @@ object SlidingMonitor {
     val timeout =
       if (evictKeys) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
-    val parts0 = stream.select(cols.head, cols.tail: _*).as[I].mapPartitions(prefold)
+    val parts0 = typedRead[I](stream, cols).mapPartitions(prefold)
     val parts = if (!evictKeys) parts0 else parts0.toDF()
       .withColumn("ets", timestamp_seconds(col("q") * quantumSec))
       .withWatermark("ets", "0 seconds").as[P]
@@ -235,7 +243,7 @@ object SlidingMonitor {
   // GK quantile monitor
   // ------------------------------------------------------------------
 
-  final case class In(key: String, q: Long, v: Double)
+  final case class In(key: String, q: Long, v: java.lang.Double)
   final case class MonState(quanta: Map[Long, Seq[GkSkR]], ver: Long, qMax: Long)
     extends QuantumState
   final case class Out(key: String, q: Long, ver: Long, sk: GkSkR)
@@ -245,23 +253,18 @@ object SlidingMonitor {
     * exchange into the stateful stage. */
   final case class GkPart(key: String, q: Long, sk: GkSkR) extends QuantumPart
 
-  private def levelFor(n: Long, bufCap: Int): Int = {
-    var l = 0
-    var c = bufCap.toLong
-    while (c < n && l < 62) { c <<= 1; l += 1 }
-    l
-  }
-
   /** Stage 1 (stateless, per partition): collapse raw rows to exact
-    * per-(key, quantum) batch summaries, pruned once to m. */
+    * per-(key, quantum) batch summaries, pruned once to m. A NULL or
+    * NaN value has no rank ([[GkSketch.ranks]]): its row still opens
+    * its quantum, as in the batch per-quantum build. */
   private[graft] def gkPrefold(rows: Iterator[In], m: Int): Iterator[GkPart] = {
     val groups = mutable.HashMap.empty[(String, Long), mutable.ArrayBuffer[Double]]
-    rows.foreach(r =>
-      groups.getOrElseUpdate((r.key, r.q), mutable.ArrayBuffer.empty) += r.v)
+    rows.foreach { r =>
+      val vs = groups.getOrElseUpdate((r.key, r.q), mutable.ArrayBuffer.empty)
+      if (GkSketch.ranks(r.v)) vs += r.v
+    }
     groups.iterator.map { case ((k, q), vs) =>
-      val arr = vs.toArray
-      java.util.Arrays.sort(arr)
-      GkPart(k, q, GkSkR.of(GkSummary.prune(GkSummary.exact(arr, arr.length), m)))
+      GkPart(k, q, GkSkR.of(GkSummary.once(vs.toArray, m)))
     }
   }
 
@@ -270,31 +273,27 @@ object SlidingMonitor {
     * size-matched level, then apply the retention horizon. `floorQ` is
     * the additional watermark-derived admission floor key eviction
     * imposes (Long.MinValue when unused). */
-  private def foldKey(parts: Seq[GkPart], st: MonState, m: Int,
-      horizonQuanta: Long, floorQ: Long = Long.MinValue): (MonState, Seq[Out]) = {
-    val bufCap = math.max(2048, m)
+  private[graft] def foldKey(parts: Seq[GkPart], st: MonState, m: Int,
+      horizonQuanta: Long = Long.MaxValue,
+      floorQ: Long = Long.MinValue): (MonState, Seq[Out]) = {
+    val gk = GkSketch(m)
     val (qMax, cut, live) = horizonCut(parts, st.qMax, horizonQuanta, floorQ)
     var quanta = st.quanta.filter { case (q, _) => q >= cut }
     if (live.isEmpty) (MonState(quanta, st.ver, qMax), Nil)
     else {
       val ver = st.ver + 1
       val outs = live.map { case (q, ps) =>
-        val gst = new GkState(bufCap, m)
+        val gst = gk.empty()
         quanta.getOrElse(q, Nil).zipWithIndex.foreach { case (lv, i) =>
-          if (lv.n > 0) {
-            while (gst.levels.length <= i) gst.levels += GkSummary.empty
-            gst.levels(i) = GkSkR.summary(lv)
-          }
+          if (lv.n > 0) gst.place(i, GkSkR.summary(lv))
         }
         // deterministic carry order (shuffle arrival order is not):
         // content within the guarantee bounds is order-dependent,
         // guarantees themselves are not
-        ps.sortBy(p => (p.sk.n, p.sk.tuples.hashCode)).foreach { p =>
-          val s = GkSkR.summary(p.sk)
-          gst.carry(levelFor(s.n, bufCap), s)
-        }
+        ps.sortBy(p => (p.sk.n, p.sk.tuples.hashCode)).foreach(p =>
+          gk.carry(gst, GkSkR.summary(p.sk)))
         quanta = quanta.updated(q, gst.levels.toSeq.map(s => GkSkR.of(s)))
-        (q, GkSkR.of(gst.result()))
+        (q, GkSkR.of(gk.result(gst)))
       }
       (MonState(quanta, ver, qMax),
         outs.map { case (q, sk) => Out(parts.head.key, q, ver, sk) })
@@ -308,15 +307,6 @@ object SlidingMonitor {
   private[graft] def testFold(rows: Seq[In], st: MonState, m: Int,
       horizonQuanta: Long = Long.MaxValue): (MonState, Seq[Out]) =
     foldKey(gkPrefold(rows.iterator, m).toSeq.sortBy(_.q), st, m, horizonQuanta)
-
-  /** Multi-partial test seam: SlidingEhSpec uses it to assert the
-    * partition-count-independence of the guarantees. `floorQ` is the
-    * watermark admission floor key eviction imposes (SlidingEhSpec
-    * drives the no-resurrection law through it). */
-  private[graft] def testFoldParts(parts: Seq[GkPart], st: MonState, m: Int,
-      horizonQuanta: Long = Long.MaxValue,
-      floorQ: Long = Long.MinValue): (MonState, Seq[Out]) =
-    foldKey(parts, st, m, horizonQuanta, floorQ)
 
   /** The monitor as a streaming transform: input (key, q, v) rows →
     * Update-mode (key, q, ver, sk) emissions.
@@ -357,26 +347,33 @@ object SlidingMonitor {
   final case class MgPart(key: String, q: Long, n: Long, entries: Seq[MgEntry])
     extends QuantumPart
 
+  private final class MgCount(var n: Long, val counts: MgSketch.Counters)
+
+  private def mgEntries(mg: MgSketch, s: MgSketch.Counters): Seq[MgEntry] =
+    mg.result(s).map { case (it, c) => MgEntry(it, c) }
+
   /** Stage 1 (stateless, per partition): exact per-(key, quantum)
     * counts, pruned once to k (the mergeable-summaries bound makes
-    * that prune free under any downstream merge tree). */
+    * that prune free under any downstream merge tree). n counts every
+    * row, as the batch per-quantum build does; a NULL item counts in n
+    * only ([[MgSketch.add]] drops it). */
   private[graft] def mgPrefold(rows: Iterator[MgIn], k: Int): Iterator[MgPart] = {
-    val groups = mutable.HashMap.empty[(String, Long), mutable.HashMap[String, Long]]
+    val mg = MgSketch(k)
+    val groups = mutable.HashMap.empty[(String, Long), MgCount]
     rows.foreach { r =>
-      val m = groups.getOrElseUpdate((r.key, r.q), mutable.HashMap.empty)
-      m.update(r.item, m.getOrElse(r.item, 0L) + 1L)
+      val g = groups.getOrElseUpdate((r.key, r.q), new MgCount(0L, mg.empty()))
+      g.n += 1L
+      mg.add(g.counts, r.item, 1L)
     }
-    groups.iterator.map { case ((kk, q), counts) =>
-      val n = counts.valuesIterator.sum
-      val (_, pruned) = SlidingEh.mgMerge((0L, Map.empty), (n, counts.toMap), k)
-      MgPart(kk, q, n,
-        pruned.toSeq.sortBy { case (it, c) => (-c, it) }
-          .map { case (it, c) => MgEntry(it, c) })
+    groups.iterator.map { case ((kk, q), g) =>
+      MgPart(kk, q, g.n, mgEntries(mg, mg.prune(g.counts)))
     }
   }
 
-  private def mgFoldKey(parts: Seq[MgPart], st: MgMonState, k: Int,
-      horizonQuanta: Long, floorQ: Long = Long.MinValue): (MgMonState, Seq[MgOut]) = {
+  private[graft] def mgFoldKey(parts: Seq[MgPart], st: MgMonState, k: Int,
+      horizonQuanta: Long = Long.MaxValue,
+      floorQ: Long = Long.MinValue): (MgMonState, Seq[MgOut]) = {
+    val mg = MgSketch(k)
     val (qMax, cut, live) = horizonCut(parts, st.qMax, horizonQuanta, floorQ)
     var quanta = st.quanta.filter { case (q, _) => q >= cut }
     if (live.isEmpty) (MgMonState(quanta, st.ver, qMax), Nil)
@@ -387,20 +384,13 @@ object SlidingMonitor {
         // shuffle arrival order), then ONE mergeable reduce into the
         // stored summary: a valid weighted-MG merge tree, so the
         // n/(k+1) undercount bound survives any cadence/partitioning
-        var summed = Map.empty[String, Long]
-        var nBatch = 0L
-        ps.foreach { p =>
-          nBatch += p.n
-          p.entries.foreach(e =>
-            summed = summed.updated(e.key, summed.getOrElse(e.key, 0L) + e.est))
-        }
-        val prev = quanta.get(q).map(s => (s.n, s.entries))
-          .getOrElse((0L, Map.empty[String, Long]))
-        val (n, merged) = SlidingEh.mgMerge(prev, (nBatch, summed), k)
-        quanta = quanta.updated(q, MgQuantum(n, merged))
-        MgOut(parts.head.key, q, ver, n,
-          merged.toSeq.sortBy { case (kk, c) => (-c, kk) }
-            .map { case (kk, c) => MgEntry(kk, c) })
+        val summed = mg.empty()
+        ps.foreach(_.entries.foreach(e => mg.add(summed, e.key, e.est)))
+        val prev = quanta.get(q).map(s => (s.n, mutable.HashMap.from(s.entries)))
+          .getOrElse((0L, mg.empty()))
+        val (n, merged) = mg.mergeCounted(prev, (ps.map(_.n).sum, summed))
+        quanta = quanta.updated(q, MgQuantum(n, merged.toMap))
+        MgOut(parts.head.key, q, ver, n, mgEntries(mg, merged))
       }
       (MgMonState(quanta, ver, qMax), outs)
     }
@@ -409,10 +399,6 @@ object SlidingMonitor {
   private[graft] def testMgFold(rows: Seq[MgIn], st: MgMonState, k: Int,
       horizonQuanta: Long = Long.MaxValue): (MgMonState, Seq[MgOut]) =
     mgFoldKey(mgPrefold(rows.iterator, k).toSeq.sortBy(_.q), st, k, horizonQuanta)
-
-  private[graft] def testMgFoldParts(parts: Seq[MgPart], st: MgMonState, k: Int,
-      horizonQuanta: Long = Long.MaxValue): (MgMonState, Seq[MgOut]) =
-    mgFoldKey(parts, st, k, horizonQuanta)
 
   /** The MG monitor as a streaming transform: input (key, q, item)
     * rows → Update-mode (key, q, ver, n, entries) emissions.
@@ -466,25 +452,16 @@ object SlidingMonitor {
 
   /** Stage 1 (stateless, per partition): hash-explode each event to
     * its `depth` cells and sum exactly per (key, quantum). */
-  private[graft] def cmPrefold(rows: Iterator[CmIn], depth: Int,
-      width: Int): Iterator[CmPart] = {
-    val params = graft.functions.HashFns.minhashParams(depth)
-    val groups = mutable.HashMap.empty[(String, Long), mutable.HashMap[Long, Long]]
-    rows.foreach { r =>
-      val cells = groups.getOrElseUpdate((r.key, r.q), mutable.HashMap.empty)
-      params.foreach { case (row, a, b) =>
-        val idx = row.toLong * width +
-          ((a * r.x + b) % graft.functions.HashFns.P) % width
-        cells.update(idx, cells.getOrElse(idx, 0L) + 1L)
-      }
-    }
-    groups.iterator.map { case ((kk, q), cells) =>
-      CmPart(kk, q,
-        cells.toSeq.sortBy(_._1).map { case (i, c) => CmCell(i, c) })
-    }
+  private[graft] def cmPrefold(rows: Iterator[CmIn], cm: CmSketch): Iterator[CmPart] = {
+    val groups = mutable.HashMap.empty[(String, Long), CmSketch.Cells]
+    rows.foreach(r => cm.insert(groups.getOrElseUpdate((r.key, r.q), cm.empty()), r.x))
+    groups.iterator.map { case ((kk, q), cells) => CmPart(kk, q, cmCells(cm, cells)) }
   }
 
-  private def cmFoldKey(parts: Seq[CmPart], st: CmMonState,
+  private def cmCells(cm: CmSketch, s: CmSketch.Cells): Seq[CmCell] =
+    cm.result(s).map { case (i, c) => CmCell(i, c) }
+
+  private def cmFoldKey(parts: Seq[CmPart], st: CmMonState, cm: CmSketch,
       horizonQuanta: Long, floorQ: Long = Long.MinValue): (CmMonState, Seq[CmOut]) = {
     val (qMax, _, live) = horizonCut(parts, st.qMax, horizonQuanta, floorQ)
     if (live.isEmpty) (CmMonState(st.ver, qMax), Nil)
@@ -497,11 +474,9 @@ object SlidingMonitor {
         // which made emission bytes scale with touched-quanta ×
         // triggers × cells (q317's α-0.53 scale leg, the suite's
         // steepest); deltas make it scale with CHANGED cells
-        val sums = mutable.HashMap.empty[Long, Long]
-        ps.foreach(_.entries.foreach(e =>
-          sums.update(e.idx, sums.getOrElse(e.idx, 0L) + e.cnt)))
-        CmOut(parts.head.key, q, ver,
-          sums.toSeq.sortBy(_._1).map { case (i, c) => CmCell(i, c) })
+        val sums = cm.empty()
+        ps.foreach(_.entries.foreach(e => cm.add(sums, e.idx, e.cnt)))
+        CmOut(parts.head.key, q, ver, cmCells(cm, sums))
       }
       (CmMonState(ver, qMax), outs)
     }
@@ -544,9 +519,10 @@ object SlidingMonitor {
   }
 
   private[graft] def testCmFold(rows: Seq[CmIn], st: CmMonState, depth: Int,
-      width: Int, horizonQuanta: Long = Long.MaxValue): (CmMonState, Seq[CmOut]) =
-    cmFoldKey(cmPrefold(rows.iterator, depth, width).toSeq.sortBy(_.q), st,
-      horizonQuanta)
+      width: Int, horizonQuanta: Long = Long.MaxValue): (CmMonState, Seq[CmOut]) = {
+    val cm = CmSketch(depth, width)
+    cmFoldKey(cmPrefold(rows.iterator, cm).toSeq.sortBy(_.q), st, cm, horizonQuanta)
+  }
 
   /** The count-min monitor as a streaming transform: input (key, q, x)
     * hashed-item rows → Update-mode (key, q, ver, entries) DELTA
@@ -560,11 +536,12 @@ object SlidingMonitor {
       evictKeys: Boolean = false, quantumSec: Long = 3600L): Dataset[CmOut] = {
     val spark = stream.sparkSession
     import spark.implicits._
+    val cm = CmSketch(depth, width)
     quantumMonitor[CmIn, CmPart, CmMonState, CmOut](stream, Seq("key", "q", "x"),
       horizonQuanta, evictKeys, quantumSec, CmMonState(0L, Long.MinValue),
       (key, ver) => CmOut(key, -1L, ver, Nil))(
-      rows => cmPrefold(rows, depth, width))(
-      (ps, st, floorQ) => cmFoldKey(ps, st, horizonQuanta, floorQ))
+      rows => cmPrefold(rows, cm))(
+      (ps, st, floorQ) => cmFoldKey(ps, st, cm, horizonQuanta, floorQ))
   }
 
   // ------------------------------------------------------------------
@@ -591,52 +568,37 @@ object SlidingMonitor {
   final case class DmOut(key: String, ver: Long, t_ref: Long, w: Double,
       entries: Seq[DmEntry])
 
-  private def dmState(p: DmPart): DecayedMgAgg.State =
-    new DecayedMgAgg.State(p.tMax, p.w,
-      mutable.HashMap.from(p.entries.map(e => e.item -> e.est)))
+  private def dmEntries(dm: DecayedMgSketch, s: DecayedMgSketch.State): Seq[DmEntry] =
+    dm.result(s).map { case (it, c) => DmEntry(it, c) }
 
   /** Stage 1 (stateless, per partition): one partial decayed sketch
-    * per (partition, key). */
+    * per (partition, key); a NULL item drops in
+    * [[DecayedMgSketch.insert]]. */
   private[graft] def dmPrefold(rows: Iterator[DmIn], halfLifeSec: Long,
       k: Int): Iterator[DmPart] = {
-    val groups = mutable.HashMap.empty[String, DecayedMgAgg.State]
-    rows.foreach { r =>
-      val s = groups.getOrElseUpdate(r.key,
-        new DecayedMgAgg.State(Long.MinValue, 0.0, mutable.HashMap.empty))
-      DecayedMgAgg.updateState(s, r.t, r.item, halfLifeSec, k)
-    }
-    groups.iterator.map { case (kk, s) =>
-      DmPart(kk, s.tMax, s.w,
-        s.counters.toSeq.sortBy { case (it, c) => (-c, it) }
-          .map { case (it, c) => DmEntry(it, c) })
-    }
+    val dm = DecayedMgSketch(halfLifeSec, k)
+    val groups = mutable.HashMap.empty[String, DecayedMgSketch.State]
+    rows.foreach(r => dm.insert(groups.getOrElseUpdate(r.key, dm.empty()), r.t, r.item))
+    groups.iterator.map { case (kk, s) => DmPart(kk, s.tMax, s.w, dmEntries(dm, s)) }
   }
 
-  private def dmFoldKey(parts: Seq[DmPart], st: DmMonState, halfLifeSec: Long,
+  private[graft] def dmFoldKey(parts: Seq[DmPart], st: DmMonState, halfLifeSec: Long,
       k: Int): (DmMonState, DmOut) = {
-    val acc = new DecayedMgAgg.State(st.tMax, st.w,
-      mutable.HashMap.from(st.entries))
+    val dm = DecayedMgSketch(halfLifeSec, k)
+    val acc = new DecayedMgSketch.State(st.tMax, st.w, mutable.HashMap.from(st.entries))
     // merge partials in a deterministic order (the double arithmetic's
     // last ulps are merge-order-sensitive; guarantees are not)
-    parts.sortBy(p => (p.tMax, p.w)).foreach(p =>
-      DecayedMgAgg.mergeState(acc, dmState(p), halfLifeSec, k))
+    parts.sortBy(p => (p.tMax, p.w)).foreach(p => dm.merge(acc,
+      new DecayedMgSketch.State(p.tMax, p.w,
+        mutable.HashMap.from(p.entries.map(e => e.item -> e.est)))))
     val ver = st.ver + 1
-    val entries = acc.counters.toSeq.sortBy { case (it, c) => (-c, it) }
-      .map { case (it, c) => DmEntry(it, c) }
     (DmMonState(acc.tMax, acc.w, acc.counters.toMap, ver),
-      DmOut(parts.head.key, ver, acc.tMax, acc.w, entries))
+      DmOut(parts.head.key, ver, acc.tMax, acc.w, dmEntries(dm, acc)))
   }
 
   private[graft] def testDmFold(rows: Seq[DmIn], st: DmMonState,
       halfLifeSec: Long, k: Int): (DmMonState, DmOut) =
     dmFoldKey(dmPrefold(rows.iterator, halfLifeSec, k).toSeq, st, halfLifeSec, k)
-
-  private[graft] def testDmFoldPartsSeam(rows: Seq[DmIn], halfLifeSec: Long,
-      k: Int): Seq[DmPart] = dmPrefold(rows.iterator, halfLifeSec, k).toSeq
-
-  private[graft] def testDmFoldFromParts(parts: Seq[DmPart], st: DmMonState,
-      halfLifeSec: Long, k: Int): (DmMonState, DmOut) =
-    dmFoldKey(parts, st, halfLifeSec, k)
 
   /** The decayed-MG monitor as a streaming transform: input
     * (key, t, item) rows → Update-mode (key, ver, t_ref, w, entries)
@@ -691,7 +653,7 @@ object SlidingMonitor {
     val timeout =
       if (evictKeys) GroupStateTimeout.EventTimeTimeout
       else GroupStateTimeout.NoTimeout
-    val parts0 = stream.select("key", "t", "item").as[DmIn]
+    val parts0 = typedRead[DmIn](stream, Seq("key", "t", "item"))
       .mapPartitions(rows => dmPrefold(rows, halfLifeSec, k))
     val parts =
       if (evictKeys) parts0.toDF()

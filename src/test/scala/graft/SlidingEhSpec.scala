@@ -4,7 +4,7 @@ import scala.util.Random
 
 import org.apache.spark.sql.functions._
 
-import graft.plans.{GkSummary, SlidingEh}
+import graft.plans.{GkSketch, GkSummary, MgSketch, SlidingEh}
 import graft.operators.SlidingSketches
 
 /** Laws for the exponential-histogram sliding frame and its GK/MG
@@ -134,7 +134,7 @@ class SlidingEhSpec extends SparkSpec {
       GkSummary.prune(GkSummary.exact(s, s.length), m)
     }
     val bs = SlidingEh.build(sks.zipWithIndex.map { case (s, i) => (i.toLong, s) }, C,
-      (a: GkSummary, b: GkSummary) => SlidingEh.gkMerge(a, b, m))
+      GkSketch(m).mergeSummaries)
     Seq(0L, 7L, 31L, 64L, 100L, 128L).foreach { qs =>
       val cov = SlidingEh.cover(bs, qs, C).get
       val merged = SlidingEh.gkMergeAll(cov.covered.map(_.s))
@@ -169,7 +169,7 @@ class SlidingEhSpec extends SparkSpec {
       GkSummary.prune(GkSummary.exact(Array.fill(dup)(v), dup), m)
     }
     val bs = SlidingEh.build(quanta.zipWithIndex.map { case (s, i) => (i.toLong, s) },
-      C, (a: GkSummary, b: GkSummary) => SlidingEh.gkMerge(a, b, m))
+      C, GkSketch(m).mergeSummaries)
     val merged = SlidingEh.gkMergeAll(SlidingEh.cover(bs, 0L, C).get.covered.map(_.s))
     assert(merged.n == nQ.toLong * dup)
     val sorted = vals.flatMap(v => Array.fill(dup)(v)).sorted
@@ -194,13 +194,14 @@ class SlidingEhSpec extends SparkSpec {
       val m = items.groupBy(identity).map { case (kk, g) => kk -> g.length.toLong }
       (items.length.toLong, m)
     }
-    val bs = SlidingEh.build(quanta.zipWithIndex.map { case (s, i) => (i.toLong, s) }, C,
-      (a: (Long, Map[String, Long]), b: (Long, Map[String, Long])) =>
-        SlidingEh.mgMerge(a, b, k))
+    // the EH merge reuses its first argument: hand it its own copies
+    val mg = MgSketch(k)
+    val bs = SlidingEh.build(quanta.zipWithIndex.map { case ((n, m), i) =>
+      (i.toLong, (n, scala.collection.mutable.HashMap.from(m))) }, C, mg.mergeCounted)
     Seq(0L, 13L, 40L, 77L).foreach { qs =>
       val cov = SlidingEh.cover(bs, qs, C).get
       val (n, summ) = cov.covered.map(_.s)
-        .foldLeft((0L, Map.empty[String, Long]))((a, b) => SlidingEh.mgMerge(a, b, k))
+        .foldLeft((0L, mg.empty()))(mg.mergeCounted)
       val exact = quanta.drop(cov.tCovQ.toInt)
         .flatMap(_._2.toSeq).groupBy(_._1)
         .map { case (kk, g) => kk -> g.map(_._2).sum }
@@ -358,7 +359,7 @@ class SlidingEhSpec extends SparkSpec {
       val gkParts = vs.grouped(math.ceil(vs.length.toDouble / parts).toInt)
         .flatMap(chunk => SlidingMonitor.gkPrefold(
           chunk.iterator.map(v => SlidingMonitor.In("k", 7L, v)), m)).toSeq
-      val (gst, gouts) = SlidingMonitor.testFoldParts(gkParts,
+      val (gst, gouts) = SlidingMonitor.foldKey(gkParts,
         SlidingMonitor.MonState(Map.empty, 0L, Long.MinValue), m)
       assert(gst.ver == 1L && gouts.size == 1)
       val s = graft.operators.SlidingRows.GkSkR.summary(gouts.head.sk)
@@ -376,7 +377,7 @@ class SlidingEhSpec extends SparkSpec {
       val mgParts = items.grouped(math.ceil(items.length.toDouble / parts).toInt)
         .flatMap(chunk => SlidingMonitor.mgPrefold(
           chunk.iterator.map(it => SlidingMonitor.MgIn("k", 5L, it)), k)).toSeq
-      val (mst, _) = SlidingMonitor.testMgFoldParts(mgParts,
+      val (mst, _) = SlidingMonitor.mgFoldKey(mgParts,
         SlidingMonitor.MgMonState(Map.empty, 0L, Long.MinValue), k)
       val mq = mst.quanta(5L)
       assert(mq.n == items.length.toLong && mq.entries.size <= k)
@@ -405,13 +406,13 @@ class SlidingEhSpec extends SparkSpec {
     val live = SlidingMonitor.gkPrefold(
       Iterator(SlidingMonitor.In("k", 100L, 2.0)), m).toSeq
     // watermark quantum 100 → floor = 100 − 10 + 1 = 91
-    val (st, outs) = SlidingMonitor.testFoldParts(late ++ live, fresh, m,
+    val (st, outs) = SlidingMonitor.foldKey(late ++ live, fresh, m,
       horizonQuanta = horizon, floorQ = 91L)
     assert(!st.quanta.contains(80L), "floor-dropped quantum resurrected")
     assert(st.quanta.contains(100L))
     assert(outs.map(_.q) == Seq(100L), outs.toString)
     // all-late batch: state stays empty, qMax still advances (monotone)
-    val (st2, outs2) = SlidingMonitor.testFoldParts(late, fresh, m,
+    val (st2, outs2) = SlidingMonitor.foldKey(late, fresh, m,
       horizonQuanta = horizon, floorQ = 91L)
     assert(st2.quanta.isEmpty && outs2.isEmpty && st2.qMax == 80L)
   }
@@ -477,8 +478,8 @@ class SlidingEhSpec extends SparkSpec {
       var st = SlidingMonitor.DmMonState(Long.MinValue, 0.0, Map.empty, 0L)
       slices.foreach { slice =>
         val parts = slice.groupBy(_ => rnd.nextInt(6)).values.toSeq.flatMap(
-          ss => SlidingMonitor.testDmFoldPartsSeam(ss, 86400L, k))
-        val (st2, out) = SlidingMonitor.testDmFoldFromParts(parts, st, 86400L, k)
+          ss => SlidingMonitor.dmPrefold(ss.iterator, 86400L, k))
+        val (st2, out) = SlidingMonitor.dmFoldKey(parts, st, 86400L, k)
         st = st2
         assert(out.entries.size <= k && st.entries.size <= k,
           s"k bound broken at seed=$seed: out=${out.entries.size} " +
@@ -627,6 +628,80 @@ class SlidingEhSpec extends SparkSpec {
       }
       assert(got.length == expect.size,
         s"row count ${got.length} != expected ${expect.size} (keyed=$keyed)")
+    }
+  }
+
+  test("monitors: NULL key, time, item and value rows and NaN values match the batch builds") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.streaming.{Replay, SlidingMonitor}
+    val spark0 = spark
+    import spark0.implicits._
+    val nan = Double.NaN
+    // hour 10 and 11 of keys a and b, plus one row with a NULL in each
+    // input column, a NaN value, and a NULL value alone in its quantum
+    val ev = Seq[(String, java.lang.Long, String, java.lang.Double)](
+      ("a", 36000L, "u1", 1.0), ("a", 36010L, "u2", 3.0), ("a", 36020L, "u1", 2.0),
+      ("b", 39600L, "u3", 5.0), ("b", 39700L, "u1", 4.0), ("a", 39650L, "u2", 6.0),
+      (null, 36030L, "u1", 7.0), ("a", null, "u1", 8.0), ("a", 36040L, null, 9.0),
+      ("b", 39800L, "u3", null), ("b", 39900L, "u2", nan), ("b", 43200L, "u9", null))
+      .toDF("event_type", "sec", "user_id", "value")
+    val stream = Replay.of(ev.select(col("event_type").as("key"),
+      expr("sec div 3600").as("q"), col("sec").as("t"), col("user_id").as("item"),
+      col("value").as("v")), "monitor_nulls", 3).stream()
+    def drain(ds: DataFrame): Seq[Row] = {
+      val chk = core.TempPaths.registered(
+        java.nio.file.Files.createTempDirectory("graft_nullmon")).toString
+      val out = scala.collection.mutable.ArrayBuffer.empty[Row]
+      val q = ds.writeStream.outputMode("update").option("checkpointLocation", chk)
+        .foreachBatch { (df: DataFrame, _: Long) => out ++= df.collect(); () }.start()
+      try q.processAllAvailable() finally q.stop()
+      out.toSeq
+    }
+    def latest(rows: Seq[Row]): Map[(String, Long), Row] =
+      rows.groupBy(r => (r.getString(0), r.getLong(1))).map { case (kq, rs) =>
+        kq -> rs.maxBy(_.getLong(2)) }
+    def batch(df: DataFrame): Map[(String, Long), Row] =
+      df.filter(col("key").isNotNull && col("q").isNotNull).collect()
+        .map(r => (r.getString(0), r.getLong(1)) -> r).toMap
+    // GK: (n, tuples) per quantum
+    val gk = latest(drain(SlidingMonitor.gkQuantumMonitor(stream.select("key", "q", "v"), 16).toDF()))
+    val gkBatch = batch(SlidingSketches.gkHourly(ev, col("event_type"), col("value"),
+      col("sec"), 3600L, 16))
+    assert(gk.keySet == gkBatch.keySet)
+    gkBatch.foreach { case (kq, r) => assert(gk(kq).getStruct(3) == r.getStruct(2), s"gk $kq") }
+    assert(gk(("b", 12L)).getStruct(3).getLong(0) == 0L)
+    // MG: n (every row) and entries (non-NULL items)
+    val mg = latest(drain(SlidingMonitor.mgQuantumMonitor(stream.select("key", "q", "item"), 8).toDF()))
+    val mgBatch = batch(SlidingSketches.mgHourly(ev, col("event_type"), col("user_id"),
+      col("sec"), 3600L, 8))
+    assert(mg.keySet == mgBatch.keySet)
+    mgBatch.foreach { case (kq, r) =>
+      assert(mg(kq).getLong(3) == r.getLong(2) && mg(kq).get(4) == r.get(3), s"mg $kq") }
+    // CM: summed delta cells per quantum
+    val cmRows = SlidingSketches.cmKeyRows(stream.select("key", "q", "item"), col("item"),
+      col("q") * 3600L, 3600L, key = col("key"))
+    val cmLog = drain(SlidingMonitor.cmQuantumMonitor(cmRows, 3, 16).toDF())
+    val cm = SlidingMonitor.cmCubeFromDeltas(spark.createDataFrame(
+      spark.sparkContext.parallelize(cmLog), cmLog.head.schema)).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getSeq[Row](2)).toMap
+    val cmBatch = batch(SlidingSketches.cmHourly(ev, col("user_id"), col("sec"), 3600L, 3, 16,
+      key = col("event_type"))).map { case (kq, r) =>
+      kq -> r.getSeq[Row](2).sortBy(_.getLong(0)) }
+    assert(cm == cmBatch)
+    // decayed MG: the latest sketch per key against the one-pass aggregate
+    val dm = drain(SlidingMonitor.decayedMgMonitor(stream.select("key", "t", "item"), 3600L, 8)
+      .toDF()).groupBy(_.getString(0)).map { case (kk, rs) => kk -> rs.maxBy(_.getLong(1)) }
+    val dmBatch = ev.filter(col("event_type").isNotNull).groupBy("event_type")
+      .agg(plans.DecayedMg.of(col("sec"), col("user_id"), 3600L, 8).as("d")).collect()
+      .map(r => r.getString(0) -> r.getStruct(1)).toMap
+    assert(dm.keySet == dmBatch.keySet)
+    dmBatch.foreach { case (kk, d) =>
+      val got = dm(kk)
+      def entries(es: Seq[Row]) = es.map(e => e.getString(0) -> e.getDouble(1)).toMap
+      val (ge, be) = (entries(got.getSeq[Row](4)), entries(d.getSeq[Row](2)))
+      assert(got.getLong(2) == d.getLong(0) && math.abs(got.getDouble(3) - d.getDouble(1)) < 1e-9 &&
+        ge.keySet == be.keySet && ge.forall { case (it, e) => math.abs(e - be(it)) < 1e-9 },
+        s"dm $kk: $got vs $d")
     }
   }
 }

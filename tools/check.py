@@ -162,12 +162,7 @@ def main():
             print(f"{name:28s} VERIFY-ERROR: {errs[name][:160]}")
             fails += 1
             continue
-        if name not in oracle:
-            n = con.execute(
-                f"SELECT count(*) FROM parquet_scan('{outdir}/{name}/*.parquet')").fetchone()[0]
-            print(f"{name:28s} ROWS-ONLY ({n} rows)")
-            continue
-        res = compare(name, outdir, oracle[name], con)
+        res = compare(name, outdir, oracle[name], con) if name in oracle else "NO-ORACLE"
         print(f"{name:28s} {res}")
         if res != "OK":
             fails += 1
